@@ -75,24 +75,23 @@ object CommitLog {
 
   /** Stage `batch` (schema: key, payload columns) and commit it as the next
     * version, retrying past concurrent winners. Returns the version won. */
-  def commit(spark: SparkSession, table: String, batch: DataFrame,
-      maxRetries: Int = 10): Int = {
+  def commit(spark: SparkSession, table: String, batch: DataFrame): Int =
+    stageAndCommit(spark, table, batch, marker = "-")
+
+  /** One [[Occ.commit]]: stage `batch` under `data/v<N><marker><token>`
+    * and claim `_log/<N>`; a lost race removes the orphaned staging dir
+    * and retries against the advanced log. */
+  private def stageAndCommit(spark: SparkSession, table: String,
+      batch: DataFrame, marker: String): Int = {
     val fs = hadoopFs(spark, table)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val v = latestVersion(spark, table) + 1
+    Occ.commit("commit", table)(latestVersion(spark, table)) { base =>
+      val v = base + 1
       val token = java.util.UUID.randomUUID().toString.take(8)
-      val staged = s"data/v$v-$token"
+      val staged = s"data/v$v$marker$token"
       batch.write.mode("errorifexists").parquet(s"$table/$staged")
-      if (tryCommit(spark, table, v, staged)) return v
-      // lost: another writer owns v — remove the orphaned staging dir and
-      // retry against the advanced log
-      fs.delete(new Path(table, staged), true)
-      attempt += 1
+      if (tryCommit(spark, table, v, staged)) Some(v)
+      else { fs.delete(new Path(table, staged), true); None }
     }
-    throw new IllegalStateException(
-      s"commit lost $maxRetries races on $table; raise maxRetries under " +
-        "heavier writer contention")
   }
 
   /** Snapshot read: union every committed manifest ≤ `asOf` (default: all),
@@ -151,7 +150,7 @@ object CommitLog {
     * the reprocessing horizon or a replay older than the floor would
     * re-append (document, don't guess: keepLast ≥ max replayable lag). */
   def commitIdempotent(spark: SparkSession, table: String, batch: DataFrame,
-      batchId: Long, maxRetries: Int = 10): Int = {
+      batchId: Long): Int = {
     val fs = hadoopFs(spark, table)
     val marker = s"-b$batchId-"
     val existing = listLog(fs, table)
@@ -162,22 +161,7 @@ object CommitLog {
             StandardCharsets.UTF_8)
         staged.contains(marker)
       }
-    existing match {
-      case Some(v) => v
-      case None =>
-        var attempt = 0
-        while (attempt < maxRetries) {
-          val v = latestVersion(spark, table) + 1
-          val token = java.util.UUID.randomUUID().toString.take(8)
-          val staged = s"data/v$v${marker}$token"
-          batch.write.mode("errorifexists").parquet(s"$table/$staged")
-          if (tryCommit(spark, table, v, staged)) return v
-          fs.delete(new Path(table, staged), true)
-          attempt += 1
-        }
-        throw new IllegalStateException(
-          s"idempotent commit lost $maxRetries races on $table")
-    }
+    existing.getOrElse(stageAndCommit(spark, table, batch, marker))
   }
 
   /** X36c: retention (vacuum + checkpoint) — compact every version ≤

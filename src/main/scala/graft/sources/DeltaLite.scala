@@ -255,10 +255,9 @@ object DeltaLite {
     * (the orphan is deleted before retry, the [[CommitLog.commit]]
     * discipline). */
   def write(spark: SparkSession, df: DataFrame, table: String,
-      overwrite: Boolean = false, maxRetries: Int = 10,
-      collectStats: Boolean = false): Long =
+      overwrite: Boolean = false, collectStats: Boolean = false): Long =
     writeTagged(spark, df, table, overwrite, tag = "-",
-      maxRetries = maxRetries, collectStats = collectStats)
+      collectStats = collectStats)
 
   /** CREATE TABLE — a v0 METADATA-ONLY commit (protocol + metaData, zero
     * add actions): the empty table exists, carries its schema and
@@ -1297,8 +1296,7 @@ object DeltaLite {
     * needing %-escaping and the null sentinel round-trip exactly. Stats
     * collection composes as in [[write]]. Returns the version. */
   def writePartitioned(spark: SparkSession, dfIn: DataFrame, table: String,
-      partCol: String, collectStats: Boolean = false,
-      maxRetries: Int = 10, tag: String = "-p-",
+      partCol: String, collectStats: Boolean = false, tag: String = "-p-",
       txn: Option[(String, Long)] = None,
       overwrite: Boolean = false,
       replaceValue: Option[String] = None): Long = {
@@ -1314,9 +1312,9 @@ object DeltaLite {
     enforceConstraints(spark, table, df)
     require(df.schema.fieldNames.contains(partCol),
       s"partition column $partCol absent from schema")
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val v = latestVersion(spark, table) + 1
+    Occ.commit("partitioned write", table)(
+        latestVersion(spark, table)) { base =>
+      val v = base + 1
       if (v > 0) {
         val prior = snapshot(spark, table, v - 1)
         // EVERY live file must carry partitionValues for partCol — a
@@ -1434,11 +1432,9 @@ object DeltaLite {
         }
       val op = if (overwrite || replaceValue.isDefined) "OVERWRITE" else "WRITE"
       if (tryCommit(fs, table, v,
-          commitInfoLine(op) +: (header ++ txns ++ removes ++ adds))) return v
-      fs.delete(new Path(table, staged), true)
-      attempt += 1
+          commitInfoLine(op) +: (header ++ txns ++ removes ++ adds))) Some(v)
+      else { fs.delete(new Path(table, staged), true); None }
     }
-    throw new IllegalStateException(s"commit lost $maxRetries races on $table")
   }
 
   /** Exactly-once micro-batch commit into a PARTITIONED table — the
@@ -1670,15 +1666,15 @@ object DeltaLite {
     * binds the parquet field id (spec pins id-resolution by reading
     * under deliberately WRONG physical names with matching ids). */
   def writeColumnMapped(spark: SparkSession, df: DataFrame, table: String,
-      maxRetries: Int = 10, mode: String = "name"): Long = {
+      mode: String = "name"): Long = {
     import org.apache.spark.sql.functions.col
     require(mode == "name" || mode == "id",
       s"unknown column-mapping mode '$mode' (name | id)")
     val fs = hadoopFs(spark, table)
     enforceConstraints(spark, table, df)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val v = latestVersion(spark, table) + 1
+    Occ.commit("column-mapped write", table)(
+        latestVersion(spark, table)) { base =>
+      val v = base + 1
       val (header, mapped) =
         if (v == 0) {
           val m = StructType(cmAssign(df.schema.fields.toSeq, 1L))
@@ -1734,11 +1730,9 @@ object DeltaLite {
       val adds = parts.toSeq.map(p =>
         addLine(s"$staged/${p.getPath.getName}", p.getLen, p.getModificationTime))
       if (tryCommit(fs, table, v,
-          commitInfoLine("WRITE") +: (header ++ adds))) return v
-      fs.delete(new Path(table, staged), true)
-      attempt += 1
+          commitInfoLine("WRITE") +: (header ++ adds))) Some(v)
+      else { fs.delete(new Path(table, staged), true); None }
     }
-    throw new IllegalStateException(s"commit lost $maxRetries races on $table")
   }
 
   /** METADATA-ONLY column rename — the reason name mapping exists: the
@@ -2059,17 +2053,15 @@ object DeltaLite {
   }
 
   private def writeTagged(spark: SparkSession, dfIn: DataFrame, table: String,
-      overwrite: Boolean, tag: String, maxRetries: Int = 10,
-      collectStats: Boolean = false,
+      overwrite: Boolean, tag: String, collectStats: Boolean = false,
       txn: Option[(String, Long)] = None): Long = {
     val fs = hadoopFs(spark, table)
     requireNotMapped(spark, table, "plain write()") // use writeColumnMapped
     if (overwrite) requireAppendsOnly(spark, table, "overwrite write()")
     val df = applyGenerated(spark, table, dfIn) // compute/validate generated
     enforceConstraints(spark, table, df) // CHECK constraints gate the write
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val v = latestVersion(spark, table) + 1
+    Occ.commit("write", table)(latestVersion(spark, table)) { base =>
+      val v = base + 1
       val token = java.util.UUID.randomUUID().toString.take(8)
       val staged = s"data/v$v$tag$token"
       df.write.mode("errorifexists").parquet(s"$table/$staged")
@@ -2167,11 +2159,9 @@ object DeltaLite {
       val info = commitInfoLine(if (overwrite) "OVERWRITE" else "WRITE")
       val txns = txn.map { case (app, ver) => txnLine(app, ver) }.toSeq
       if (tryCommit(fs, table, v,
-          info +: (header ++ txns ++ removes ++ adds))) return v
-      fs.delete(new Path(table, staged), true)
-      attempt += 1
+          info +: (header ++ txns ++ removes ++ adds))) Some(v)
+      else { fs.delete(new Path(table, staged), true); None }
     }
-    throw new IllegalStateException(s"commit lost $maxRetries races on $table")
   }
 
   /** Incremental read: the rows ADDED in versions (fromV, toV] — the
@@ -3182,7 +3172,6 @@ object DeltaLite {
       removeRel: Seq[String], addRel: Seq[String],
       operation: String,
       partitionValues: Map[String, Map[String, String]] = Map.empty,
-      maxRetries: Int = 10,
       pinnedDvs: Option[Map[String, DeletionVectors.Descriptor]] = None)
       : Long = {
     val fs = hadoopFs(spark, table)
@@ -3193,9 +3182,8 @@ object DeltaLite {
         statsByFile.get(new Path(f).getName),
         partitionValues = partitionValues.getOrElse(f, Map.empty))
     }
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val v = latestVersion(spark, table) + 1
+    Occ.commit(operation, table)(latestVersion(spark, table)) { base =>
+      val v = base + 1
       // OPTIMISTIC CONFLICT RESOLUTION (Delta's own rule): the rewrite
       // may commit at the head ONLY if every file it removes is still
       // live there — a concurrent APPEND commutes with this rewrite; a
@@ -3227,14 +3215,12 @@ object DeltaLite {
               "statement against the new snapshot")
         }
       }
-      if (tryCommit(fs, table, v,
-          commitInfoLine(operation) +:
-            (removeRel.map(removeLine(_)) ++ adds)))
-        return v
-      attempt += 1
+      // the files are the SQL writers', not this attempt's: a lost race
+      // leaves them for the next try
+      Option.when(tryCommit(fs, table, v,
+        commitInfoLine(operation) +:
+          (removeRel.map(removeLine(_)) ++ adds)))(v)
     }
-    throw new IllegalStateException(
-      s"$operation lost $maxRetries commit races on $table")
   }
 
   /** Exactly-once STREAMING epoch commit for the SQL
@@ -3254,18 +3240,16 @@ object DeltaLite {
   private[graft] def commitStreamFiles(spark: SparkSession, table: String,
       addRel: Seq[String], epochId: Long,
       appId: String = TxnAppId,
-      partitionValues: Map[String, Map[String, String]] = Map.empty,
-      maxRetries: Int = 10): Long = {
+      partitionValues: Map[String, Map[String, String]] = Map.empty): Long = {
     val fs = hadoopFs(spark, table)
-    var statsByFile: Map[String, String] = null
-    var attempt = 0
+    lazy val statsByFile = longStatsFor(spark, table, addRel)
     // OPTIMISTIC RETRY: two streaming queries (or a query and a batch
     // writer) legitimately race one table; an epoch append conflicts
     // with nothing, so losing the arbiter race just means re-reading
     // the head — the per-appId ledger check re-runs each attempt so a
     // replay that lands concurrently still no-ops.
-    while (attempt < maxRetries) {
-      val latest = latestVersion(spark, table)
+    Occ.commit(s"streaming epoch $epochId", table)(
+        latestVersion(spark, table)) { latest =>
       require(latest >= 0,
         s"$table has no Delta log — CREATE TABLE through the catalog first")
       val snapS = snapshot(spark, table, latest)
@@ -3276,24 +3260,21 @@ object DeltaLite {
           addRel.forall(partitionValues.contains),
         s"$table is partitioned: streaming adds must declare " +
           "partitionValues")
-      if (snapS.txns.get(appId).exists(_ >= epochId)) return latest
-      if (addRel.isEmpty) return latest // empty epoch: nothing to dedup
-      if (statsByFile == null) statsByFile = longStatsFor(spark, table,
-        addRel)
-      val adds = addRel.map { f =>
-        val st = fs.getFileStatus(new Path(table, f))
-        addLine(f, st.getLen, st.getModificationTime,
-          statsByFile.get(new Path(f).getName),
-          partitionValues = partitionValues.getOrElse(f, Map.empty))
-      }
-      if (tryCommit(fs, table, latest + 1,
+      // a replayed epoch, or an empty one: nothing to commit
+      if (snapS.txns.get(appId).exists(_ >= epochId) || addRel.isEmpty)
+        Some(latest)
+      else {
+        val adds = addRel.map { f =>
+          val st = fs.getFileStatus(new Path(table, f))
+          addLine(f, st.getLen, st.getModificationTime,
+            statsByFile.get(new Path(f).getName),
+            partitionValues = partitionValues.getOrElse(f, Map.empty))
+        }
+        Option.when(tryCommit(fs, table, latest + 1,
           Seq(commitInfoLine("STREAMING UPDATE"),
-            txnLine(appId, epochId)) ++ adds))
-        return latest + 1
-      attempt += 1
+            txnLine(appId, epochId)) ++ adds))(latest + 1)
+      }
     }
-    throw new IllegalStateException(
-      s"streaming epoch $epochId lost $maxRetries commit races on $table")
   }
 
   /** numRecords + long-column min/max stats for staged files, computed

@@ -511,13 +511,12 @@ object IcebergLite {
       partitionField: Option[PartField] = None,
       summaryProps: Map[String, String] = Map.empty,
       boundsColumn: Option[String] = None,
-      maxRetries: Int = 10,
       operation: Option[String] = None,
       formatV2: Boolean = false,
       toBranch: Option[String] = None,
       statsColumns: Seq[String] = Nil,
       timestampMs: Long = 0L,
-      requireSourceSnapshot: Option[Long] = None): Long = {
+      requireSourceSnapshot: Option[Long] = None): Long =
     // optimistic-concurrency retry (Iceberg's own commit model): a lost
     // metadata-version race cleans up this attempt's commit-private
     // artifacts (staged data, manifest, manifest list) and replans from
@@ -526,21 +525,16 @@ object IcebergLite {
     // snapshot (requireSourceSnapshot, X304 — rewriteDataFiles): a
     // retried overwrite would re-commit rows staged from the OLD head
     // and silently undo whatever the race winner wrote; the per-attempt
-    // check below refuses loudly instead.
-    var attempt = 0
-    while (attempt < maxRetries) {
-      writeOnce(spark, df, table, overwrite, partitionField,
-        summaryProps, boundsColumn, operation, formatV2, toBranch,
-        statsColumns, timestampMs, requireSourceSnapshot) match {
-        case Some(snapshotId) => return snapshotId
-        case None => attempt += 1
-      }
-    }
-    throw new IllegalStateException(
-      s"commit lost $maxRetries metadata races on $table")
-  }
+    // check in [[writeAt]] refuses loudly instead.
+    Occ.commit("write", table)(latestMetadataVersion(spark, table))(
+      writeAt(spark, df, table, _, overwrite, partitionField, summaryProps,
+        boundsColumn, operation, formatV2, toBranch, statsColumns,
+        timestampMs, requireSourceSnapshot))
 
-  private def writeOnce(spark: SparkSession, df: DataFrame, table: String,
+  /** One [[write]] attempt against metadata version `prevV` (0 before the
+    * first commit): None when the commit lost the race for `prevV + 1`. */
+  private def writeAt(spark: SparkSession, df: DataFrame, table: String,
+      prevV: Int,
       overwrite: Boolean,
       partitionField: Option[PartField],
       summaryProps: Map[String, String],
@@ -558,7 +552,6 @@ object IcebergLite {
       s"stats column $c absent from the schema"))
     val fs = hadoopFs(spark, table)
     fs.mkdirs(metaDir(table))
-    val prevV = latestMetadataVersion(spark, table)
     if (prevV > 0) {
       val priorSpec = partitionSpec(readMetadata(fs, table, prevV))
       require(priorSpec == partitionField,
@@ -841,7 +834,7 @@ object IcebergLite {
 
   /** Build the new table-metadata JSON (prior snapshots + this one) and
     * claim the next metadata version by ATOMIC CREATE. Shared by every
-    * commit shape — data appends/overwrites ([[writeOnce]]) and
+    * commit shape — data appends/overwrites ([[writeAt]]) and
     * position-delete commits ([[deleteWhere]]). Returns false when the
     * version was lost to a racing writer (caller cleans up its own
     * commit-private artifacts and replans). */
@@ -3363,31 +3356,6 @@ object IcebergLite {
     }
   }
 
-  /** Row-level DELETE as a POSITION-DELETE commit (merge-on-read; spec
-    * §Row-level deletes) — the Iceberg-v2 parity of
-    * [[DeltaLite.deleteWhereDV]]: no data file is rewritten; matched live
-    * positions are written as ONE (file_path, pos)-sorted parquet delete
-    * file, listed by a DELETE manifest (content = 1 in the manifest-list
-    * row), and committed as a new snapshot. Readers apply the deletes by
-    * sequence number ([[read]]). At 100 TB this is kilobytes written to
-    * delete kilobytes instead of rewriting terabytes. The table upgrades
-    * to format-version 2 if still on 1 (sticky — the spec's upgrade
-    * path). Positions already deleted by an earlier vector never re-match
-    * (the scan is merge-on-read), so re-deleting is a counted no-op.
-    * Returns (snapshotId, rowsDeleted); no commit when nothing matches. */
-  def deleteWhere(spark: SparkSession, table: String, column: String,
-      lo: Long, hi: Long, maxRetries: Int = 10): (Long, Long) = {
-    var attempt = 0
-    while (attempt < maxRetries) {
-      deleteOnce(spark, table, column, lo, hi) match {
-        case Some(r) => return r
-        case None => attempt += 1
-      }
-    }
-    throw new IllegalStateException(
-      s"delete lost $maxRetries metadata races on $table")
-  }
-
   /** One DELETE-manifest entry of the given kind (1 = position deletes,
     * 2 = equality deletes). */
   private def deleteEntry(table: String, snapshotId: Long, rel: String,
@@ -3487,10 +3455,10 @@ object IcebergLite {
     * snapshot survive — exactly the upsert semantics Flink/Iceberg CDC
     * writers rely on. Returns (snapshotId, valuesWritten). */
   def deleteWhereEquality(spark: SparkSession, table: String, column: String,
-      values: Seq[Long], maxRetries: Int = 10): (Long, Long) = {
+      values: Seq[Long]): (Long, Long) = {
     import spark.implicits._
     deleteWhereEqualityRows(spark, table,
-      values.distinct.sorted.toDF(column), maxRetries)
+      values.distinct.sorted.toDF(column))
   }
 
   /** [[deleteWhereEquality]] for COMPOSITE keys (X305) — the delete
@@ -3508,66 +3476,56 @@ object IcebergLite {
     * key columns; exotic types refuse loudly, and only when a plan
     * actually needs that file). */
   def deleteWhereEqualityRows(spark: SparkSession, table: String,
-      keys: DataFrame, maxRetries: Int = 10): (Long, Long) = {
-    var attempt = 0
-    while (attempt < maxRetries) {
-      equalityDeleteOnce(spark, table, keys) match {
-        case Some(r) => return r
-        case None => attempt += 1
-      }
+      keys: DataFrame): (Long, Long) = {
+    def attempt(prevV: Int): Option[(Long, Long)] = {
+      val fs = hadoopFs(spark, table)
+      require(prevV > 0, s"$table has no Iceberg metadata")
+      val prevMeta = readMetadata(fs, table, prevV)
+      val cur = prevMeta.get("current-snapshot-id").asLong()
+      val schema = currentSchema(prevMeta)
+      keys.schema.fieldNames.foreach(c =>
+        require(schema.fieldNames.contains(c),
+          s"equality column $c not in $table schema"))
+      require(keys.schema.nonEmpty, "no equality columns to delete on")
+      val tuples = keys.distinct()
+      val nTuples = tuples.count()
+      require(nTuples > 0, "no values to delete")
+      val snapshotId = prevV + 1L
+      val token = java.util.UUID.randomUUID().toString.take(8)
+      val staged = s"data/s$snapshotId-$token-eqdel"
+      // the delete file IS the value list — no scan of the table happens
+      // at delete time (the kind's whole point for a streaming writer)
+      tuples.coalesce(1)
+        .write.mode("errorifexists").parquet(s"$table/$staged")
+      val parts = fs.listStatus(new Path(table, staged))
+        .filter(_.getPath.getName.endsWith(".parquet")).sortBy(_.getPath.getName)
+      val entries = parts.toSeq.map(p => deleteEntry(table, snapshotId,
+        s"$staged/${p.getPath.getName}", p.getLen,
+        nTuples, kind = 2))
+      val manifestName = s"$snapshotId-$token-del-m0.avro"
+      val manifestLen = writeAvroFile(
+        new File(new File(table, "metadata"), manifestName),
+        deleteEntrySchema, entries)
+      val curList = metaJsonSnapshots(prevMeta).find(_._1 == cur).get._2
+      val prior = listEntries(fs, new Path(curList))
+      val listName = s"snap-$snapshotId-$token.avro"
+      writeManifestList(table, listName,
+        prior :+ MEntry(s"$table/metadata/$manifestName", manifestLen,
+          snapshotId, content = 1, seq = snapshotId),
+        v2 = true)
+      val committed = commitMetadataJson(fs, table, prevV, Some(prevMeta),
+        formatVersion = math.max(2,
+          prevMeta.path("format-version").asInt(1)), snapshotId, schema,
+        partitionSpec(prevMeta), listName, "delete", Map.empty)
+      if (!committed) {
+        fs.delete(new Path(table, staged), true)
+        fs.delete(new Path(metaDir(table), manifestName), false)
+        fs.delete(new Path(metaDir(table), listName), false)
+        None
+      } else Some((snapshotId, nTuples))
     }
-    throw new IllegalStateException(
-      s"equality delete lost $maxRetries metadata races on $table")
-  }
-
-  private def equalityDeleteOnce(spark: SparkSession, table: String,
-      keys: DataFrame): Option[(Long, Long)] = {
-    val fs = hadoopFs(spark, table)
-    val prevV = latestMetadataVersion(spark, table)
-    require(prevV > 0, s"$table has no Iceberg metadata")
-    val prevMeta = readMetadata(fs, table, prevV)
-    val cur = prevMeta.get("current-snapshot-id").asLong()
-    val schema = currentSchema(prevMeta)
-    keys.schema.fieldNames.foreach(c =>
-      require(schema.fieldNames.contains(c),
-        s"equality column $c not in $table schema"))
-    require(keys.schema.nonEmpty, "no equality columns to delete on")
-    val tuples = keys.distinct()
-    val nTuples = tuples.count()
-    require(nTuples > 0, "no values to delete")
-    val snapshotId = prevV + 1L
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    val staged = s"data/s$snapshotId-$token-eqdel"
-    // the delete file IS the value list — no scan of the table happens
-    // at delete time (the kind's whole point for a streaming writer)
-    tuples.coalesce(1)
-      .write.mode("errorifexists").parquet(s"$table/$staged")
-    val parts = fs.listStatus(new Path(table, staged))
-      .filter(_.getPath.getName.endsWith(".parquet")).sortBy(_.getPath.getName)
-    val entries = parts.toSeq.map(p => deleteEntry(table, snapshotId,
-      s"$staged/${p.getPath.getName}", p.getLen,
-      nTuples, kind = 2))
-    val manifestName = s"$snapshotId-$token-del-m0.avro"
-    val manifestLen = writeAvroFile(
-      new File(new File(table, "metadata"), manifestName),
-      deleteEntrySchema, entries)
-    val curList = metaJsonSnapshots(prevMeta).find(_._1 == cur).get._2
-    val prior = listEntries(fs, new Path(curList))
-    val listName = s"snap-$snapshotId-$token.avro"
-    writeManifestList(table, listName,
-      prior :+ MEntry(s"$table/metadata/$manifestName", manifestLen,
-        snapshotId, content = 1, seq = snapshotId),
-      v2 = true)
-    val committed = commitMetadataJson(fs, table, prevV, Some(prevMeta),
-      formatVersion = math.max(2,
-        prevMeta.path("format-version").asInt(1)), snapshotId, schema,
-      partitionSpec(prevMeta), listName, "delete", Map.empty)
-    if (!committed) {
-      fs.delete(new Path(table, staged), true)
-      fs.delete(new Path(metaDir(table), manifestName), false)
-      fs.delete(new Path(metaDir(table), listName), false)
-      None
-    } else Some((snapshotId, nTuples))
+    Occ.commit("equality delete", table)(
+      latestMetadataVersion(spark, table))(attempt)
   }
 
   /** TRUNCATE — a `delete` snapshot whose manifest list is EMPTY:
@@ -3575,32 +3533,32 @@ object IcebergLite {
     * preserved (earlier snapshots still time-travel; expiration
     * reclaims their files), and the next append starts a fresh live
     * set. Returns (snapshotId, filesRemoved). */
-  def truncate(spark: SparkSession, table: String,
-      maxRetries: Int = 10): (Long, Long) = {
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val fs = hadoopFs(spark, table)
-      val prevV = latestMetadataVersion(spark, table)
+  def truncate(spark: SparkSession, table: String): (Long, Long) = {
+    val fs = hadoopFs(spark, table)
+    Occ.commit("truncate", table)(
+        latestMetadataVersion(spark, table)) { prevV =>
       require(prevV > 0, s"$table has no Iceberg metadata")
       val prevMeta = readMetadata(fs, table, prevV)
       val cur = prevMeta.get("current-snapshot-id").asLong()
       val nFiles = snapshotFiles(spark, table, cur, metaV = prevV).size
-      if (nFiles == 0) return (cur, 0L)
-      val snapshotId = prevV + 1L
-      val token = java.util.UUID.randomUUID().toString.take(8)
-      val listName = s"snap-$snapshotId-$token.avro"
-      writeManifestList(table, listName, Seq.empty,
-        v2 = prevMeta.path("format-version").asInt(1) >= 2)
-      if (commitMetadataJson(fs, table, prevV, Some(prevMeta),
-          prevMeta.path("format-version").asInt(1), snapshotId,
-          currentSchema(prevMeta), partitionSpec(prevMeta), listName,
-          "delete", Map.empty))
-        return (snapshotId, nFiles.toLong)
-      fs.delete(new Path(metaDir(table), listName), false)
-      attempt += 1
+      if (nFiles == 0) Some((cur, 0L))
+      else {
+        val snapshotId = prevV + 1L
+        val token = java.util.UUID.randomUUID().toString.take(8)
+        val listName = s"snap-$snapshotId-$token.avro"
+        writeManifestList(table, listName, Seq.empty,
+          v2 = prevMeta.path("format-version").asInt(1) >= 2)
+        if (commitMetadataJson(fs, table, prevV, Some(prevMeta),
+            prevMeta.path("format-version").asInt(1), snapshotId,
+            currentSchema(prevMeta), partitionSpec(prevMeta), listName,
+            "delete", Map.empty))
+          Some((snapshotId, nFiles.toLong))
+        else {
+          fs.delete(new Path(metaDir(table), listName), false)
+          None
+        }
+      }
     }
-    throw new IllegalStateException(
-      s"truncate lost $maxRetries commit races on $table")
   }
 
   /** STICKY-UPWARD format-version upgrade (metadata-only commit; the
@@ -3697,227 +3655,232 @@ object IcebergLite {
     * format-version 3 ([[upgradeFormatVersion]]); rewriteDataFiles
     * materializes vectors away. Returns (snapshotId, newlyMasked). */
   def deleteWhereDV(spark: SparkSession, table: String, column: String,
-      lo: Long, hi: Long, maxRetries: Int = 10): (Long, Long) = {
-    var attempt = 0
-    while (attempt < maxRetries) {
-      deleteDvOnce(spark, table, column, lo, hi) match {
-        case Some(r) => return r
-        case None => attempt += 1
+      lo: Long, hi: Long): (Long, Long) = {
+    def attempt(prevV: Int): Option[(Long, Long)] = {
+      import org.apache.spark.sql.functions.col
+      val fs = hadoopFs(spark, table)
+      require(prevV > 0, s"$table has no Iceberg metadata")
+      val prevMeta = readMetadata(fs, table, prevV)
+      require(prevMeta.path("format-version").asInt(1) >= 3,
+        s"deletion vectors are a format-version-3 feature — " +
+          s"IcebergLite.upgradeFormatVersion($table, 3) first")
+      val spec = partitionSpec(prevMeta)
+      val cur = prevMeta.get("current-snapshot-id").asLong()
+      val dataSeq = snapshotManifestFiles(spark, table, cur, content = 0)
+        .map { case (p, s) => (fileKeyRaw(p), (p, s)) }.toMap
+      val snapshotId = prevV + 1L
+      // matched LIVE positions — prior masks (parquet deletes AND vectors)
+      // already applied by the read, so this is exactly the NEW deletions;
+      // driver-bounded by the deleted-row count (the DV cost model). On a
+      // partitioned table each file also carries its rows' (constant)
+      // transform value, recorded on the vector's manifest entry so a
+      // partition-restricted scan loads only its own partition's vectors.
+      val matchedRows = readLive(spark, table, cur, keepMeta = true)
+        .where(col(column).between(lo, hi))
+      val matched: Map[String, (Array[Long], String)] = (spec match {
+        case None => matchedRows.select("__fn", "__ri").collect()
+          .groupBy(_.getString(0))
+          .map { case (fn, rows) =>
+            fn -> (rows.map(_.getLong(1)), null: String) }
+        case Some(pf) => matchedRows
+          .select(col("__fn"), col("__ri"),
+            pf.valueColumn(col(pf.source)).cast("string").as("_p"))
+          .collect()
+          .groupBy(_.getString(0))
+          .map { case (fn, rows) =>
+            fn -> (rows.map(_.getLong(1)), rows.head.getString(2)) }
+      })
+      if (matched.isEmpty) return Some((cur, 0L))
+      val nNew = matched.values.map(_._1.length.toLong).sum
+      // the SUPERSET contract: the file's new vector = prior vector ∪
+      // still-applicable parquet position-delete rows ∪ new matches
+      val priorDvs = dvPositionsByFile(spark, table, cur, metaV = prevV)
+      val priorParquet: Map[String, Array[Long]] = {
+        val pos = snapshotDeleteEntries(spark, table, cur).filter(_._3 == 1)
+        if (pos.isEmpty) Map.empty
+        else directPosRows(spark, pos.map { case (p, s, _) => (p, s) }) match {
+          // driver-bounded payload (deleted-row count): driver parquet
+          // read, no Spark jobs — unexpected schemas fall back to the
+          // distributed read
+          case Some(rows) =>
+            rows.groupBy(_._1)
+              .collect { case (fn, rs) if matched.contains(fn) &&
+                  dataSeq.contains(fn) =>
+                val dseq = dataSeq(fn)._2
+                fn -> rs.filter(_._3 >= dseq).map(_._2).toArray
+              }.toMap
+          case None =>
+            import org.apache.spark.sql.functions.{broadcast, col => c}
+            import spark.implicits._
+            val delSeq = pos.map { case (p, s, _) => (fileKeyRaw(p), s) }
+              .toDF("__delfn", "__sseq")
+            spark.read.parquet(pos.map(_._1): _*)
+              .select(fileKeyCol(c("file_path")).as("__fn"), c("pos"),
+                fileKeyMeta(c("_metadata.file_path")).as("__delfn"))
+              .join(broadcast(delSeq), "__delfn")
+              .collect().groupBy(_.getAs[String]("__fn"))
+              .collect { case (fn, rows) if matched.contains(fn) &&
+                  dataSeq.contains(fn) =>
+                val dseq = dataSeq(fn)._2
+                fn -> rows.filter(_.getAs[Long]("__sseq") >= dseq)
+                  .map(_.getAs[Long]("pos"))
+              }.toMap
+        }
       }
+      val vectors = matched.toSeq.sortBy(_._1).map { case (fn, (pos, pv)) =>
+        val all = (pos ++
+          priorDvs.get(fn).filter(_._2 >= dataSeq(fn)._2).map(_._1)
+            .getOrElse(Array.empty[Long]) ++
+          priorParquet.getOrElse(fn, Array.empty[Long])).distinct.sorted
+        (fn, all, pv)
+      }
+      val token = java.util.UUID.randomUUID().toString.take(8)
+      val written = Puffin.write(
+        vectors.map { case (fn, pos, _) =>
+          ("deletion-vector-v1", Seq.empty[Int], snapshotId, snapshotId,
+            Map("referenced-data-file" -> dataSeq(fn)._1,
+              "cardinality" -> pos.length.toString),
+            DeletionVectors.serializeBitmap(pos))
+        },
+        Map("created-by" -> "graft IcebergLite"))
+      val rel = s"data/s$snapshotId-$token-dv.puffin"
+      val out = fs.create(new Path(table, rel), false)
+      try out.write(written.bytes) finally out.close()
+      val entrySchema =
+        if (spec.isDefined) deleteEntrySchemaDvPartitioned
+        else deleteEntrySchemaDv
+      val entries = vectors.zip(written.blobs).map { case ((fn, pos, pv), b) =>
+        val e = new GenericData.Record(entrySchema)
+        e.put("status", 1)
+        e.put("snapshot_id", snapshotId)
+        val d = new GenericData.Record(
+          entrySchema.getField("data_file").schema())
+        d.put("file_path", s"$table/$rel")
+        d.put("file_format", "PUFFIN")
+        val part = new GenericData.Record(entrySchema
+          .getField("data_file").schema().getField("partition").schema())
+        if (pv != null) part.put("p0", pv)
+        d.put("partition", part)
+        d.put("record_count", pos.length.toLong)
+        d.put("file_size_in_bytes", written.bytes.length.toLong)
+        d.put("block_size_in_bytes", 64L * 1024 * 1024)
+        d.put("content", 1)
+        d.put("referenced_data_file", dataSeq(fn)._1)
+        d.put("content_offset", b.offset)
+        d.put("content_size_in_bytes", b.length)
+        e.put("data_file", d)
+        e
+      }
+      val manifestName = s"$snapshotId-$token-dv-m0.avro"
+      val manifestLen = writeAvroFile(
+        new File(new File(table, "metadata"), manifestName),
+        entrySchema, entries)
+      val curList = metaJsonSnapshots(prevMeta).find(_._1 == cur).get._2
+      val prior = listEntries(fs, new Path(curList))
+      val listName = s"snap-$snapshotId-$token.avro"
+      writeManifestList(table, listName,
+        prior :+ MEntry(s"$table/metadata/$manifestName", manifestLen,
+          snapshotId, content = 1, seq = snapshotId,
+          specId = prevMeta.path("default-spec-id").asInt(0)),
+        v2 = true)
+      val committed = commitMetadataJson(fs, table, prevV, Some(prevMeta),
+        formatVersion = prevMeta.path("format-version").asInt(1), snapshotId,
+        currentSchema(prevMeta), partitionSpec(prevMeta), listName,
+        "delete", Map.empty)
+      if (!committed) {
+        fs.delete(new Path(table, rel), false)
+        fs.delete(new Path(metaDir(table), manifestName), false)
+        fs.delete(new Path(metaDir(table), listName), false)
+        None
+      } else Some((snapshotId, nNew))
     }
-    throw new IllegalStateException(
-      s"DV delete lost $maxRetries metadata races on $table")
+    Occ.commit("DV delete", table)(
+      latestMetadataVersion(spark, table))(attempt)
   }
 
-  private def deleteDvOnce(spark: SparkSession, table: String,
-      column: String, lo: Long, hi: Long): Option[(Long, Long)] = {
-    import org.apache.spark.sql.functions.col
-    val fs = hadoopFs(spark, table)
-    val prevV = latestMetadataVersion(spark, table)
-    require(prevV > 0, s"$table has no Iceberg metadata")
-    val prevMeta = readMetadata(fs, table, prevV)
-    require(prevMeta.path("format-version").asInt(1) >= 3,
-      s"deletion vectors are a format-version-3 feature — " +
-        s"IcebergLite.upgradeFormatVersion($table, 3) first")
-    val spec = partitionSpec(prevMeta)
-    val cur = prevMeta.get("current-snapshot-id").asLong()
-    val dataSeq = snapshotManifestFiles(spark, table, cur, content = 0)
-      .map { case (p, s) => (fileKeyRaw(p), (p, s)) }.toMap
-    val snapshotId = prevV + 1L
-    // matched LIVE positions — prior masks (parquet deletes AND vectors)
-    // already applied by the read, so this is exactly the NEW deletions;
-    // driver-bounded by the deleted-row count (the DV cost model). On a
-    // partitioned table each file also carries its rows' (constant)
-    // transform value, recorded on the vector's manifest entry so a
-    // partition-restricted scan loads only its own partition's vectors.
-    val matchedRows = readLive(spark, table, cur, keepMeta = true)
-      .where(col(column).between(lo, hi))
-    val matched: Map[String, (Array[Long], String)] = (spec match {
-      case None => matchedRows.select("__fn", "__ri").collect()
-        .groupBy(_.getString(0))
-        .map { case (fn, rows) =>
-          fn -> (rows.map(_.getLong(1)), null: String) }
-      case Some(pf) => matchedRows
-        .select(col("__fn"), col("__ri"),
-          pf.valueColumn(col(pf.source)).cast("string").as("_p"))
-        .collect()
-        .groupBy(_.getString(0))
-        .map { case (fn, rows) =>
-          fn -> (rows.map(_.getLong(1)), rows.head.getString(2)) }
-    })
-    if (matched.isEmpty) return Some((cur, 0L))
-    val nNew = matched.values.map(_._1.length.toLong).sum
-    // the SUPERSET contract: the file's new vector = prior vector ∪
-    // still-applicable parquet position-delete rows ∪ new matches
-    val priorDvs = dvPositionsByFile(spark, table, cur, metaV = prevV)
-    val priorParquet: Map[String, Array[Long]] = {
-      val pos = snapshotDeleteEntries(spark, table, cur).filter(_._3 == 1)
-      if (pos.isEmpty) Map.empty
-      else directPosRows(spark, pos.map { case (p, s, _) => (p, s) }) match {
-        // driver-bounded payload (deleted-row count): driver parquet
-        // read, no Spark jobs — unexpected schemas fall back to the
-        // distributed read
-        case Some(rows) =>
-          rows.groupBy(_._1)
-            .collect { case (fn, rs) if matched.contains(fn) &&
-                dataSeq.contains(fn) =>
-              val dseq = dataSeq(fn)._2
-              fn -> rs.filter(_._3 >= dseq).map(_._2).toArray
-            }.toMap
-        case None =>
-          import org.apache.spark.sql.functions.{broadcast, col => c}
-          import spark.implicits._
-          val delSeq = pos.map { case (p, s, _) => (fileKeyRaw(p), s) }
-            .toDF("__delfn", "__sseq")
-          spark.read.parquet(pos.map(_._1): _*)
-            .select(fileKeyCol(c("file_path")).as("__fn"), c("pos"),
-              fileKeyMeta(c("_metadata.file_path")).as("__delfn"))
-            .join(broadcast(delSeq), "__delfn")
-            .collect().groupBy(_.getAs[String]("__fn"))
-            .collect { case (fn, rows) if matched.contains(fn) &&
-                dataSeq.contains(fn) =>
-              val dseq = dataSeq(fn)._2
-              fn -> rows.filter(_.getAs[Long]("__sseq") >= dseq)
-                .map(_.getAs[Long]("pos"))
-            }.toMap
+  /** Row-level DELETE as a POSITION-DELETE commit (merge-on-read; spec
+    * §Row-level deletes) — the Iceberg-v2 parity of
+    * [[DeltaLite.deleteWhereDV]]: no data file is rewritten; matched live
+    * positions are written as ONE (file_path, pos)-sorted parquet delete
+    * file, listed by a DELETE manifest (content = 1 in the manifest-list
+    * row), and committed as a new snapshot. Readers apply the deletes by
+    * sequence number ([[read]]). At 100 TB this is kilobytes written to
+    * delete kilobytes instead of rewriting terabytes. The table upgrades
+    * to format-version 2 if still on 1 (sticky — the spec's upgrade
+    * path). Positions already deleted by an earlier vector never re-match
+    * (the scan is merge-on-read), so re-deleting is a counted no-op.
+    * Returns (snapshotId, rowsDeleted); no commit when nothing matches. */
+  def deleteWhere(spark: SparkSession, table: String, column: String,
+      lo: Long, hi: Long): (Long, Long) = {
+    def attempt(prevV: Int): Option[(Long, Long)] = {
+      import org.apache.spark.sql.functions.{broadcast, col}
+      import spark.implicits._
+      val fs = hadoopFs(spark, table)
+      require(prevV > 0, s"$table has no Iceberg metadata")
+      val prevMeta = readMetadata(fs, table, prevV)
+      val spec = partitionSpec(prevMeta)
+      val cur = prevMeta.get("current-snapshot-id").asLong()
+      val dataFiles = snapshotManifestFiles(spark, table, cur, content = 0)
+      val snapshotId = prevV + 1L
+      // matched LIVE positions (earlier deletes already applied) → the
+      // spec's delete-file schema: full file_path as recorded in manifests
+      // (field-id 2147483546) + pos (2147483545), sorted by (file_path, pos).
+      // On a partitioned table each position also carries its row's
+      // transform value so the delete files land PER PARTITION.
+      val nameToPath = dataFiles
+        .map { case (p, _) => (fileKeyRaw(p), p) }.toDF("__fn", "file_path")
+      val matchedRows = readLive(spark, table, cur, keepMeta = true)
+        .where(col(column).between(lo, hi))
+      val positions = spec match {
+        case None => matchedRows.select("__fn", "__ri")
+          .join(broadcast(nameToPath), "__fn")
+          .select(col("file_path"), col("__ri").as("pos"))
+        case Some(pf) => matchedRows
+          .select(col("__fn"), col("__ri"),
+            pf.valueColumn(col(pf.source)).as("_p"))
+          .join(broadcast(nameToPath), "__fn")
+          .select(col("file_path"), col("__ri").as("pos"), col("_p"))
       }
+      val token = java.util.UUID.randomUUID().toString.take(8)
+      val staged = s"data/s$snapshotId-$token-del"
+      // DELETE manifest — the manifest-LIST row's content = 1 marks the
+      // manifest as deletes; each entry's data_file.content = 1 marks the
+      // file as POSITION deletes (2 would be equality)
+      val (entries, nDeleted) = stagePositionDeletes(spark, table, positions,
+        staged, snapshotId, spec.isDefined)
+      if (nDeleted == 0) {
+        fs.delete(new Path(table, staged), true)
+        return Some((cur, 0L))
+      }
+      val manifestName = s"$snapshotId-$token-del-m0.avro"
+      val manifestLen = writeAvroFile(
+        new File(new File(table, "metadata"), manifestName),
+        if (spec.isDefined) deleteEntrySchemaPartitioned else deleteEntrySchema,
+        entries)
+      // manifest list: every prior manifest BY REFERENCE + the delete
+      // manifest, content=1, sequence = this snapshot (applies to all data
+      // files with sequence ≤ it — i.e. everything live right now)
+      val curList = metaJsonSnapshots(prevMeta).find(_._1 == cur).get._2
+      val prior = listEntries(fs, new Path(curList))
+      val defaultSpecId = prevMeta.path("default-spec-id").asInt(0)
+      val listName = s"snap-$snapshotId-$token.avro"
+      writeManifestList(table, listName,
+        prior :+ MEntry(s"$table/metadata/$manifestName", manifestLen,
+          snapshotId, content = 1, seq = snapshotId, specId = defaultSpecId),
+        v2 = true)
+      val committed = commitMetadataJson(fs, table, prevV, Some(prevMeta),
+        formatVersion = math.max(2,
+          prevMeta.path("format-version").asInt(1)), snapshotId, currentSchema(prevMeta),
+        partitionSpec(prevMeta), listName, "delete", Map.empty)
+      if (!committed) {
+        fs.delete(new Path(table, staged), true)
+        fs.delete(new Path(metaDir(table), manifestName), false)
+        fs.delete(new Path(metaDir(table), listName), false)
+        None
+      } else Some((snapshotId, nDeleted))
     }
-    val vectors = matched.toSeq.sortBy(_._1).map { case (fn, (pos, pv)) =>
-      val all = (pos ++
-        priorDvs.get(fn).filter(_._2 >= dataSeq(fn)._2).map(_._1)
-          .getOrElse(Array.empty[Long]) ++
-        priorParquet.getOrElse(fn, Array.empty[Long])).distinct.sorted
-      (fn, all, pv)
-    }
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    val written = Puffin.write(
-      vectors.map { case (fn, pos, _) =>
-        ("deletion-vector-v1", Seq.empty[Int], snapshotId, snapshotId,
-          Map("referenced-data-file" -> dataSeq(fn)._1,
-            "cardinality" -> pos.length.toString),
-          DeletionVectors.serializeBitmap(pos))
-      },
-      Map("created-by" -> "graft IcebergLite"))
-    val rel = s"data/s$snapshotId-$token-dv.puffin"
-    val out = fs.create(new Path(table, rel), false)
-    try out.write(written.bytes) finally out.close()
-    val entrySchema =
-      if (spec.isDefined) deleteEntrySchemaDvPartitioned
-      else deleteEntrySchemaDv
-    val entries = vectors.zip(written.blobs).map { case ((fn, pos, pv), b) =>
-      val e = new GenericData.Record(entrySchema)
-      e.put("status", 1)
-      e.put("snapshot_id", snapshotId)
-      val d = new GenericData.Record(
-        entrySchema.getField("data_file").schema())
-      d.put("file_path", s"$table/$rel")
-      d.put("file_format", "PUFFIN")
-      val part = new GenericData.Record(entrySchema
-        .getField("data_file").schema().getField("partition").schema())
-      if (pv != null) part.put("p0", pv)
-      d.put("partition", part)
-      d.put("record_count", pos.length.toLong)
-      d.put("file_size_in_bytes", written.bytes.length.toLong)
-      d.put("block_size_in_bytes", 64L * 1024 * 1024)
-      d.put("content", 1)
-      d.put("referenced_data_file", dataSeq(fn)._1)
-      d.put("content_offset", b.offset)
-      d.put("content_size_in_bytes", b.length)
-      e.put("data_file", d)
-      e
-    }
-    val manifestName = s"$snapshotId-$token-dv-m0.avro"
-    val manifestLen = writeAvroFile(
-      new File(new File(table, "metadata"), manifestName),
-      entrySchema, entries)
-    val curList = metaJsonSnapshots(prevMeta).find(_._1 == cur).get._2
-    val prior = listEntries(fs, new Path(curList))
-    val listName = s"snap-$snapshotId-$token.avro"
-    writeManifestList(table, listName,
-      prior :+ MEntry(s"$table/metadata/$manifestName", manifestLen,
-        snapshotId, content = 1, seq = snapshotId,
-        specId = prevMeta.path("default-spec-id").asInt(0)),
-      v2 = true)
-    val committed = commitMetadataJson(fs, table, prevV, Some(prevMeta),
-      formatVersion = prevMeta.path("format-version").asInt(1), snapshotId,
-      currentSchema(prevMeta), partitionSpec(prevMeta), listName,
-      "delete", Map.empty)
-    if (!committed) {
-      fs.delete(new Path(table, rel), false)
-      fs.delete(new Path(metaDir(table), manifestName), false)
-      fs.delete(new Path(metaDir(table), listName), false)
-      None
-    } else Some((snapshotId, nNew))
-  }
-
-  private def deleteOnce(spark: SparkSession, table: String, column: String,
-      lo: Long, hi: Long): Option[(Long, Long)] = {
-    import org.apache.spark.sql.functions.{broadcast, col}
-    import spark.implicits._
-    val fs = hadoopFs(spark, table)
-    val prevV = latestMetadataVersion(spark, table)
-    require(prevV > 0, s"$table has no Iceberg metadata")
-    val prevMeta = readMetadata(fs, table, prevV)
-    val spec = partitionSpec(prevMeta)
-    val cur = prevMeta.get("current-snapshot-id").asLong()
-    val dataFiles = snapshotManifestFiles(spark, table, cur, content = 0)
-    val snapshotId = prevV + 1L
-    // matched LIVE positions (earlier deletes already applied) → the
-    // spec's delete-file schema: full file_path as recorded in manifests
-    // (field-id 2147483546) + pos (2147483545), sorted by (file_path, pos).
-    // On a partitioned table each position also carries its row's
-    // transform value so the delete files land PER PARTITION.
-    val nameToPath = dataFiles
-      .map { case (p, _) => (fileKeyRaw(p), p) }.toDF("__fn", "file_path")
-    val matchedRows = readLive(spark, table, cur, keepMeta = true)
-      .where(col(column).between(lo, hi))
-    val positions = spec match {
-      case None => matchedRows.select("__fn", "__ri")
-        .join(broadcast(nameToPath), "__fn")
-        .select(col("file_path"), col("__ri").as("pos"))
-      case Some(pf) => matchedRows
-        .select(col("__fn"), col("__ri"),
-          pf.valueColumn(col(pf.source)).as("_p"))
-        .join(broadcast(nameToPath), "__fn")
-        .select(col("file_path"), col("__ri").as("pos"), col("_p"))
-    }
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    val staged = s"data/s$snapshotId-$token-del"
-    // DELETE manifest — the manifest-LIST row's content = 1 marks the
-    // manifest as deletes; each entry's data_file.content = 1 marks the
-    // file as POSITION deletes (2 would be equality)
-    val (entries, nDeleted) = stagePositionDeletes(spark, table, positions,
-      staged, snapshotId, spec.isDefined)
-    if (nDeleted == 0) {
-      fs.delete(new Path(table, staged), true)
-      return Some((cur, 0L))
-    }
-    val manifestName = s"$snapshotId-$token-del-m0.avro"
-    val manifestLen = writeAvroFile(
-      new File(new File(table, "metadata"), manifestName),
-      if (spec.isDefined) deleteEntrySchemaPartitioned else deleteEntrySchema,
-      entries)
-    // manifest list: every prior manifest BY REFERENCE + the delete
-    // manifest, content=1, sequence = this snapshot (applies to all data
-    // files with sequence ≤ it — i.e. everything live right now)
-    val curList = metaJsonSnapshots(prevMeta).find(_._1 == cur).get._2
-    val prior = listEntries(fs, new Path(curList))
-    val defaultSpecId = prevMeta.path("default-spec-id").asInt(0)
-    val listName = s"snap-$snapshotId-$token.avro"
-    writeManifestList(table, listName,
-      prior :+ MEntry(s"$table/metadata/$manifestName", manifestLen,
-        snapshotId, content = 1, seq = snapshotId, specId = defaultSpecId),
-      v2 = true)
-    val committed = commitMetadataJson(fs, table, prevV, Some(prevMeta),
-      formatVersion = math.max(2,
-        prevMeta.path("format-version").asInt(1)), snapshotId, currentSchema(prevMeta),
-      partitionSpec(prevMeta), listName, "delete", Map.empty)
-    if (!committed) {
-      fs.delete(new Path(table, staged), true)
-      fs.delete(new Path(metaDir(table), manifestName), false)
-      fs.delete(new Path(metaDir(table), listName), false)
-      None
-    } else Some((snapshotId, nDeleted))
+    Occ.commit("delete", table)(
+      latestMetadataVersion(spark, table))(attempt)
   }
 
   /** Row-level UPDATE as a MERGE-ON-READ commit — ONE snapshot carrying
@@ -3939,126 +3902,115 @@ object IcebergLite {
     * first; this surface folds it into the operation).
     * Returns (snapshotId, rowsUpdated); nothing matched → no commit. */
   def updateWhere(spark: SparkSession, table: String, column: String,
-      lo: Long, hi: Long, set: Map[String, org.apache.spark.sql.Column],
-      maxRetries: Int = 10): (Long, Long) = {
-    var attempt = 0
-    while (attempt < maxRetries) {
-      updateOnce(spark, table, column, lo, hi, set) match {
-        case Some(r) => return r
-        case None => attempt += 1
-      }
-    }
-    throw new IllegalStateException(
-      s"update lost $maxRetries metadata races on $table")
-  }
-
-  private def updateOnce(spark: SparkSession, table: String, column: String,
       lo: Long, hi: Long, set: Map[String, org.apache.spark.sql.Column])
-      : Option[(Long, Long)] = {
-    import org.apache.spark.sql.functions.{broadcast, col}
-    import spark.implicits._
-    val fs = hadoopFs(spark, table)
-    val prevV = latestMetadataVersion(spark, table)
-    require(prevV > 0, s"$table has no Iceberg metadata")
-    val prevMeta = readMetadata(fs, table, prevV)
-    val spec = partitionSpec(prevMeta)
-    val cur = prevMeta.get("current-snapshot-id").asLong()
-    val schema = currentSchema(prevMeta)
-    require(set.keySet.subsetOf(schema.fieldNames.toSet),
-      s"unknown columns in SET: ${set.keySet -- schema.fieldNames}")
-    spec.foreach { pf =>
-      require(!set.contains(pf.source),
-        s"SET of partition source column ${pf.source} would move rows " +
-          "across partitions — rewrite via mergeInto/rewriteDataFiles " +
-          "instead")
+      : (Long, Long) = {
+    def attempt(prevV: Int): Option[(Long, Long)] = {
+      import org.apache.spark.sql.functions.{broadcast, col}
+      import spark.implicits._
+      val fs = hadoopFs(spark, table)
+      require(prevV > 0, s"$table has no Iceberg metadata")
+      val prevMeta = readMetadata(fs, table, prevV)
+      val spec = partitionSpec(prevMeta)
+      val cur = prevMeta.get("current-snapshot-id").asLong()
+      val schema = currentSchema(prevMeta)
+      require(set.keySet.subsetOf(schema.fieldNames.toSet),
+        s"unknown columns in SET: ${set.keySet -- schema.fieldNames}")
+      spec.foreach { pf =>
+        require(!set.contains(pf.source),
+          s"SET of partition source column ${pf.source} would move rows " +
+            "across partitions — rewrite via mergeInto/rewriteDataFiles " +
+            "instead")
+      }
+      val dataFiles = snapshotManifestFiles(spark, table, cur, content = 0)
+      val snapshotId = prevV + 1L
+      // merge-on-read matched set: earlier deletes/updates already applied,
+      // so coordinates are the rows' CURRENT files
+      val matched = readLive(spark, table, cur, keepMeta = true)
+        .where(col(column).between(lo, hi))
+        .persist()
+      try {
+        val rowsUpdated = matched.count()
+        if (rowsUpdated == 0) return Some((cur, 0L))
+        val token = java.util.UUID.randomUUID().toString.take(8)
+        // (1) matched rows' old coordinates → position-delete file(s);
+        // per-partition with the value on each entry when the table is
+        // partitioned (delete files prune with their partition)
+        val nameToPath = dataFiles
+          .map { case (p, _) => (fileKeyRaw(p), p) }
+          .toDF("__fn", "file_path")
+        val stagedDel = s"data/s$snapshotId-$token-del"
+        val positions = spec match {
+          case None => matched.select("__fn", "__ri")
+            .join(broadcast(nameToPath), "__fn")
+            .select(col("file_path"), col("__ri").as("pos"))
+          case Some(pf) => matched
+            .select(col("__fn"), col("__ri"),
+              pf.valueColumn(col(pf.source)).as("_p"))
+            .join(broadcast(nameToPath), "__fn")
+            .select(col("file_path"), col("__ri").as("pos"), col("_p"))
+        }
+        val (delEntries, _) = stagePositionDeletes(spark, table, positions,
+          stagedDel, snapshotId, spec.isDefined)
+        // (2) matched rows with assignments applied → new data files, laid
+        // out per partition on a partitioned table (the update never moves
+        // a row across partitions — SET of the source column refuses)
+        val updated = set.foldLeft(matched.drop("__fn", "__ri")) {
+          case (d, (k, expr)) => d.withColumn(k, expr)
+        }.select(schema.fieldNames.map(col).toIndexedSeq: _*)
+        val stagedData = s"data/s$snapshotId-$token-upd"
+        val (dataManifestName, dataManifestLen) = spec match {
+          case None =>
+            updated.write.mode("errorifexists").parquet(s"$table/$stagedData")
+            stageDataManifest(spark, fs, table, stagedData, snapshotId, token)
+          case Some(pf) =>
+            // pinned width: one encoder task per partition value (AQE would
+            // fold the byte-light value shuffle to one serial task)
+            updated.withColumn("_p", pf.valueColumn(col(pf.source)))
+              .repartition(
+                spark.conf.get("spark.sql.shuffle.partitions").toInt,
+                col("_p"))
+              .write.mode("errorifexists").partitionBy("_p")
+              .parquet(s"$table/$stagedData")
+            stageDataManifestPartitioned(spark, fs, table, stagedData,
+              snapshotId, token)
+        }
+        val delManifestName = s"$snapshotId-$token-del-m0.avro"
+        val delManifestLen = writeAvroFile(
+          new File(new File(table, "metadata"), delManifestName),
+          if (spec.isDefined) deleteEntrySchemaPartitioned
+          else deleteEntrySchema,
+          delEntries)
+        // manifest list: every prior manifest BY REFERENCE + both new kinds
+        // at this snapshot's sequence, under the current default spec
+        val curList = metaJsonSnapshots(prevMeta).find(_._1 == cur).get._2
+        val prior = listEntries(fs, new Path(curList))
+        val defaultSpecId = prevMeta.path("default-spec-id").asInt(0)
+        val listName = s"snap-$snapshotId-$token.avro"
+        writeManifestList(table, listName,
+          prior ++ Seq(
+            MEntry(s"$table/metadata/$dataManifestName", dataManifestLen,
+              snapshotId, content = 0, seq = snapshotId,
+              specId = defaultSpecId),
+            MEntry(s"$table/metadata/$delManifestName", delManifestLen,
+              snapshotId, content = 1, seq = snapshotId,
+              specId = defaultSpecId)),
+          v2 = true)
+        val committed = commitMetadataJson(fs, table, prevV, Some(prevMeta),
+          formatVersion = math.max(2,
+          prevMeta.path("format-version").asInt(1)), snapshotId, schema, spec, listName,
+          "overwrite", Map.empty)
+        if (!committed) {
+          fs.delete(new Path(table, stagedDel), true)
+          fs.delete(new Path(table, stagedData), true)
+          fs.delete(new Path(metaDir(table), delManifestName), false)
+          fs.delete(new Path(metaDir(table), dataManifestName), false)
+          fs.delete(new Path(metaDir(table), listName), false)
+          None
+        } else Some((snapshotId, rowsUpdated))
+      } finally matched.unpersist()
     }
-    val dataFiles = snapshotManifestFiles(spark, table, cur, content = 0)
-    val snapshotId = prevV + 1L
-    // merge-on-read matched set: earlier deletes/updates already applied,
-    // so coordinates are the rows' CURRENT files
-    val matched = readLive(spark, table, cur, keepMeta = true)
-      .where(col(column).between(lo, hi))
-      .persist()
-    try {
-      val rowsUpdated = matched.count()
-      if (rowsUpdated == 0) return Some((cur, 0L))
-      val token = java.util.UUID.randomUUID().toString.take(8)
-      // (1) matched rows' old coordinates → position-delete file(s);
-      // per-partition with the value on each entry when the table is
-      // partitioned (delete files prune with their partition)
-      val nameToPath = dataFiles
-        .map { case (p, _) => (fileKeyRaw(p), p) }
-        .toDF("__fn", "file_path")
-      val stagedDel = s"data/s$snapshotId-$token-del"
-      val positions = spec match {
-        case None => matched.select("__fn", "__ri")
-          .join(broadcast(nameToPath), "__fn")
-          .select(col("file_path"), col("__ri").as("pos"))
-        case Some(pf) => matched
-          .select(col("__fn"), col("__ri"),
-            pf.valueColumn(col(pf.source)).as("_p"))
-          .join(broadcast(nameToPath), "__fn")
-          .select(col("file_path"), col("__ri").as("pos"), col("_p"))
-      }
-      val (delEntries, _) = stagePositionDeletes(spark, table, positions,
-        stagedDel, snapshotId, spec.isDefined)
-      // (2) matched rows with assignments applied → new data files, laid
-      // out per partition on a partitioned table (the update never moves
-      // a row across partitions — SET of the source column refuses)
-      val updated = set.foldLeft(matched.drop("__fn", "__ri")) {
-        case (d, (k, expr)) => d.withColumn(k, expr)
-      }.select(schema.fieldNames.map(col).toIndexedSeq: _*)
-      val stagedData = s"data/s$snapshotId-$token-upd"
-      val (dataManifestName, dataManifestLen) = spec match {
-        case None =>
-          updated.write.mode("errorifexists").parquet(s"$table/$stagedData")
-          stageDataManifest(spark, fs, table, stagedData, snapshotId, token)
-        case Some(pf) =>
-          // pinned width: one encoder task per partition value (AQE would
-          // fold the byte-light value shuffle to one serial task)
-          updated.withColumn("_p", pf.valueColumn(col(pf.source)))
-            .repartition(
-              spark.conf.get("spark.sql.shuffle.partitions").toInt,
-              col("_p"))
-            .write.mode("errorifexists").partitionBy("_p")
-            .parquet(s"$table/$stagedData")
-          stageDataManifestPartitioned(spark, fs, table, stagedData,
-            snapshotId, token)
-      }
-      val delManifestName = s"$snapshotId-$token-del-m0.avro"
-      val delManifestLen = writeAvroFile(
-        new File(new File(table, "metadata"), delManifestName),
-        if (spec.isDefined) deleteEntrySchemaPartitioned
-        else deleteEntrySchema,
-        delEntries)
-      // manifest list: every prior manifest BY REFERENCE + both new kinds
-      // at this snapshot's sequence, under the current default spec
-      val curList = metaJsonSnapshots(prevMeta).find(_._1 == cur).get._2
-      val prior = listEntries(fs, new Path(curList))
-      val defaultSpecId = prevMeta.path("default-spec-id").asInt(0)
-      val listName = s"snap-$snapshotId-$token.avro"
-      writeManifestList(table, listName,
-        prior ++ Seq(
-          MEntry(s"$table/metadata/$dataManifestName", dataManifestLen,
-            snapshotId, content = 0, seq = snapshotId,
-            specId = defaultSpecId),
-          MEntry(s"$table/metadata/$delManifestName", delManifestLen,
-            snapshotId, content = 1, seq = snapshotId,
-            specId = defaultSpecId)),
-        v2 = true)
-      val committed = commitMetadataJson(fs, table, prevV, Some(prevMeta),
-        formatVersion = math.max(2,
-        prevMeta.path("format-version").asInt(1)), snapshotId, schema, spec, listName,
-        "overwrite", Map.empty)
-      if (!committed) {
-        fs.delete(new Path(table, stagedDel), true)
-        fs.delete(new Path(table, stagedData), true)
-        fs.delete(new Path(metaDir(table), delManifestName), false)
-        fs.delete(new Path(metaDir(table), dataManifestName), false)
-        fs.delete(new Path(metaDir(table), listName), false)
-        None
-      } else Some((snapshotId, rowsUpdated))
-    } finally matched.unpersist()
+    Occ.commit("update", table)(
+      latestMetadataVersion(spark, table))(attempt)
   }
 
   /** [[stageDataManifest]] for a PARTITIONED staging dir (`_p=value`
@@ -4161,130 +4113,120 @@ object IcebergLite {
     * matches nothing degrades to a plain append commit. Returns
     * (snapshotId, rowsUpdated, rowsInserted). */
   def mergeInto(spark: SparkSession, table: String, source: DataFrame,
-      keyCol: String, maxRetries: Int = 10): (Long, Long, Long) = {
-    var attempt = 0
-    while (attempt < maxRetries) {
-      mergeOnce(spark, table, source, keyCol) match {
-        case Some(r) => return r
-        case None => attempt += 1
-      }
-    }
-    throw new IllegalStateException(
-      s"merge lost $maxRetries metadata races on $table")
-  }
-
-  private def mergeOnce(spark: SparkSession, table: String,
-      source: DataFrame, keyCol: String): Option[(Long, Long, Long)] = {
-    import org.apache.spark.sql.functions.{col, collect_set, count => cnt, lit => lt}
-    val fs = hadoopFs(spark, table)
-    val prevV = latestMetadataVersion(spark, table)
-    require(prevV > 0, s"$table has no Iceberg metadata")
-    val prevMeta = readMetadata(fs, table, prevV)
-    require(partitionSpec(prevMeta).isEmpty,
-      "mergeInto on hidden-partitioned tables is outside the subset")
-    val cur = prevMeta.get("current-snapshot-id").asLong()
-    val schema = currentSchema(prevMeta)
-    require(source.columns.toSet == schema.fieldNames.toSet,
-      s"source schema ${source.columns.toSeq} != table ${schema.fieldNames.toSeq}")
-    require(schema.fieldNames.contains(keyCol), s"key $keyCol not in $table")
-    val src = source.select(schema.fieldNames.map(col).toIndexedSeq: _*)
-      .persist()
-    try {
-      val nSrc = src.count()
-      require(nSrc > 0, "empty MERGE source")
-      val srcKeys = src.select(keyCol).distinct()
-      require(srcKeys.count() == nSrc,
-        s"duplicate $keyCol values in MERGE source — ambiguous matches")
-      val formatVersion = prevMeta.path("format-version").asInt(1)
-      // match discovery: ONE pass over the live table — matched row count,
-      // matched-key count, and the touched-file set (bounded by file count)
-      val m = readLive(spark, table, cur, keepMeta = true)
-        .select(col(keyCol), col("__fn"))
-        .join(srcKeys, Seq(keyCol))
-        .agg(cnt(lt(1)).as("n"),
-          collect_set("__fn").as("fns"),
-          org.apache.spark.sql.functions.countDistinct(col(keyCol)).as("nk"))
-        .collect()(0)
-      val rowsUpdated = m.getAs[Long]("n")
-      val matchedKeys = m.getAs[Long]("nk")
-      // the rewrite below replaces ALL matched rows of a key with the ONE
-      // source row (left_anti + union) — if the TARGET holds several rows
-      // for a matched key that silently shrinks the table (SQL MERGE
-      // updates each matched row), so refuse the ambiguity outright, the
-      // same stance taken for duplicate source keys above
-      require(rowsUpdated == matchedKeys,
-        s"duplicate $keyCol values among matched TARGET rows " +
-          s"($rowsUpdated rows across $matchedKeys keys) — ambiguous MERGE")
-      val touched = m.getAs[scala.collection.Seq[String]]("fns").toSet
-      val rowsInserted = nSrc - matchedKeys
-      if (touched.isEmpty) {
-        // nothing matched: a plain append commit of the source
-        return writeOnce(spark, src, table, overwrite = false, None,
-          Map.empty, None, Some("append"), formatV2 = formatVersion >= 2)
-          .map(sid => (sid, 0L, rowsInserted))
-      }
-      val snapshotId = prevV + 1L
-      val token = java.util.UUID.randomUUID().toString.take(8)
-      // rewritten content for the touched files: their surviving live rows
-      // (deletes applied by the scan) + every source row (matched rows'
-      // replacements land here; unmatched rows are the inserts)
-      val survivors = readLive(spark, table, cur, keepMeta = true,
-          onlyFiles = Some(touched))
-        .join(srcKeys, Seq(keyCol), "left_anti")
-        .drop("__fn", "__ri")
-        .select(schema.fieldNames.map(col).toIndexedSeq: _*)
-      val stagedData = s"data/s$snapshotId-$token-mrg"
-      survivors.unionByName(src)
-        .write.mode("errorifexists").parquet(s"$table/$stagedData")
-      val (dataManifestName, dataManifestLen) =
-        stageDataManifest(spark, fs, table, stagedData, snapshotId, token)
-      // survivor manifests: untouched → by reference; partially touched →
-      // re-written with surviving entries under the ORIGINAL sequence;
-      // fully touched → dropped. Delete manifests carry by reference
-      // (their rows for rewritten files are inert — the file is gone).
-      val curList = metaJsonSnapshots(prevMeta).find(_._1 == cur).get._2
-      val written = mutable.ArrayBuffer.empty[String]
-      var mIdx = 0
-      val carried = listEntries(fs, new Path(curList)).flatMap { me =>
-        if (me.content != 0) Some(me)
-        else {
-          val records = readAvroFile(fs, new Path(me.path))
-          val (dropped, kept) = records.partition { r =>
-            r.get("status").asInstanceOf[Int] != 2 &&
-              touched.contains(fileKeyRaw(
-                r.get("data_file").asInstanceOf[GenericRecord]
-                  .get("file_path").toString))
-          }
-          if (dropped.isEmpty) Some(me)
-          else if (kept.isEmpty) None
+      keyCol: String): (Long, Long, Long) = {
+    def attempt(prevV: Int): Option[(Long, Long, Long)] = {
+      import org.apache.spark.sql.functions.{col, collect_set, count => cnt, lit => lt}
+      val fs = hadoopFs(spark, table)
+      require(prevV > 0, s"$table has no Iceberg metadata")
+      val prevMeta = readMetadata(fs, table, prevV)
+      require(partitionSpec(prevMeta).isEmpty,
+        "mergeInto on hidden-partitioned tables is outside the subset")
+      val cur = prevMeta.get("current-snapshot-id").asLong()
+      val schema = currentSchema(prevMeta)
+      require(source.columns.toSet == schema.fieldNames.toSet,
+        s"source schema ${source.columns.toSeq} != table ${schema.fieldNames.toSeq}")
+      require(schema.fieldNames.contains(keyCol), s"key $keyCol not in $table")
+      val src = source.select(schema.fieldNames.map(col).toIndexedSeq: _*)
+        .persist()
+      try {
+        val nSrc = src.count()
+        require(nSrc > 0, "empty MERGE source")
+        val srcKeys = src.select(keyCol).distinct()
+        require(srcKeys.count() == nSrc,
+          s"duplicate $keyCol values in MERGE source — ambiguous matches")
+        val formatVersion = prevMeta.path("format-version").asInt(1)
+        // match discovery: ONE pass over the live table — matched row count,
+        // matched-key count, and the touched-file set (bounded by file count)
+        val m = readLive(spark, table, cur, keepMeta = true)
+          .select(col(keyCol), col("__fn"))
+          .join(srcKeys, Seq(keyCol))
+          .agg(cnt(lt(1)).as("n"),
+            collect_set("__fn").as("fns"),
+            org.apache.spark.sql.functions.countDistinct(col(keyCol)).as("nk"))
+          .collect()(0)
+        val rowsUpdated = m.getAs[Long]("n")
+        val matchedKeys = m.getAs[Long]("nk")
+        // the rewrite below replaces ALL matched rows of a key with the ONE
+        // source row (left_anti + union) — if the TARGET holds several rows
+        // for a matched key that silently shrinks the table (SQL MERGE
+        // updates each matched row), so refuse the ambiguity outright, the
+        // same stance taken for duplicate source keys above
+        require(rowsUpdated == matchedKeys,
+          s"duplicate $keyCol values among matched TARGET rows " +
+            s"($rowsUpdated rows across $matchedKeys keys) — ambiguous MERGE")
+        val touched = m.getAs[scala.collection.Seq[String]]("fns").toSet
+        val rowsInserted = nSrc - matchedKeys
+        if (touched.isEmpty) {
+          // nothing matched: a plain append commit of the source
+          return writeAt(spark, src, table, prevV, overwrite = false, None,
+            Map.empty, None, Some("append"), formatV2 = formatVersion >= 2)
+            .map(sid => (sid, 0L, rowsInserted))
+        }
+        val snapshotId = prevV + 1L
+        val token = java.util.UUID.randomUUID().toString.take(8)
+        // rewritten content for the touched files: their surviving live rows
+        // (deletes applied by the scan) + every source row (matched rows'
+        // replacements land here; unmatched rows are the inserts)
+        val survivors = readLive(spark, table, cur, keepMeta = true,
+            onlyFiles = Some(touched))
+          .join(srcKeys, Seq(keyCol), "left_anti")
+          .drop("__fn", "__ri")
+          .select(schema.fieldNames.map(col).toIndexedSeq: _*)
+        val stagedData = s"data/s$snapshotId-$token-mrg"
+        survivors.unionByName(src)
+          .write.mode("errorifexists").parquet(s"$table/$stagedData")
+        val (dataManifestName, dataManifestLen) =
+          stageDataManifest(spark, fs, table, stagedData, snapshotId, token)
+        // survivor manifests: untouched → by reference; partially touched →
+        // re-written with surviving entries under the ORIGINAL sequence;
+        // fully touched → dropped. Delete manifests carry by reference
+        // (their rows for rewritten files are inert — the file is gone).
+        val curList = metaJsonSnapshots(prevMeta).find(_._1 == cur).get._2
+        val written = mutable.ArrayBuffer.empty[String]
+        var mIdx = 0
+        val carried = listEntries(fs, new Path(curList)).flatMap { me =>
+          if (me.content != 0) Some(me)
           else {
-            mIdx += 1
-            val name = s"$snapshotId-$token-surv$mIdx.avro"
-            val len = writeAvroFile(
-              new File(new File(table, "metadata"), name),
-              kept.head.getSchema, kept)
-            written += name
-            Some(MEntry(s"$table/metadata/$name", len, me.addedSid,
-              content = 0, seq = me.seq, specId = me.specId))
+            val records = readAvroFile(fs, new Path(me.path))
+            val (dropped, kept) = records.partition { r =>
+              r.get("status").asInstanceOf[Int] != 2 &&
+                touched.contains(fileKeyRaw(
+                  r.get("data_file").asInstanceOf[GenericRecord]
+                    .get("file_path").toString))
+            }
+            if (dropped.isEmpty) Some(me)
+            else if (kept.isEmpty) None
+            else {
+              mIdx += 1
+              val name = s"$snapshotId-$token-surv$mIdx.avro"
+              val len = writeAvroFile(
+                new File(new File(table, "metadata"), name),
+                kept.head.getSchema, kept)
+              written += name
+              Some(MEntry(s"$table/metadata/$name", len, me.addedSid,
+                content = 0, seq = me.seq, specId = me.specId))
+            }
           }
         }
-      }
-      val listName = s"snap-$snapshotId-$token.avro"
-      writeManifestList(table, listName,
-        carried :+ MEntry(s"$table/metadata/$dataManifestName",
-          dataManifestLen, snapshotId, content = 0, seq = snapshotId),
-        v2 = formatVersion >= 2)
-      val committed = commitMetadataJson(fs, table, prevV, Some(prevMeta),
-        formatVersion, snapshotId, schema, None, listName,
-        "overwrite", Map.empty)
-      if (!committed) {
-        fs.delete(new Path(table, stagedData), true)
-        written.foreach(n => fs.delete(new Path(metaDir(table), n), false))
-        fs.delete(new Path(metaDir(table), dataManifestName), false)
-        fs.delete(new Path(metaDir(table), listName), false)
-        None
-      } else Some((snapshotId, rowsUpdated, rowsInserted))
-    } finally src.unpersist()
+        val listName = s"snap-$snapshotId-$token.avro"
+        writeManifestList(table, listName,
+          carried :+ MEntry(s"$table/metadata/$dataManifestName",
+            dataManifestLen, snapshotId, content = 0, seq = snapshotId),
+          v2 = formatVersion >= 2)
+        val committed = commitMetadataJson(fs, table, prevV, Some(prevMeta),
+          formatVersion, snapshotId, schema, None, listName,
+          "overwrite", Map.empty)
+        if (!committed) {
+          fs.delete(new Path(table, stagedData), true)
+          written.foreach(n => fs.delete(new Path(metaDir(table), n), false))
+          fs.delete(new Path(metaDir(table), dataManifestName), false)
+          fs.delete(new Path(metaDir(table), listName), false)
+          None
+        } else Some((snapshotId, rowsUpdated, rowsInserted))
+      } finally src.unpersist()
+    }
+    Occ.commit("merge", table)(
+      latestMetadataVersion(spark, table))(attempt)
   }
 
   /** The merge-on-read delete state the SQL row-level path applies
@@ -4457,10 +4399,22 @@ object IcebergLite {
       removePaths: Seq[String], addRel: Seq[String],
       operation: String,
       partitionValues: Map[String, String] = Map.empty,
-      maxRetries: Int = 10,
-      pinnedDeleteFiles: Option[Set[String]] = None): Long = {
+      pinnedDeleteFiles: Option[Set[String]] = None): Long =
+    Occ.commit(operation, table)(latestMetadataVersion(spark, table))(
+      commitReplaceFilesAt(spark, table, removePaths, addRel, operation,
+        partitionValues, pinnedDeleteFiles, _))
+
+  /** One [[commitReplaceFiles]] attempt: conflict checks against metadata
+    * version `prevV`, then the claim of `prevV + 1`. None when the head
+    * moved past `prevV` — whether before the checks or after them, the
+    * claim loses and the next attempt re-checks against the new head. */
+  private[graft] def commitReplaceFilesAt(spark: SparkSession,
+      table: String, removePaths: Seq[String], addRel: Seq[String],
+      operation: String, partitionValues: Map[String, String],
+      pinnedDeleteFiles: Option[Set[String]], prevV: Int): Option[Long] = {
+    require(prevV > 0, s"$table has no Iceberg metadata")
     // OPTIMISTIC CONFLICT RESOLUTION: the rewrite may commit against the
-    // head ONLY while every file it removes is still live there (a
+    // base ONLY while every file it removes is still live there (a
     // concurrent APPEND commutes; a concurrent rewrite of our files does
     // not — the liveness require below surfaces that loudly instead of
     // dropping its effects). Checked on EVERY attempt, not just retries
@@ -4468,89 +4422,52 @@ object IcebergLite {
     // between the row-level snapshot pin and this commit would
     // otherwise be clobbered on a first-attempt CAS that sees the
     // compacted head as prev (removes match nothing, adds duplicate the
-    // rewritten rows).
-    var attempt = 0
-    var last: IllegalStateException = null
-    while (attempt < maxRetries) {
-      // Pin the metadata version the checks run against BEFORE any of
-      // them read the head. The commit below refuses (→ retry, → fresh
-      // checks) if the head is no longer this version: without the pin,
-      // a commit landing between these checks and the version read
-      // inside commitReplaceFilesOnce is INVISIBLE — the checks
-      // validated the old head, the CAS targets a version nobody else
-      // wants, and a racing compaction's re-staged pre-update rows get
-      // carried right past the liveness require (the
-      // SqlConcurrencyProperties UPDATE-vs-OPTIMIZE falsification).
-      val pinnedV = latestMetadataVersion(spark, table)
-      locally {
-        val live = snapshotFiles(spark, table, -1L).map(fileKeyRaw).toSet
-        require(removePaths.map(fileKeyRaw).forall(live.contains),
-          s"$operation on $table conflicts with a concurrent commit " +
-            "that rewrote the same files — re-run the statement against " +
-            "the new snapshot")
-      }
-      // MERGE-ON-READ conflict rule (X300, checked EVERY attempt — the
-      // hazard is the pin-to-commit window, not just a lost CAS): the
-      // rewrite re-staged its files' rows from the PINNED delete state,
-      // so a delete file that landed since then and touches those rows
-      // would be silently undone. A fresh POSITION delete conflicts iff
-      // it references a file this commit removes; a fresh EQUALITY
-      // delete always conflicts (its values may match re-staged rows —
-      // the new data files' higher sequence would exempt them from a
-      // delete that serialized first). Fresh deletes on untouched files
-      // commute: their manifests are carried and keep applying.
-      pinnedDeleteFiles.foreach { pinned =>
-        val fresh = snapshotDeleteEntries(spark, table, -1L)
-          .filterNot(e => pinned.contains(e._1))
-        if (fresh.nonEmpty) {
-          require(fresh.forall(_._3 != 2),
-            s"$operation on $table conflicts with a concurrent equality " +
-              "delete — re-run the statement against the new snapshot")
-          // a concurrent v3 deletion vector always conflicts (the
-          // rewrite was staged from the pinned mask, which lacks it)
-          require(fresh.forall(_._3 != 3),
-            s"$operation on $table conflicts with a concurrent deletion-" +
-              "vector commit — re-run the statement against the new " +
-              "snapshot")
-          val removedKeys = removePaths.map(fileKeyRaw).toSet
-          val touched = spark.read.parquet(fresh.map(_._1): _*)
-            .select("file_path").collect()
-            .map(r => fileKeyRaw(r.getString(0))).toSet
-          require(touched.intersect(removedKeys).isEmpty,
-            s"$operation on $table conflicts with a concurrent position " +
-              "delete on a file it rewrites — re-run the statement " +
-              "against the new snapshot")
-        }
-      }
-      try return commitReplaceFilesOnce(spark, table, removePaths, addRel,
-        operation, partitionValues, expectedPrevV = pinnedV)
-      catch {
-        case e: IllegalStateException =>
-          last = e
-          attempt += 1
+    // rewritten rows). The checks read the base itself, never a newer
+    // head: a racing compaction's re-staged pre-update rows must not be
+    // carried past the liveness require (the SqlConcurrencyProperties
+    // UPDATE-vs-OPTIMIZE falsification).
+    locally {
+      val live = snapshotFiles(spark, table, -1L, metaV = prevV)
+        .map(fileKeyRaw).toSet
+      require(removePaths.map(fileKeyRaw).forall(live.contains),
+        s"$operation on $table conflicts with a concurrent commit " +
+          "that rewrote the same files — re-run the statement against " +
+          "the new snapshot")
+    }
+    // MERGE-ON-READ conflict rule (X300, checked EVERY attempt — the
+    // hazard is the pin-to-commit window, not just a lost CAS): the
+    // rewrite re-staged its files' rows from the PINNED delete state,
+    // so a delete file that landed since then and touches those rows
+    // would be silently undone. A fresh POSITION delete conflicts iff
+    // it references a file this commit removes; a fresh EQUALITY
+    // delete always conflicts (its values may match re-staged rows —
+    // the new data files' higher sequence would exempt them from a
+    // delete that serialized first). Fresh deletes on untouched files
+    // commute: their manifests are carried and keep applying.
+    pinnedDeleteFiles.foreach { pinned =>
+      val fresh = snapshotDeleteEntries(spark, table, -1L, metaV = prevV)
+        .filterNot(e => pinned.contains(e._1))
+      if (fresh.nonEmpty) {
+        require(fresh.forall(_._3 != 2),
+          s"$operation on $table conflicts with a concurrent equality " +
+            "delete — re-run the statement against the new snapshot")
+        // a concurrent v3 deletion vector always conflicts (the
+        // rewrite was staged from the pinned mask, which lacks it)
+        require(fresh.forall(_._3 != 3),
+          s"$operation on $table conflicts with a concurrent deletion-" +
+            "vector commit — re-run the statement against the new " +
+            "snapshot")
+        val removedKeys = removePaths.map(fileKeyRaw).toSet
+        val touched = spark.read.parquet(fresh.map(_._1): _*)
+          .select("file_path").collect()
+          .map(r => fileKeyRaw(r.getString(0))).toSet
+        require(touched.intersect(removedKeys).isEmpty,
+          s"$operation on $table conflicts with a concurrent position " +
+            "delete on a file it rewrites — re-run the statement " +
+            "against the new snapshot")
       }
     }
-    throw new IllegalStateException(
-      s"$operation lost $maxRetries commit races on $table", last)
-  }
-
-  private[graft] def commitReplaceFilesOnce(spark: SparkSession, table: String,
-      removePaths: Seq[String], addRel: Seq[String],
-      operation: String,
-      partitionValues: Map[String, String],
-      expectedPrevV: Long = -1L): Long = {
     val fs = hadoopFs(spark, table)
-    val prevV = latestMetadataVersion(spark, table)
-    // check-to-commit atomicity (see caller): commit ONLY against the
-    // exact version the conflict checks validated — a moved head means
-    // an interleaving commit this attempt never examined. Thrown as the
-    // retry-trigger type, not require(): the caller re-runs its checks
-    // against the new head and decides loudly there.
-    if (expectedPrevV >= 0 && prevV != expectedPrevV)
-      throw new IllegalStateException(
-        s"$operation on $table lost a pin-to-commit race: head moved " +
-          s"v$expectedPrevV → v$prevV between conflict checks and commit")
-    require(prevV > 0, s"$table has no Iceberg metadata")
     val prevMeta = readMetadata(fs, table, prevV)
     val pfOpt = partitionSpec(prevMeta)
     val defaultSpecId = prevMeta.get("default-spec-id").asInt()
@@ -4616,10 +4533,8 @@ object IcebergLite {
       dataManifest.foreach { case (n, _) =>
         fs.delete(new Path(metaDir(table), n), false) }
       fs.delete(new Path(metaDir(table), listName), false)
-      throw new IllegalStateException(
-        s"$operation lost the commit race on $table")
-    }
-    snapshotId
+      None
+    } else Some(snapshotId)
   }
 
   /** The current snapshot id — the streaming source's offset axis. */
@@ -4715,95 +4630,75 @@ object IcebergLite {
   private[graft] def commitStreamFiles(spark: SparkSession, table: String,
       addRel: Seq[String], epochId: Long,
       appId: String = DefaultLedger,
-      partitionValues: Map[String, String] = Map.empty,
-      maxRetries: Int = 10): Long = {
+      partitionValues: Map[String, String] = Map.empty): Long = {
     // OPTIMISTIC RETRY: an epoch append conflicts with nothing, so a
     // lost arbiter race (a concurrent query's epoch, a batch writer)
     // just re-reads the head and re-stages — the per-appId ledger check
     // re-runs each attempt so a concurrently landed replay still no-ops.
-    var attempt = 0
-    var last: IllegalStateException = null
-    while (attempt < maxRetries) {
-      try return commitStreamFilesOnce(spark, table, addRel, epochId,
-        appId, partitionValues)
-      catch {
-        case e: IllegalStateException =>
-          last = e
-          attempt += 1
+    def attempt(prevV: Int): Option[Long] = {
+      val fs = hadoopFs(spark, table)
+      require(prevV > 0,
+        s"$table has no Iceberg metadata — CREATE TABLE through the " +
+          "catalog first")
+      val prevMeta = readMetadata(fs, table, prevV)
+      val cur = prevMeta.get("current-snapshot-id").asLong()
+      // dedup ledger half 1: the high-water mark expireSnapshots folds
+      // into table properties; half 2: retained snapshots' own markers.
+      // The contract is MONOTONE (micro-batch ids only grow within a
+      // query), so anything at-or-below the MAX committed marker is a
+      // redelivery and must no-op — an equality-only marker match would
+      // re-commit a replayed id whose own marker snapshot is absent
+      // (found by StreamCommitProperties)
+      val hwm = prevMeta.path("properties").path(hwmKey(appId))
+        .asLong(-1L)
+      var found = -1L
+      var maxMarker = -1L
+      prevMeta.get("snapshots").forEach { s =>
+        val sameLedger =
+          s.get("summary").path("graft-query-id").asText(DefaultLedger) == appId
+        val m = s.get("summary").path("graft-batch-id").asText("")
+        if (sameLedger && m.nonEmpty) {
+          maxMarker = math.max(maxMarker, m.toLong)
+          if (m == epochId.toString)
+            found = s.get("snapshot-id").asLong()
+        }
       }
+      if (found >= 0) return Some(found)
+      if (epochId <= math.max(hwm, maxMarker)) return Some(cur)
+      if (addRel.isEmpty) return Some(cur) // empty epoch: nothing to dedup
+      // PARTITIONED tables stream too (X295): the rolling streaming
+      // writers report each staged file's transform value, recorded as
+      // manifest p0 so log-only pruning keeps working on streamed epochs
+      val pfS = partitionSpec(prevMeta)
+      require(pfS.isEmpty || addRel.forall(partitionValues.contains),
+        s"$table is partitioned: streaming adds must declare their " +
+          "transform values")
+      val schema = currentSchema(prevMeta)
+      val formatVersion = prevMeta.path("format-version").asInt(1)
+      val snapshotId = prevV + 1L
+      val token = java.util.UUID.randomUUID().toString.take(8)
+      val (mName, mLen) = stageDataManifestFiles(spark, fs, table, addRel,
+        snapshotId, token,
+        values = if (pfS.isEmpty) None else Some(partitionValues))
+      val curList = metaJsonSnapshots(prevMeta).find(_._1 == cur).get._2
+      val carried = listEntries(fs, new Path(curList))
+      val listName = s"snap-$snapshotId-$token.avro"
+      writeManifestList(table, listName,
+        carried :+ MEntry(s"$table/metadata/$mName", mLen, snapshotId,
+          content = 0, seq = snapshotId,
+          specId = prevMeta.get("default-spec-id").asInt()),
+        v2 = formatVersion >= 2)
+      if (!commitMetadataJson(fs, table, prevV, Some(prevMeta), formatVersion,
+          snapshotId, schema, None, listName, "append",
+          Map("graft-batch-id" -> epochId.toString,
+            "graft-query-id" -> appId))) {
+        fs.delete(new Path(metaDir(table), mName), false)
+        fs.delete(new Path(metaDir(table), listName), false)
+        None
+      } else Some(snapshotId)
     }
-    throw new IllegalStateException(
-      s"streaming epoch $epochId lost $maxRetries commit races on $table",
-      last)
-  }
-
-  private def commitStreamFilesOnce(spark: SparkSession, table: String,
-      addRel: Seq[String], epochId: Long,
-      appId: String,
-      partitionValues: Map[String, String]): Long = {
-    val fs = hadoopFs(spark, table)
-    val prevV = latestMetadataVersion(spark, table)
-    require(prevV > 0,
-      s"$table has no Iceberg metadata — CREATE TABLE through the " +
-        "catalog first")
-    val prevMeta = readMetadata(fs, table, prevV)
-    val cur = prevMeta.get("current-snapshot-id").asLong()
-    // dedup ledger half 1: the high-water mark expireSnapshots folds
-    // into table properties; half 2: retained snapshots' own markers.
-    // The contract is MONOTONE (micro-batch ids only grow within a
-    // query), so anything at-or-below the MAX committed marker is a
-    // redelivery and must no-op — an equality-only marker match would
-    // re-commit a replayed id whose own marker snapshot is absent
-    // (found by StreamCommitProperties)
-    val hwm = prevMeta.path("properties").path(hwmKey(appId))
-      .asLong(-1L)
-    var found = -1L
-    var maxMarker = -1L
-    prevMeta.get("snapshots").forEach { s =>
-      val sameLedger =
-        s.get("summary").path("graft-query-id").asText(DefaultLedger) == appId
-      val m = s.get("summary").path("graft-batch-id").asText("")
-      if (sameLedger && m.nonEmpty) {
-        maxMarker = math.max(maxMarker, m.toLong)
-        if (m == epochId.toString)
-          found = s.get("snapshot-id").asLong()
-      }
-    }
-    if (found >= 0) return found
-    if (epochId <= math.max(hwm, maxMarker)) return cur
-    if (addRel.isEmpty) return cur // empty epoch: nothing to dedup
-    // PARTITIONED tables stream too (X295): the rolling streaming
-    // writers report each staged file's transform value, recorded as
-    // manifest p0 so log-only pruning keeps working on streamed epochs
-    val pfS = partitionSpec(prevMeta)
-    require(pfS.isEmpty || addRel.forall(partitionValues.contains),
-      s"$table is partitioned: streaming adds must declare their " +
-        "transform values")
-    val schema = currentSchema(prevMeta)
-    val formatVersion = prevMeta.path("format-version").asInt(1)
-    val snapshotId = prevV + 1L
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    val (mName, mLen) = stageDataManifestFiles(spark, fs, table, addRel,
-      snapshotId, token,
-      values = if (pfS.isEmpty) None else Some(partitionValues))
-    val curList = metaJsonSnapshots(prevMeta).find(_._1 == cur).get._2
-    val carried = listEntries(fs, new Path(curList))
-    val listName = s"snap-$snapshotId-$token.avro"
-    writeManifestList(table, listName,
-      carried :+ MEntry(s"$table/metadata/$mName", mLen, snapshotId,
-        content = 0, seq = snapshotId,
-        specId = prevMeta.get("default-spec-id").asInt()),
-      v2 = formatVersion >= 2)
-    if (!commitMetadataJson(fs, table, prevV, Some(prevMeta), formatVersion,
-        snapshotId, schema, None, listName, "append",
-        Map("graft-batch-id" -> epochId.toString,
-          "graft-query-id" -> appId))) {
-      fs.delete(new Path(metaDir(table), mName), false)
-      fs.delete(new Path(metaDir(table), listName), false)
-      throw new IllegalStateException(
-        s"streaming epoch $epochId lost the commit race on $table")
-    }
-    snapshotId
+    Occ.commit(s"streaming epoch $epochId", table)(
+      latestMetadataVersion(spark, table))(attempt)
   }
 
   /** Static partition OVERWRITE (X289) — the Iceberg landing of
@@ -4986,85 +4881,75 @@ object IcebergLite {
     * ONLY: no data file is read or written; operation `replace`, rows
     * unchanged, change feeds silent. Returns
     * (snapshotId, manifestsBefore, manifestsAfter). */
-  def rewriteManifests(spark: SparkSession, table: String,
-      maxRetries: Int = 10): (Long, Long, Long) = {
-    var attempt = 0
-    while (attempt < maxRetries) {
-      rewriteManifestsOnce(spark, table) match {
-        case Some(r) => return r
-        case None => attempt += 1
+  def rewriteManifests(spark: SparkSession,
+      table: String): (Long, Long, Long) = {
+    def attempt(prevV: Int): Option[(Long, Long, Long)] = {
+      val fs = hadoopFs(spark, table)
+      require(prevV > 0, s"$table has no Iceberg metadata")
+      val prevMeta = readMetadata(fs, table, prevV)
+      val cur = prevMeta.get("current-snapshot-id").asLong()
+      val curList = metaJsonSnapshots(prevMeta).find(_._1 == cur).getOrElse(
+        throw new IllegalArgumentException(
+          s"current snapshot $cur not in $table metadata"))._2
+      val all = listEntries(fs, new Path(curList))
+      val (dataMans, deleteMans) = all.partition(_.content == 0)
+      if (dataMans.size <= 1) return Some((cur, dataMans.size.toLong,
+        dataMans.size.toLong))
+      val snapshotId = prevV + 1L
+      val token = java.util.UUID.randomUUID().toString.take(8)
+      // live entries, grouped by entry-schema SHAPE (one rewritten
+      // manifest per shape — appends from one writer share a shape, so
+      // the common case consolidates to ONE)
+      val byShape = dataMans.flatMap { m =>
+        readAvroFile(fs, new Path(m.path))
+          .filter(_.get("status").asInstanceOf[Int] != 2)
+          .map(e => (e, entrySeqOf(e, m.seq), entrySidOf(e, m.addedSid),
+            m.specId))
+      }.groupBy { case (e, _, _, specId) =>
+        val d = e.get("data_file").asInstanceOf[GenericRecord].getSchema
+        (d.getField("content") != null, d.getField("lower_bound") != null,
+          d.getField("null_value_counts") != null,
+          d.getField("referenced_data_file") != null,
+          d.getField("partition").schema().getFields.size() > 0, specId)
       }
-    }
-    throw new IllegalStateException(
-      s"rewriteManifests lost $maxRetries commit races on $table")
-  }
-
-  private def rewriteManifestsOnce(spark: SparkSession,
-      table: String): Option[(Long, Long, Long)] = {
-    val fs = hadoopFs(spark, table)
-    val prevV = latestMetadataVersion(spark, table)
-    require(prevV > 0, s"$table has no Iceberg metadata")
-    val prevMeta = readMetadata(fs, table, prevV)
-    val cur = prevMeta.get("current-snapshot-id").asLong()
-    val curList = metaJsonSnapshots(prevMeta).find(_._1 == cur).getOrElse(
-      throw new IllegalArgumentException(
-        s"current snapshot $cur not in $table metadata"))._2
-    val all = listEntries(fs, new Path(curList))
-    val (dataMans, deleteMans) = all.partition(_.content == 0)
-    if (dataMans.size <= 1) return Some((cur, dataMans.size.toLong,
-      dataMans.size.toLong))
-    val snapshotId = prevV + 1L
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    // live entries, grouped by entry-schema SHAPE (one rewritten
-    // manifest per shape — appends from one writer share a shape, so
-    // the common case consolidates to ONE)
-    val byShape = dataMans.flatMap { m =>
-      readAvroFile(fs, new Path(m.path))
-        .filter(_.get("status").asInstanceOf[Int] != 2)
-        .map(e => (e, entrySeqOf(e, m.seq), entrySidOf(e, m.addedSid),
-          m.specId))
-    }.groupBy { case (e, _, _, specId) =>
-      val d = e.get("data_file").asInstanceOf[GenericRecord].getSchema
-      (d.getField("content") != null, d.getField("lower_bound") != null,
-        d.getField("null_value_counts") != null,
-        d.getField("referenced_data_file") != null,
-        d.getField("partition").schema().getFields.size() > 0, specId)
-    }
-    val written = mutable.ArrayBuffer.empty[String]
-    val rewritten = byShape.toSeq.sortBy(_._1.toString).zipWithIndex
-      .map { case (((content, bounds, stats, dvRef, part, specId),
-          entries), i) =>
-        val target = entrySchemaFor(partitioned = part,
-          withBounds = bounds, withContent = content,
-          withColStats = stats, withDvRef = dvRef, withSeq = true)
-        val recs = entries.sortBy { case (e, seq, _, _) =>
-          (seq, e.get("data_file").asInstanceOf[GenericRecord]
-            .get("file_path").toString)
-        }.map { case (e, seq, sid, _) =>
-          val out = copyRecord(e, target)
-          out.put("status", 0) // EXISTING — carried, not added
-          out.put("snapshot_id", sid)
-          out.put("sequence_number", seq)
-          out
+      val written = mutable.ArrayBuffer.empty[String]
+      val rewritten = byShape.toSeq.sortBy(_._1.toString).zipWithIndex
+        .map { case (((content, bounds, stats, dvRef, part, specId),
+            entries), i) =>
+          val target = entrySchemaFor(partitioned = part,
+            withBounds = bounds, withContent = content,
+            withColStats = stats, withDvRef = dvRef, withSeq = true)
+          val recs = entries.sortBy { case (e, seq, _, _) =>
+            (seq, e.get("data_file").asInstanceOf[GenericRecord]
+              .get("file_path").toString)
+          }.map { case (e, seq, sid, _) =>
+            val out = copyRecord(e, target)
+            out.put("status", 0) // EXISTING — carried, not added
+            out.put("snapshot_id", sid)
+            out.put("sequence_number", seq)
+            out
+          }
+          val name = s"$snapshotId-$token-rm$i.avro"
+          val len = writeAvroFile(
+            new File(new File(table, "metadata"), name), target, recs)
+          written += name
+          MEntry(s"$table/metadata/$name", len, snapshotId, content = 0,
+            seq = snapshotId, specId = specId)
         }
-        val name = s"$snapshotId-$token-rm$i.avro"
-        val len = writeAvroFile(
-          new File(new File(table, "metadata"), name), target, recs)
-        written += name
-        MEntry(s"$table/metadata/$name", len, snapshotId, content = 0,
-          seq = snapshotId, specId = specId)
-      }
-    val listName = s"snap-$snapshotId-$token.avro"
-    writeManifestList(table, listName, rewritten ++ deleteMans,
-      v2 = prevMeta.path("format-version").asInt(1) >= 2)
-    if (!commitMetadataJson(fs, table, prevV, Some(prevMeta),
-        prevMeta.path("format-version").asInt(1), snapshotId,
-        currentSchema(prevMeta), partitionSpec(prevMeta), listName,
-        "replace", Map.empty)) {
-      written.foreach(n => fs.delete(new Path(metaDir(table), n), false))
-      fs.delete(new Path(metaDir(table), listName), false)
-      None
-    } else Some((snapshotId, dataMans.size.toLong, rewritten.size.toLong))
+      val listName = s"snap-$snapshotId-$token.avro"
+      writeManifestList(table, listName, rewritten ++ deleteMans,
+        v2 = prevMeta.path("format-version").asInt(1) >= 2)
+      if (!commitMetadataJson(fs, table, prevV, Some(prevMeta),
+          prevMeta.path("format-version").asInt(1), snapshotId,
+          currentSchema(prevMeta), partitionSpec(prevMeta), listName,
+          "replace", Map.empty)) {
+        written.foreach(n => fs.delete(new Path(metaDir(table), n), false))
+        fs.delete(new Path(metaDir(table), listName), false)
+        None
+      } else Some((snapshotId, dataMans.size.toLong, rewritten.size.toLong))
+    }
+    Occ.commit("rewriteManifests", table)(
+      latestMetadataVersion(spark, table))(attempt)
   }
 
   /** rewriteDataFiles — Iceberg's compaction op ([[DeltaLite.optimize]]'s

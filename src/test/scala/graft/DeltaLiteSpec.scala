@@ -77,6 +77,27 @@ class DeltaLiteSpec extends SparkSpec with Matchers {
     DeltaLite.tryCommit(fs, table, 1L, Seq("{}")) shouldBe true
   }
 
+  test("two racing writers: each version won once, loser leaves no orphan") {
+    import spark.implicits._
+    val table = Sinks.tempDir("delta_race")
+    DeltaLite.write(spark, Seq((0L, 0L)).toDF("k", "v"), table)
+    // both writers plan from v0 and race to create v1; the arbiter
+    // admits one, the other removes its staged files and retries at v2
+    val results = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val threads = Seq(1L, 2L).map { i =>
+      new Thread(() => results.add(
+        DeltaLite.write(spark, Seq((i, i * 10L)).toDF("k", "v"), table)))
+    }
+    threads.foreach(_.start())
+    threads.foreach(_.join())
+    import scala.jdk.CollectionConverters._
+    results.asScala.toSet shouldBe Set(1L, 2L)
+    DeltaLite.read(spark, table).as[(Long, Long)].collect().sorted shouldBe
+      Seq((0L, 0L), (1L, 10L), (2L, 20L))
+    // every file under data/ is live: nothing staged was left behind
+    DeltaLite.vacuum(spark, table, graceMs = 0L) shouldBe 0L
+  }
+
   test("readChanges: append-only slices read; ranges with removes refuse") {
     import spark.implicits._
     val table = Sinks.tempDir("delta_spec4")

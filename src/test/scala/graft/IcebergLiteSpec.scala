@@ -1343,21 +1343,22 @@ class IcebergLiteSpec extends SparkSpec with Matchers {
     val t = Sinks.tempDir("ice_pin_to_commit")
     IcebergLite.write(spark, Seq((1L, 1L)).toDF("k", "v"), t)
     // the version the (simulated) liveness checks ran against
-    val pinned = IcebergLite.latestMetadataVersion(spark, t).toLong
+    val pinned = IcebergLite.latestMetadataVersion(spark, t)
     // an interleaving commit lands between the checks and the commit
     IcebergLite.write(spark, Seq((2L, 2L)).toDF("k", "v"), t)
-    // the commit attempt must throw the retry-trigger, NOT land a
-    // snapshot whose conflict checks never saw the interloper (the
-    // SqlConcurrency UPDATE-vs-OPTIMIZE duplicate-rows falsification)
-    val ex = intercept[IllegalStateException] {
-      IcebergLite.commitReplaceFilesOnce(spark, t, Nil, Nil,
-        "TEST-REPLACE", Map.empty, expectedPrevV = pinned)
-    }
-    ex.getMessage should include("pin-to-commit")
+    val metaFiles = new java.io.File(t, "metadata").list().toSet
+    // the attempt pinned to the old version must lose its claim, NOT
+    // land a snapshot whose conflict checks never saw the interloper
+    // (the SqlConcurrency UPDATE-vs-OPTIMIZE duplicate-rows
+    // falsification), and must take back every manifest it staged
+    IcebergLite.commitReplaceFilesAt(spark, t, Nil, Nil, "TEST-REPLACE",
+      Map.empty, None, prevV = pinned) shouldBe None
+    IcebergLite.latestMetadataVersion(spark, t) shouldBe pinned + 1
+    new java.io.File(t, "metadata").list().toSet shouldBe metaFiles
     // and with the pin matching the actual head it commits fine
-    IcebergLite.commitReplaceFilesOnce(spark, t, Nil, Nil,
-      "TEST-REPLACE", Map.empty,
-      expectedPrevV = IcebergLite.latestMetadataVersion(spark, t).toLong)
+    val head = IcebergLite.latestMetadataVersion(spark, t)
+    IcebergLite.commitReplaceFilesAt(spark, t, Nil, Nil, "TEST-REPLACE",
+      Map.empty, None, prevV = head) shouldBe Some(head + 1L)
     IcebergLite.read(spark, t).as[(Long, Long)].collect().sorted shouldBe
       Seq((1L, 1L), (2L, 2L))
   }
