@@ -67,11 +67,11 @@ private[graft] object EqVals {
         s"unsupported equality-delete column type $other")
     }
 
-  /** Load one equality-delete file's payload — the per-file driver read
-    * every executor-side mask shares. Refuses (loudly, naming the
-    * remedy) only for column types outside the canonical set. */
-  def load(spark: SparkSession, path: String, seq: Long,
-      context: String): EqVals = {
+  /** Load one equality-delete file's payload — the only reader of
+    * equality-delete files, shared by every Iceberg mask. Refuses loudly
+    * for column types outside the canonical set, which
+    * `IcebergLite.deleteWhereEqualityRows` never writes. */
+  def load(spark: SparkSession, path: String, seq: Long): EqVals = {
     // deleted-key payloads are driver-bounded by definition — read them
     // with a plain driver parquet reader (no Spark job) whenever the
     // schema is the canonical integral/string/boolean tuple set; any
@@ -79,15 +79,14 @@ private[graft] object EqVals {
     // user-facing refusal message
     ParquetDirect.tryReadEqTuples(
         spark.sparkContext.hadoopConfiguration, path) match {
-      case Some((names, _, tuples)) => return EqVals(names, seq, tuples)
+      case Some((names, tuples)) => return EqVals(names, seq, tuples)
       case None => ()
     }
     val df = spark.read.parquet(path)
     df.schema.fields.foreach(f => require(supported(f.dataType),
       s"equality delete file $path column ${f.name} has type " +
-        s"${f.dataType.simpleString} — $context masks integral/string/" +
-        "boolean key tuples; IcebergLite.rewriteDataFiles (or " +
-        "readChangelog for the feed) first"))
+        s"${f.dataType.simpleString} — equality deletes match integral/" +
+        "string/boolean key tuples only, so this file cannot be masked"))
     val width = df.schema.length
     val tuples = df.collect()
       .map(r => (0 until width).map(j => external(r.get(j))): Seq[Any])
@@ -102,10 +101,16 @@ private[graft] object EqVals {
   def checks(eq: Seq[(Array[Int], Array[Seq[Any]])],
       types: Array[DataType]): Array[Check] =
     eq.map { case (ords, tuples) =>
-      val set = new java.util.HashSet[Seq[Any]](tuples.length * 2)
-      tuples.foreach(t => set.add(t))
-      (ords, ords.map(types), set)
+      (ords, ords.map(types), tupleSet(tuples))
     }.toArray
+
+  /** The membership set of one file's tuples (NULL components kept:
+    * the NULL-safe rule). */
+  def tupleSet(tuples: Array[Seq[Any]]): java.util.HashSet[Seq[Any]] = {
+    val set = new java.util.HashSet[Seq[Any]](tuples.length * 2)
+    tuples.foreach(t => set.add(t))
+    set
+  }
 
   /** True iff the row's key tuple appears in ANY of the checks'
     * value sets (each check = one delete file). */

@@ -1623,8 +1623,8 @@ object FormatQueries {
 
   /** X268/X276, Iceberg side: appends → MOR DELETE, which the SQL
     * surface now SERVES uncompacted (the catalog routes delete-carrying
-    * snapshots through [[IcebergLite.read]]'s sequence-gated anti-join
-    * plan via the V1 bridge — `mor_rows` is counted through `spark.sql`
+    * snapshots through [[IcebergLite.read]]'s sequence-gated mask
+    * filter via the V1 bridge — `mor_rows` is counted through `spark.sql`
     * while the position deletes are live) → `rewriteDataFiles`
     * compacts and the stock parquet path resumes with the same answer;
     * `VERSION AS OF <snapshot-id>` travels to the first append. */

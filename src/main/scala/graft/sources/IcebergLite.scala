@@ -1196,7 +1196,7 @@ object IcebergLite {
       require(!fields.exists(_._2 == newName),
         s"column $newName already exists in $table")
       require(snapshotDeleteEntries(spark, table, -1L)
-          .forall(_._3 != 2),
+          .forall(_.kind != 2),
         s"$table carries live equality-delete files, whose key columns " +
           "are bound by parquet NAME — IcebergLite.rewriteDataFiles " +
           "first, then rename")
@@ -2043,7 +2043,7 @@ object IcebergLite {
     * manifests whose list row says content = 1. */
   private[graft] def snapshotDeleteFiles(spark: SparkSession, table: String,
       snapshotId: Long, metaV: Int = -1): Seq[String] =
-    snapshotDeleteEntries(spark, table, snapshotId, metaV = metaV).map(_._1)
+    snapshotDeleteEntries(spark, table, snapshotId, metaV = metaV).map(_.path)
 
   /** Exact current-snapshot table size off the manifests alone:
     * (row count, data bytes) — the control-plane numbers a cost-based
@@ -2156,11 +2156,44 @@ object IcebergLite {
       }
   }
 
-  /** (file_path, sequence_number, kind) of every live DELETE file in a
-    * snapshot, kind from data_file.content (field-id 134): 1 = position
-    * deletes, 2 = equality deletes. */
-  private def snapshotDeleteEntries(spark: SparkSession, table: String,
-      snapshotId: Long, metaV: Int = -1): Seq[(String, Long, Int)] = {
+  /** One live DELETE-manifest entry. `kind` comes from data_file.content
+    * (field-id 134): 1 = position deletes, 2 = equality deletes, and 3 =
+    * a v3 DELETION VECTOR — a content=1 entry naming a
+    * referenced_data_file, whose carrier is a Puffin blob, NOT parquet
+    * (kind 3 so no consumer parquet-reads it by accident). `dv` holds the
+    * vector's (referenced data-file key, blob offset, blob size).
+    * Sequence number and adding snapshot follow the spec's manifest-list
+    * inheritance. */
+  private[graft] final case class DeleteEntry(path: String, seq: Long,
+      kind: Int, addedSid: Long, dv: Option[(String, Long, Long)])
+
+  /** The live delete entries of one manifest list — the only decoder of
+    * delete manifests. */
+  private def deleteEntriesOf(fs: FileSystem, listPath: String)
+      : Seq[DeleteEntry] =
+    listEntries(fs, new Path(listPath)).filter(_.content == 1).flatMap { m =>
+      readAvroFile(fs, new Path(m.path))
+        .filter(_.get("status").asInstanceOf[Int] != 2)
+        .map { e =>
+          val d = e.get("data_file").asInstanceOf[GenericRecord]
+          val ref =
+            if (d.getSchema.getField("referenced_data_file") == null) null
+            else d.get("referenced_data_file")
+          val kind =
+            if (d.getSchema.getField("content") == null) 1 // pre-field writers
+            else if (ref != null) 3
+            else d.get("content").asInstanceOf[Int]
+          DeleteEntry(d.get("file_path").toString, entrySeqOf(e, m.seq),
+            kind, entrySidOf(e, m.addedSid),
+            Option(ref).map(r => (fileKeyRaw(r.toString),
+              d.get("content_offset").asInstanceOf[Long],
+              d.get("content_size_in_bytes").asInstanceOf[Long])))
+        }
+    }
+
+  /** Every live delete entry of a snapshot (current when < 0). */
+  private[graft] def snapshotDeleteEntries(spark: SparkSession, table: String,
+      snapshotId: Long, metaV: Int = -1): Seq[DeleteEntry] = {
     val fs = hadoopFs(spark, table)
     val v = if (metaV > 0) metaV else latestMetadataVersion(spark, table)
     require(v > 0, s"$table has no Iceberg metadata")
@@ -2170,23 +2203,7 @@ object IcebergLite {
     val snap = metaJsonSnapshots(meta).find(_._1 == wanted).getOrElse(
       throw new IllegalArgumentException(
         s"snapshot $wanted not in $table metadata v$v"))
-    listEntries(fs, new Path(snap._2)).filter(_.content == 1)
-      .flatMap { m =>
-        readAvroFile(fs, new Path(m.path))
-          .filter(_.get("status").asInstanceOf[Int] != 2)
-          .map { e =>
-            val d = e.get("data_file").asInstanceOf[GenericRecord]
-            val kind =
-              if (d.getSchema.getField("content") == null) 1 // pre-field writers: position
-              // v3: a content=1 entry naming a referenced_data_file is a
-              // DELETION VECTOR (Puffin blob, NOT parquet) — kind 3 so
-              // no consumer parquet-reads the carrier by accident
-              else if (d.getSchema.getField("referenced_data_file") != null &&
-                  d.get("referenced_data_file") != null) 3
-              else d.get("content").asInstanceOf[Int]
-            (d.get("file_path").toString, entrySeqOf(e, m.seq), kind)
-          }
-      }
+    deleteEntriesOf(fs, snap._2)
   }
 
   /** Incremental read: rows ADDED in snapshots (fromSnap, toSnap] —
@@ -2313,10 +2330,11 @@ object IcebergLite {
     *     PARENT (earlier position/equality deletes already subtracted —
     *     a masked row must not re-report its deletion) as `delete`;
     *   - DELETE FILES added in the snapshot (merge-on-read DML) → the
-    *     parent-live rows they mask, found by position semi-join
-    *     (position deletes) or value semi-join (equality deletes) as
-    *     `delete` — so a MOR UPDATE surfaces as its delete+insert pair,
-    *     exactly how Iceberg's changelog renders updates;
+    *     parent-live rows they mask, found by one [[filterByMask]]
+    *     filter over the parent view (positions, vectors and equality
+    *     tuples alike) as `delete` — so a MOR UPDATE surfaces as its
+    *     delete+insert pair, exactly how Iceberg's changelog renders
+    *     updates;
     *   - `replace` (rewriteDataFiles) snapshots contribute NOTHING:
     *     byte-not-row rewrites are invisible to a row-level feed.
     *
@@ -2330,8 +2348,7 @@ object IcebergLite {
     * added/removed/masked files — O(changed bytes), never O(table). */
   def readChangelog(spark: SparkSession, table: String, fromSnap: Long,
       toSnap: Long): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    import spark.implicits._
+    import org.apache.spark.sql.functions.lit
     val fs = hadoopFs(spark, table)
     val v = latestMetadataVersion(spark, table)
     require(v > 0, s"$table has no Iceberg metadata")
@@ -2373,10 +2390,11 @@ object IcebergLite {
             "cannot reconstruct the state diff"))
         val curFiles = snapshotManifestFiles(spark, table, sid, content = 0)
           .map { case (p, _) => (fileKeyRaw(p), p) }.toMap
-        val parFiles = parent.map(p =>
-          snapshotManifestFiles(spark, table, p, content = 0)
-            .map { case (q, _) => (fileKeyRaw(q), q) }.toMap)
-          .getOrElse(Map.empty[String, String])
+        val parE = parent.map(p =>
+          snapshotManifestFiles(spark, table, p, content = 0))
+          .getOrElse(Nil)
+        val parFiles = parE.map { case (q, _) => (fileKeyRaw(q), q) }.toMap
+        val parSeq = parE.map { case (q, seq) => (fileKeyRaw(q), seq) }.toMap
         val addedPaths = (curFiles.keySet -- parFiles.keySet).toSeq.sorted
           .map(curFiles)
         val removedKeys = parFiles.keySet -- curFiles.keySet
@@ -2394,141 +2412,22 @@ object IcebergLite {
             .withColumn("_change_type", lit("delete"))
             .withColumn("_snapshot_id", lit(sid)))
         // delete FILES this snapshot added (MOR DML): the rows they mask
-        // were live at the parent — semi-join them out of the parent view
-        val newDeletes = listEntries(fs, new Path(snapLists(sid)))
-          .filter(m => m.content == 1 && m.addedSid == sid)
-          .flatMap(m => readAvroFile(fs, new Path(m.path))
-            .filter(_.get("status").asInstanceOf[Int] != 2)
-            .map { e =>
-              val d = e.get("data_file").asInstanceOf[GenericRecord]
-              val kind =
-                if (d.getSchema.getField("content") == null) 1
-                else if (d.getSchema.getField("referenced_data_file") != null
-                    && d.get("referenced_data_file") != null) 3 // v3 DV
-                else d.get("content").asInstanceOf[Int]
-              (d.get("file_path").toString, kind)
-            })
+        // were live at the parent — the parent view filtered to the rows
+        // the new deletes alone kill (positions, vectors and equality
+        // tuples in one executor filter)
+        val newDeletes = deleteEntriesOf(fs, snapLists(sid))
+          .filter(_.addedSid == sid)
         val morDeletes =
           if (newDeletes.isEmpty) None
           else {
-            val parentLive = readLive(spark, table, parent.get, keepMeta = true)
-            // position semi-joins become executor-side HIT filters (the
-            // readLive mask machinery, inverted): one broadcast of the
-            // driver-bounded coordinates, no broadcast-join stages. The
-            // raw `_metadata.file_path` key decode is memoized per file;
-            // a parentLive shape without `_metadata` (name-drift epochs)
-            // filters on the `__fn` column instead — same rows, the key
-            // expression just evaluates per row as the join key used to.
-            def hitCoords(coords: Map[String, Array[Long]]): DataFrame = {
-              val b = spark.sparkContext.broadcast(coords)
-              try parentLive.where(org.apache.spark.sql.functions.udf(
-                  new MaskLiveFilter.PosHitRaw(b))
-                .apply(col("_metadata.file_path"), col("__ri")))
-              catch {
-                case _: org.apache.spark.sql.AnalysisException =>
-                  parentLive.where(org.apache.spark.sql.functions.udf(
-                      new MaskLiveFilter.PosHitKey(b))
-                    .apply(col("__fn"), col("__ri")))
-              }
-            }
-            val pos = newDeletes.filter(_._2 == 1).map(_._1)
-            val eq = newDeletes.filter(_._2 == 2).map(_._1)
-            var masked: Option[DataFrame] = None
-            if (pos.nonEmpty) {
-              // coordinate payloads are driver-bounded (deleted-row
-              // count): driver parquet read, no Spark job — unexpected
-              // schemas fall back to the distributed read + semi-join
-              val hit = directPosRows(spark, pos.map((_, 0L))) match {
-                case Some(rows) =>
-                  hitCoords(rows.groupBy(_._1).map { case (fn, rs) =>
-                    fn -> rs.map(_._2).distinct.sorted.toArray })
-                case None =>
-                  val coords = spark.read.parquet(pos: _*)
-                    .select(fileKeyCol(col("file_path")).as("__fn"),
-                      col("pos").as("__ri"))
-                  parentLive.join(coords, Seq("__fn", "__ri"), "left_semi")
-              }
-              masked = Some(hit)
-            }
-            if (newDeletes.exists(_._2 == 3)) {
-              // v3 DELETION VECTORS (X310): the rows a DV commit kills
-              // are the new vectors' positions that were LIVE at the
-              // parent — filtering parentLive drops already-masked
-              // positions for free (parent vector ∪ parent parquet rows
-              // are not in parentLive), so the superset vector announces
-              // exactly its fresh deletions. Positions pass the driver
-              // bounded by deleted-row count.
-              val hit = hitCoords(dvPositionsByFile(spark, table, sid,
-                  metaV = v)
-                .collect { case (fn, (ps, dvSeq)) if dvSeq == sid =>
-                  fn -> ps.distinct.sorted }.toMap)
-              masked = Some(masked.map(_.unionByName(hit)).getOrElse(hit))
-            }
-            eq.groupBy(p => ParquetDirect.schemaFieldNames(
-                spark.sparkContext.hadoopConfiguration, p))
-              .foreach { case (eqCols, files) =>
-                // composite keys (X305): a row announces only when EVERY
-                // key column matches the same delete tuple. Tuple
-                // payloads are driver-bounded — per-file driver reads
-                // build a LOCAL relation (canonical integral→Long
-                // widening, lossless under `===`); non-canonical column
-                // types fall back to the distributed read
-                val direct: Option[(Seq[org.apache.spark.sql.types
-                    .DataType], Array[Seq[Any]])] = {
-                  val conf = spark.sparkContext.hadoopConfiguration
-                  val acc = Array.newBuilder[Seq[Any]]
-                  var types: Seq[org.apache.spark.sql.types.DataType] =
-                    null
-                  val ok = files.forall { p =>
-                    ParquetDirect.tryReadEqTuples(conf, p) match {
-                      case Some((names, ts, tuples)) if names == eqCols &&
-                          (types == null || types == ts) =>
-                        types = ts
-                        acc ++= tuples
-                        true
-                      case _ => false
-                    }
-                  }
-                  if (ok) Some((types, acc.result().distinct)) else None
-                }
-                val hit = direct match {
-                  case Some((_, tuples))
-                      if eqCols.forall(c => parentLive.schema.fields
-                        .find(_.name == c)
-                        .exists(f => EqVals.supported(f.dataType))) =>
-                    // value semi-join as an executor-side HIT filter:
-                    // `===` semantics (tuples with a NULL component can
-                    // never match; nor can a NULL row value)
-                    val set = new java.util.HashSet[Seq[Any]](
-                      tuples.length * 2)
-                    tuples.foreach(t => if (!t.contains(null)) set.add(t))
-                    val b = spark.sparkContext.broadcast(set)
-                    parentLive.where(org.apache.spark.sql.functions.udf(
-                        new MaskLiveFilter.EqHit(b),
-                        org.apache.spark.sql.types.BooleanType)
-                      .apply(org.apache.spark.sql.functions.struct(
-                        eqCols.map(col): _*)))
-                  case _ =>
-                    val vals = direct match {
-                      case Some((types, tuples)) =>
-                        val schema = StructType(eqCols.zip(types).map {
-                          case (c, t) =>
-                            org.apache.spark.sql.types.StructField(c, t)
-                        })
-                        spark.createDataFrame(java.util.Arrays.asList(
-                          tuples.map(t =>
-                            org.apache.spark.sql.Row.fromSeq(t)): _*), schema)
-                      case None =>
-                        spark.read.parquet(files: _*)
-                          .select(eqCols.map(col): _*).distinct()
-                    }
-                    val cond = eqCols.map(c => parentLive(c) === vals(c))
-                      .reduce(_ && _)
-                    parentLive.join(vals, cond, "left_semi")
-                }
-                masked = Some(masked.map(_.unionByName(hit)).getOrElse(hit))
-              }
-            masked.map(_.drop("__fn", "__ri")
+            // a vector committed here is the file's SUPERSET vector; its
+            // positions already masked at the parent are not parent-live,
+            // so the filter announces exactly its fresh deletions
+            val killed = maskOf(spark, newDeletes, parSeq)
+            Some(filterByMask(spark,
+                readLive(spark, table, parent.get, keepMeta = true),
+                killed, alive = false)
+              .drop("__fn", "__ri")
               .withColumn("_change_type", lit("delete"))
               .withColumn("_snapshot_id", lit(sid)))
           }
@@ -2564,7 +2463,7 @@ object IcebergLite {
     * position-delete files' masked rows as deletes, a new EQUALITY
     * delete's masked rows as value-filtered deletes over every
     * parent-live file — the same per-row cost the batch changelog's
-    * semi-join pays, just file-granular; `replace` snapshots are
+    * mask filter pays, just file-granular; `replace` snapshots are
     * row-silent), but as FILE-GRANULAR plans an executor-side reader
     * serves. Ids absent from the snapshots list (metadata-only
     * versions) contribute nothing. Position lists and equality values
@@ -2572,7 +2471,6 @@ object IcebergLite {
     * deleteWhereDV cost model). */
   private[graft] def changeUnits(spark: SparkSession, table: String,
       sid: Long): Seq[IceChangeUnit] = {
-    import org.apache.spark.sql.functions.col
     val fs = hadoopFs(spark, table)
     val v = latestMetadataVersion(spark, table)
     require(v > 0, s"$table has no Iceberg metadata")
@@ -2616,52 +2514,17 @@ object IcebergLite {
       }, s"snapshot $sid of $table involves files written under " +
         "since-renamed column names — IcebergLite.rewriteDataFiles first")
     }
-    // delete-file inventory of a snapshot's list: (path, kind,
-    // addedSid, sequence)
-    def deleteFiles(s: Long): Seq[(String, Int, Long, Long)] =
-      listEntries(fs, new Path(snapLists(s))).filter(_.content == 1)
-        .flatMap(m => readAvroFile(fs, new Path(m.path))
-          .filter(_.get("status").asInstanceOf[Int] != 2)
-          .map { e =>
-            val d = e.get("data_file").asInstanceOf[GenericRecord]
-            val kind =
-              if (d.getSchema.getField("content") == null) 1
-              else if (d.getSchema.getField("referenced_data_file") != null &&
-                  d.get("referenced_data_file") != null) 3 // v3 DV
-              else d.get("content").asInstanceOf[Int]
-            (d.get("file_path").toString, kind, m.addedSid, m.seq)
-          })
-    val sidDel = deleteFiles(sid)
-    val parDel = parent.map(deleteFiles).getOrElse(Seq.empty)
-    // v3 DELETION VECTORS stream too (X310): the parent's vectors fold
-    // into the SKIP mask (their positions were already dead — must not
-    // re-announce), and a vector committed at THIS snapshot emits its
-    // fresh positions like a new position-delete file. Both pass the
-    // driver bounded by deleted-row count (the DV cost model).
-    val parentDvPos: Map[String, Array[Long]] =
-      if (!parDel.exists(_._2 == 3)) Map.empty
-      else dvPositionsByFile(spark, table, parent.get, metaV = v)
-        .collect { case (k, (ps, dvSeq))
-            if parSeqAndPath.get(k).exists(_._2 <= dvSeq) => k -> ps }
-    val newDvPos: Map[String, Array[Long]] =
-      if (!sidDel.exists(e => e._2 == 3 && e._3 == sid)) Map.empty
-      else dvPositionsByFile(spark, table, sid, metaV = v)
-        .collect { case (k, (ps, dvSeq)) if dvSeq == sid => k -> ps }
-    def positionsBy(paths: Seq[String]): Map[String, Array[Long]] =
-      if (paths.isEmpty) Map.empty
-      // driver-bounded payload: plain driver parquet read, no Spark job
-      // (unexpected schemas fall back to the distributed read)
-      else ParquetDirect.tryReadPositions(
-          spark.sparkContext.hadoopConfiguration, paths) match {
-        case Some(rows) =>
-          rows.groupBy(r => fileKeyRaw(r._1))
-            .map { case (k, rs) => k -> rs.map(_._2).sorted.toArray }
-        case None =>
-          spark.read.parquet(paths: _*)
-            .select(col("file_path"), col("pos")).collect()
-            .groupBy(r => fileKeyRaw(r.getString(0)))
-            .map { case (k, rows) => k -> rows.map(_.getLong(1)).sorted }
-      }
+    val sidDel = deleteEntriesOf(fs, snapLists(sid))
+    val parDel = parent.map(p => deleteEntriesOf(fs, snapLists(p)))
+      .getOrElse(Nil)
+    // a file's parent-side position mask (parquet rows ∪ vector, gated
+    // to the parent's files): those rows were already dead and must not
+    // re-announce. Positions pass the driver bounded by deleted-row count
+    // (the DV cost model).
+    val parentPos = maskOf(spark, parDel.filter(_.kind != 2),
+      parSeqAndPath.map { case (k, (_, seq)) => (k, seq) }).posByFile
+    def parentMask(k: String): Array[Long] =
+      parentPos.getOrElse(k, Array.empty[Long])
     // equality-delete payloads load LAZILY, per file, ONLY when a
     // planned unit actually needs that file's values (r15 advice: eager
     // validation of every live parent file made one exotic delete file
@@ -2671,24 +2534,22 @@ object IcebergLite {
     // the manifest entries' own seq, so NO file is read to decide
     // whether it applies.
     val eqCache = mutable.Map.empty[String, EqVals]
-    def eqValue(p: String, seq: Long): EqVals =
-      eqCache.getOrElseUpdate(p,
-        EqVals.load(spark, p, seq, "the change stream"))
-    val parentPos = positionsBy(parDel.filter(_._2 == 1).map(_._1))
-    val parentEqEntries = parDel.filter(_._2 == 2)
+    def eqValue(e: DeleteEntry): EqVals =
+      eqCache.getOrElseUpdate(e.path, EqVals.load(spark, e.path, e.seq))
+    val parentEqEntries = parDel.filter(_.kind == 2)
     // the parent's equality state, sequence-gated per parent file:
     // values that already masked rows there must not re-announce
     def skipEqFor(k: String): Seq[EqVals] =
       parSeqAndPath.get(k).map { case (_, dseq) =>
-        parentEqEntries.filter(_._4 > dseq).map(e => eqValue(e._1, e._4))
+        parentEqEntries.filter(_.seq > dseq).map(eqValue)
       }.getOrElse(Nil)
-    val newPos = positionsBy(
-      sidDel.filter(e => e._2 == 1 && e._3 == sid).map(_._1))
-    val newEqEntries = sidDel.filter(e => e._2 == 2 && e._3 == sid)
-    // a file's full parent-side position mask: parquet rows ∪ vector
-    def parentMask(k: String): Array[Long] =
-      (parentPos.getOrElse(k, Array.empty[Long]) ++
-        parentDvPos.getOrElse(k, Array.empty[Long])).distinct
+    val newDel = sidDel.filter(_.addedSid == sid)
+    // positions and vectors committed at THIS snapshot (deleteWhereDV
+    // never pairs a vector with a parquet delete in one commit): a
+    // vector's SUPERSET content minus the parent mask is exactly its
+    // fresh deletions, like a new position-delete file's rows
+    val newPos = maskOf(spark, newDel.filter(_.kind != 2),
+      (parE ++ curE).map(e => (fileKeyRaw(e._1), e._2)).toMap).posByFile
     val inserts = (cur.keySet -- par.keySet).toSeq.sorted.map(k =>
       IceChangeUnit(cur(k), "insert", null, Array.empty))
     val cowDeletes = (par.keySet -- cur.keySet).toSeq.sorted.map(k =>
@@ -2703,35 +2564,24 @@ object IcebergLite {
         IceChangeUnit(p, "delete", fresh, Array.empty,
           skipEq = skipEqFor(k)))
     }
-    // a vector committed at THIS snapshot (deleteWhereDV never pairs it
-    // with a parquet delete in one commit): its SUPERSET content minus
-    // the parent mask is exactly the fresh deletions
-    val dvDeletes = newDvPos.toSeq.sortBy(_._1).flatMap { case (k, ps) =>
-      val prior = parentMask(k).toSet
-      val fresh = ps.filterNot(prior)
-      if (fresh.isEmpty) None
-      else par.get(k).orElse(cur.get(k)).map(p =>
-        IceChangeUnit(p, "delete", fresh, Array.empty,
-          skipEq = skipEqFor(k)))
-    }
     // a new EQUALITY delete (X301) masks matching LIVE rows in every
     // parent file with a strictly smaller sequence — one value-filter
     // unit per file, the file-granular spelling of the batch
-    // changelog's semi-join (announcing the deleted rows costs a scan
-    // of the candidate files in EITHER face; the units stay
-    // executor-side and admission-controlled)
+    // changelog's filter (announcing the deleted rows costs a scan of
+    // the candidate files in EITHER face; the units stay executor-side
+    // and admission-controlled)
+    val newEqEntries = newDel.filter(_.kind == 2)
     val eqDeletes =
       if (newEqEntries.isEmpty) Nil
       else par.toSeq.sortBy(_._1).flatMap { case (k, p) =>
         val dseq = parSeqAndPath(k)._2
-        val applicable = newEqEntries.filter(_._4 > dseq)
-          .map(e => eqValue(e._1, e._4))
+        val applicable = newEqEntries.filter(_.seq > dseq).map(eqValue)
         if (applicable.isEmpty) None
         else Some(IceChangeUnit(p, "delete", null,
           parentMask(k),
           emitEq = applicable, skipEq = skipEqFor(k)))
       }
-    inserts ++ cowDeletes ++ morDeletes ++ dvDeletes ++ eqDeletes
+    inserts ++ cowDeletes ++ morDeletes ++ eqDeletes
   }
 
   /** NET CHANGES over (fromSnap, toSnap] — [[readChangelog]] folded to
@@ -2910,23 +2760,16 @@ object IcebergLite {
   private def fileKeyRaw(p: String): String =
     p.split('/').takeRight(2).mkString("/")
 
-  /** [[fileKeyRaw]] over a RAW path column (the `file_path` values
-    * stored inside position-delete files are manifest-verbatim). */
-  private def fileKeyCol(c: org.apache.spark.sql.Column)
-      : org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.{concat_ws, element_at, split}
-    concat_ws("/", element_at(split(c, "/"), -2),
-      element_at(split(c, "/"), -1))
-  }
-
   /** [[fileKeyRaw]] over `_metadata.file_path`, which is URI-encoded
     * (space → %20, literal % → %25) while manifest paths are raw —
     * decode exactly once; a literal '+' is protected first (%2B)
     * because url_decode would otherwise read it as an encoded space. */
   private def fileKeyMeta(c: org.apache.spark.sql.Column)
       : org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.{regexp_replace, url_decode}
-    fileKeyCol(url_decode(regexp_replace(c, "\\+", "%2B")))
+    import org.apache.spark.sql.functions.{concat_ws, element_at,
+      regexp_replace, split, url_decode}
+    val parts = split(url_decode(regexp_replace(c, "\\+", "%2B")), "/")
+    concat_ws("/", element_at(parts, -2), element_at(parts, -1))
   }
 
   /** snapshot-id → recorded schema-id, for every snapshot that carries
@@ -3067,53 +2910,30 @@ object IcebergLite {
       !nameIdentical(meta, schemaFieldsById(meta, readSid), w)
   }
 
-  /** Driver-read (file-key, position, delete-sequence) rows of a set of
-    * position-delete files — None when any file's schema is unexpected
-    * (callers fall back to the distributed read, byte-identical
-    * semantics). Payloads are bounded by the DELETED-row count (the
-    * deleteWhereDV cost model), never corpus-sized, so this is
-    * control-plane work at any scale; the Spark path it replaces cost
-    * 1-2 whole jobs per batch read. */
-  private def directPosRows(spark: SparkSession,
-      files: Seq[(String, Long)]): Option[Seq[(String, Long, Long)]] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val acc = Seq.newBuilder[(String, Long, Long)]
-    val ok = files.forall { case (p, s) =>
-      ParquetDirect.tryReadPositions(conf, Seq(p)) match {
-        case Some(rows) =>
-          rows.foreach { case (fp, ri) => acc += ((fileKeyRaw(fp), ri, s)) }
-          true
-        case None => false
-      }
-    }
-    if (ok) Some(acc.result()) else None
-  }
-
   /** [[read]] with the option to RETAIN the (__fn, __ri) position columns
     * — the coordinate system [[deleteWhere]] records deletes in (`__fn`
     * is the [[fileKeyRaw]] two-component file key) — and to
     * RESTRICT the scan to a planned subset of data files (by file key):
     * the rewrite ops ([[mergeInto]]) read only the files they touch, with
-    * every live delete still applied. */
+    * every live delete still applied through [[filterByMask]]. */
   private def readLive(spark: SparkSession, table: String, snapshotId: Long,
       keepMeta: Boolean,
       onlyFiles: Option[Set[String]] = None): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col, element_at, split}
     val fs = hadoopFs(spark, table)
-    val meta = readMetadata(fs, table, latestMetadataVersion(spark, table))
+    val v = latestMetadataVersion(spark, table)
+    val meta = readMetadata(fs, table, v)
     val wanted =
       if (snapshotId < 0) meta.get("current-snapshot-id").asLong() else snapshotId
     val allDataFiles = snapshotManifestEntries(spark, table, wanted,
-      content = 0)
+      content = 0, metaV = v)
     val dataFiles = onlyFiles match {
       case None => allDataFiles
       case Some(names) =>
         allDataFiles.filter(f => names.contains(fileKeyRaw(f._1)))
     }
     require(dataFiles.nonEmpty, s"snapshot has no data files in $table")
-    val deleteEntries = snapshotDeleteEntries(spark, table, wanted)
-    val posDeletes = deleteEntries.filter(_._3 == 1)
-    val eqDeletes = deleteEntries.filter(_._3 == 2)
+    val mask = morMask(spark, table, wanted, v,
+      Some(dataFiles.map(f => (f._1, f._2))))
     // head reads scan under the table's CURRENT schema (a metadata-only
     // evolution surfaces immediately); time travel under the snapshot's.
     // Files resolve their parquet column names through the schema they
@@ -3124,235 +2944,11 @@ object IcebergLite {
       if (snapshotId < 0) meta.get("current-schema-id").asInt()
       else schemaIdForSnapshot(meta, wanted)
     val base = readUnderSchemaNames(spark, meta, readSid,
-      dataFiles.map(f => (f._1, f._3)),
-      withMeta = deleteEntries.nonEmpty || keepMeta)
-    if (deleteEntries.isEmpty && !keepMeta) base
-    else if (deleteEntries.isEmpty) base // keepMeta only: no masks apply
+      dataFiles.map(f => (f._1, f._3)), withMeta = !mask.isEmpty || keepMeta)
+    if (mask.isEmpty) base
     else {
-      // FAST PATH (guide §3 — eliminate joins a mask serves; the SQL
-      // row-level scan's MorMask proved the approach): when every delete
-      // payload is driver-readable, apply ALL merge-on-read masking as ONE
-      // broadcast-backed filter over the scan — no broadcast relations, no
-      // anti-join stages, no per-join AQE stage-materialization jobs.
-      // Payloads are driver-bounded by the DELETED-row count (the
-      // deleteWhereDV cost model). Any unservable payload falls back to
-      // the join path below, byte-identical semantics.
-      val seqByKey = dataFiles.map { case (p, s, _) =>
-        (fileKeyRaw(p), s) }.toMap
-      val posDirectRows: Option[Seq[(String, Long, Long)]] =
-        if (posDeletes.isEmpty) Some(Seq.empty)
-        else directPosRows(spark, posDeletes.map { case (p, s, _) => (p, s) })
-      val eqDirect: Option[Seq[EqVals]] =
-        if (eqDeletes.isEmpty) Some(Seq.empty)
-        else {
-          val conf = spark.sparkContext.hadoopConfiguration
-          val acc = Seq.newBuilder[EqVals]
-          val ok = eqDeletes.forall { case (p, s, _) =>
-            ParquetDirect.tryReadEqTuples(conf, p) match {
-              case Some((names, _, tuples)) =>
-                acc += EqVals(names, s, tuples); true
-              case None => false
-            }
-          }
-          if (ok) Some(acc.result()) else None
-        }
-      val fastPath: Option[DataFrame] = (posDirectRows, eqDirect) match {
-        case (Some(posRows), Some(eqs))
-            // the filter compares eq values through EqVals' canonical
-            // forms — a data column outside that set keeps the join path
-            if eqs.flatMap(_.cols).distinct.forall(c =>
-              base.schema.fields.find(_.name == c)
-                .exists(f => EqVals.supported(f.dataType))) =>
-          Some(maskLiveFilter(spark, base, table, wanted, seqByKey,
-            posRows, deleteEntries.exists(_._3 == 3), eqs))
-        case _ => None
-      }
-      if (fastPath.isDefined) {
-        val cur = fastPath.get
-        return if (keepMeta) cur else cur.drop("__fn", "__ri")
-      }
-      import spark.implicits._
-      // control-plane-sized lookup (one row per live file): data file →
-      // its data sequence number — both delete kinds gate on it
-      val dataSeq = dataFiles
-        .map { case (p, s, _) => (fileKeyRaw(p), s) }.toDF("__fn", "__dseq")
-      var cur = base
-      if (posDeletes.nonEmpty) {
-        // position payloads are driver-bounded (the deleteWhereDV cost
-        // model): read them with the driver parquet reader — no Spark
-        // jobs per batch read — and apply sequence gating (spec §Scan
-        // Planning: a position delete applies to data files with
-        // sequence ≤ its own; a file re-added AFTER the delete must not
-        // lose rows) against the driver-side file→sequence map. An
-        // unexpected delete-file schema falls back to the distributed
-        // read, byte-identical semantics.
-        val seqByKey = dataFiles.map { case (p, s, _) =>
-          (fileKeyRaw(p), s) }.toMap
-        val applicable = directPosRows(spark,
-            posDeletes.map { case (p, s, _) => (p, s) }) match {
-          case Some(rows) =>
-            rows.collect { case (fn, ri, sseq)
-                if seqByKey.get(fn).exists(sseq >= _) => (fn, ri) }
-              .toDF("__fn", "__ri")
-          case None =>
-            val delSeq = posDeletes
-              .map { case (p, s, _) => (fileKeyRaw(p), s) }
-              .toDF("__delfn", "__sseq")
-            spark.read.parquet(posDeletes.map(_._1): _*)
-              .select(
-                fileKeyCol(col("file_path")).as("__fn"),
-                col("pos").as("__ri"),
-                fileKeyMeta(col("_metadata.file_path")).as("__delfn"))
-              .join(broadcast(delSeq), "__delfn")
-              .join(broadcast(dataSeq), "__fn")
-              .where(col("__sseq") >= col("__dseq"))
-              .select("__fn", "__ri")
-        }
-        cur = cur.join(applicable, Seq("__fn", "__ri"), "left_anti")
-      }
-      if (deleteEntries.exists(_._3 == 3)) {
-        // v3 DELETION VECTORS: the newest vector per data file masks its
-        // positions (sequence-gated like parquet position deletes — a
-        // file re-added after the vector keeps its rows). Positions pass
-        // through the driver bounded by the DELETED-row count, then join
-        // as a small relation; parquet delete rows for a vectored file
-        // are a subset of the vector (the writer's superset contract),
-        // so the union with the block above is exact.
-        val seqByKey = dataFiles.map { case (p, s, _) =>
-          (fileKeyRaw(p), s) }.toMap
-        val dvRows = dvPositionsByFile(spark, table, wanted).toSeq
-          .flatMap { case (fn, (pos, dvSeq)) =>
-            if (seqByKey.get(fn).exists(_ <= dvSeq))
-              pos.map(p => (fn, p))
-            else Nil
-          }.toDF("__fn", "__ri")
-        cur = cur.join(dvRows, Seq("__fn", "__ri"), "left_anti")
-      }
-      if (eqDeletes.nonEmpty) {
-        // equality deletes suppress rows BY VALUE in data files with
-        // sequence STRICTLY LESS than the delete's (spec §Scan Planning —
-        // rows written in or after the delete's own snapshot survive).
-        // One anti-join per equality-COLUMN-SET: a composite-key delete
-        // file (X305 — the CDC upsert shape) suppresses a row only when
-        // EVERY key column matches the same tuple; the columns are
-        // implied by the delete file's own parquet schema.
-        cur = cur.join(broadcast(dataSeq.withColumnRenamed("__dseq", "__ds")),
-          "__fn")
-        eqDeletes.groupBy { case (p, _, _) =>
-          // column set from the footer — no per-file Spark schema job
-          ParquetDirect.schemaFieldNames(
-            spark.sparkContext.hadoopConfiguration, p)
-        }.foreach { case (eqCols, files) =>
-          // deleted-key tuples are driver-bounded: per-file driver reads
-          // build a LOCAL tuple relation (schema = the reader's canonical
-          // integral→Long widening, lossless under `===`); any column
-          // type outside the canonical set falls back to the distributed
-          // read, which serves every parquet type
-          val direct: Option[(Seq[org.apache.spark.sql.types.DataType],
-              Array[org.apache.spark.sql.Row])] = {
-            val conf = spark.sparkContext.hadoopConfiguration
-            val acc = Array.newBuilder[org.apache.spark.sql.Row]
-            var types: Seq[org.apache.spark.sql.types.DataType] = null
-            val ok = files.forall { case (p, s, _) =>
-              ParquetDirect.tryReadEqTuples(conf, p) match {
-                case Some((names, ts, tuples)) if names == eqCols &&
-                    (types == null || types == ts) =>
-                  types = ts
-                  tuples.foreach(t =>
-                    acc += org.apache.spark.sql.Row.fromSeq(t :+ s))
-                  true
-                case _ => false
-              }
-            }
-            if (ok) Some((types, acc.result())) else None
-          }
-          val vals = direct match {
-            case Some((types, rows)) =>
-              val schema = StructType(
-                eqCols.zip(types).map { case (c, t) =>
-                  org.apache.spark.sql.types.StructField(s"__ev_$c", t)
-                } :+ org.apache.spark.sql.types.StructField("__eseq",
-                  LongType, nullable = false))
-              spark.createDataFrame(
-                java.util.Arrays.asList(rows: _*), schema)
-            case None =>
-              val delSeq = files
-                .map { case (p, s, _) => (fileKeyRaw(p), s) }
-                .toDF("__delfn", "__eseq")
-              spark.read.parquet(files.map(_._1): _*)
-                .withColumn("__delfn",
-                  fileKeyMeta(col("_metadata.file_path")))
-                .join(broadcast(delSeq), "__delfn")
-                .select(eqCols.map(c => col(c).as(s"__ev_$c")) :+
-                  col("__eseq"): _*)
-          }
-          val cond = eqCols.map(c => cur(c) === vals(s"__ev_$c"))
-            .reduce(_ && _) && cur("__ds") < vals("__eseq")
-          cur = cur.join(vals, cond, "left_anti")
-        }
-        cur = cur.drop("__ds")
-      }
-      if (keepMeta) cur else cur.drop("__fn", "__ri")
-    }
-  }
-
-  /** Executor-side merge-on-read masking for [[readLive]]: per-file
-    * position masks (parquet position deletes ∪ v3 deletion vectors,
-    * sequence-gated on the driver exactly like the join path) and
-    * equality-delete tuple sets applied as ONE broadcast-backed filter
-    * over the scan. Replaces up to three broadcast anti-joins per read —
-    * the joins' null and sequence gating is replicated bit-for-bit: a
-    * position kills its exact (file, row) coordinate; an equality tuple
-    * kills a row only when the data file's sequence is STRICTLY below the
-    * delete's and EVERY key column `===`-matches (so tuples with a NULL
-    * component never match, and a NULL row value never matches). At scale
-    * the masks stay driver-bounded by the deleted-row count while the
-    * scan keeps its vectorized reader, column pruning and pushdown. */
-  private def maskLiveFilter(spark: SparkSession, base: DataFrame,
-      table: String, wanted: Long, seqByKey: Map[String, Long],
-      posRows: Seq[(String, Long, Long)], hasDv: Boolean,
-      eqs: Seq[EqVals]): DataFrame = {
-    import org.apache.spark.sql.functions.{col, struct, udf}
-    val parquetPos = posRows.collect {
-      case (fn, ri, sseq) if seqByKey.get(fn).exists(sseq >= _) => (fn, ri)
-    }
-    val dvPos: Seq[(String, Long)] =
-      if (!hasDv) Nil
-      else dvPositionsByFile(spark, table, wanted).toSeq.flatMap {
-        case (fn, (pos, dvSeq)) =>
-          if (seqByKey.get(fn).exists(_ <= dvSeq)) pos.map(p => (fn, p))
-          else Nil
-      }
-    val posByFile: Map[String, Array[Long]] = (parquetPos ++ dvPos)
-      .groupBy(_._1)
-      .map { case (fn, rs) => fn -> rs.map(_._2).distinct.sorted.toArray }
-    val eqCols: Seq[String] = eqs.flatMap(_.cols).distinct
-    val eqIdx = eqCols.zipWithIndex.toMap
-    val eqChecks: Array[(Array[Int], Long, java.util.HashSet[Seq[Any]])] =
-      eqs.map { ev =>
-        val set = new java.util.HashSet[Seq[Any]](ev.tuples.length * 2)
-        // `===` semantics: a tuple with a NULL component can never match
-        ev.tuples.foreach(t => if (!t.contains(null)) set.add(t))
-        (ev.cols.map(eqIdx).toArray, ev.seq, set)
-      }.toArray
-    val sc = spark.sparkContext
-    val posB = sc.broadcast(posByFile)
-    // the filter takes the RAW `_metadata.file_path` (NOT the derived
-    // `__fn` column — inlining that alias would re-run its url-decode +
-    // regex + splits per row, twice) and resolves it to the mask key in
-    // Scala, MEMOIZED per distinct file per task: the per-row cost is one
-    // hash lookup + a binary search, cheaper than the join path's
-    // per-row fileKeyMeta evaluation ever was
-    if (eqChecks.isEmpty) {
-      val alive = udf(new MaskLiveFilter.PosAlive(posB))
-      base.where(alive(col("_metadata.file_path"), col("__ri")))
-    } else {
-      val seqB = sc.broadcast(seqByKey)
-      val eqB = sc.broadcast(eqChecks)
-      val alive = udf(new MaskLiveFilter.PosEqAlive(posB, seqB, eqB),
-        org.apache.spark.sql.types.BooleanType)
-      base.where(alive(col("_metadata.file_path"), col("__ri"),
-        struct(eqCols.map(col): _*)))
+      val live = filterByMask(spark, base, mask, alive = true)
+      if (keepMeta) live else live.drop("__fn", "__ri")
     }
   }
 
@@ -3472,9 +3068,10 @@ object IcebergLite {
     * implied by the delete file's own parquet schema, which every
     * reader resolves per file: the BATCH read, the batch changelog,
     * the STREAMING change feed, and the SQL row-level DML masks all
-    * evaluate the tuple relation ([[EqVals]] — integral/string/boolean
-    * key columns; exotic types refuse loudly, and only when a plan
-    * actually needs that file). */
+    * evaluate the tuple relation under [[EqVals]]' NULL-safe rule (a
+    * NULL key component matches a NULL row value). Key and table column
+    * types must be integral/string/boolean; any other refuses here,
+    * before anything commits. */
   def deleteWhereEqualityRows(spark: SparkSession, table: String,
       keys: DataFrame): (Long, Long) = {
     def attempt(prevV: Int): Option[(Long, Long)] = {
@@ -3483,9 +3080,17 @@ object IcebergLite {
       val prevMeta = readMetadata(fs, table, prevV)
       val cur = prevMeta.get("current-snapshot-id").asLong()
       val schema = currentSchema(prevMeta)
-      keys.schema.fieldNames.foreach(c =>
-        require(schema.fieldNames.contains(c),
-          s"equality column $c not in $table schema"))
+      // every reader matches key tuples under EqVals' canonical types:
+      // refuse a key it could not match before anything is staged
+      keys.schema.fields.foreach { k =>
+        require(schema.fieldNames.contains(k.name),
+          s"equality column ${k.name} not in $table schema")
+        val t = schema(k.name).dataType
+        require(EqVals.supported(k.dataType) && EqVals.supported(t),
+          s"equality column ${k.name} has key type " +
+            s"${k.dataType.simpleString} and table type ${t.simpleString} " +
+            "— equality deletes key on integral/string/boolean columns only")
+      }
       require(keys.schema.nonEmpty, "no equality columns to delete on")
       val tuples = keys.distinct()
       val nTuples = tuples.count()
@@ -3586,60 +3191,32 @@ object IcebergLite {
     v + 1
   }
 
-  /** Live v3 DELETION-VECTOR entries of a snapshot: (puffin path,
-    * referenced data-file key, blob offset, blob size, sequence). */
-  private def snapshotDvEntries(spark: SparkSession, table: String,
-      snapshotId: Long, metaV: Int = -1)
-      : Seq[(String, String, Long, Long, Long)] = {
-    val fs = hadoopFs(spark, table)
-    val v = if (metaV > 0) metaV else latestMetadataVersion(spark, table)
-    require(v > 0, s"$table has no Iceberg metadata")
-    val meta = readMetadata(fs, table, v)
-    val wanted =
-      if (snapshotId < 0) meta.get("current-snapshot-id").asLong()
-      else snapshotId
-    val snap = metaJsonSnapshots(meta).find(_._1 == wanted).getOrElse(
-      return Seq.empty)
-    listEntries(fs, new Path(snap._2)).filter(_.content == 1).flatMap { m =>
-      readAvroFile(fs, new Path(m.path))
-        .filter(_.get("status").asInstanceOf[Int] != 2)
-        .flatMap { e =>
-          val d = e.get("data_file").asInstanceOf[GenericRecord]
-          val refF = d.getSchema.getField("referenced_data_file")
-          val ref = if (refF == null) null else d.get("referenced_data_file")
-          if (ref == null) None
-          else Some((d.get("file_path").toString,
-            fileKeyRaw(ref.toString),
-            d.get("content_offset").asInstanceOf[Long],
-            d.get("content_size_in_bytes").asInstanceOf[Long],
-            m.seq))
-        }
-    }
-  }
-
-  /** The NEWEST deletion vector per data file, positions deserialized —
-    * driver-bounded by the deleted-row count (the DV cost model). The
-    * newest-wins rule mirrors the spec's writer obligation (a new DV
-    * REPLACES the file's old one and must be a superset). */
-  private def dvPositionsByFile(spark: SparkSession, table: String,
-      snapshotId: Long, metaV: Int = -1)
-      : Map[String, (Array[Long], Long)] = {
-    val fs = hadoopFs(spark, table)
-    val entries = snapshotDvEntries(spark, table, snapshotId, metaV)
-    if (entries.isEmpty) return Map.empty
+  /** The NEWEST deletion vector per data file among `entries` (kind 3),
+    * positions deserialized — driver-bounded by the deleted-row count
+    * (the DV cost model). Answers file key → (positions, vector
+    * sequence). The newest-wins rule mirrors the spec's writer
+    * obligation (a new DV REPLACES the file's old one and must be a
+    * superset). */
+  private def dvPositionsByFile(spark: SparkSession,
+      entries: Seq[DeleteEntry]): Map[String, (Array[Long], Long)] = {
+    val dvs = entries.collect { case e @ DeleteEntry(_, _, 3, _, Some(dv)) =>
+      (e, dv) }
+    if (dvs.isEmpty) return Map.empty
     // one read per Puffin file, blobs sliced by recorded offset/size
-    val bytesByPath = entries.map(_._1).distinct.map { p =>
-      val in = fs.open(new Path(p))
+    val bytesByPath = dvs.map(_._1.path).distinct.map { p =>
+      val path = new Path(p)
+      val in = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .open(path)
       val buf = new java.io.ByteArrayOutputStream()
       try org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 65536, false)
       finally in.close()
       p -> buf.toByteArray
     }.toMap
-    entries.groupBy(_._2).map { case (fileKey, es) =>
-      val (puffin, _, off, len, seq) = es.maxBy(_._5)
+    dvs.groupBy(_._2._1).map { case (fileKey, es) =>
+      val (e, (_, off, len)) = es.maxBy(_._1.seq)
       val payload = java.util.Arrays.copyOfRange(
-        bytesByPath(puffin), off.toInt, (off + len).toInt)
-      fileKey -> (DeletionVectors.deserializeBitmap(payload), seq)
+        bytesByPath(e.path), off.toInt, (off + len).toInt)
+      fileKey -> (DeletionVectors.deserializeBitmap(payload), e.seq)
     }
   }
 
@@ -3694,45 +3271,13 @@ object IcebergLite {
       val nNew = matched.values.map(_._1.length.toLong).sum
       // the SUPERSET contract: the file's new vector = prior vector ∪
       // still-applicable parquet position-delete rows ∪ new matches
-      val priorDvs = dvPositionsByFile(spark, table, cur, metaV = prevV)
-      val priorParquet: Map[String, Array[Long]] = {
-        val pos = snapshotDeleteEntries(spark, table, cur).filter(_._3 == 1)
-        if (pos.isEmpty) Map.empty
-        else directPosRows(spark, pos.map { case (p, s, _) => (p, s) }) match {
-          // driver-bounded payload (deleted-row count): driver parquet
-          // read, no Spark jobs — unexpected schemas fall back to the
-          // distributed read
-          case Some(rows) =>
-            rows.groupBy(_._1)
-              .collect { case (fn, rs) if matched.contains(fn) &&
-                  dataSeq.contains(fn) =>
-                val dseq = dataSeq(fn)._2
-                fn -> rs.filter(_._3 >= dseq).map(_._2).toArray
-              }.toMap
-          case None =>
-            import org.apache.spark.sql.functions.{broadcast, col => c}
-            import spark.implicits._
-            val delSeq = pos.map { case (p, s, _) => (fileKeyRaw(p), s) }
-              .toDF("__delfn", "__sseq")
-            spark.read.parquet(pos.map(_._1): _*)
-              .select(fileKeyCol(c("file_path")).as("__fn"), c("pos"),
-                fileKeyMeta(c("_metadata.file_path")).as("__delfn"))
-              .join(broadcast(delSeq), "__delfn")
-              .collect().groupBy(_.getAs[String]("__fn"))
-              .collect { case (fn, rows) if matched.contains(fn) &&
-                  dataSeq.contains(fn) =>
-                val dseq = dataSeq(fn)._2
-                fn -> rows.filter(_.getAs[Long]("__sseq") >= dseq)
-                  .map(_.getAs[Long]("pos"))
-              }.toMap
-        }
-      }
+      val priorMask = maskOf(spark,
+        snapshotDeleteEntries(spark, table, cur, metaV = prevV)
+          .filter(_.kind != 2),
+        dataSeq.map { case (fn, (_, seq)) => (fn, seq) }).posByFile
       val vectors = matched.toSeq.sortBy(_._1).map { case (fn, (pos, pv)) =>
-        val all = (pos ++
-          priorDvs.get(fn).filter(_._2 >= dataSeq(fn)._2).map(_._1)
-            .getOrElse(Array.empty[Long]) ++
-          priorParquet.getOrElse(fn, Array.empty[Long])).distinct.sorted
-        (fn, all, pv)
+        val prior = priorMask.getOrElse(fn, Array.empty[Long])
+        (fn, (pos ++ prior).distinct.sorted, pv)
       }
       val token = java.util.UUID.randomUUID().toString.take(8)
       val written = Puffin.write(
@@ -4229,21 +3774,19 @@ object IcebergLite {
       latestMetadataVersion(spark, table))(attempt)
   }
 
-  /** The merge-on-read delete state the SQL row-level path applies
-    * READER-SIDE (X300 — the Iceberg analog of X293's deletion-vector
-    * masking, so SQL UPDATE/MERGE/DELETE never demand a table rewrite
-    * first): per-data-file POSITION masks, already sequence-gated (spec
-    * §Scan Planning: a position delete applies to data files with
-    * sequence ≤ its own), plus the EQUALITY-delete value lists with
-    * their sequence numbers (a value suppresses rows in data files with
-    * sequence STRICTLY LESS than the delete's — evaluated per row at
-    * the reader against each file's own data sequence). Loaded once on
-    * the driver: delete files are bounded by the DELETED-row count, the
-    * same control-plane cost model as Delta deletion vectors and the
-    * log itself. Equality payloads are N-column TUPLE relations
-    * ([[deleteWhereEqualityRows]]'s composite-key shape included) over
-    * integral/string/boolean columns — exotic column types refuse
-    * loudly with the rewriteDataFiles remedy named. */
+  /** The merge-on-read delete state every Iceberg reader applies: the
+    * batch read ([[readLive]], one executor filter), the changelog, the
+    * streaming feed's masks and the SQL row-level scan. Per-data-file
+    * POSITION masks (parquet position deletes ∪ the newest v3 deletion
+    * vector), already sequence-gated (spec §Scan Planning: a position
+    * delete applies to data files with sequence ≤ its own), plus the
+    * EQUALITY-delete tuple payloads with their sequence numbers (a tuple
+    * suppresses rows in data files with sequence STRICTLY LESS than the
+    * delete's — evaluated per row at the reader against each file's own
+    * data sequence, under [[EqVals]]' NULL-safe rule). Loaded once on the
+    * driver: delete files are bounded by the DELETED-row count, the same
+    * control-plane cost model as Delta deletion vectors and the log
+    * itself. */
   case class MorMask(
       posByFile: Map[String, Array[Long]],      // fileKeyRaw → sorted pos
       eq: Seq[EqVals],                          // N-column value tuples
@@ -4255,91 +3798,97 @@ object IcebergLite {
     val empty: MorMask = MorMask(Map.empty, Nil, Map.empty, Set.empty)
   }
 
-  private[graft] def morRowLevelState(spark: SparkSession,
-      table: String, metaV: Int = -1): MorMask = {
-    val deletes = snapshotDeleteEntries(spark, table, -1L, metaV = metaV)
-    if (deletes.isEmpty) return MorMask.empty
-    val dataSeq = snapshotManifestFiles(spark, table, -1L, content = 0,
-      metaV = metaV).map { case (p, s) => (fileKeyRaw(p), s) }.toMap
-    // v3 DELETION VECTORS (X310) are position deletes by another
-    // carrier: the newest vector per data file masks its positions,
-    // sequence-gated exactly like parquet rows — SQL reads AND row-level
-    // DML serve DV-carrying tables, no compaction needed
-    val dvByFile: Map[String, Array[Long]] =
-      if (!deletes.exists(_._3 == 3)) Map.empty
-      else dvPositionsByFile(spark, table, -1L, metaV = metaV)
-        .collect { case (fn, (p, dvSeq))
-            if dataSeq.get(fn).exists(_ <= dvSeq) => fn -> p }
-    val pos = deletes.filter(_._3 == 1)
-    val parquetPosByFile =
-      if (pos.isEmpty) Map.empty[String, Array[Long]]
-      else {
-        // position payloads are driver-bounded (the deleteWhereDV cost
-        // model): read them with the driver parquet reader — no Spark
-        // job per DML statement. Each row's sequence is its own file's,
-        // so the per-file read replaces the _metadata.file_path join.
-        // Any unexpected schema falls back to the distributed read.
-        val direct: Option[Seq[(String, Long, Long)]] = { // (fn, pos, seq)
-          val conf = spark.sparkContext.hadoopConfiguration
-          val acc = Seq.newBuilder[(String, Long, Long)]
-          val ok = pos.forall { case (p, s, _) =>
-            ParquetDirect.tryReadPositions(conf, Seq(p)) match {
-              case Some(rows) =>
-                rows.foreach { case (fp, ri) =>
-                  acc += ((fileKeyRaw(fp), ri, s))
-                }
-                true
-              case None => false
-            }
-          }
-          if (ok) Some(acc.result()) else None
-        }
-        direct match {
-          case Some(rows) =>
-            rows.groupBy(_._1)
-              .collect { case (fn, rs) if dataSeq.contains(fn) =>
-                // sequence gating: position deletes apply at seq ≥ the
-                // data file's — a re-added file keeps its rows
-                val dseq = dataSeq(fn)
-                fn -> rs.filter(_._3 >= dseq).map(_._2)
-                  .distinct.sorted.toArray
-              }
-              .filter(_._2.nonEmpty).toMap
-          case None =>
-            import org.apache.spark.sql.functions.{broadcast, col}
-            import spark.implicits._
-            val delSeq = pos.map { case (p, s, _) => (fileKeyRaw(p), s) }
-              .toDF("__delfn", "__sseq")
-            spark.read.parquet(pos.map(_._1): _*)
-              .select(fileKeyCol(col("file_path")).as("__fn"), col("pos"),
-                fileKeyMeta(col("_metadata.file_path")).as("__delfn"))
-              .join(broadcast(delSeq), "__delfn")
-              .collect()
-              .groupBy(_.getAs[String]("__fn"))
-              .collect { case (fn, rows) if dataSeq.contains(fn) =>
-                // sequence gating: position deletes apply at seq ≥ the
-                // data file's — a re-added file keeps its rows
-                val dseq = dataSeq(fn)
-                fn -> rows.filter(_.getAs[Long]("__sseq") >= dseq)
-                  .map(_.getAs[Long]("pos")).distinct.sorted
-              }
-              .filter(_._2.nonEmpty).toMap
-        }
-      }
-    // union the two position-delete carriers (the DV superset contract
-    // makes parquet rows for a vectored file a subset, so this is exact)
-    val posByFile = (parquetPosByFile.keySet ++ dvByFile.keySet).map { fn =>
-      fn -> (parquetPosByFile.getOrElse(fn, Array.empty[Long]) ++
-        dvByFile.getOrElse(fn, Array.empty[Long])).distinct.sorted
-    }.toMap
-    // N-column tuple payloads (X305 closed for the executor-side masks
-    // too): a row is suppressed only when EVERY equality column matches
-    // the same tuple — the file-granular spelling of the batch read's
-    // per-column-set anti-join
-    val eq = deletes.filter(_._3 == 2).map { case (p, s, _) =>
-      EqVals.load(spark, p, s, "the SQL row-level reader")
+  /** The position-delete payloads of `entries` (kind 1) as (data-file
+    * key, position, delete sequence) rows — the only reader of
+    * position-delete files. Each file is read on the driver with no
+    * Spark job; a file whose schema is not exactly `(file_path, pos)`
+    * (the spec's optional `row` column, say) falls back to a Spark read
+    * of those two columns. */
+  private def loadPositions(spark: SparkSession,
+      entries: Seq[DeleteEntry]): Seq[(String, Long, Long)] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    entries.filter(_.kind == 1).flatMap { e =>
+      val rows = ParquetDirect.tryReadPositions(conf, e.path).getOrElse(
+        spark.read.parquet(e.path).select("file_path", "pos").collect()
+          .map(r => (r.getString(0), r.getLong(1))).toSeq)
+      rows.map { case (fp, ri) => (fileKeyRaw(fp), ri, e.seq) }
     }
-    MorMask(posByFile, eq, dataSeq, deletes.map(_._1).toSet)
+  }
+
+  /** `deletes` applied to the data files `dataSeq` (file key → data
+    * sequence): positions gated to the files they apply to, every
+    * equality payload loaded through [[EqVals.load]]. */
+  private def maskOf(spark: SparkSession, deletes: Seq[DeleteEntry],
+      dataSeq: Map[String, Long]): MorMask = {
+    if (deletes.isEmpty) return MorMask.empty
+    val parquet = loadPositions(spark, deletes).collect {
+      case (fn, ri, sseq) if dataSeq.get(fn).exists(_ <= sseq) => (fn, ri)
+    }
+    // the DV superset contract makes parquet rows for a vectored file a
+    // subset of its vector, so the union is exact
+    val vectors = dvPositionsByFile(spark, deletes).toSeq.flatMap {
+      case (fn, (ps, dvSeq)) =>
+        if (dataSeq.get(fn).exists(_ <= dvSeq)) ps.toSeq.map(fn -> _) else Nil
+    }
+    val posByFile = (parquet ++ vectors).groupBy(_._1).map { case (fn, rs) =>
+      fn -> rs.map(_._2).distinct.sorted.toArray
+    }
+    val eq = deletes.filter(_.kind == 2)
+      .map(e => EqVals.load(spark, e.path, e.seq))
+    MorMask(posByFile, eq, dataSeq, deletes.map(_.path).toSet)
+  }
+
+  /** The [[MorMask]] of snapshot `snapshotId` (current when < 0) under
+    * metadata version `metaV` (latest when <= 0). `dataFiles` are the
+    * snapshot's (path, data sequence) entries when the caller has
+    * already read them. */
+  private[graft] def morMask(spark: SparkSession, table: String,
+      snapshotId: Long, metaV: Int,
+      dataFiles: Option[Seq[(String, Long)]] = None): MorMask = {
+    val deletes = snapshotDeleteEntries(spark, table, snapshotId, metaV)
+    if (deletes.isEmpty) MorMask.empty
+    else maskOf(spark, deletes, dataFiles.getOrElse(
+        snapshotManifestFiles(spark, table, snapshotId, content = 0,
+          metaV = metaV))
+      .map { case (p, seq) => (fileKeyRaw(p), seq) }.toMap)
+  }
+
+  /** Keep the rows of `scan` (a [[readLive]] shape carrying `__ri`) that
+    * `mask` leaves alive — or, with `alive = false`, exactly the rows it
+    * kills (the changelog's question: which parent-live rows does a new
+    * delete kill). ONE broadcast-backed executor filter serves every
+    * delete kind: no join, no extra job, and the scan keeps its
+    * vectorized reader, column pruning and pushdown. */
+  private def filterByMask(spark: SparkSession, scan: DataFrame,
+      mask: MorMask, alive: Boolean): DataFrame = {
+    import org.apache.spark.sql.functions.{col, lit, not, struct, udf}
+    val eqCols = mask.eq.flatMap(_.cols).distinct
+    eqCols.foreach(c => require(scan.schema.fields.find(_.name == c)
+        .exists(f => EqVals.supported(f.dataType)),
+      s"equality-delete column $c is not an integral/string/boolean " +
+        "column of the table — equality deletes cannot be matched"))
+    val idx = eqCols.zipWithIndex.toMap
+    // the data sequences serve only equality gating: a position-only
+    // mask ships nothing sized by the live file count
+    val b = spark.sparkContext.broadcast(MaskLiveFilter.State(
+      mask.posByFile, if (eqCols.isEmpty) Map.empty else mask.dataSeq,
+      mask.eq.map(ev => (ev.cols.map(idx).toArray, ev.seq,
+        EqVals.tupleSet(ev.tuples))).toArray))
+    val keys = if (eqCols.isEmpty) lit(null) else struct(eqCols.map(col): _*)
+    def where(file: org.apache.spark.sql.Column, raw: Boolean): DataFrame = {
+      val a = udf(new MaskLiveFilter.Alive(b, raw),
+        org.apache.spark.sql.types.BooleanType)(file, col("__ri"), keys)
+      scan.where(if (alive) a else not(a))
+    }
+    // the RAW `_metadata.file_path`, resolved to the mask key once per
+    // file per task (the derived `__fn` column re-runs its url-decode +
+    // regex + splits per row); a scan over several name epochs unions
+    // them, which hides `_metadata` — key on `__fn` there
+    try where(col("_metadata.file_path"), raw = true)
+    catch {
+      case _: org.apache.spark.sql.AnalysisException =>
+        where(col("__fn"), raw = false)
+    }
   }
 
   /** The pieces the SQL row-level operation pins at creation — the
@@ -4383,7 +3932,7 @@ object IcebergLite {
     }
     (entries.map(_._1),
       schemaForSnapshot(meta, cur),
-      morRowLevelState(spark, table, metaV = v))
+      morMask(spark, table, cur, v, Some(entries.map(e => (e._1, e._2)))))
   }
 
   /** Commit the COPY-ON-WRITE replacement the SQL row-level write path
@@ -4446,21 +3995,19 @@ object IcebergLite {
     // commute: their manifests are carried and keep applying.
     pinnedDeleteFiles.foreach { pinned =>
       val fresh = snapshotDeleteEntries(spark, table, -1L, metaV = prevV)
-        .filterNot(e => pinned.contains(e._1))
+        .filterNot(e => pinned.contains(e.path))
       if (fresh.nonEmpty) {
-        require(fresh.forall(_._3 != 2),
+        require(fresh.forall(_.kind != 2),
           s"$operation on $table conflicts with a concurrent equality " +
             "delete — re-run the statement against the new snapshot")
         // a concurrent v3 deletion vector always conflicts (the
         // rewrite was staged from the pinned mask, which lacks it)
-        require(fresh.forall(_._3 != 3),
+        require(fresh.forall(_.kind != 3),
           s"$operation on $table conflicts with a concurrent deletion-" +
             "vector commit — re-run the statement against the new " +
             "snapshot")
         val removedKeys = removePaths.map(fileKeyRaw).toSet
-        val touched = spark.read.parquet(fresh.map(_._1): _*)
-          .select("file_path").collect()
-          .map(r => fileKeyRaw(r.getString(0))).toSet
+        val touched = loadPositions(spark, fresh).map(_._1).toSet
         require(touched.intersect(removedKeys).isEmpty,
           s"$operation on $table conflicts with a concurrent position " +
             "delete on a file it rewrites — re-run the statement " +
@@ -5249,13 +4796,13 @@ object IcebergLite {
   }
 }
 
-/** Executor-side row filters for [[IcebergLite]]'s merge-on-read masked
-  * reads (the join-free readLive path). Top-level classes so task closures
-  * serialize ONLY the broadcast handles, never the IcebergLite object.
-  * Each instance memoizes the raw `_metadata.file_path` → mask resolution
-  * per task (one url-decode per distinct FILE, not per row): the decode
-  * replicates `fileKeyMeta` exactly — protect literal '+' as %2B, then
-  * URL-decode once, then take the last two path components. */
+/** The executor-side merge-on-read filter of [[IcebergLite]]'s readers.
+  * A top-level class, so task closures serialize ONLY the broadcast
+  * handle, never the IcebergLite object. Each instance memoizes the file
+  * column → mask resolution per task (one url-decode per distinct FILE,
+  * not per row): the decode replicates `fileKeyMeta` exactly — protect
+  * literal '+' as %2B, then URL-decode once, then take the last two path
+  * components. */
 private[graft] object MaskLiveFilter {
   private def fileKeyOfRaw(raw: String): String = {
     val decoded = java.net.URLDecoder.decode(
@@ -5263,120 +4810,53 @@ private[graft] object MaskLiveFilter {
     decoded.split('/').takeRight(2).mkString("/")
   }
 
-  /** Position-only masking: alive iff the row's file-position is not in
-    * its file's (sequence-gated, driver-assembled) mask. */
-  final class PosAlive(
-      posB: org.apache.spark.broadcast.Broadcast[Map[String, Array[Long]]])
-    extends ((String, Long) => Boolean) with Serializable {
-    @transient private lazy val cache =
-      new java.util.HashMap[String, Array[Long]]()
-    override def apply(raw: String, ri: Long): Boolean = {
-      var m = cache.get(raw)
-      if (m == null && !cache.containsKey(raw)) {
-        m = posB.value.getOrElse(fileKeyOfRaw(raw), null)
-        cache.put(raw, m)
-      }
-      m == null || java.util.Arrays.binarySearch(m, ri) < 0
-    }
-  }
+  /** The broadcast mask: per-file sorted masked positions and data
+    * sequence, and one (key ordinals, delete sequence, tuple set) check
+    * per equality-delete file. */
+  final case class State(pos: Map[String, Array[Long]],
+      dataSeq: Map[String, Long],
+      eq: Array[(Array[Int], Long, java.util.HashSet[Seq[Any]])])
 
-  /** Position HIT (the semi-join inversion of [[PosAlive]]): true iff the
-    * row's (file, position) appears in the driver-assembled coordinate
-    * set — the changelog's "which parent-live rows does this new delete
-    * file kill" probe. Keyed by raw `_metadata.file_path`, memoized. */
-  final class PosHitRaw(
-      posB: org.apache.spark.broadcast.Broadcast[Map[String, Array[Long]]])
-    extends ((String, Long) => Boolean) with Serializable {
-    @transient private lazy val cache =
-      new java.util.HashMap[String, Array[Long]]()
-    override def apply(raw: String, ri: Long): Boolean = {
-      var m = cache.get(raw)
-      if (m == null && !cache.containsKey(raw)) {
-        m = posB.value.getOrElse(fileKeyOfRaw(raw), null)
-        cache.put(raw, m)
-      }
-      m != null && java.util.Arrays.binarySearch(m, ri) >= 0
-    }
-  }
-
-  /** [[PosHitRaw]] keyed by the already-derived `__fn` column (for plan
-    * shapes that no longer expose `_metadata`). */
-  final class PosHitKey(
-      posB: org.apache.spark.broadcast.Broadcast[Map[String, Array[Long]]])
-    extends ((String, Long) => Boolean) with Serializable {
-    override def apply(fn: String, ri: Long): Boolean = {
-      val m = posB.value.getOrElse(fn, null)
-      m != null && java.util.Arrays.binarySearch(m, ri) >= 0
-    }
-  }
-
-  /** Equality-value HIT: true iff the row's key tuple (struct fields in
-    * delete-file column order) appears in the broadcast tuple set.
-    * Replicates the value semi-join's `===` conjunction: NULL row values
-    * never match, NULL-component tuples were dropped at build. */
-  final class EqHit(
-      setB: org.apache.spark.broadcast.Broadcast[java.util.HashSet[Seq[Any]]])
-    extends org.apache.spark.sql.api.java.UDF1[org.apache.spark.sql.Row,
-      java.lang.Boolean] with Serializable {
-    override def call(keys: org.apache.spark.sql.Row): java.lang.Boolean = {
-      val n = keys.length
-      val tup = new Array[Any](n)
-      var j = 0
-      while (j < n) {
-        val v = keys.get(j)
-        if (v == null) return java.lang.Boolean.FALSE
-        tup(j) = EqVals.external(v)
-        j += 1
-      }
-      java.lang.Boolean.valueOf(setB.value.contains(tup.toIndexedSeq))
-    }
-  }
-
-  /** Position + equality masking. Equality checks replicate the join
-    * path's `===` conjunction exactly: applicable only when the data
-    * file's sequence is STRICTLY below the delete's, a NULL row value
-    * never matches, and tuples with NULL components were dropped at
-    * build. */
-  final class PosEqAlive(
-      posB: org.apache.spark.broadcast.Broadcast[Map[String, Array[Long]]],
-      seqB: org.apache.spark.broadcast.Broadcast[Map[String, Long]],
-      eqB: org.apache.spark.broadcast.Broadcast[
-        Array[(Array[Int], Long, java.util.HashSet[Seq[Any]])]])
+  /** Alive iff the row's position is not in its file's mask and no
+    * equality check applicable to its file (data sequence STRICTLY below
+    * the delete's) holds its key tuple. Tuples compare under [[EqVals]]'
+    * NULL-safe rule: a NULL key component matches a NULL row value. The
+    * file argument is the raw `_metadata.file_path` when `rawPaths`,
+    * else the derived file key; `keys` is the struct of the equality
+    * columns (null when there are none). */
+  final class Alive(b: org.apache.spark.broadcast.Broadcast[State],
+      rawPaths: Boolean)
     extends org.apache.spark.sql.api.java.UDF3[String, java.lang.Long,
       org.apache.spark.sql.Row, java.lang.Boolean] with Serializable {
     @transient private lazy val cache =
       new java.util.HashMap[String, (Array[Long], Long)]()
-    private def resolve(raw: String): (Array[Long], Long) = {
-      var e = cache.get(raw)
+    private def resolve(file: String): (Array[Long], Long) = {
+      var e = cache.get(file)
       if (e == null) {
-        val k = fileKeyOfRaw(raw)
-        e = (posB.value.getOrElse(k, null),
-          seqB.value.getOrElse(k, Long.MaxValue))
-        cache.put(raw, e)
+        val k = if (rawPaths) fileKeyOfRaw(file) else file
+        e = (b.value.pos.getOrElse(k, null),
+          b.value.dataSeq.getOrElse(k, Long.MaxValue))
+        cache.put(file, e)
       }
       e
     }
-    override def call(raw: String, ri: java.lang.Long,
+    override def call(file: String, ri: java.lang.Long,
         keys: org.apache.spark.sql.Row): java.lang.Boolean = {
-      val (m, ds) = resolve(raw)
+      val (m, ds) = resolve(file)
       if (m != null && java.util.Arrays.binarySearch(m, ri.longValue()) >= 0)
         return java.lang.Boolean.FALSE
-      val checks = eqB.value
+      val checks = b.value.eq
       var i = 0
       while (i < checks.length) {
         val (ords, eseq, set) = checks(i)
-        if (ds < eseq && !set.isEmpty) {
+        if (ds < eseq) {
           val tup = new Array[Any](ords.length)
           var j = 0
-          var nul = false
-          while (j < ords.length && !nul) {
-            val v = keys.get(ords(j))
-            if (v == null) nul = true
-            else tup(j) = EqVals.external(v)
+          while (j < ords.length) {
+            tup(j) = EqVals.external(keys.get(ords(j)))
             j += 1
           }
-          if (!nul && set.contains(tup.toIndexedSeq))
-            return java.lang.Boolean.FALSE
+          if (set.contains(tup.toIndexedSeq)) return java.lang.Boolean.FALSE
         }
         i += 1
       }

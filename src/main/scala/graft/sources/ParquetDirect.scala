@@ -2,7 +2,6 @@ package graft.sources
 
 import java.nio.charset.StandardCharsets
 
-import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
@@ -65,47 +64,41 @@ private[graft] object ParquetDirect {
     }
   }
 
-  /** Position-delete coordinates `(file_path, pos)` of one or more delete
-    * files, or None when any file's schema is not exactly the expected
-    * two columns (caller falls back to the Spark read). */
+  /** Position-delete coordinates `(file_path, pos)` of one delete file,
+    * or None when its schema is not exactly the expected two columns
+    * (caller falls back to the Spark read). */
   def tryReadPositions(conf: Configuration,
-      paths: Seq[String]): Option[Seq[(String, Long)]] = {
-    val out = mutable.ArrayBuffer.empty[(String, Long)]
-    paths.foreach { p =>
-      val r = ParquetFileReader.open(
-        HadoopInputFile.fromPath(new Path(p), conf))
-      val ok = try {
-        val fields = r.getFooter.getFileMetaData.getSchema.getFields.asScala
-        fields.map(_.getName) == Seq("file_path", "pos") &&
-          fields.forall(_.isPrimitive) &&
-          fields(0).asPrimitiveType.getPrimitiveTypeName ==
-            PrimitiveTypeName.BINARY &&
-          fields(1).asPrimitiveType.getPrimitiveTypeName ==
-            PrimitiveTypeName.INT64
-      } finally r.close()
-      if (!ok) return None
-      groups(conf, p).foreach { g =>
-        // position-delete rows are never null-valued; a malformed file
-        // with missing cells would throw here exactly as the Spark
-        // collect's Row accessors would downstream
-        out += ((new String(g.getBinary("file_path", 0).getBytes,
-          StandardCharsets.UTF_8), g.getLong("pos", 0)))
-      }
-    }
-    Some(out.toSeq)
+      path: String): Option[Seq[(String, Long)]] = {
+    val r = ParquetFileReader.open(
+      HadoopInputFile.fromPath(new Path(path), conf))
+    val ok = try {
+      val fields = r.getFooter.getFileMetaData.getSchema.getFields.asScala
+      fields.map(_.getName) == Seq("file_path", "pos") &&
+        fields.forall(_.isPrimitive) &&
+        fields(0).asPrimitiveType.getPrimitiveTypeName ==
+          PrimitiveTypeName.BINARY &&
+        fields(1).asPrimitiveType.getPrimitiveTypeName ==
+          PrimitiveTypeName.INT64
+    } finally r.close()
+    if (!ok) return None
+    // position-delete rows are never null-valued; a malformed file with
+    // missing cells would throw here exactly as the Spark collect's Row
+    // accessors would downstream
+    Some(groups(conf, path).map { g =>
+      (new String(g.getBinary("file_path", 0).getBytes,
+        StandardCharsets.UTF_8), g.getLong("pos", 0))
+    }.toVector)
   }
 
   /** One equality-delete file's deleted-key tuples in [[EqVals]]'
     * canonical representation (integrals → Long, strings → String,
-    * booleans → Boolean, null components null) plus the matching
-    * canonical Spark type per column (so a caller can build a LOCAL
-    * relation whose schema is exact for the values), or None when any
-    * column is outside the signed-integral/string/boolean set this
-    * reader can canonicalize exactly — the caller falls back to the
-    * Spark path, which owns the user-facing refusal message. */
+    * booleans → Boolean, null components null) with its column names,
+    * or None when any column is outside the signed-integral/string/
+    * boolean set this reader can canonicalize exactly — the caller falls
+    * back to the Spark path, which owns the user-facing refusal
+    * message. */
   def tryReadEqTuples(conf: Configuration, path: String)
-      : Option[(Seq[String], Seq[org.apache.spark.sql.types.DataType],
-          Array[Seq[Any]])] = {
+      : Option[(Seq[String], Array[Seq[Any]])] = {
     val r = ParquetFileReader.open(
       HadoopInputFile.fromPath(new Path(path), conf))
     val schemaInfo = try {
@@ -142,12 +135,6 @@ private[graft] object ParquetDirect {
         }
       }: Seq[Any]
     }.toArray.distinct
-    import org.apache.spark.sql.types.{BooleanType, LongType, StringType}
-    val types = kinds.map {
-      case 0 | 1 => LongType
-      case 2 => StringType
-      case _ => BooleanType
-    }
-    Some((names, types, tuples))
+    Some((names, tuples))
   }
 }

@@ -49,7 +49,7 @@ import graft.sources.{DeltaLite, IcebergLite}
   * Merge-on-read snapshots (Delta deletion vectors, Iceberg position/
   * equality deletes) serve through SQL too (X276): the table the catalog
   * returns routes those snapshots through the format reader's OWN
-  * anti-join plan via the [[org.apache.spark.sql.connector.read.V1Scan]]
+  * masked plan via the [[org.apache.spark.sql.connector.read.V1Scan]]
   * bridge — deleted rows never resurrect, and pushed filters/pruned
   * columns still reach the underlying parquet scans through Catalyst.
   * Clean snapshots keep the stock vectorized `ParquetTable` path.
@@ -417,8 +417,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
         // derived from the SAME pinned metadata version as snapFiles —
         // snapshot-consistent (files, mask); a delete landing after
         // load is seen by the NEXT catalog load, the usual isolation
-        morMask = () => IcebergLite.morRowLevelState(s, path,
-          metaV = pinnedV))
+        morMask = () => IcebergLite.morMask(s, path, -1L, pinnedV))
     else
       new GraftTable(fullName(ident), path, "iceberg", schema,
         Seq.empty, pfOpt, columnMapped = false,

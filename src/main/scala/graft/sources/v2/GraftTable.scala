@@ -469,7 +469,7 @@ private[v2] final class GraftIcebergTable(
 
   // resolved once per loaded table instance (one statement sees one
   // consistent mask; the thunks below are hit 2-3× per DML plan, each
-  // resolution costing control-plane reads + a delete-file parquet job)
+  // resolution costing control-plane reads + delete-file payload reads)
   private lazy val morMaskOnce: IcebergLite.MorMask = morMask()
 
   override def newScanBuilder(options: CaseInsensitiveStringMap)

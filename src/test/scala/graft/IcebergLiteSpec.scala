@@ -389,6 +389,152 @@ class IcebergLiteSpec extends SparkSpec with Matchers {
       Seq(0L, 1L, 5L, 6L, 8L, 9L)
   }
 
+  // one SQL catalog over one warehouse, for the specs below that hold
+  // the API readers, SQL and the streaming change feed to one answer
+  private val cat = "icecat"
+  private lazy val warehouse: String = {
+    val w = Sinks.tempDir("ice_catalog_wh")
+    spark.conf.set(s"spark.sql.catalog.$cat",
+      classOf[graft.sources.v2.GraftCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", w)
+    w
+  }
+
+  /** (SQL name, path) of catalog table `name`; registers the catalog. */
+  private def catalogTable(name: String): (String, String) = {
+    val path = s"$warehouse/db/$name"
+    (s"$cat.db.$name", path)
+  }
+
+  /** (k, v, _change_type) rows the streaming change feed of a (k, v)
+    * catalog table serves from snapshot `from` on. */
+  private def streamChanges(tbl: String,
+      from: Long): Seq[(Option[Long], Long, String)] = {
+    import spark.implicits._
+    val out = new java.util.concurrent.ConcurrentLinkedQueue[(Option[Long],
+      Long, String)]()
+    spark.readStream.option("startingVersion", from.toString)
+      .table(s"$tbl.changes")
+      .writeStream
+      .foreachBatch((df: org.apache.spark.sql.DataFrame, _: Long) => {
+        df.select("k", "v", "_change_type")
+          .as[(Option[Long], Long, String)].collect().foreach(out.add)
+        ()
+      })
+      .option("checkpointLocation", Sinks.tempDir("ice_changes_ck"))
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start().awaitTermination()
+    out.toArray(Array.empty[(Option[Long], Long, String)]).toSeq
+  }
+
+  test("NULL equality keys: read, SQL, changelog, stream and UPDATE agree NULL-safely") {
+    import spark.implicits._
+    val (tbl, t) = catalogTable("nk")
+    spark.sql(s"CREATE TABLE $tbl (k BIGINT, v BIGINT) USING iceberg")
+    spark.sql(s"INSERT INTO $tbl VALUES (1, 10), (2, 20), (NULL, 30)")
+    val s1 = IcebergLite.currentSnapshotId(spark, t)
+    // one delete tuple whose key is NULL: under the spec's rule it
+    // matches the row whose k IS NULL
+    IcebergLite.deleteWhereEqualityRows(spark, t,
+      Seq(Option.empty[Long]).toDF("k"))
+    val s2 = IcebergLite.currentSnapshotId(spark, t)
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[(Option[Long], Long)] =
+      df.select("k", "v").as[(Option[Long], Long)].collect().sortBy(_._2)
+        .toSeq
+    val live = Seq((Some(1L), 10L), (Some(2L), 20L))
+    rows(IcebergLite.read(spark, t)) shouldBe live
+    rows(spark.sql(s"SELECT k, v FROM $tbl")) shouldBe live
+    // the batch changelog and the streaming feed announce exactly the
+    // NULL-keyed row as the delete's change
+    val gone = Seq((Option.empty[Long], 30L, "delete"))
+    IcebergLite.readChangelog(spark, t, s1, s2)
+      .select("k", "v", "_change_type").as[(Option[Long], Long, String)]
+      .collect().toSeq shouldBe gone
+    streamChanges(tbl, s2) shouldBe gone
+    // the row-level UPDATE rewrites from the rows read shows: none lost
+    spark.sql(s"UPDATE $tbl SET v = v + 1 WHERE k IN (1, 2)")
+    val updated = Seq((Some(1L), 11L), (Some(2L), 21L))
+    rows(IcebergLite.read(spark, t)) shouldBe updated
+    rows(spark.sql(s"SELECT k, v FROM $tbl")) shouldBe updated
+  }
+
+  test("change stream: a position delete under a superset vector never re-announces") {
+    import spark.implicits._
+    val (tbl, t) = catalogTable("pdv")
+    // one data file, rows at positions 0..9 in key order
+    IcebergLite.write(spark,
+      (0L until 10L).map(i => (i, i * 10L)).toDF("k", "v").coalesce(1), t)
+    IcebergLite.deleteWhere(spark, t, "k", 3L, 3L) // parquet: position 3
+    IcebergLite.upgradeFormatVersion(spark, t, 3)
+    // the file's vector is the superset {1, 3}: its mask now spans both
+    // carriers, with the vector-only position below the parquet one
+    IcebergLite.deleteWhereDV(spark, t, "k", 1L, 1L)
+    IcebergLite.deleteWhereEquality(spark, t, "k", Seq(1L, 5L))
+    val sEq = IcebergLite.currentSnapshotId(spark, t)
+    // only k = 5 was live: the dead k = 1 must not announce again
+    streamChanges(tbl, sEq) shouldBe Seq((Some(5L), 50L, "delete"))
+    IcebergLite.read(spark, t).select("k").as[Long].collect().sorted
+      .toSeq shouldBe Seq(0L, 2L, 4L, 6L, 7L, 8L, 9L)
+  }
+
+  test("equality deletes refuse key types no reader can match, before committing") {
+    import spark.implicits._
+    val table = Sinks.tempDir("ice_eq_double")
+    IcebergLite.write(spark, Seq((1.5, 1L), (2.5, 2L)).toDF("d", "k"), table)
+    val before = IcebergLite.snapshotIdList(spark, table)
+    // a DOUBLE key, and a LONG key against the DOUBLE table column
+    Seq(Seq(1.5).toDF("d"), Seq(1L).toDF("d")).foreach { keys =>
+      val e = intercept[IllegalArgumentException](
+        IcebergLite.deleteWhereEqualityRows(spark, table, keys))
+      e.getMessage should include("integral/string/boolean")
+    }
+    IcebergLite.snapshotIdList(spark, table) shouldBe before
+    IcebergLite.snapshotDeleteFiles(spark, table, -1L) shouldBe empty
+    IcebergLite.read(spark, table).count() shouldBe 2L
+  }
+
+  test("position loader: a delete file with the optional row column reads through Spark, same gated positions") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, struct}
+    val table = Sinks.tempDir("ice_posrow")
+    IcebergLite.write(spark,
+      (0L until 10L).map(i => (i, i * 10L)).toDF("k", "v").repartition(2),
+      table)
+    IcebergLite.deleteWhere(spark, table, "k", 2L, 4L)
+    // a re-added key after the delete: gating must keep it
+    IcebergLite.write(spark, Seq((3L, 333L)).toDF("k", "v"), table)
+    val direct = IcebergLite.morMask(spark, table, -1L, -1).posByFile
+    val liveBefore = IcebergLite.read(spark, table).as[(Long, Long)]
+      .collect().sorted.toSeq
+    val conf = spark.sparkContext.hadoopConfiguration
+    val dels = IcebergLite.snapshotDeleteEntries(spark, table, -1L)
+    dels.map(_.kind).distinct shouldBe Seq(1)
+    // rewrite every delete file as (file_path, pos, row) — the spec's
+    // optional deleted-row column
+    dels.foreach { d =>
+      val path = new org.apache.hadoop.fs.Path(d.path)
+      val fs = path.getFileSystem(conf)
+      val tmp = Sinks.tempDir("ice_posrow_tmp")
+      spark.read.parquet(d.path)
+        .withColumn("row", struct(col("pos").as("k"), col("pos").as("v")))
+        .coalesce(1).write.mode("overwrite").parquet(tmp)
+      val part = fs.listStatus(new org.apache.hadoop.fs.Path(tmp))
+        .map(_.getPath).filter(_.getName.endsWith(".parquet")).head
+      fs.delete(path, false)
+      fs.rename(part, path) shouldBe true
+      // not the exact (file_path, pos) shape the driver reader takes
+      spark.read.parquet(d.path).columns.toSeq shouldBe
+        Seq("file_path", "pos", "row")
+    }
+    val viaSpark = IcebergLite.morMask(spark, table, -1L, -1).posByFile
+    viaSpark.view.mapValues(_.toSeq).toMap shouldBe
+      direct.view.mapValues(_.toSeq).toMap
+    direct.values.map(_.length).sum shouldBe 3
+    IcebergLite.read(spark, table).as[(Long, Long)].collect().sorted.toSeq
+      .shouldBe(liveBefore)
+    liveBefore.map(_._1) should contain(3L)
+  }
+
   test("composite-key equality deletes: tuple matching, sequence gating, batch changelog (X305)") {
     import spark.implicits._
     val table = graft.ingest.Sinks.tempDir("ice_eqdelm")
