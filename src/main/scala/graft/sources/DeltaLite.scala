@@ -1012,36 +1012,43 @@ object DeltaLite {
   }
 
   /** Distributed scan over a subset of a snapshot's data files WITH any
-    * live deletion vectors subtracted — the same merge-on-read mechanics
-    * as [[readWithStats]], factored so every REWRITE path (optimize,
-    * Z-order, copy-on-write delete) sees the table's logical rows. A
-    * rewrite that raw-scanned files carrying DVs would re-materialize the
-    * deleted rows and — because the remove+add swap drops the vectors —
-    * silently resurrect deleted data. Files without vectors take the
-    * plain-scan fast path (no metadata columns, no join). */
+    * live deletion vectors subtracted — the one merge-on-read reader:
+    * [[read]], the rewrite paths (optimize, Z-order, copy-on-write
+    * delete, MERGE) and the change feed all see the table's logical rows
+    * through it. A rewrite that raw-scanned files carrying DVs would
+    * re-materialize the deleted rows and — because the remove+add swap
+    * drops the vectors — silently resurrect deleted data. The vectors
+    * decode once on the driver ([[dvPositions]]) and apply as the shared
+    * executor-side [[MaskFilter]]: no join, and files without vectors
+    * take the plain scan. */
   private def scanWithDvs(spark: SparkSession, table: String,
       schema: StructType, files: Seq[String],
       dvs: Map[String, DeletionVectors.Descriptor]): DataFrame = {
-    val relevant = dvs.filter { case (f, _) => files.contains(f) }
+    val fileSet = files.toSet
+    val relevant = dvs.filter { case (f, _) => fileSet.contains(f) }
     val base = spark.read.schema(schema).parquet(files.map(f => dataPath(table, f)): _*)
     if (relevant.isEmpty) base
-    else {
-      import org.apache.spark.sql.functions.{col => c_, element_at, split}
-      import spark.implicits._
-      val fs = hadoopFs(spark, table)
-      val deleted: Seq[(String, Long)] = relevant.toSeq.flatMap {
-        case (f, d) =>
-          val name = new Path(f).getName
-          DeletionVectors.readPositions(fs, table, d).map(p => (name, p))
-      }
-      val delDf = deleted.toDF("__fn", "__ri")
-      base
-        .withColumn("__fn", element_at(split(c_("_metadata.file_path"), "/"), -1))
-        .withColumn("__ri", c_("_metadata.row_index"))
-        .join(delDf, Seq("__fn", "__ri"), "left_anti")
-        .drop("__fn", "__ri")
-    }
+    else MaskFilter(spark,
+        base.withColumn("__ri", org.apache.spark.sql.functions.col(
+          "_metadata.row_index")),
+        MorMask.empty.copy(posByFile = dvPositions(spark, table, relevant)),
+        alive = true)
+      .drop("__ri")
   }
+
+  /** The deletion vectors `dvs` decoded on the driver — bounded by the
+    * DELETED-row count, the same control-plane cost model as the log
+    * itself: [[FileKey]] of each data file → its sorted masked
+    * positions. The one reader of vector payloads. */
+  private[graft] def dvPositions(spark: SparkSession, table: String,
+      dvs: Map[String, DeletionVectors.Descriptor]): Map[String, Array[Long]] =
+    if (dvs.isEmpty) Map.empty
+    else {
+      val fs = hadoopFs(spark, table)
+      dvs.map { case (f, d) =>
+        FileKey(dataPath(table, f)) -> DeletionVectors.readPositions(fs, table, d)
+      }
+    }
 
   /** OPTIMIZE — bin-packing compaction as ONE commit (the protocol models
     * it as plain remove+add actions with `dataChange = false`, so
@@ -1348,33 +1355,21 @@ object DeltaLite {
         }
       val longCols = df.schema.fields
         .filter(_.dataType == LongType).map(_.name).toSeq
-      // stats are keyed by the LAST TWO path components, never the
-      // basename: one task holding several partition values writes the
-      // SAME part-<n>-<jobUuid> name into each value's directory (the
-      // common case under AQE's coalesced repartition), and a basename
-      // key silently swaps those files' numRecords/min/max — wrong stats
-      // feeding planSkipping is silent row loss. input_file_name() is
-      // URI-escaped over the RAW on-disk name (a literal '%' in a
-      // Spark-escaped partition dir like _p=a%25b arrives double-escaped
-      // as a%2525b), so decode exactly ONCE on that side only; the
-      // listStatus side is already the raw name and must stay undecoded,
-      // or keys for values containing '%', '=' or ':' diverge and the
-      // file's stats are silently dropped (kept unpruned).
-      val rawStatsKey: String => String =
-        _.split('/').takeRight(2).mkString("/")
-      val ifnStatsKey: String => String = { p =>
-        val decoded =
-          try Option(new java.net.URI(p).getPath).getOrElse(p)
-          catch { case _: java.net.URISyntaxException => p }
-        decoded.split('/').takeRight(2).mkString("/")
-      }
+      // stats are keyed by [[FileKey]], never the basename: one task
+      // holding several partition values writes the SAME
+      // part-<n>-<jobUuid> name into each value's directory, and a
+      // basename key silently swaps those files' numRecords/min/max —
+      // wrong stats feeding planSkipping is silent row loss. The
+      // listStatus side is raw; input_file_name() is URI-escaped and
+      // decodes once (FileKey.ofUri), or keys for values containing '%',
+      // '=' or ':' diverge and the file's stats are silently dropped.
       val statsByFile: Map[String, String] =
         // `parts` can be EMPTY (an empty frame clearing a partition via
         // replaceValue): the stats pass must skip, not die inferring a
         // schema from a fileless staging dir
         if (!collectStats || parts.isEmpty) Map.empty
         else FooterStats.deltaJson(spark.sparkContext.hadoopConfiguration,
-          parts.map { case (rel, _, p) => (rawStatsKey(rel), p) },
+          parts.map { case (rel, _, p) => (FileKey(rel), p) },
           longCols, mapper)
           .getOrElse {
           val aggs = count(lit(1)).as("numRecords") +:
@@ -1395,12 +1390,12 @@ object DeltaLite {
                   mins.put(c, mi.longValue()); maxs.put(c, ma.longValue())
                 }
               }
-              (ifnStatsKey(r.getAs[String]("f")), mapper.writeValueAsString(o))
+              (FileKey.ofUri(r.getAs[String]("f")), mapper.writeValueAsString(o))
             }.toMap
           }
       val adds = parts.map { case (rel, value, p) =>
         addLine(rel, p.getLen, p.getModificationTime,
-          statsByFile.get(rawStatsKey(rel)),
+          statsByFile.get(FileKey(rel)),
           partitionValues = Map(partCol -> value))
       }
       val header =
@@ -2449,21 +2444,22 @@ object DeltaLite {
       .groupBy("__fp")
       .agg(sort_array(collect_list("__ri")).as("pos"))
       .collect()
-    // scan paths are absolute; part-file names are UUID-unique, so the
-    // name alone maps back to the log-relative path
-    val byName = affected.map(f => new Path(f).getName -> f).toMap
+    // scan paths are absolute and URI-encoded: their FileKey maps back to
+    // the log-relative path (a basename would not — one partitioned
+    // write reuses it in every `_p=` directory)
+    val byKey = affected.map(f => FileKey(dataPath(table, f)) -> f).toMap
+    val hits = byFile.toSeq.map(r =>
+      byKey(FileKey.ofUri(r.getString(0))) -> r.getSeq[Long](1).toArray)
+    val hitFiles = hits.map(_._1).toSet
+    val oldPos = dvPositions(spark, table, snap.dvs.filter(d => hitFiles(d._1)))
     def numRecords(f: String): Option[Long] = snap.stats.get(f).flatMap { s =>
       val n = mapper.readTree(s).path("numRecords")
       if (n.isNumber) Some(n.asLong()) else None
     }
     // union new positions into any existing vector; keep only files with
     // NEWLY deleted rows
-    val perFile: Seq[(String, Long, Array[Long])] = byFile.toSeq.map { r =>
-      val f = byName(new Path(r.getString(0)).getName)
-      val old = snap.dvs.get(f)
-        .map(d => DeletionVectors.readPositions(fs, table, d))
-        .getOrElse(Array.empty[Long])
-      val newPos = r.getSeq[Long](1).toArray
+    val perFile: Seq[(String, Long, Array[Long])] = hits.map { case (f, newPos) =>
+      val old = oldPos.getOrElse(FileKey(dataPath(table, f)), Array.empty[Long])
       val union = (old ++ newPos).distinct.sorted
       (f, old.length.toLong, union)
     }.filter { case (_, oldN, union) => union.length > oldN }
@@ -2674,34 +2670,8 @@ object DeltaLite {
       if (snap.files.isEmpty)
         spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
           schema)
-      else if (snap.dvs.isEmpty)
-        toLogical(spark.read.schema(scanSchema)
-          .parquet(snap.files.map(f => dataPath(table, f)): _*))
-      else {
-        // merge-on-read: subtract each file's deleted positions. The
-        // vectors decode driver-side (bounded by the snapshot's deleted-
-        // row count — control-plane, like the log) into a LocalRelation
-        // anti-joined on (file name, row_index); the DATA side stays a
-        // plain distributed parquet scan. Production Delta applies each
-        // bitmap inside its scan task; the anti-join is the relational
-        // equivalent at this subset's scale model.
-        import org.apache.spark.sql.functions.{col => c_, element_at, split}
-        import spark.implicits._
-        val fs = hadoopFs(spark, table)
-        val deleted: Seq[(String, Long)] = snap.dvs.toSeq.flatMap {
-          case (f, d) =>
-            val name = new Path(f).getName
-            DeletionVectors.readPositions(fs, table, d).map(p => (name, p))
-        }
-        val delDf = deleted.toDF("__fn", "__ri")
-        toLogical(spark.read.schema(scanSchema)
-          .parquet(snap.files.map(f => dataPath(table, f)): _*)
-          .withColumn("__fn",
-            element_at(split(c_("_metadata.file_path"), "/"), -1))
-          .withColumn("__ri", c_("_metadata.row_index"))
-          .join(delDf, Seq("__fn", "__ri"), "left_anti")
-          .drop("__fn", "__ri"))
-      }
+      else toLogical(scanWithDvs(spark, table, scanSchema, snap.files,
+        snap.dvs))
     (df, snap)
   }
 
@@ -3014,18 +2984,10 @@ object DeltaLite {
             .sortBy(_.getPath.getName).map(p =>
               (s"$staged/${d.getPath.getName}/${p.getPath.getName}", value, p))
         }
-      // last-two-components keys, decode ONLY the input_file_name side
-      // (the [[writePartitioned]] stats-key discipline)
-      val rawKey: String => String = _.split('/').takeRight(2).mkString("/")
-      val ifnKey: String => String = { p =>
-        val decoded =
-          try Option(new java.net.URI(p).getPath).getOrElse(p)
-          catch { case _: java.net.URISyntaxException => p }
-        decoded.split('/').takeRight(2).mkString("/")
-      }
+      // [[FileKey]] keys (the [[writePartitioned]] stats-key discipline)
       val statsByFile = FooterStats.deltaJson(
         spark.sparkContext.hadoopConfiguration,
-        parts.map { case (rel, _, p) => (rawKey(rel), p) }, Seq(column),
+        parts.map { case (rel, _, p) => (FileKey(rel), p) }, Seq(column),
         mapper, omitEmptyBoundsObjects = true)
         .getOrElse {
         spark.read.parquet(s"$table/$staged")
@@ -3033,14 +2995,14 @@ object DeltaLite {
         .agg(cnt_(l_(1)).as("numRecords"),
           mn_(c_(column)).as("mn"), mx_(c_(column)).as("mx"))
         .collect().map { r =>
-          (ifnKey(r.getAs[String]("f")),
+          (FileKey.ofUri(r.getAs[String]("f")),
             statsJson(r.getAs[Long]("numRecords"),
               r.getAs[java.lang.Long]("mn"), r.getAs[java.lang.Long]("mx")))
         }.toMap
         }
       parts.map { case (rel, value, p) =>
         addLine(rel, p.getLen, p.getModificationTime,
-          statsByFile.get(rawKey(rel)),
+          statsByFile.get(FileKey(rel)),
           partitionValues = Map(pc -> value))
       }
     }
@@ -3111,35 +3073,6 @@ object DeltaLite {
         commitInfoLine("UPDATE") +: (removes ++ adds ++ cdc)))
       throw new IllegalStateException(s"update lost the commit race on $table")
     (v, affected.size.toLong, rowsUpdated)
-  }
-
-  /** Live rows of `files` WITH file provenance (`__fn` = basename —
-    * unique here: every staged part-file name carries a job UUID, and
-    * [[mergeInto]] refuses partitioned tables, the one layout that
-    * reuses basenames across directories) — [[scanWithDvs]]'s DV
-    * subtraction, keeping the coordinate the touched-file planner needs. */
-  private[graft] def liveScanWithFile(spark: SparkSession, table: String,
-      schema: StructType, files: Seq[String],
-      dvs: Map[String, DeletionVectors.Descriptor]): DataFrame = {
-    import org.apache.spark.sql.functions.{col => c_, element_at, split}
-    val base = spark.read.schema(schema)
-      .parquet(files.map(f => dataPath(table, f)): _*)
-      .withColumn("__fn",
-        element_at(split(c_("_metadata.file_path"), "/"), -1))
-    val relevant = dvs.filter { case (f, _) => files.contains(f) }
-    if (relevant.isEmpty) base
-    else {
-      import spark.implicits._
-      val fs = hadoopFs(spark, table)
-      val deleted: Seq[(String, Long)] = relevant.toSeq.flatMap {
-        case (f, d) =>
-          val name = new Path(f).getName
-          DeletionVectors.readPositions(fs, table, d).map(p => (name, p))
-      }
-      base.withColumn("__ri", c_("_metadata.row_index"))
-        .join(deleted.toDF("__fn", "__ri"), Seq("__fn", "__ri"), "left_anti")
-        .drop("__ri")
-    }
   }
 
   /** The pieces the SQL row-level operation pins at creation: live
@@ -3399,11 +3332,15 @@ object DeltaLite {
         case Some((fLo, fHi)) => fHi >= srcLo && fLo <= srcHi
         case None => true // no stats: must be scanned
       })
+      // live rows of `files` with their [[FileKey]] as `__fn`
+      def liveWithFile(files: Seq[String]): DataFrame =
+        scanWithDvs(spark, table, schema, files, snap.dvs)
+          .withColumn("__fn", FileKey.column(c_("_metadata.file_path")))
       // (2) exact touched set + match counts, one key-column pass
       val (rowsMatched, matchedKeys, deletedKeys, touched) =
         if (candidates.isEmpty) (0L, 0L, 0L, Set.empty[String])
         else {
-          val m = liveScanWithFile(spark, table, schema, candidates, snap.dvs)
+          val m = liveWithFile(candidates)
             .select(c_(keyCol), c_("__fn"))
             .join(src.select(c_(keyCol), c_("__del")), Seq(keyCol))
             .agg(cnt_(lit(1)).as("n"), countDistinct(c_(keyCol)).as("nk"),
@@ -3429,11 +3366,10 @@ object DeltaLite {
         val v = write(spark, upserts0, table, collectStats = true)
         return (v, 0L, 0L, rowsInserted)
       }
-      val byName = candidates.map(f => new Path(f).getName -> f).toMap
-      val touchedRel = touched.toSeq.sorted.map(byName)
+      val byKey = candidates.map(f => FileKey(dataPath(table, f)) -> f).toMap
+      val touchedRel = touched.toSeq.sorted.map(byKey)
       // (3) rewrite = touched files' surviving live rows + every upsert
-      val liveTouched =
-        liveScanWithFile(spark, table, schema, touchedRel, snap.dvs)
+      val liveTouched = liveWithFile(touchedRel)
       val survivors = liveTouched
         .join(src.select(keyCol), Seq(keyCol), "left_anti")
         .drop("__fn")
@@ -3543,11 +3479,11 @@ object DeltaLite {
       val dels =
         if (rmPaths.isEmpty) Seq.empty
         else {
-          val prior = snapshot(spark, table, v - 1)
+          val rm = rmPaths.toSet
+          val prior = dvPositions(spark, table,
+            snapshot(spark, table, v - 1).dvs.filter(d => rm(d._1)))
           rmPaths.map(f => ChangeUnit(f, "delete",
-            prior.dvs.get(f)
-              .map(d => DeletionVectors.readPositions(fs, table, d))
-              .getOrElse(Array.empty[Long])))
+            prior.getOrElse(FileKey(dataPath(table, f)), Array.empty[Long])))
         }
       addPaths.map(ChangeUnit(_, "insert", Array.empty)) ++ dels
     }

@@ -619,26 +619,12 @@ object IcebergLite {
           out.toSeq
       }
     // per-file record counts (and, when a bounds column is declared, its
-    // min/max) in ONE pass over the staged files. Keyed by the LAST TWO
-    // path components, not the basename: under partitionBy staging a
-    // single task that holds several partition values writes the SAME
-    // part-<n>-<jobUuid> basename into each value's directory (AQE's
-    // coalesced repartition makes this the common case), and a basename
-    // key would silently collapse those files' statistics onto one entry
-    // input_file_name() is URI-escaped over the RAW on-disk name (a
-    // literal '%' in a Spark-escaped partition dir like _p=a%25b arrives
-    // double-escaped as a%2525b) — decode exactly ONCE on that side
-    // only; the listStatus side is already the raw name and must stay
-    // undecoded, or keys for values containing '%', '=' or ':' diverge
-    // and record_count lands as 0 in the manifest.
-    val rawStatsKey: String => String =
-      _.split('/').takeRight(2).mkString("/")
-    val ifnStatsKey: String => String = { p =>
-      val decoded =
-        try Option(new java.net.URI(p).getPath).getOrElse(p)
-        catch { case _: java.net.URISyntaxException => p }
-      decoded.split('/').takeRight(2).mkString("/")
-    }
+    // min/max) in ONE pass over the staged files, keyed by [[FileKey]]
+    // (one task writes the SAME basename into each partition directory
+    // it holds): listStatus names are raw, input_file_name() is
+    // URI-escaped and decodes once through FileKey.ofUri — otherwise
+    // keys for values containing '%', '=' or ':' diverge and
+    // record_count lands as 0 in the manifest.
     // Per-file stats come from the staged files' parquet FOOTERS (one
     // driver metadata read per file — the write just produced them, and
     // the footer already carries row counts, min/max and null counts),
@@ -653,7 +639,7 @@ object IcebergLite {
       val acc = Map.newBuilder[String, FooterStats.PerFile]
       val ok = parts.forall { case (rel, _, st) =>
         FooterStats.read(conf, st, neededCols) match {
-          case Some(pf) => acc += rawStatsKey(rel) -> pf; true
+          case Some(pf) => acc += FileKey(rel) -> pf; true
           case None => false
         }
       }
@@ -716,13 +702,13 @@ object IcebergLite {
                 if (mi == null || ma == null) None
                 else Some((mi.longValue(), ma.longValue()))
               }
-              (ifnStatsKey(r.getAs[String]("f")), (r.getAs[Long]("n"), bounds))
+              (FileKey.ofUri(r.getAs[String]("f")), (r.getAs[Long]("n"), bounds))
             }.toMap
         val cStats: Map[String, Seq[(Int, Any, Any, Long)]] =
           if (statsColumns.isEmpty) Map.empty
           else statRows.map { r =>
             val n = r.getAs[Long]("n")
-            (ifnStatsKey(r.getAs[String]("f")),
+            (FileKey.ofUri(r.getAs[String]("f")),
               statsColumns.zipWithIndex.map { case (c, i) =>
                 (fidsForStats(i),
                   r.getAs[Any](s"mn_$i"), r.getAs[Any](s"mx_$i"),
@@ -748,7 +734,7 @@ object IcebergLite {
         .getField("data_file").schema().getField("partition").schema())
       if (pval != null) partRecord.put("p0", pval)
       d.put("partition", partRecord)
-      val (n, bounds) = fileStats.getOrElse(rawStatsKey(rel), (0L, None))
+      val (n, bounds) = fileStats.getOrElse(FileKey(rel), (0L, None))
       d.put("record_count", n)
       d.put("file_size_in_bytes", p.getLen)
       d.put("block_size_in_bytes", 64L * 1024 * 1024)
@@ -756,7 +742,7 @@ object IcebergLite {
         d.put("lower_bound", lo)
         d.put("upper_bound", hi)
       }
-      colStats.get(rawStatsKey(rel)).foreach { perCol =>
+      colStats.get(FileKey(rel)).foreach { perCol =>
         val dfs = entrySchema.getField("data_file").schema()
         def itemSchema(field: String) =
           dfs.getField(field).schema().getTypes.get(1).getElementType
@@ -2185,7 +2171,7 @@ object IcebergLite {
             else d.get("content").asInstanceOf[Int]
           DeleteEntry(d.get("file_path").toString, entrySeqOf(e, m.seq),
             kind, entrySidOf(e, m.addedSid),
-            Option(ref).map(r => (fileKeyRaw(r.toString),
+            Option(ref).map(r => (FileKey(r.toString),
               d.get("content_offset").asInstanceOf[Long],
               d.get("content_size_in_bytes").asInstanceOf[Long])))
         }
@@ -2330,7 +2316,7 @@ object IcebergLite {
     *     PARENT (earlier position/equality deletes already subtracted —
     *     a masked row must not re-report its deletion) as `delete`;
     *   - DELETE FILES added in the snapshot (merge-on-read DML) → the
-    *     parent-live rows they mask, found by one [[filterByMask]]
+    *     parent-live rows they mask, found by one [[MaskFilter]]
     *     filter over the parent view (positions, vectors and equality
     *     tuples alike) as `delete` — so a MOR UPDATE surfaces as its
     *     delete+insert pair, exactly how Iceberg's changelog renders
@@ -2389,12 +2375,12 @@ object IcebergLite {
           s"parent snapshot $p of $sid expired from $table: changelog " +
             "cannot reconstruct the state diff"))
         val curFiles = snapshotManifestFiles(spark, table, sid, content = 0)
-          .map { case (p, _) => (fileKeyRaw(p), p) }.toMap
+          .map { case (p, _) => (FileKey(p), p) }.toMap
         val parE = parent.map(p =>
           snapshotManifestFiles(spark, table, p, content = 0))
           .getOrElse(Nil)
-        val parFiles = parE.map { case (q, _) => (fileKeyRaw(q), q) }.toMap
-        val parSeq = parE.map { case (q, seq) => (fileKeyRaw(q), seq) }.toMap
+        val parFiles = parE.map { case (q, _) => (FileKey(q), q) }.toMap
+        val parSeq = parE.map { case (q, seq) => (FileKey(q), seq) }.toMap
         val addedPaths = (curFiles.keySet -- parFiles.keySet).toSeq.sorted
           .map(curFiles)
         val removedKeys = parFiles.keySet -- curFiles.keySet
@@ -2424,7 +2410,7 @@ object IcebergLite {
             // positions already masked at the parent are not parent-live,
             // so the filter announces exactly its fresh deletions
             val killed = maskOf(spark, newDeletes, parSeq)
-            Some(filterByMask(spark,
+            Some(MaskFilter(spark,
                 readLive(spark, table, parent.get, keepMeta = true),
                 killed, alive = false)
               .drop("__fn", "__ri")
@@ -2493,12 +2479,12 @@ object IcebergLite {
       s"parent snapshot $p of $sid expired from $table: the change " +
         "stream cannot reconstruct the state diff"))
     val curE = snapshotManifestEntries(spark, table, sid, content = 0)
-    val cur = curE.map { case (p, _, _) => (fileKeyRaw(p), p) }.toMap
+    val cur = curE.map { case (p, _, _) => (FileKey(p), p) }.toMap
     val parE = parent.map(p =>
       snapshotManifestEntries(spark, table, p, content = 0))
       .getOrElse(Seq.empty)
     val parSeqAndPath =
-      parE.map { case (q, s, _) => (fileKeyRaw(q), (q, s)) }.toMap
+      parE.map { case (q, s, _) => (FileKey(q), (q, s)) }.toMap
     val par = parSeqAndPath.map { case (k, (q, _)) => (k, q) }
     // the feed's executor-side readers scan files BY NAME under the
     // table's current schema — refuse units over files written under
@@ -2549,7 +2535,7 @@ object IcebergLite {
     // vector's SUPERSET content minus the parent mask is exactly its
     // fresh deletions, like a new position-delete file's rows
     val newPos = maskOf(spark, newDel.filter(_.kind != 2),
-      (parE ++ curE).map(e => (fileKeyRaw(e._1), e._2)).toMap).posByFile
+      (parE ++ curE).map(e => (FileKey(e._1), e._2)).toMap).posByFile
     val inserts = (cur.keySet -- par.keySet).toSeq.sorted.map(k =>
       IceChangeUnit(cur(k), "insert", null, Array.empty))
     val cowDeletes = (par.keySet -- cur.keySet).toSeq.sorted.map(k =>
@@ -2750,28 +2736,6 @@ object IcebergLite {
   def read(spark: SparkSession, table: String, snapshotId: Long = -1L): DataFrame =
     readLive(spark, table, snapshotId, keepMeta = false)
 
-  /** File identity key: the last TWO path components. Basenames alone
-    * are NOT unique on partitioned tables — one task writes the same
-    * part-<n>-<jobUuid> basename into every partition directory it
-    * holds — and a basename-keyed position join would cross-multiply
-    * coordinates (masking rows in SIBLING partitions: silent row loss).
-    * The parent dir (commit-private staging dir, or `_p=value` under
-    * it) disambiguates. */
-  private def fileKeyRaw(p: String): String =
-    p.split('/').takeRight(2).mkString("/")
-
-  /** [[fileKeyRaw]] over `_metadata.file_path`, which is URI-encoded
-    * (space → %20, literal % → %25) while manifest paths are raw —
-    * decode exactly once; a literal '+' is protected first (%2B)
-    * because url_decode would otherwise read it as an encoded space. */
-  private def fileKeyMeta(c: org.apache.spark.sql.Column)
-      : org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.{concat_ws, element_at,
-      regexp_replace, split, url_decode}
-    val parts = split(url_decode(regexp_replace(c, "\\+", "%2B")), "/")
-    concat_ws("/", element_at(parts, -2), element_at(parts, -1))
-  }
-
   /** snapshot-id → recorded schema-id, for every snapshot that carries
     * one (writers record the schema current at commit — exactly the
     * NAMES their staged parquet columns bear, since metadata-only
@@ -2825,7 +2789,7 @@ object IcebergLite {
     val sidToSchema = snapshotSchemaIds(meta)
     def metaCols(df: DataFrame): DataFrame =
       if (!withMeta) df
-      else df.withColumn("__fn", fileKeyMeta(col("_metadata.file_path")))
+      else df.withColumn("__fn", FileKey.column(col("_metadata.file_path")))
         .withColumn("__ri", col("_metadata.row_index"))
     val bySchema = files.groupBy(f => sidToSchema.getOrElse(f._2, readSid))
     if (bySchema.keys.forall(w => w == readSid ||
@@ -2912,15 +2876,23 @@ object IcebergLite {
 
   /** [[read]] with the option to RETAIN the (__fn, __ri) position columns
     * — the coordinate system [[deleteWhere]] records deletes in (`__fn`
-    * is the [[fileKeyRaw]] two-component file key) — and to
+    * is the [[FileKey]] two-component file key) — and to
     * RESTRICT the scan to a planned subset of data files (by file key):
     * the rewrite ops ([[mergeInto]]) read only the files they touch, with
-    * every live delete still applied through [[filterByMask]]. */
+    * every live delete still applied through [[MaskFilter]]. */
   private def readLive(spark: SparkSession, table: String, snapshotId: Long,
       keepMeta: Boolean,
-      onlyFiles: Option[Set[String]] = None): DataFrame = {
+      onlyFiles: Option[Set[String]] = None): DataFrame =
+    liveScan(spark, table, snapshotId, keepMeta, onlyFiles,
+      latestMetadataVersion(spark, table))._1
+
+  /** [[readLive]] under metadata version `v`, answering also the mask it
+    * applied and the (path, data sequence, added snapshot) entries it
+    * scanned. */
+  private def liveScan(spark: SparkSession, table: String, snapshotId: Long,
+      keepMeta: Boolean, onlyFiles: Option[Set[String]], v: Int)
+      : (DataFrame, MorMask, Seq[(String, Long, Long)]) = {
     val fs = hadoopFs(spark, table)
-    val v = latestMetadataVersion(spark, table)
     val meta = readMetadata(fs, table, v)
     val wanted =
       if (snapshotId < 0) meta.get("current-snapshot-id").asLong() else snapshotId
@@ -2929,7 +2901,7 @@ object IcebergLite {
     val dataFiles = onlyFiles match {
       case None => allDataFiles
       case Some(names) =>
-        allDataFiles.filter(f => names.contains(fileKeyRaw(f._1)))
+        allDataFiles.filter(f => names.contains(FileKey(f._1)))
     }
     require(dataFiles.nonEmpty, s"snapshot has no data files in $table")
     val mask = morMask(spark, table, wanted, v,
@@ -2945,11 +2917,13 @@ object IcebergLite {
       else schemaIdForSnapshot(meta, wanted)
     val base = readUnderSchemaNames(spark, meta, readSid,
       dataFiles.map(f => (f._1, f._3)), withMeta = !mask.isEmpty || keepMeta)
-    if (mask.isEmpty) base
-    else {
-      val live = filterByMask(spark, base, mask, alive = true)
-      if (keepMeta) live else live.drop("__fn", "__ri")
-    }
+    val live =
+      if (mask.isEmpty) base
+      else {
+        val live = MaskFilter(spark, base, mask, alive = true)
+        if (keepMeta) live else live.drop("__fn", "__ri")
+      }
+    (live, mask, dataFiles)
   }
 
   /** One DELETE-manifest entry of the given kind (1 = position deletes,
@@ -3018,23 +2992,14 @@ object IcebergLite {
               (s"$staged/${d.getPath.getName}/${p.getPath.getName}", value, p))
         }
       if (parts.isEmpty) return (Seq.empty, 0L)
-      // per-file delete-row counts: last-two-component keys, decode only
-      // the input_file_name side (the writePartitioned stats discipline)
-      val rawKey: String => String = _.split('/').takeRight(2).mkString("/")
-      val ifnKey: String => String = { p =>
-        val decoded =
-          try Option(new java.net.URI(p).getPath).getOrElse(p)
-          catch { case _: java.net.URISyntaxException => p }
-        decoded.split('/').takeRight(2).mkString("/")
-      }
       // per-file row counts from the staged footers, not a Spark job
       val counts = parts.map { case (rel, _, p) =>
-        (rawKey(rel), ParquetDirect.rowCount(
+        (FileKey(rel), ParquetDirect.rowCount(
           spark.sparkContext.hadoopConfiguration, p.getPath))
       }.toMap
       val entries = parts.map { case (rel, value, p) =>
         deleteEntry(table, snapshotId, rel, p.getLen,
-          counts.getOrElse(rawKey(rel), 0L), kind = 1,
+          counts.getOrElse(FileKey(rel), 0L), kind = 1,
           pval = Some(value))
       }
       (entries, counts.values.sum)
@@ -3243,8 +3208,6 @@ object IcebergLite {
           s"IcebergLite.upgradeFormatVersion($table, 3) first")
       val spec = partitionSpec(prevMeta)
       val cur = prevMeta.get("current-snapshot-id").asLong()
-      val dataSeq = snapshotManifestFiles(spark, table, cur, content = 0)
-        .map { case (p, s) => (fileKeyRaw(p), (p, s)) }.toMap
       val snapshotId = prevV + 1L
       // matched LIVE positions — prior masks (parquet deletes AND vectors)
       // already applied by the read, so this is exactly the NEW deletions;
@@ -3252,8 +3215,12 @@ object IcebergLite {
       // partitioned table each file also carries its rows' (constant)
       // transform value, recorded on the vector's manifest entry so a
       // partition-restricted scan loads only its own partition's vectors.
-      val matchedRows = readLive(spark, table, cur, keepMeta = true)
-        .where(col(column).between(lo, hi))
+      // The scan's mask, pinned at prevV, is also the prior mask below:
+      // the delete payloads load once.
+      val (live, mask, dataFiles) =
+        liveScan(spark, table, cur, keepMeta = true, None, prevV)
+      val dataPaths = dataFiles.map(f => (FileKey(f._1), f._1)).toMap
+      val matchedRows = live.where(col(column).between(lo, hi))
       val matched: Map[String, (Array[Long], String)] = (spec match {
         case None => matchedRows.select("__fn", "__ri").collect()
           .groupBy(_.getString(0))
@@ -3271,19 +3238,15 @@ object IcebergLite {
       val nNew = matched.values.map(_._1.length.toLong).sum
       // the SUPERSET contract: the file's new vector = prior vector ∪
       // still-applicable parquet position-delete rows ∪ new matches
-      val priorMask = maskOf(spark,
-        snapshotDeleteEntries(spark, table, cur, metaV = prevV)
-          .filter(_.kind != 2),
-        dataSeq.map { case (fn, (_, seq)) => (fn, seq) }).posByFile
       val vectors = matched.toSeq.sortBy(_._1).map { case (fn, (pos, pv)) =>
-        val prior = priorMask.getOrElse(fn, Array.empty[Long])
+        val prior = mask.posByFile.getOrElse(fn, Array.empty[Long])
         (fn, (pos ++ prior).distinct.sorted, pv)
       }
       val token = java.util.UUID.randomUUID().toString.take(8)
       val written = Puffin.write(
         vectors.map { case (fn, pos, _) =>
           ("deletion-vector-v1", Seq.empty[Int], snapshotId, snapshotId,
-            Map("referenced-data-file" -> dataSeq(fn)._1,
+            Map("referenced-data-file" -> dataPaths(fn),
               "cardinality" -> pos.length.toString),
             DeletionVectors.serializeBitmap(pos))
         },
@@ -3310,7 +3273,7 @@ object IcebergLite {
         d.put("file_size_in_bytes", written.bytes.length.toLong)
         d.put("block_size_in_bytes", 64L * 1024 * 1024)
         d.put("content", 1)
-        d.put("referenced_data_file", dataSeq(fn)._1)
+        d.put("referenced_data_file", dataPaths(fn))
         d.put("content_offset", b.offset)
         d.put("content_size_in_bytes", b.length)
         e.put("data_file", d)
@@ -3373,7 +3336,7 @@ object IcebergLite {
       // On a partitioned table each position also carries its row's
       // transform value so the delete files land PER PARTITION.
       val nameToPath = dataFiles
-        .map { case (p, _) => (fileKeyRaw(p), p) }.toDF("__fn", "file_path")
+        .map { case (p, _) => (FileKey(p), p) }.toDF("__fn", "file_path")
       val matchedRows = readLive(spark, table, cur, keepMeta = true)
         .where(col(column).between(lo, hi))
       val positions = spec match {
@@ -3481,7 +3444,7 @@ object IcebergLite {
         // per-partition with the value on each entry when the table is
         // partitioned (delete files prune with their partition)
         val nameToPath = dataFiles
-          .map { case (p, _) => (fileKeyRaw(p), p) }
+          .map { case (p, _) => (FileKey(p), p) }
           .toDF("__fn", "file_path")
         val stagedDel = s"data/s$snapshotId-$token-del"
         val positions = spec match {
@@ -3575,13 +3538,12 @@ object IcebergLite {
           .sortBy(_.getPath.getName).map(p =>
             (s"$stagedRel/${d.getPath.getName}/${p.getPath.getName}", value, p))
       }
-    val rawKey: String => String = _.split('/').takeRight(2).mkString("/")
     // per-file record counts from the staged FOOTERS (guide §1.2/§6): the
     // write just produced these files, their footers are authoritative —
     // the distributed groupBy(input_file_name()) pass this replaces
     // re-read every staged byte as a second whole Spark job per commit
     val counts = parts.map { case (rel, _, p) =>
-      (rawKey(rel), ParquetDirect.rowCount(
+      (FileKey(rel), ParquetDirect.rowCount(
         spark.sparkContext.hadoopConfiguration, p.getPath))
     }.toMap
     val entries = parts.map { case (rel, pval, p) =>
@@ -3595,7 +3557,7 @@ object IcebergLite {
         .getField("data_file").schema().getField("partition").schema())
       if (pval != null) part.put("p0", pval)
       d.put("partition", part)
-      d.put("record_count", counts.getOrElse(rawKey(rel), 0L))
+      d.put("record_count", counts.getOrElse(FileKey(rel), 0L))
       d.put("file_size_in_bytes", p.getLen)
       d.put("block_size_in_bytes", 64L * 1024 * 1024)
       e.put("data_file", d)
@@ -3735,7 +3697,7 @@ object IcebergLite {
             val records = readAvroFile(fs, new Path(me.path))
             val (dropped, kept) = records.partition { r =>
               r.get("status").asInstanceOf[Int] != 2 &&
-                touched.contains(fileKeyRaw(
+                touched.contains(FileKey(
                   r.get("data_file").asInstanceOf[GenericRecord]
                     .get("file_path").toString))
             }
@@ -3774,30 +3736,6 @@ object IcebergLite {
       latestMetadataVersion(spark, table))(attempt)
   }
 
-  /** The merge-on-read delete state every Iceberg reader applies: the
-    * batch read ([[readLive]], one executor filter), the changelog, the
-    * streaming feed's masks and the SQL row-level scan. Per-data-file
-    * POSITION masks (parquet position deletes ∪ the newest v3 deletion
-    * vector), already sequence-gated (spec §Scan Planning: a position
-    * delete applies to data files with sequence ≤ its own), plus the
-    * EQUALITY-delete tuple payloads with their sequence numbers (a tuple
-    * suppresses rows in data files with sequence STRICTLY LESS than the
-    * delete's — evaluated per row at the reader against each file's own
-    * data sequence, under [[EqVals]]' NULL-safe rule). Loaded once on the
-    * driver: delete files are bounded by the DELETED-row count, the same
-    * control-plane cost model as Delta deletion vectors and the log
-    * itself. */
-  case class MorMask(
-      posByFile: Map[String, Array[Long]],      // fileKeyRaw → sorted pos
-      eq: Seq[EqVals],                          // N-column value tuples
-      dataSeq: Map[String, Long],               // fileKeyRaw → data seq
-      deleteFiles: Set[String]) {               // pinned delete-file paths
-    def isEmpty: Boolean = posByFile.isEmpty && eq.isEmpty
-  }
-  object MorMask {
-    val empty: MorMask = MorMask(Map.empty, Nil, Map.empty, Set.empty)
-  }
-
   /** The position-delete payloads of `entries` (kind 1) as (data-file
     * key, position, delete sequence) rows — the only reader of
     * position-delete files. Each file is read on the driver with no
@@ -3811,7 +3749,7 @@ object IcebergLite {
       val rows = ParquetDirect.tryReadPositions(conf, e.path).getOrElse(
         spark.read.parquet(e.path).select("file_path", "pos").collect()
           .map(r => (r.getString(0), r.getLong(1))).toSeq)
-      rows.map { case (fp, ri) => (fileKeyRaw(fp), ri, e.seq) }
+      rows.map { case (fp, ri) => (FileKey(fp), ri, e.seq) }
     }
   }
 
@@ -3850,45 +3788,7 @@ object IcebergLite {
     else maskOf(spark, deletes, dataFiles.getOrElse(
         snapshotManifestFiles(spark, table, snapshotId, content = 0,
           metaV = metaV))
-      .map { case (p, seq) => (fileKeyRaw(p), seq) }.toMap)
-  }
-
-  /** Keep the rows of `scan` (a [[readLive]] shape carrying `__ri`) that
-    * `mask` leaves alive — or, with `alive = false`, exactly the rows it
-    * kills (the changelog's question: which parent-live rows does a new
-    * delete kill). ONE broadcast-backed executor filter serves every
-    * delete kind: no join, no extra job, and the scan keeps its
-    * vectorized reader, column pruning and pushdown. */
-  private def filterByMask(spark: SparkSession, scan: DataFrame,
-      mask: MorMask, alive: Boolean): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit, not, struct, udf}
-    val eqCols = mask.eq.flatMap(_.cols).distinct
-    eqCols.foreach(c => require(scan.schema.fields.find(_.name == c)
-        .exists(f => EqVals.supported(f.dataType)),
-      s"equality-delete column $c is not an integral/string/boolean " +
-        "column of the table — equality deletes cannot be matched"))
-    val idx = eqCols.zipWithIndex.toMap
-    // the data sequences serve only equality gating: a position-only
-    // mask ships nothing sized by the live file count
-    val b = spark.sparkContext.broadcast(MaskLiveFilter.State(
-      mask.posByFile, if (eqCols.isEmpty) Map.empty else mask.dataSeq,
-      mask.eq.map(ev => (ev.cols.map(idx).toArray, ev.seq,
-        EqVals.tupleSet(ev.tuples))).toArray))
-    val keys = if (eqCols.isEmpty) lit(null) else struct(eqCols.map(col): _*)
-    def where(file: org.apache.spark.sql.Column, raw: Boolean): DataFrame = {
-      val a = udf(new MaskLiveFilter.Alive(b, raw),
-        org.apache.spark.sql.types.BooleanType)(file, col("__ri"), keys)
-      scan.where(if (alive) a else not(a))
-    }
-    // the RAW `_metadata.file_path`, resolved to the mask key once per
-    // file per task (the derived `__fn` column re-runs its url-decode +
-    // regex + splits per row); a scan over several name epochs unions
-    // them, which hides `_metadata` — key on `__fn` there
-    try where(col("_metadata.file_path"), raw = true)
-    catch {
-      case _: org.apache.spark.sql.AnalysisException =>
-        where(col("__fn"), raw = false)
-    }
+      .map { case (p, seq) => (FileKey(p), seq) }.toMap)
   }
 
   /** The pieces the SQL row-level operation pins at creation — the
@@ -3977,8 +3877,8 @@ object IcebergLite {
     // UPDATE-vs-OPTIMIZE falsification).
     locally {
       val live = snapshotFiles(spark, table, -1L, metaV = prevV)
-        .map(fileKeyRaw).toSet
-      require(removePaths.map(fileKeyRaw).forall(live.contains),
+        .map(FileKey(_)).toSet
+      require(removePaths.map(FileKey(_)).forall(live.contains),
         s"$operation on $table conflicts with a concurrent commit " +
           "that rewrote the same files — re-run the statement against " +
           "the new snapshot")
@@ -4006,7 +3906,7 @@ object IcebergLite {
           s"$operation on $table conflicts with a concurrent deletion-" +
             "vector commit — re-run the statement against the new " +
             "snapshot")
-        val removedKeys = removePaths.map(fileKeyRaw).toSet
+        val removedKeys = removePaths.map(FileKey(_)).toSet
         val touched = loadPositions(spark, fresh).map(_._1).toSet
         require(touched.intersect(removedKeys).isEmpty,
           s"$operation on $table conflicts with a concurrent position " +
@@ -4026,7 +3926,7 @@ object IcebergLite {
     val formatVersion = prevMeta.path("format-version").asInt(1)
     val snapshotId = prevV + 1L
     val token = java.util.UUID.randomUUID().toString.take(8)
-    val removed = removePaths.map(fileKeyRaw).toSet
+    val removed = removePaths.map(FileKey(_)).toSet
     // the staged data manifest lists EXACTLY the files the succeeded
     // writers reported — never a directory listing, so stray files from
     // failed attempts stay invisible to readers
@@ -4050,7 +3950,7 @@ object IcebergLite {
         val records = readAvroFile(fs, new Path(me.path))
         val (dropped, kept) = records.partition { r =>
           r.get("status").asInstanceOf[Int] != 2 &&
-            removed.contains(fileKeyRaw(
+            removed.contains(FileKey(
               r.get("data_file").asInstanceOf[GenericRecord]
                 .get("file_path").toString))
         }
@@ -4153,12 +4053,12 @@ object IcebergLite {
         "serves appends only; consume row-level changes via readChangelog")
     val to = snapshotFiles(spark, table, toSnap)
     if (fromSnap < 0) return to
-    val from = snapshotFiles(spark, table, fromSnap).map(fileKeyRaw).toSet
-    val toKeys = to.map(fileKeyRaw).toSet
+    val from = snapshotFiles(spark, table, fromSnap).map(FileKey(_)).toSet
+    val toKeys = to.map(FileKey(_)).toSet
     require(from.subsetOf(toKeys),
       s"snapshots ($fromSnap, $toSnap] replace files: the table stream " +
         "serves appends only — consume rewrites via readChangelog")
-    to.filterNot(f => from.contains(fileKeyRaw(f)))
+    to.filterNot(f => from.contains(FileKey(f)))
   }
 
   /** Exactly-once STREAMING epoch commit for the SQL
@@ -4792,75 +4692,6 @@ object IcebergLite {
         s"unknown metadata table '$other' (snapshots | manifests | " +
           "files | refs | partitions | entries | all_manifests | " +
           "all_files)")
-    }
-  }
-}
-
-/** The executor-side merge-on-read filter of [[IcebergLite]]'s readers.
-  * A top-level class, so task closures serialize ONLY the broadcast
-  * handle, never the IcebergLite object. Each instance memoizes the file
-  * column → mask resolution per task (one url-decode per distinct FILE,
-  * not per row): the decode replicates `fileKeyMeta` exactly — protect
-  * literal '+' as %2B, then URL-decode once, then take the last two path
-  * components. */
-private[graft] object MaskLiveFilter {
-  private def fileKeyOfRaw(raw: String): String = {
-    val decoded = java.net.URLDecoder.decode(
-      raw.replace("+", "%2B"), java.nio.charset.StandardCharsets.UTF_8)
-    decoded.split('/').takeRight(2).mkString("/")
-  }
-
-  /** The broadcast mask: per-file sorted masked positions and data
-    * sequence, and one (key ordinals, delete sequence, tuple set) check
-    * per equality-delete file. */
-  final case class State(pos: Map[String, Array[Long]],
-      dataSeq: Map[String, Long],
-      eq: Array[(Array[Int], Long, java.util.HashSet[Seq[Any]])])
-
-  /** Alive iff the row's position is not in its file's mask and no
-    * equality check applicable to its file (data sequence STRICTLY below
-    * the delete's) holds its key tuple. Tuples compare under [[EqVals]]'
-    * NULL-safe rule: a NULL key component matches a NULL row value. The
-    * file argument is the raw `_metadata.file_path` when `rawPaths`,
-    * else the derived file key; `keys` is the struct of the equality
-    * columns (null when there are none). */
-  final class Alive(b: org.apache.spark.broadcast.Broadcast[State],
-      rawPaths: Boolean)
-    extends org.apache.spark.sql.api.java.UDF3[String, java.lang.Long,
-      org.apache.spark.sql.Row, java.lang.Boolean] with Serializable {
-    @transient private lazy val cache =
-      new java.util.HashMap[String, (Array[Long], Long)]()
-    private def resolve(file: String): (Array[Long], Long) = {
-      var e = cache.get(file)
-      if (e == null) {
-        val k = if (rawPaths) fileKeyOfRaw(file) else file
-        e = (b.value.pos.getOrElse(k, null),
-          b.value.dataSeq.getOrElse(k, Long.MaxValue))
-        cache.put(file, e)
-      }
-      e
-    }
-    override def call(file: String, ri: java.lang.Long,
-        keys: org.apache.spark.sql.Row): java.lang.Boolean = {
-      val (m, ds) = resolve(file)
-      if (m != null && java.util.Arrays.binarySearch(m, ri.longValue()) >= 0)
-        return java.lang.Boolean.FALSE
-      val checks = b.value.eq
-      var i = 0
-      while (i < checks.length) {
-        val (ords, eseq, set) = checks(i)
-        if (ds < eseq) {
-          val tup = new Array[Any](ords.length)
-          var j = 0
-          while (j < ords.length) {
-            tup(j) = EqVals.external(keys.get(ords(j)))
-            j += 1
-          }
-          if (set.contains(tup.toIndexedSeq)) return java.lang.Boolean.FALSE
-        }
-        i += 1
-      }
-      java.lang.Boolean.TRUE
     }
   }
 }

@@ -329,7 +329,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     val readDelegate: ReadPlan =
       if (snap.dvs.nonEmpty) {
         // live deletion vectors: a plain parquet scan would resurrect
-        // deleted rows — serve the format reader's anti-join plan
+        // deleted rows — serve the format reader's mask-filtered plan
         // through the V1 bridge (filters/pruning still push through)
         MorPlan(() => DeltaLite.read(s, path, version))
       } else {

@@ -16,7 +16,7 @@ import org.apache.spark.sql.types.{StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
-import graft.sources.{DeltaLite, IcebergLite}
+import graft.sources.{DeltaLite, FileKey, IcebergLite, MorMask}
 
 /** X284: SQL `UPDATE` and `MERGE INTO` through the catalog — Spark's
   * GROUP-BASED row-level-operation contract (`SupportsRowLevelOperations`,
@@ -90,19 +90,19 @@ private[v2] final class GraftRowLevelOp(
   // operation's scan SKIPS masked rows, so a COW rewrite starts from
   // LIVE rows and the remove+add swap never resurrects deleted ones.
   private lazy val pinned: (Seq[String], Map[String, Array[Long]],
-      IcebergLite.MorMask,
+      MorMask,
       Map[String, graft.sources.DeletionVectors.Descriptor]) = format match {
     case "delta" =>
       val (files, dvs, _, _) = DeltaLite.rowLevelSnapshot(spark, path)
-      (files, GraftRowLevel.dvPositions(spark, path, dvs),
-        IcebergLite.MorMask.empty, dvs)
+      (files, DeltaLite.dvPositions(spark, path, dvs),
+        MorMask.empty, dvs)
     case _ =>
       val (files, _, mask) = IcebergLite.rowLevelSnapshot(spark, path)
       (files, mask.posByFile, mask, Map.empty)
   }
   private def snapFiles: Seq[String] = pinned._1
   private def dvPositions: Map[String, Array[Long]] = pinned._2
-  private def morMask: IcebergLite.MorMask = pinned._3
+  private def morMask: MorMask = pinned._3
   // the Delta DV descriptors live at the pin — the commit refuses if a
   // concurrent deleteWhereDV changed any removed file's mask (the Delta
   // twin of Iceberg's pinnedDeleteFiles, see ADVICE r15 medium)
@@ -115,7 +115,7 @@ private[v2] final class GraftRowLevelOp(
 
   private def affectedFiles: Seq[String] = affected match {
     case Some(names) =>
-      snapFiles.filter(f => names.contains(GraftRowLevel.fileTag(f)))
+      snapFiles.filter(f => names.contains(FileKey(f)))
     case None => snapFiles
   }
 
@@ -379,7 +379,7 @@ private[v2] final class FileTaggingReaderFactory(
   override def createReader(partition: InputPartition)
       : PartitionReader[InternalRow] = {
     val fp = partition.asInstanceOf[FilePartition]
-    val tagStr = GraftRowLevel.fileTag(fp.files.head.toPath.toString)
+    val tagStr = FileKey(fp.files.head.toPath.toString)
     val tag = UTF8String.fromString(tagStr)
     val masked = dvPositions.getOrElse(tagStr, Array.empty[Long]) // sorted
     val dataIdx = dataCols.fieldNames.zipWithIndex.toMap
@@ -523,22 +523,6 @@ private[v2] final class GraftReplaceBatchWrite(
 }
 
 private[v2] object GraftRowLevel {
-  /** Per-file deletion-vector positions, keyed by [[fileTag]] — loaded
-    * once on the driver (position lists are bounded by the DELETED-row
-    * count, the same control-plane cost model as the log itself) and
-    * shipped to the tagged readers, which skip those row indexes. */
-  def dvPositions(spark: SparkSession, path: String,
-      dvs: Map[String, graft.sources.DeletionVectors.Descriptor])
-      : Map[String, Array[Long]] =
-    if (dvs.isEmpty) Map.empty
-    else {
-      val fs = new Path(path).getFileSystem(
-        spark.sparkContext.hadoopConfiguration)
-      dvs.map { case (f, d) =>
-        fileTag(f) -> graft.sources.DeletionVectors.readPositions(fs, path, d)
-      }
-    }
-
   /** The V2 expression the replacement write clusters/sorts by — the
     * partition TRANSFORM, not just its source column. Hidden transforms
     * (`bucket`, `truncate`, temporal ordinals) resolve to catalyst
@@ -559,16 +543,6 @@ private[v2] object GraftRowLevel {
       case other => throw new UnsupportedOperationException(
         s"transform $other has no write distribution")
     }
-
-  /** The `_file` group coordinate: the LAST TWO path components, never
-    * the basename alone — one partitioned write job stages the SAME
-    * `part-<n>-<jobUuid>` basename into every `_p=<value>` directory it
-    * touches (the writePartitioned stats-key hazard), so a basename tag
-    * would glue sibling partitions into one group and rewrite files the
-    * predicate never touched. The penultimate component (staging-dir
-    * token or partition-value dir under a tokened stage) disambiguates. */
-  def fileTag(path: String): String =
-    path.split('/').takeRight(2).mkString("/")
 }
 
 private[v2] final case class GraftWrittenFile(name: String)

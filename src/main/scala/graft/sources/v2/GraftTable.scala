@@ -16,12 +16,12 @@ import org.apache.spark.sql.sources.{BaseRelation, Filter, InsertableRelation, T
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.sources.{DeltaLite, IcebergLite}
+import graft.sources.{DeltaLite, IcebergLite, MorMask}
 
 /** X276: one catalog table, BOTH planes. The DSv2 `Table` the
   * [[GraftCatalog]] serves: reads delegate to the plan the catalog chose
   * (stock vectorized `ParquetTable` for clean snapshots; the format
-  * reader's merge-on-read anti-join plan through the sanctioned
+  * reader's merge-on-read mask-filtered plan through the sanctioned
   * [[V1Scan]] bridge when the snapshot carries deletion vectors or
   * position/equality deletes), and writes go through the DSv2 write
   * contract (`V1_BATCH_WRITE`) committing through the format's OWN
@@ -42,9 +42,9 @@ import graft.sources.{DeltaLite, IcebergLite}
   * driver-side), so a 100 TB INSERT behaves exactly like the API write.
   * The V1 read bridge (MOR snapshots only) keeps the format reader's
   * logical plan intact, so pushed filters and pruned columns reach the
-  * underlying parquet scans through Catalyst before the anti-joins —
+  * underlying parquet scans through Catalyst below the mask filter —
   * [[DataFrameScanBuilder]] re-applies both on the DataFrame, where the
-  * optimizer pushes them below the join for free.
+  * optimizer pushes them into the scan for free.
   */
 private[v2] class GraftTable(
     tableName: String,
@@ -420,7 +420,7 @@ private[v2] final class GraftDeltaTable(
       mkStream = Some(rs =>
         new GraftTableStream(path, "delta", logicalSchema, rs,
           Option(options.get("maxFilesPerTrigger")).map(_.toInt))),
-      dvPositions = () => GraftRowLevel.dvPositions(
+      dvPositions = () => DeltaLite.dvPositions(
         org.apache.spark.sql.SparkSession.active, path, dvs))
 
   override def newRowLevelOperationBuilder(
@@ -451,7 +451,7 @@ private[v2] final class GraftIcebergTable(
     snapFiles: Seq[String],
     icePart: Option[IcebergLite.PartField],
     readDelegate: ReadPlan,
-    morMask: () => IcebergLite.MorMask = () => IcebergLite.MorMask.empty)
+    morMask: () => MorMask = () => MorMask.empty)
   extends GraftTable(tableName, path, "iceberg", logicalSchema, Seq.empty,
     icePart, columnMapped = false, readDelegate, writable = true)
   with org.apache.spark.sql.connector.catalog.SupportsRowLevelOperations
@@ -470,7 +470,7 @@ private[v2] final class GraftIcebergTable(
   // resolved once per loaded table instance (one statement sees one
   // consistent mask; the thunks below are hit 2-3× per DML plan, each
   // resolution costing control-plane reads + delete-file payload reads)
-  private lazy val morMaskOnce: IcebergLite.MorMask = morMask()
+  private lazy val morMaskOnce: MorMask = morMask()
 
   override def newScanBuilder(options: CaseInsensitiveStringMap)
       : ScanBuilder =
@@ -521,10 +521,10 @@ private[v2] final case class KeyGroupedPlan(mk: () => ScanBuilder)
   extends ReadPlan
 
 /** The V1 read bridge for merge-on-read snapshots: wraps the format
-  * reader's DataFrame (a LOGICAL plan — parquet scans + sequence-gated
-  * anti-joins) as a DSv2 scan. Column pruning and filter pushdown are
-  * applied ON the DataFrame, where Catalyst pushes them through the
-  * anti-joins into the underlying parquet scans — the pruned/filtered
+  * reader's DataFrame (a LOGICAL plan — parquet scans + the shared
+  * merge-on-read mask filter) as a DSv2 scan. Column pruning and filter
+  * pushdown are applied ON the DataFrame, where Catalyst pushes them
+  * into the underlying parquet scans — the pruned/filtered
   * plan is then executed as-is (`queryExecution.toRdd`, no row
   * conversion). Filters the V1 `Filter` algebra can't express re-apply
   * above the scan (Spark's standard V1 re-evaluation), so the bridge is

@@ -16,6 +16,25 @@ class DeltaLiteSpec extends SparkSpec with Matchers {
 
   private val mapper = new ObjectMapper()
 
+  // one SQL catalog over one warehouse, for the specs that hold the API
+  // reader and SQL to one answer
+  private val cat = "deltacat"
+  private lazy val warehouse: String = {
+    val w = Sinks.tempDir("delta_catalog_wh")
+    spark.conf.set(s"spark.sql.catalog.$cat",
+      classOf[graft.sources.v2.GraftCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", w)
+    w
+  }
+
+  /** Run `body` under `spark.sql.shuffle.partitions = n`, then restore. */
+  private def withShufflePartitions[A](n: Int)(body: => A): A = {
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, n.toString)
+    try body finally spark.conf.set(key, prev)
+  }
+
   private def logLines(table: String, v: Long): Seq[String] = {
     val p = java.nio.file.Paths.get(table, "_delta_log", f"$v%020d.json")
     scala.jdk.CollectionConverters.ListHasAsScala(
@@ -1360,6 +1379,83 @@ class DeltaLiteSpec extends SparkSpec with Matchers {
     all(adds.map(_.get("add").has("stats"))) shouldBe true
     adds.map(a => mapper.readTree(a.get("add").get("stats").asText())
       .get("numRecords").asLong()).sum shouldBe 3L
+    // the mask path decodes `_metadata.file_path` through the same single
+    // rule: one task writes one basename into `_p=a%251` and `_p=a+b`
+    // (a '+' must not decode to a space), and each vector masks exactly
+    // its own row
+    withShufflePartitions(1) {
+      val t2 = Sinks.tempDir("delta_spec_pct_dv")
+      DeltaLite.writePartitioned(spark,
+        Seq((1L, "a%1"), (2L, "a%1"), (3L, "a+b"), (4L, "a+b"))
+          .toDF("k", "src"), t2, "src", collectStats = true)
+      DeltaLite.deleteWhereDV(spark, t2, "k", 1L, 1L)._3 shouldBe 1L
+      DeltaLite.deleteWhereDV(spark, t2, "k", 4L, 4L)._3 shouldBe 1L
+      DeltaLite.read(spark, t2).as[(Long, String)].collect().sorted shouldBe
+        Seq((2L, "a%1"), (3L, "a+b"))
+    }
+  }
+
+  test("DV deletes on a partitioned table mask only their own partition's file") {
+    import spark.implicits._
+    // one shuffle partition: one task writes the SAME part-file basename
+    // into both `_p=` directories, so a basename-keyed vector also
+    // masked the sibling partition's row at the same position
+    withShufflePartitions(1) {
+      val rows = Seq((1L, "a"), (2L, "a"), (3L, "a"), (11L, "b"), (12L, "b"),
+        (13L, "b")).toDF("k", "src")
+      def fresh(name: String): String = {
+        val t = s"$warehouse/db/$name"
+        DeltaLite.writePartitioned(spark, rows, t, "src",
+          collectStats = true)                                        // v0
+        DeltaLite.enableCdf(spark, t)                                 // v1
+        val files = DeltaLite.snapshotAt(spark, t).files
+        files.size shouldBe 2
+        files.map(f => new Path(f).getName).distinct.size shouldBe 1
+        t
+      }
+      def live(t: String): Seq[Long] =
+        DeltaLite.read(spark, t).select("k").as[Long].collect().sorted.toSeq
+      def viaSql(name: String): Seq[Long] =
+        spark.sql(s"SELECT k FROM $cat.db.$name").as[Long].collect()
+          .sorted.toSeq
+      def feed(t: String, toV: Long): Seq[(Long, String)] =
+        DeltaLite.readCdf(spark, t, 1L, toV).select("k", "_change_type")
+          .as[(Long, String)].collect().sorted.toSeq
+
+      // a range delete, then a SQL point delete on the DV-carrying table
+      // (the catalog routes it to the vector merge)
+      val t1 = fresh("dv_part_range")
+      val (_, nFiles, nRows) = DeltaLite.deleteWhereDV(spark, t1, "k", 1L, 1L)
+      (nFiles, nRows) shouldBe (1L, 1L)
+      live(t1) shouldBe Seq(2L, 3L, 11L, 12L, 13L)
+      viaSql("dv_part_range") shouldBe Seq(2L, 3L, 11L, 12L, 13L)
+      spark.sql(s"DELETE FROM $cat.db.dv_part_range WHERE k IN (12)")
+      live(t1) shouldBe Seq(2L, 3L, 11L, 13L)
+      viaSql("dv_part_range") shouldBe Seq(2L, 3L, 11L, 13L)
+      feed(t1, 3L) shouldBe Seq((1L, "delete"), (12L, "delete"))
+
+      // a value list whose matches sit in both partitions
+      val t2 = fresh("dv_part_values")
+      DeltaLite.deleteValuesDV(spark, t2, "k", Seq(1L, 12L))._3 shouldBe 2L
+      live(t2) shouldBe Seq(2L, 3L, 11L, 13L)
+      viaSql("dv_part_values") shouldBe Seq(2L, 3L, 11L, 13L)
+      feed(t2, 2L) shouldBe Seq((1L, "delete"), (12L, "delete"))
+    }
+  }
+
+  test("deletion-vector masking is join-free") {
+    import spark.implicits._
+    val table = Sinks.tempDir("delta_maskplan")
+    DeltaLite.write(spark,
+      (0L until 10L).map(i => (i, i * 10L)).toDF("k", "v").repartition(2),
+      table, collectStats = true)
+    DeltaLite.deleteWhereDV(spark, table, "k", 2L, 4L)
+    val df = DeltaLite.read(spark, table)
+    // the vectors apply as one executor-side filter: no anti-join (and
+    // no join of any kind) in the executed plan
+    df.queryExecution.executedPlan.toString.toLowerCase should not include "join"
+    df.select("k").as[Long].collect().sorted shouldBe
+      Seq(0L, 1L, 5L, 6L, 7L, 8L, 9L)
   }
 
   test("mergeInto: O(touched) rewrite — untouched files carried live, stats-planned, ambiguity refuses") {

@@ -147,7 +147,7 @@ class GraftCatalogSpec extends SparkSpec with Matchers {
   test("merge-on-read state serves through SQL uncompacted, and stays right after compaction") {
     import spark.implicits._
     // Delta deletion vectors: SQL answers WITHOUT compacting — the
-    // catalog routes the snapshot through DeltaLite.read's anti-join
+    // catalog routes the snapshot through DeltaLite.read's mask-filtered
     // plan (X276); a plain parquet scan would say 6
     val td = s"$warehouse/db/ddv"
     DeltaLite.write(spark, (1L to 6L).map(k => (k, k)).toDF("k", "v"), td)

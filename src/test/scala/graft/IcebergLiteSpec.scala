@@ -1101,6 +1101,25 @@ class IcebergLiteSpec extends SparkSpec with Matchers {
     IcebergLite.metadataTable(spark, table, "partitions").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq shouldBe
       Seq(("a%x", 1L, 2L), ("b:y", 1L, 1L))
+    // the mask path decodes `_metadata.file_path` through the same single
+    // rule: one task writes one basename into `_p=a%251` and `_p=a+b`
+    // (a '+' must not decode to a space), and each deletion vector masks
+    // exactly its own row
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "1")
+    try {
+      val t2 = graft.ingest.Sinks.tempDir("ice_pct_dv")
+      IcebergLite.write(spark,
+        Seq(("a%1", 1L), ("a%1", 2L), ("a+b", 3L), ("a+b", 4L))
+          .toDF("cat", "v"), t2,
+        partitionField = Some(IcebergLite.PartField.identity("cat")))
+      IcebergLite.upgradeFormatVersion(spark, t2, 3)
+      IcebergLite.deleteWhereDV(spark, t2, "v", 1L, 1L)._2 shouldBe 1L
+      IcebergLite.deleteWhereDV(spark, t2, "v", 4L, 4L)._2 shouldBe 1L
+      IcebergLite.read(spark, t2).as[(String, Long)].collect()
+        .sortBy(_._2).toSeq shouldBe Seq(("a%1", 2L), ("a+b", 3L))
+    } finally spark.conf.set(key, prev)
   }
 
   test("partitioned MOR: per-partition delete files, update keeps pruning effective") {
