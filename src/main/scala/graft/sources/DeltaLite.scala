@@ -230,6 +230,49 @@ object DeltaLite {
       }
     }
 
+  /** The `add` lines of staged `files`, in order: each file's `stats` over
+    * the columns of `statsOn` (None = no stats) from [[Staging.stats]],
+    * its partition values from `pv`. */
+  private def addsOf(spark: SparkSession, files: Seq[Staging.File],
+      statsOn: Option[StructType], dataChange: Boolean = true,
+      pv: Staging.File => Map[String, String] = _ => Map.empty)
+      : Seq[String] = {
+    val stats = statsOn.fold(Map.empty[String, String]) { cols =>
+      Staging.stats(spark, files, cols).flatMap { case (k, pf) =>
+        statsJson(pf, cols.fieldNames.toSeq).map(k -> _)
+      }
+    }
+    files.map(f => addLine(f.rel, f.status.getLen,
+      f.status.getModificationTime, stats.get(f.key), dataChange, pv(f)))
+  }
+
+  /** A file's protocol `stats` JSON: numRecords, then minValues/maxValues
+    * objects (always present, possibly empty — readers go through
+    * `path`, so an absent column and an empty object read the same)
+    * carrying each of `cols` that has a LONG min and max in the file, in
+    * `cols` order. An all-NULL column carries no bounds and readers keep
+    * the file. None for a zero-row file: it has nothing to skip. */
+  private def statsJson(pf: FooterStats.PerFile,
+      cols: Seq[String]): Option[String] =
+    Option.when(pf.rows > 0L) {
+      val o = mapper.createObjectNode()
+      o.put("numRecords", pf.rows)
+      val mins = o.putObject("minValues")
+      val maxs = o.putObject("maxValues")
+      cols.foreach { c =>
+        (pf.cols(c).min, pf.cols(c).max) match {
+          case (mi: java.lang.Long, ma: java.lang.Long) =>
+            mins.put(c, mi.longValue()); maxs.put(c, ma.longValue())
+          case _ =>
+        }
+      }
+      mapper.writeValueAsString(o)
+    }
+
+  /** The LONG columns of `schema` — the ones the log's bounds cover. */
+  private def longCols(schema: StructType): StructType =
+    StructType(schema.fields.filter(_.dataType == LongType))
+
   /** The protocol's SetTransaction action — the exactly-once ledger that
     * SURVIVES checkpoint+expireLog (the r09 advisor finding: the `-b<id>-`
     * path marker alone dies with its JSON commit). */
@@ -313,28 +356,6 @@ object DeltaLite {
       config: Map[String, String] = Map.empty,
       partCols: Seq[String] = Seq.empty,
       domains: Map[String, String] = Map.empty)
-
-  /** Inverse of Spark/Hive's partition-directory escaping (the r09
-    * advisor finding on the Iceberg side): directory names URI-escape
-    * special characters as %XX and encode null/empty as the Hive default
-    * sentinel — recovering the raw value must undo both, or partition
-    * pruning silently misses files whose values needed escaping. */
-  private[sources] def unescapePathName(s: String): String = {
-    if (s == "__HIVE_DEFAULT_PARTITION__") return null
-    val sb = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '%' && i + 2 < s.length) {
-        val code =
-          try Integer.parseInt(s.substring(i + 1, i + 3), 16)
-          catch { case _: NumberFormatException => -1 }
-        if (code >= 0) { sb.append(code.toChar); i += 3 }
-        else { sb.append(c); i += 1 }
-      } else { sb.append(c); i += 1 }
-    }
-    sb.result()
-  }
 
   private def checkpointFile(table: String, v: Long) =
     new Path(logDir(table), f"$v%020d.checkpoint.parquet")
@@ -1063,7 +1084,6 @@ object DeltaLite {
     * (version, filesBefore, filesAfter). */
   def optimize(spark: SparkSession, table: String,
       targetFiles: Int = 1): (Long, Long, Long) = {
-    import org.apache.spark.sql.functions.{col, count, input_file_name, lit, max, min}
     val fs = hadoopFs(spark, table)
     requireNotMapped(spark, table, "optimize()")
     val latest = latestVersion(spark, table)
@@ -1083,43 +1103,14 @@ object DeltaLite {
     val v = latest + 1
     val token = java.util.UUID.randomUUID().toString.take(8)
     val staged = s"data/v$v-opt-$token"
-    src.coalesce(targetFiles).write.mode("errorifexists")
-      .parquet(s"$table/$staged")
-    val parts = fs.listStatus(new Path(table, staged))
-      .filter(_.getPath.getName.endsWith(".parquet")).sortBy(_.getPath.getName)
-    val longCols = schema.fields.filter(_.dataType == LongType).map(_.name).toSeq
-    // footers first; distributed fallback keeps the JSON identical
-    val statsByFile = FooterStats.deltaJson(
-      spark.sparkContext.hadoopConfiguration,
-      parts.toSeq.map(p => (p.getPath.getName, p)), longCols, mapper)
-      .getOrElse {
-      val aggs = count(lit(1)).as("numRecords") +:
-        longCols.flatMap(c => Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
-      spark.read.parquet(s"$table/$staged")
-        .groupBy(input_file_name().as("f")).agg(aggs.head, aggs.tail: _*)
-        .collect().map { r =>
-          val o = mapper.createObjectNode()
-          o.put("numRecords", r.getAs[Long]("numRecords"))
-          val mins = o.putObject("minValues")
-          val maxs = o.putObject("maxValues")
-          longCols.foreach { c =>
-            val mi = r.getAs[java.lang.Long](s"min_$c")
-            val ma = r.getAs[java.lang.Long](s"max_$c")
-            if (mi != null && ma != null) {
-              mins.put(c, mi.longValue()); maxs.put(c, ma.longValue())
-            }
-          }
-          (new Path(r.getAs[String]("f")).getName, mapper.writeValueAsString(o))
-        }.toMap
-      }
-    val adds = parts.toSeq.map(p =>
-      addLine(s"$staged/${p.getPath.getName}", p.getLen, p.getModificationTime,
-        statsByFile.get(p.getPath.getName), dataChange = false))
+    val adds = addsOf(spark,
+      Staging.write(table, staged, src.coalesce(targetFiles)),
+      Some(longCols(schema)), dataChange = false)
     val removes = before.files.map(removeLine(_, dataChange = false))
     if (!tryCommit(fs, table, v,
         commitInfoLine("OPTIMIZE") +: (removes ++ adds)))
       throw new IllegalStateException(s"optimize lost the commit race on $table")
-    (v, before.files.size.toLong, parts.length.toLong)
+    (v, before.files.size.toLong, adds.length.toLong)
   }
 
   /** Per-partition bin-packing for a partitioned table: each partition's
@@ -1130,10 +1121,8 @@ object DeltaLite {
     * exactly like Delta's own per-partition OPTIMIZE binning. */
   private def optimizePartitioned(spark: SparkSession, table: String,
       targetFiles: Int, before: Snapshot, latest: Long): (Long, Long, Long) = {
-    import org.apache.spark.sql.functions.{col, count, input_file_name, lit, max, min}
     val fs = hadoopFs(spark, table)
     val schema = tableSchema(spark, table)
-    val longCols = schema.fields.filter(_.dataType == LongType).map(_.name).toSeq
     val groups = before.files
       .groupBy(f => before.pvals.getOrElse(f, Map.empty[String, String]))
       .toSeq.sortBy(_._1.toSeq.sortBy(_._1).map(kv => s"${kv._1}=${kv._2}").mkString(","))
@@ -1147,44 +1136,14 @@ object DeltaLite {
       if (files.size <= targetFiles && files.forall(!before.dvs.contains(_)))
         filesAfter += files.size
       else {
-        val sub = s"$staged/g$gi"
-        scanWithDvs(spark, table, schema, files, before.dvs)
-          .coalesce(targetFiles)
-          .write.mode("errorifexists").parquet(s"$table/$sub")
-        val parts = fs.listStatus(new Path(table, sub))
-          .filter(_.getPath.getName.endsWith(".parquet"))
-          .sortBy(_.getPath.getName)
-        // footers first; distributed fallback keeps the JSON identical
-        val statsByFile = FooterStats.deltaJson(
-          spark.sparkContext.hadoopConfiguration,
-          parts.toSeq.map(p => (p.getPath.getName, p)), longCols, mapper)
-          .getOrElse {
-          val aggs = count(lit(1)).as("numRecords") +:
-            longCols.flatMap(c =>
-              Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
-          spark.read.parquet(s"$table/$sub")
-            .groupBy(input_file_name().as("f")).agg(aggs.head, aggs.tail: _*)
-            .collect().map { r =>
-              val o = mapper.createObjectNode()
-              o.put("numRecords", r.getAs[Long]("numRecords"))
-              val mins = o.putObject("minValues")
-              val maxs = o.putObject("maxValues")
-              longCols.foreach { c =>
-                val mi = r.getAs[java.lang.Long](s"min_$c")
-                val ma = r.getAs[java.lang.Long](s"max_$c")
-                if (mi != null && ma != null) {
-                  mins.put(c, mi.longValue()); maxs.put(c, ma.longValue())
-                }
-              }
-              (new Path(r.getAs[String]("f")).getName, mapper.writeValueAsString(o))
-            }.toMap
-          }
-        adds ++= parts.toSeq.map(p =>
-          addLine(s"$sub/${p.getPath.getName}", p.getLen, p.getModificationTime,
-            statsByFile.get(p.getPath.getName), dataChange = false,
-            partitionValues = pv))
+        val compacted = addsOf(spark,
+          Staging.write(table, s"$staged/g$gi",
+            scanWithDvs(spark, table, schema, files, before.dvs)
+              .coalesce(targetFiles)),
+          Some(longCols(schema)), dataChange = false, pv = _ => pv)
+        adds ++= compacted
         removes ++= files.map(removeLine(_, dataChange = false))
-        filesAfter += parts.length
+        filesAfter += compacted.length
       }
     }
     if (removes.isEmpty)
@@ -1228,7 +1187,7 @@ object DeltaLite {
     * predicates want). Same one-version dataChange=false contract. */
   def optimizeClustered(spark: SparkSession, table: String,
       cols: Seq[String], targetFiles: Int): (Long, Long, Long) = {
-    import org.apache.spark.sql.functions.{col, count, input_file_name, lit, max, min, pmod}
+    import org.apache.spark.sql.functions.{col, lit, pmod}
     require(cols.size == 1 || cols.size == 2,
       s"clustered optimize takes 1 or 2 columns — got ${cols.mkString(",")}")
     val fs = hadoopFs(spark, table)
@@ -1248,46 +1207,17 @@ object DeltaLite {
       case Seq(x, y) => FormatQueries.zValue(
         pmod(col(x), lit(65536L)), pmod(col(y), lit(65536L)))
     }
-    src.withColumn("_z", clusterKey)
-      .repartitionByRange(targetFiles, col("_z"))
-      .sortWithinPartitions("_z")
-      .drop("_z")
-      .write.mode("errorifexists").parquet(s"$table/$staged")
-    val parts = fs.listStatus(new Path(table, staged))
-      .filter(_.getPath.getName.endsWith(".parquet")).sortBy(_.getPath.getName)
-    val longCols = schema.fields.filter(_.dataType == LongType).map(_.name).toSeq
-    // footers first; distributed fallback keeps the JSON identical
-    val statsByFile = FooterStats.deltaJson(
-      spark.sparkContext.hadoopConfiguration,
-      parts.toSeq.map(p => (p.getPath.getName, p)), longCols, mapper)
-      .getOrElse {
-      val aggs = count(lit(1)).as("numRecords") +:
-        longCols.flatMap(c => Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
-      spark.read.parquet(s"$table/$staged")
-        .groupBy(input_file_name().as("f")).agg(aggs.head, aggs.tail: _*)
-        .collect().map { r =>
-          val o = mapper.createObjectNode()
-          o.put("numRecords", r.getAs[Long]("numRecords"))
-          val mins = o.putObject("minValues")
-          val maxs = o.putObject("maxValues")
-          longCols.foreach { c =>
-            val mi = r.getAs[java.lang.Long](s"min_$c")
-            val ma = r.getAs[java.lang.Long](s"max_$c")
-            if (mi != null && ma != null) {
-              mins.put(c, mi.longValue()); maxs.put(c, ma.longValue())
-            }
-          }
-          (new Path(r.getAs[String]("f")).getName, mapper.writeValueAsString(o))
-        }.toMap
-      }
-    val adds = parts.toSeq.map(p =>
-      addLine(s"$staged/${p.getPath.getName}", p.getLen, p.getModificationTime,
-        statsByFile.get(p.getPath.getName), dataChange = false))
+    val adds = addsOf(spark,
+      Staging.write(table, staged, src.withColumn("_z", clusterKey)
+        .repartitionByRange(targetFiles, col("_z"))
+        .sortWithinPartitions("_z")
+        .drop("_z")),
+      Some(longCols(schema)), dataChange = false)
     val removes = before.files.map(removeLine(_, dataChange = false))
     if (!tryCommit(fs, table, v,
         commitInfoLine("OPTIMIZE") +: (removes ++ adds)))
       throw new IllegalStateException(s"optimize lost the commit race on $table")
-    (v, before.files.size.toLong, parts.length.toLong)
+    (v, before.files.size.toLong, adds.length.toLong)
   }
 
   /** Partitioned commit — the layout 100 TB tables actually use: data
@@ -1299,15 +1229,15 @@ object DeltaLite {
     * reader of this subset scans it directly, while the log still carries
     * the full partitionValues layer that [[planPartitioned]] (and any
     * protocol reader) prunes on. Directory names are written escaped by
-    * Spark and unescaped on recovery ([[unescapePathName]]), so values
-    * needing %-escaping and the null sentinel round-trip exactly. Stats
-    * collection composes as in [[write]]. Returns the version. */
+    * Spark and unescaped on recovery ([[Staging.unescapePathName]]), so
+    * values needing %-escaping and the null sentinel round-trip exactly.
+    * Stats collection composes as in [[write]]. Returns the version. */
   def writePartitioned(spark: SparkSession, dfIn: DataFrame, table: String,
       partCol: String, collectStats: Boolean = false, tag: String = "-p-",
       txn: Option[(String, Long)] = None,
       overwrite: Boolean = false,
       replaceValue: Option[String] = None): Long = {
-    import org.apache.spark.sql.functions.{col, count, input_file_name, lit, max, min}
+    import org.apache.spark.sql.functions.col
     val fs = hadoopFs(spark, table)
     requireNotMapped(spark, table, "writePartitioned()")
     require(!(overwrite && replaceValue.isDefined),
@@ -1336,68 +1266,14 @@ object DeltaLite {
       }
       val token = java.util.UUID.randomUUID().toString.take(8)
       val staged = s"data/v$v$tag$token"
-      // pinned width: one encoder task per partition value (AQE would
-      // fold the byte-light value shuffle to one serial task)
-      df.withColumn("_p", col(partCol).cast("string"))
-        .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt,
-          col("_p"))
-        .write.mode("errorifexists").partitionBy("_p")
-        .parquet(s"$table/$staged")
-      // (relative path, recovered raw partition value, status)
-      val parts = fs.listStatus(new Path(table, staged))
-        .filter(_.getPath.getName.startsWith("_p="))
-        .sortBy(_.getPath.getName).toSeq.flatMap { d =>
-          val value = unescapePathName(d.getPath.getName.stripPrefix("_p="))
-          fs.listStatus(d.getPath)
-            .filter(_.getPath.getName.endsWith(".parquet"))
-            .sortBy(_.getPath.getName).map(p =>
-              (s"$staged/${d.getPath.getName}/${p.getPath.getName}", value, p))
-        }
-      val longCols = df.schema.fields
-        .filter(_.dataType == LongType).map(_.name).toSeq
-      // stats are keyed by [[FileKey]], never the basename: one task
-      // holding several partition values writes the SAME
-      // part-<n>-<jobUuid> name into each value's directory, and a
-      // basename key silently swaps those files' numRecords/min/max —
-      // wrong stats feeding planSkipping is silent row loss. The
-      // listStatus side is raw; input_file_name() is URI-escaped and
-      // decodes once (FileKey.ofUri), or keys for values containing '%',
-      // '=' or ':' diverge and the file's stats are silently dropped.
-      val statsByFile: Map[String, String] =
-        // `parts` can be EMPTY (an empty frame clearing a partition via
-        // replaceValue): the stats pass must skip, not die inferring a
-        // schema from a fileless staging dir
-        if (!collectStats || parts.isEmpty) Map.empty
-        else FooterStats.deltaJson(spark.sparkContext.hadoopConfiguration,
-          parts.map { case (rel, _, p) => (FileKey(rel), p) },
-          longCols, mapper)
-          .getOrElse {
-          val aggs = count(lit(1)).as("numRecords") +:
-            longCols.flatMap(c =>
-              Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
-          spark.read.parquet(s"$table/$staged")
-            .groupBy(input_file_name().as("f"))
-            .agg(aggs.head, aggs.tail: _*)
-            .collect().map { r =>
-              val o = mapper.createObjectNode()
-              o.put("numRecords", r.getAs[Long]("numRecords"))
-              val mins = o.putObject("minValues")
-              val maxs = o.putObject("maxValues")
-              longCols.foreach { c =>
-                val mi = r.getAs[java.lang.Long](s"min_$c")
-                val ma = r.getAs[java.lang.Long](s"max_$c")
-                if (mi != null && ma != null) {
-                  mins.put(c, mi.longValue()); maxs.put(c, ma.longValue())
-                }
-              }
-              (FileKey.ofUri(r.getAs[String]("f")), mapper.writeValueAsString(o))
-            }.toMap
-          }
-      val adds = parts.map { case (rel, value, p) =>
-        addLine(rel, p.getLen, p.getModificationTime,
-          statsByFile.get(FileKey(rel)),
-          partitionValues = Map(partCol -> value))
-      }
+      // one file per partition value per task, each carrying its raw
+      // value; `parts` can be EMPTY (an empty frame clearing a partition
+      // via replaceValue)
+      val parts = Staging.write(table, staged, df,
+        Some(col(partCol).cast("string")))
+      val adds = addsOf(spark, parts,
+        Option.when(collectStats)(longCols(df.schema)),
+        pv = f => Map(partCol -> f.value))
       val header =
         if (v == 0)
           Seq(protocolLine, metaDataLine(df.schema, partitionColumns = Seq(partCol)))
@@ -1407,7 +1283,7 @@ object DeltaLite {
       // partitions: the staged per-value layout is the free witness —
       // any staged value other than the replaced one aborts
       replaceValue.foreach { rv =>
-        val stray = parts.map(_._2).filter(_ != rv).distinct
+        val stray = parts.map(_.value).filter(_ != rv).distinct
         if (stray.nonEmpty) {
           fs.delete(new Path(table, staged), true)
           throw new IllegalArgumentException(
@@ -1719,11 +1595,7 @@ object DeltaLite {
           .build())).toIndexedSeq: _*)
       val token = java.util.UUID.randomUUID().toString.take(8)
       val staged = s"data/v$v-cm-$token"
-      physical.write.mode("errorifexists").parquet(s"$table/$staged")
-      val parts = fs.listStatus(new Path(table, staged))
-        .filter(_.getPath.getName.endsWith(".parquet")).sortBy(_.getPath.getName)
-      val adds = parts.toSeq.map(p =>
-        addLine(s"$staged/${p.getPath.getName}", p.getLen, p.getModificationTime))
+      val adds = addsOf(spark, Staging.write(table, staged, physical), None)
       if (tryCommit(fs, table, v,
           commitInfoLine("WRITE") +: (header ++ adds))) Some(v)
       else { fs.delete(new Path(table, staged), true); None }
@@ -2031,20 +1903,15 @@ object DeltaLite {
     val v = latest + 1
     val token = java.util.UUID.randomUUID().toString.take(8)
     val staged = s"data/v$v-purge-$token"
-    src.select(schema.fields.map(f =>
-        col(f.name).as(physicalName(f))).toIndexedSeq: _*)
-      .coalesce(targetFiles)
-      .write.mode("errorifexists").parquet(s"$table/$staged")
-    val parts = fs.listStatus(new Path(table, staged))
-      .filter(_.getPath.getName.endsWith(".parquet")).sortBy(_.getPath.getName)
-    val adds = parts.toSeq.map(p =>
-      addLine(s"$staged/${p.getPath.getName}", p.getLen, p.getModificationTime,
-        dataChange = false))
+    val adds = addsOf(spark, Staging.write(table, staged,
+      src.select(schema.fields.map(f =>
+          col(f.name).as(physicalName(f))).toIndexedSeq: _*)
+        .coalesce(targetFiles)), None, dataChange = false)
     val removes = before.files.map(removeLine(_, dataChange = false))
     if (!tryCommit(fs, table, v,
         commitInfoLine("REORG") +: (removes ++ adds)))
       throw new IllegalStateException(s"purge lost the commit race on $table")
-    (v, before.files.size.toLong, parts.length.toLong)
+    (v, before.files.size.toLong, adds.length.toLong)
   }
 
   private def writeTagged(spark: SparkSession, dfIn: DataFrame, table: String,
@@ -2059,52 +1926,11 @@ object DeltaLite {
       val v = base + 1
       val token = java.util.UUID.randomUUID().toString.take(8)
       val staged = s"data/v$v$tag$token"
-      df.write.mode("errorifexists").parquet(s"$table/$staged")
-      val parts = fs.listStatus(new Path(table, staged))
-        .filter(_.getPath.getName.endsWith(".parquet")).sortBy(_.getPath.getName)
       // protocol `stats`: per-file numRecords + min/max of every LONG
-      // column (the IcebergLite-subset numeric key types), computed in ONE
-      // distributed pass over the staged files grouped by file name — the
+      // column (the IcebergLite-subset numeric key types) — the
       // statistics layer [[planSkipping]] prunes scans off
-      val statsByFile: Map[String, String] =
-        if (!collectStats) Map.empty
-        else {
-          val longCols = df.schema.fields
-            .filter(_.dataType == LongType).map(_.name).toSeq
-          // footers first (no second pass over the staged bytes);
-          // distributed fallback keeps the JSON identical if any footer
-          // is unusable
-          FooterStats.deltaJson(spark.sparkContext.hadoopConfiguration,
-            parts.toSeq.map(p => (p.getPath.getName, p)), longCols, mapper)
-            .getOrElse {
-          import org.apache.spark.sql.functions.{col, count, input_file_name, lit, max, min}
-          val aggs = count(lit(1)).as("numRecords") +:
-            longCols.flatMap(c =>
-              Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
-          spark.read.parquet(s"$table/$staged")
-            .groupBy(input_file_name().as("f"))
-            .agg(aggs.head, aggs.tail: _*)
-            .collect().map { r =>
-              val o = mapper.createObjectNode()
-              o.put("numRecords", r.getAs[Long]("numRecords"))
-              val mins = o.putObject("minValues")
-              val maxs = o.putObject("maxValues")
-              longCols.foreach { c =>
-                val mi = r.getAs[java.lang.Long](s"min_$c")
-                val ma = r.getAs[java.lang.Long](s"max_$c")
-                // all-NULL columns carry no bounds — readers keep the file
-                if (mi != null && ma != null) {
-                  mins.put(c, mi.longValue())
-                  maxs.put(c, ma.longValue())
-                }
-              }
-              (new Path(r.getAs[String]("f")).getName, mapper.writeValueAsString(o))
-            }.toMap
-          }
-        }
-      val adds = parts.toSeq.map(p =>
-        addLine(s"$staged/${p.getPath.getName}", p.getLen, p.getModificationTime,
-          statsByFile.get(p.getPath.getName)))
+      val adds = addsOf(spark, Staging.write(table, staged, df),
+        Option.when(collectStats)(longCols(df.schema)))
       val removes =
         if (overwrite && v > 0) liveFiles(spark, table, v - 1).map(removeLine(_))
         else Seq.empty
@@ -2931,81 +2757,14 @@ object DeltaLite {
   private def stageReplacementAdds(spark: SparkSession, table: String,
       df: DataFrame, staged: String, column: String,
       partCols: Seq[String]): Seq[String] = {
-    import org.apache.spark.sql.functions.{col => c_, count => cnt_, input_file_name, lit => l_, max => mx_, min => mn_}
-    val fs = hadoopFs(spark, table)
-    def statsJson(n: Long, mi: java.lang.Long, ma: java.lang.Long): String = {
-      val o = mapper.createObjectNode()
-      o.put("numRecords", n)
-      if (mi != null && ma != null) {
-        o.putObject("minValues").put(column, mi.longValue())
-        o.putObject("maxValues").put(column, ma.longValue())
-      }
-      mapper.writeValueAsString(o)
-    }
-    if (partCols.isEmpty) {
-      df.write.mode("errorifexists").parquet(s"$table/$staged")
-      val parts = fs.listStatus(new Path(table, staged))
-        .filter(_.getPath.getName.endsWith(".parquet"))
-        .sortBy(_.getPath.getName)
-      // footers first (this path's JSON omits empty bounds objects);
-      // distributed fallback keeps it identical
-      val statsByFile = FooterStats.deltaJson(
-        spark.sparkContext.hadoopConfiguration,
-        parts.toSeq.map(p => (p.getPath.getName, p)), Seq(column), mapper,
-        omitEmptyBoundsObjects = true)
-        .getOrElse {
-        spark.read.parquet(s"$table/$staged")
-        .groupBy(input_file_name().as("f"))
-        .agg(cnt_(l_(1)).as("numRecords"),
-          mn_(c_(column)).as("mn"), mx_(c_(column)).as("mx"))
-        .collect().map { r =>
-          (new Path(r.getAs[String]("f")).getName,
-            statsJson(r.getAs[Long]("numRecords"),
-              r.getAs[java.lang.Long]("mn"), r.getAs[java.lang.Long]("mx")))
-        }.toMap
-        }
-      parts.toSeq.map(p =>
-        addLine(s"$staged/${p.getPath.getName}", p.getLen,
-          p.getModificationTime, statsByFile.get(p.getPath.getName)))
-    } else {
-      require(partCols.size == 1,
-        s"multi-column partitioning is outside the subset: $partCols")
-      val pc = partCols.head
-      df.withColumn("_p", c_(pc).cast("string"))
-        .repartition(c_("_p"))
-        .write.mode("errorifexists").partitionBy("_p")
-        .parquet(s"$table/$staged")
-      val parts = fs.listStatus(new Path(table, staged))
-        .filter(_.getPath.getName.startsWith("_p="))
-        .sortBy(_.getPath.getName).toSeq.flatMap { d =>
-          val value = unescapePathName(d.getPath.getName.stripPrefix("_p="))
-          fs.listStatus(d.getPath)
-            .filter(_.getPath.getName.endsWith(".parquet"))
-            .sortBy(_.getPath.getName).map(p =>
-              (s"$staged/${d.getPath.getName}/${p.getPath.getName}", value, p))
-        }
-      // [[FileKey]] keys (the [[writePartitioned]] stats-key discipline)
-      val statsByFile = FooterStats.deltaJson(
-        spark.sparkContext.hadoopConfiguration,
-        parts.map { case (rel, _, p) => (FileKey(rel), p) }, Seq(column),
-        mapper, omitEmptyBoundsObjects = true)
-        .getOrElse {
-        spark.read.parquet(s"$table/$staged")
-        .groupBy(input_file_name().as("f"))
-        .agg(cnt_(l_(1)).as("numRecords"),
-          mn_(c_(column)).as("mn"), mx_(c_(column)).as("mx"))
-        .collect().map { r =>
-          (FileKey.ofUri(r.getAs[String]("f")),
-            statsJson(r.getAs[Long]("numRecords"),
-              r.getAs[java.lang.Long]("mn"), r.getAs[java.lang.Long]("mx")))
-        }.toMap
-        }
-      parts.map { case (rel, value, p) =>
-        addLine(rel, p.getLen, p.getModificationTime,
-          statsByFile.get(FileKey(rel)),
-          partitionValues = Map(pc -> value))
-      }
-    }
+    require(partCols.size <= 1,
+      s"multi-column partitioning is outside the subset: $partCols")
+    addsOf(spark,
+      Staging.write(table, staged, df,
+        partCols.headOption.map(pc => org.apache.spark.sql.functions.col(pc)
+          .cast("string"))),
+      Some(StructType(Seq(df.schema(column)))),
+      pv = f => partCols.map(_ -> f.value).toMap)
   }
 
   /** Row-level UPDATE with stats-planned copy-on-write rewrite (the
@@ -3108,13 +2867,7 @@ object DeltaLite {
       pinnedDvs: Option[Map[String, DeletionVectors.Descriptor]] = None)
       : Long = {
     val fs = hadoopFs(spark, table)
-    val statsByFile = longStatsFor(spark, table, addRel)
-    val adds = addRel.map { f =>
-      val st = fs.getFileStatus(new Path(table, f))
-      addLine(f, st.getLen, st.getModificationTime,
-        statsByFile.get(new Path(f).getName),
-        partitionValues = partitionValues.getOrElse(f, Map.empty))
-    }
+    val adds = committedAdds(spark, table, addRel, partitionValues)
     Occ.commit(operation, table)(latestVersion(spark, table)) { base =>
       val v = base + 1
       // OPTIMISTIC CONFLICT RESOLUTION (Delta's own rule): the rewrite
@@ -3175,7 +2928,7 @@ object DeltaLite {
       appId: String = TxnAppId,
       partitionValues: Map[String, Map[String, String]] = Map.empty): Long = {
     val fs = hadoopFs(spark, table)
-    lazy val statsByFile = longStatsFor(spark, table, addRel)
+    lazy val adds = committedAdds(spark, table, addRel, partitionValues)
     // OPTIMISTIC RETRY: two streaming queries (or a query and a batch
     // writer) legitimately race one table; an epoch append conflicts
     // with nothing, so losing the arbiter race just means re-reading
@@ -3196,66 +2949,31 @@ object DeltaLite {
       // a replayed epoch, or an empty one: nothing to commit
       if (snapS.txns.get(appId).exists(_ >= epochId) || addRel.isEmpty)
         Some(latest)
-      else {
-        val adds = addRel.map { f =>
-          val st = fs.getFileStatus(new Path(table, f))
-          addLine(f, st.getLen, st.getModificationTime,
-            statsByFile.get(new Path(f).getName),
-            partitionValues = partitionValues.getOrElse(f, Map.empty))
-        }
+      else
         Option.when(tryCommit(fs, table, latest + 1,
           Seq(commitInfoLine("STREAMING UPDATE"),
             txnLine(appId, epochId)) ++ adds))(latest + 1)
-      }
     }
   }
 
-  /** numRecords + long-column min/max stats for staged files, computed
-    * in ONE distributed pass — the stats layer every commit path feeds
-    * so skipping keeps working on rewritten/streamed files. */
-  private def longStatsFor(spark: SparkSession, table: String,
-      addRel: Seq[String]): Map[String, String] = {
-    import org.apache.spark.sql.functions.{col => c_, count => cnt_, input_file_name, lit => l_, max => mx_, min => mn_}
-    if (addRel.isEmpty) return Map.empty
+  /** The `add` lines of files the SQL writers staged (table-relative
+    * `addRel`, each with its declared partition values), with
+    * numRecords + long-column min/max stats — the stats layer every
+    * commit path feeds so skipping keeps working on rewritten/streamed
+    * files. */
+  private def committedAdds(spark: SparkSession, table: String,
+      addRel: Seq[String],
+      partitionValues: Map[String, Map[String, String]]): Seq[String] = {
+    if (addRel.isEmpty) return Nil
+    val fs = hadoopFs(spark, table)
     val schema = tableSchema(spark, table)
     // column-mapped staged files carry PHYSICAL names — logical-name
     // stats would mis-scan, and the skipping layer refuses mapped
     // tables anyway (requireNotMapped): commit without stats
-    if (isColumnMapped(schema)) return Map.empty
-    val longCols = schema.fields.filter(_.dataType == LongType)
-      .map(_.name).toSeq
-    // footers first; distributed fallback keeps the JSON identical
-    val footer = {
-      val fs = hadoopFs(spark, table)
-      FooterStats.deltaJson(spark.sparkContext.hadoopConfiguration,
-        addRel.map { f =>
-          val p = new Path(dataPath(table, f))
-          (p.getName, fs.getFileStatus(p))
-        }, longCols, mapper)
-    }
-    footer.getOrElse {
-    val aggs = cnt_(l_(1)).as("numRecords") +: longCols.flatMap(c =>
-      Seq(mn_(c_(c)).as(s"min_$c"), mx_(c_(c)).as(s"max_$c")))
-    spark.read.schema(schema)
-      .parquet(addRel.map(f => dataPath(table, f)): _*)
-      .groupBy(input_file_name().as("f"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect().map { r =>
-        val o = mapper.createObjectNode()
-        o.put("numRecords", r.getAs[Long]("numRecords"))
-        val mins = o.putObject("minValues")
-        val maxs = o.putObject("maxValues")
-        longCols.foreach { c =>
-          val mi = r.getAs[java.lang.Long](s"min_$c")
-          val ma = r.getAs[java.lang.Long](s"max_$c")
-          if (mi != null && ma != null) {
-            mins.put(c, mi.longValue()); maxs.put(c, ma.longValue())
-          }
-        }
-        (new Path(r.getAs[String]("f")).getName,
-          mapper.writeValueAsString(o))
-      }.toMap
-    }
+    addsOf(spark,
+      addRel.map(f => Staging.File(f, null, fs.getFileStatus(new Path(table, f)))),
+      Option.when(!isColumnMapped(schema))(longCols(schema)),
+      pv = f => partitionValues.getOrElse(f.rel, Map.empty))
   }
 
   /** File-granular MERGE (the r12 verdict's one flagged scale-killer,

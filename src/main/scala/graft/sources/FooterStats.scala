@@ -11,43 +11,34 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 
-/** Per-file statistics straight from the parquet FOOTERS the staging write
-  * just produced — replacing the substrate's per-commit "re-read every
-  * staged file with a distributed `groupBy(input_file_name())` job" pass
-  * (guide §1.2: don't compute things you already have). The footer of every
-  * Spark-written parquet file already carries exactly what the manifest
-  * needs: per-row-group row counts, min/max and null counts per column. At
-  * 100 TB a commit's stats pass re-reading every staged byte is a second
-  * full I/O scan of the write; the footers are O(files) metadata reads.
+/** Per-file statistics straight from the parquet FOOTERS a staging write
+  * just produced: the footer of every Spark-written parquet file already
+  * carries per-row-group row counts, min/max and null counts per column,
+  * so a commit's statistics cost O(files) metadata reads instead of a
+  * second full scan of the staged bytes. The footer branch of
+  * [[Staging.stats]], the one per-file stats reader of both formats.
   *
   * Scope is deliberately conservative: only INT64 and UTF8-string columns
-  * are served (the two types the manifest bound encoders accept), and ANY
-  * missing/unusable statistic makes the whole file report `None` so the
-  * caller falls back to the distributed pass — identical stats or no
-  * change. String min/max compare as unsigned UTF-8 bytes, matching both
-  * parquet's UTF8 sort order and Spark's UTF8String ordering, so the
+  * are served (the two types the log and manifest encoders accept), and
+  * ANY missing/unusable statistic makes the whole file report `None`, so
+  * [[Staging.stats]] takes its distributed branch — identical stats or
+  * no change. String min/max compare as unsigned UTF-8 bytes, matching
+  * both parquet's UTF8 sort order and Spark's UTF8String ordering, so the
   * aggregated bounds equal what `min(col)`/`max(col)` would have returned.
   */
 object FooterStats {
 
   /** One column's file-level stats: `min`/`max` are java.lang.Long or
-    * String (null = column is all-NULL in this file), `nulls` its NULL
-    * count. */
+    * String (null = column is all-NULL in this file; for a type the
+    * footers do not serve, the scan branch answers Spark's own value),
+    * `nulls` its NULL count. */
   final case class Col(min: Any, max: Any, nulls: Long)
 
   /** One staged file: total rows + stats for each requested column. */
   final case class PerFile(rows: Long, cols: Map[String, Col])
 
-  private def utf8Lt(a: Array[Byte], b: Array[Byte]): Boolean = {
-    var i = 0
-    val n = math.min(a.length, b.length)
-    while (i < n) {
-      val x = a(i) & 0xff; val y = b(i) & 0xff
-      if (x != y) return x < y
-      i += 1
-    }
-    a.length < b.length
-  }
+  private def utf8Lt(a: Array[Byte], b: Array[Byte]): Boolean =
+    java.util.Arrays.compareUnsigned(a, b) < 0
 
   private def minOf(t: PrimitiveTypeName, a: Any, b: Any): Any = (a, b) match {
     case (null, x) => x
@@ -70,9 +61,9 @@ object FooterStats {
   }
 
   /** Footer stats for one staged file, or None when any requested column's
-    * statistics are absent, not INT64/UTF8, or nested — the caller must
-    * then fall back to the distributed stats pass. `cols` empty = row
-    * count only (always served). */
+    * statistics are absent, not INT64/UTF8, or nested — [[Staging.stats]]
+    * then takes its distributed branch. `cols` empty = row count only
+    * (always served). */
   def read(conf: Configuration, status: FileStatus,
       cols: Seq[String]): Option[PerFile] = {
     val reader = ParquetFileReader.open(
@@ -123,45 +114,5 @@ object FooterStats {
       }
       Some(PerFile(rows, out.result()))
     } finally reader.close()
-  }
-
-  /** The Delta `stats` JSON for a set of staged files, keyed by `key`, or
-    * None when any footer is unusable (caller falls back to the job).
-    * Byte-identical to the distributed pass's output: numRecords first,
-    * then minValues/maxValues carrying every `longCols` entry whose file
-    * slice has at least one non-null value, in `longCols` order. */
-  def deltaJson(conf: Configuration,
-      files: Seq[(String, FileStatus)], longCols: Seq[String],
-      mapper: com.fasterxml.jackson.databind.ObjectMapper,
-      omitEmptyBoundsObjects: Boolean = false)
-      : Option[Map[String, String]] = {
-    val out = Map.newBuilder[String, String]
-    files.foreach { case (key, status) =>
-      val pf = read(conf, status, longCols).getOrElse(return None)
-      // a zero-row staged file never forms an input_file_name() group, so
-      // the distributed pass leaves it stats-less — mirror that exactly
-      if (pf.rows > 0L) {
-        val o = mapper.createObjectNode()
-        o.put("numRecords", pf.rows)
-        val bounded = longCols.filter { c =>
-          val s = pf.cols(c); s.min != null && s.max != null
-        }
-        // two JSON shapes exist in the log layer: the commit paths write
-        // minValues/maxValues objects unconditionally (possibly empty);
-        // the COW-replacement path omits them when the single planning
-        // column has no bounds. Reproduce whichever the caller replaces.
-        if (bounded.nonEmpty || !omitEmptyBoundsObjects) {
-          val mins = o.putObject("minValues")
-          val maxs = o.putObject("maxValues")
-          bounded.foreach { c =>
-            val s = pf.cols(c)
-            mins.put(c, s.min.asInstanceOf[java.lang.Long].longValue())
-            maxs.put(c, s.max.asInstanceOf[java.lang.Long].longValue())
-          }
-        }
-        out += key -> mapper.writeValueAsString(o)
-      }
-    }
-    Some(out.result())
   }
 }

@@ -351,38 +351,34 @@ object IcebergLite {
 
   /** Single-value binary serialization of a bound (spec Appendix D):
     * longs as 8 little-endian bytes; strings as UTF-8 truncated to 16
-    * characters — `upper = true` increments the last kept character so a
-    * truncated value stays an UPPER bound (None when no character can
-    * be incremented). */
+    * CODE POINTS (a UTF-16 cut could split a surrogate pair) —
+    * `upper = true` increments the last kept code point, skipping the
+    * surrogate block, so a truncated value stays an UPPER bound in UTF-8
+    * byte order (None when no code point can be incremented). */
   private def boundBytes(v: Any, upper: Boolean): Option[Array[Byte]] =
     v match {
       case null => None
       case l: java.lang.Long => Some(java.nio.ByteBuffer.allocate(8)
         .order(java.nio.ByteOrder.LITTLE_ENDIAN).putLong(l).array())
       case s: String =>
-        if (s.length <= 16) Some(s.getBytes(StandardCharsets.UTF_8))
+        val cps = s.codePoints().toArray
+        if (cps.length <= 16) Some(s.getBytes(StandardCharsets.UTF_8))
+        else if (!upper)
+          Some(new String(cps, 0, 16).getBytes(StandardCharsets.UTF_8))
         else {
-          val t = s.substring(0, 16)
-          if (!upper) Some(t.getBytes(StandardCharsets.UTF_8))
+          val idx = cps.lastIndexWhere(_ != Character.MAX_CODE_POINT, 15)
+          if (idx < 0) None // nothing incrementable: drop the bound
           else {
-            val idx = t.lastIndexWhere(_ != Char.MaxValue)
-            if (idx < 0) None // nothing incrementable: drop the bound
-            else Some((t.substring(0, idx) + (t.charAt(idx) + 1).toChar)
+            val next = cps(idx) + 1
+            val bumped = cps.take(idx) :+
+              (if (next == Character.MIN_SURROGATE) 0xE000 else next)
+            Some(new String(bumped, 0, bumped.length)
               .getBytes(StandardCharsets.UTF_8))
           }
         }
       case other => throw new IllegalArgumentException(
         s"column-stats bound over unsupported type: $other")
     }
-
-  private def boundLong(b: Array[Byte]): Long =
-    java.nio.ByteBuffer.wrap(b)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN).getLong
-
-  private def boundString(b: Array[Byte]): String =
-    new String(b, StandardCharsets.UTF_8)
-
-  private val manifestEntrySchema: Schema = entrySchemaFor(partitioned = false)
 
   /** Entry schema for DELETE manifests — carries data_file.content so
     * readers can tell position deletes (1) from equality deletes (2). */
@@ -574,207 +570,21 @@ object IcebergLite {
           "against the new snapshot")
     }
     val snapshotId = prevV + 1L
-    // stage data files (commit-private dir, the DeltaLite discipline)
+    val prevMeta = if (prevV > 0) Some(readMetadata(fs, table, prevV)) else None
+    // stage data files (commit-private dir, the DeltaLite discipline):
+    // one file per transform value per task on a partitioned table
     val token = java.util.UUID.randomUUID().toString.take(8)
     val staged = s"data/s$snapshotId-$token"
-    // (relative-file-path, partition-value-or-null, file-status)
-    val parts: Seq[(String, String, org.apache.hadoop.fs.FileStatus)] =
-      partitionField match {
-        case None =>
-          df.write.mode("errorifexists").parquet(s"$table/$staged")
-          fs.listStatus(new Path(table, staged))
-            .filter(_.getPath.getName.endsWith(".parquet"))
-            .sortBy(_.getPath.getName)
-            .map(p => (s"$staged/${p.getPath.getName}", null, p)).toSeq
-        case Some(pf) =>
-          // one file per transform value: repartition by the value, then
-          // partitionBy splits each task's rows into per-value directories.
-          // PINNED width: the value shuffle is byte-light, so AQE's size
-          // heuristic folds it to ~1 task that sort+encodes every
-          // partition's file serially; pinning keeps one encoder task per
-          // value (same file layout — a value still hashes to ONE task)
-          df.withColumn("_p",
-              pf.valueColumn(org.apache.spark.sql.functions.col(pf.source)))
-            .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt,
-              org.apache.spark.sql.functions.col("_p"))
-            .write.mode("errorifexists").partitionBy("_p")
-            .parquet(s"$table/$staged")
-          val out = mutable.ArrayBuffer
-            .empty[(String, String, org.apache.hadoop.fs.FileStatus)]
-          fs.listStatus(new Path(table, staged))
-            .filter(_.getPath.getName.startsWith("_p="))
-            .sortBy(_.getPath.getName).foreach { d =>
-              // directory names are Hive-escaped by Spark (%XX, null →
-              // the default-partition sentinel): recover the RAW value or
-              // manifest rows would never match planPartitioned's wanted
-              // strings (r09 advisor finding)
-              val value = DeltaLite.unescapePathName(
-                d.getPath.getName.stripPrefix("_p="))
-              fs.listStatus(d.getPath)
-                .filter(_.getPath.getName.endsWith(".parquet"))
-                .sortBy(_.getPath.getName).foreach(p => out +=
-                  ((s"$staged/${d.getPath.getName}/${p.getPath.getName}",
-                    value, p)))
-            }
-          out.toSeq
-      }
-    // per-file record counts (and, when a bounds column is declared, its
-    // min/max) in ONE pass over the staged files, keyed by [[FileKey]]
-    // (one task writes the SAME basename into each partition directory
-    // it holds): listStatus names are raw, input_file_name() is
-    // URI-escaped and decodes once through FileKey.ofUri — otherwise
-    // keys for values containing '%', '=' or ':' diverge and
-    // record_count lands as 0 in the manifest.
-    // Per-file stats come from the staged files' parquet FOOTERS (one
-    // driver metadata read per file — the write just produced them, and
-    // the footer already carries row counts, min/max and null counts),
-    // NOT a second distributed pass over every staged byte. Any footer
-    // this helper can't serve exactly (non-INT64/UTF8 column, missing
-    // statistics) falls back to the original distributed stats job, so
-    // the manifest content is identical either way. Guide §1.2: remove
-    // the pass, not speed it up.
-    val neededCols: Seq[String] = boundsColumn.toSeq ++ statsColumns
-    val footerPerFile: Option[Map[String, FooterStats.PerFile]] = {
-      val conf = spark.sparkContext.hadoopConfiguration
-      val acc = Map.newBuilder[String, FooterStats.PerFile]
-      val ok = parts.forall { case (rel, _, st) =>
-        FooterStats.read(conf, st, neededCols) match {
-          case Some(pf) => acc += FileKey(rel) -> pf; true
-          case None => false
-        }
-      }
-      if (ok) Some(acc.result()) else None
-    }
-    // per-file: (record count, legacy long bounds, per-column spec stats
-    // as (1-based field id, min, max, null count))
-    lazy val fidsForStats: Seq[Int] = {
-      // stats key by the FIELD IDS this commit's schema declares —
-      // the same assignment the metadata commit below makes (ids ≠
-      // positions once the table has dropped a column)
-      val fids = assignFieldIds(
-        if (prevV > 0) Some(readMetadata(fs, table, prevV)) else None,
-        df.schema)
-      statsColumns.map(c => fids(df.schema.fieldNames.indexOf(c)))
-    }
-    val statsPair: (Map[String, (Long, Option[(Long, Long)])],
-        Map[String, Seq[(Int, Any, Any, Long)]]) = footerPerFile match {
-      case Some(perFile) =>
-        val fStats = perFile.map { case (k, pf) =>
-          val bounds = boundsColumn.flatMap { c =>
-            (pf.cols(c).min, pf.cols(c).max) match {
-              case (mi: java.lang.Long, ma: java.lang.Long) =>
-                Some((mi.longValue(), ma.longValue()))
-              case _ => None // all-null slice: no bounds, as the job path
-            }
-          }
-          (k, (pf.rows, bounds))
-        }
-        val cStats: Map[String, Seq[(Int, Any, Any, Long)]] =
-          if (statsColumns.isEmpty) Map.empty
-          // a zero-row file forms no input_file_name() group in the job
-          // path and so carries no column stats — mirror that
-          else perFile.collect { case (k, pf) if pf.rows > 0L =>
-            (k, statsColumns.zipWithIndex.map { case (c, i) =>
-              val s = pf.cols(c)
-              (fidsForStats(i), s.min, s.max, s.nulls)
-            })
-          }
-        (fStats, cStats)
-      case None =>
-        import org.apache.spark.sql.functions.{count => cnt, col => c_, input_file_name, lit => lt, max => mx_, min => mn_}
-        val statsAggs = cnt(lt(1)).as("n") +:
-          (boundsColumn.toSeq.flatMap(c =>
-            Seq(mn_(c_(c)).as("mn"), mx_(c_(c)).as("mx"))) ++
-            statsColumns.zipWithIndex.flatMap { case (c, i) =>
-              Seq(mn_(c_(c)).as(s"mn_$i"), mx_(c_(c)).as(s"mx_$i"),
-                cnt(c_(c)).as(s"nn_$i")) // count(col) = non-null count
-            })
-        val statRows =
-          spark.read.parquet(s"$table/$staged")
-            .groupBy(input_file_name().as("f"))
-            .agg(statsAggs.head, statsAggs.tail: _*)
-            .collect()
-        val fStats: Map[String, (Long, Option[(Long, Long)])] =
-          statRows.map { r =>
-              val bounds = boundsColumn.flatMap { _ =>
-                val mi = r.getAs[java.lang.Long]("mn")
-                val ma = r.getAs[java.lang.Long]("mx")
-                if (mi == null || ma == null) None
-                else Some((mi.longValue(), ma.longValue()))
-              }
-              (FileKey.ofUri(r.getAs[String]("f")), (r.getAs[Long]("n"), bounds))
-            }.toMap
-        val cStats: Map[String, Seq[(Int, Any, Any, Long)]] =
-          if (statsColumns.isEmpty) Map.empty
-          else statRows.map { r =>
-            val n = r.getAs[Long]("n")
-            (FileKey.ofUri(r.getAs[String]("f")),
-              statsColumns.zipWithIndex.map { case (c, i) =>
-                (fidsForStats(i),
-                  r.getAs[Any](s"mn_$i"), r.getAs[Any](s"mx_$i"),
-                  n - r.getAs[Long](s"nn_$i"))
-              })
-          }.toMap
-        (fStats, cStats)
-    }
-    val fileStats = statsPair._1
-    val colStats = statsPair._2
-    // manifest for the new files
-    val entrySchema = entrySchemaFor(partitionField.isDefined,
-      boundsColumn.isDefined, withColStats = statsColumns.nonEmpty)
-    val entries = parts.map { case (rel, pval, p) =>
-      val e = new GenericData.Record(entrySchema)
-      e.put("status", 1) // ADDED
-      e.put("snapshot_id", snapshotId)
-      val d = new GenericData.Record(
-        entrySchema.getField("data_file").schema())
-      d.put("file_path", s"$table/$rel")
-      d.put("file_format", "PARQUET")
-      val partRecord = new GenericData.Record(entrySchema
-        .getField("data_file").schema().getField("partition").schema())
-      if (pval != null) partRecord.put("p0", pval)
-      d.put("partition", partRecord)
-      val (n, bounds) = fileStats.getOrElse(FileKey(rel), (0L, None))
-      d.put("record_count", n)
-      d.put("file_size_in_bytes", p.getLen)
-      d.put("block_size_in_bytes", 64L * 1024 * 1024)
-      bounds.foreach { case (lo, hi) =>
-        d.put("lower_bound", lo)
-        d.put("upper_bound", hi)
-      }
-      colStats.get(FileKey(rel)).foreach { perCol =>
-        val dfs = entrySchema.getField("data_file").schema()
-        def itemSchema(field: String) =
-          dfs.getField(field).schema().getTypes.get(1).getElementType
-        def kv(field: String, pairs: Seq[(Int, Any)]) = {
-          val arr = new java.util.ArrayList[GenericData.Record]()
-          pairs.foreach { case (k2, v2) =>
-            val rec = new GenericData.Record(itemSchema(field))
-            rec.put("key", k2)
-            rec.put("value", v2)
-            arr.add(rec)
-          }
-          arr
-        }
-        d.put("null_value_counts",
-          kv("null_value_counts", perCol.map(t => (t._1, t._4: Any))))
-        d.put("lower_bounds", kv("lower_bounds", perCol.flatMap(t =>
-          boundBytes(t._2, upper = false)
-            .map(b => (t._1, java.nio.ByteBuffer.wrap(b): Any)))))
-        d.put("upper_bounds", kv("upper_bounds", perCol.flatMap(t =>
-          boundBytes(t._3, upper = true)
-            .map(b => (t._1, java.nio.ByteBuffer.wrap(b): Any)))))
-      }
-      e.put("data_file", d)
-      e
-    }
-    val manifestName = s"$snapshotId-$token-m0.avro"
-    val manifestLocal = new File(new File(table, "metadata"), manifestName)
-    val manifestLen = writeAvroFile(manifestLocal, entrySchema, entries)
+    // spec column stats key by the FIELD IDS this commit's schema
+    // declares — the same assignment the metadata commit below makes
+    // (ids ≠ positions once the table has dropped a column)
+    val ids = assignFieldIds(prevMeta, df.schema)
+    val fids = statsColumns.map(c => ids(df.schema.fieldNames.indexOf(c)))
+    val (manifestName, manifestLen) = stageData(spark, table, staged, df,
+      partitionField, snapshotId, token, boundsColumn, statsColumns.zip(fids))
     // manifest list = prior manifests (append, BY REFERENCE — including
     // any v2 DELETE manifests, whose content/sequence fields must survive
     // the copy or deletes would silently re-apply as data) + the new one
-    val prevMeta = if (prevV > 0) Some(readMetadata(fs, table, prevV)) else None
     // format version is sticky-upward: v1 tables may upgrade to 2 (the
     // spec's upgrade path — older snapshots' v1 manifest lists resolve
     // under the v2 reader via schema defaults), never downgrade
@@ -1980,14 +1790,18 @@ object IcebergLite {
     * recorded [lower, upper] may intersect [lo, hi]; files without
     * bounds are conservatively kept. Truncation keeps this sound —
     * a truncated lower is ≤ the true min, an incremented-truncated
-    * upper ≥ the true max. Returns (matched, nMatched, nTotal). */
+    * upper ≥ the true max. Bounds compare as unsigned UTF-8 bytes, the
+    * order they were computed in (parquet footers and Spark's
+    * `min`/`max`); UTF-16 `String` order differs above the BMP.
+    * Returns (matched, nMatched, nTotal). */
   def planStringRange(spark: SparkSession, table: String, column: String,
       lo: String, hi: String): (Seq[String], Long, Long) = {
+    def cmp(bound: Array[Byte], v: String) = java.util.Arrays
+      .compareUnsigned(bound, v.getBytes(StandardCharsets.UTF_8))
     val all = colStatsFor(spark, table, column).map {
       case (p, lb, ub, _) =>
         val keep = (lb, ub) match {
-          case (Some(l), Some(u)) =>
-            boundString(u) >= lo && boundString(l) <= hi
+          case (Some(l), Some(u)) => cmp(u, lo) >= 0 && cmp(l, hi) <= 0
           case _ => true
         }
         (p, keep)
@@ -2962,48 +2776,19 @@ object IcebergLite {
       positions: org.apache.spark.sql.DataFrame, staged: String,
       snapshotId: Long, partitioned: Boolean)
       : (Seq[GenericRecord], Long) = {
-    import org.apache.spark.sql.functions.{col, count => cnt, input_file_name, lit}
-    val fs = hadoopFs(spark, table)
-    if (!partitioned) {
-      positions.coalesce(1).sortWithinPartitions("file_path", "pos")
-        .write.mode("errorifexists").parquet(s"$table/$staged")
-      val parts = fs.listStatus(new Path(table, staged))
-        .filter(_.getPath.getName.endsWith(".parquet"))
-        .sortBy(_.getPath.getName)
-      // row count from the staged footers, not a Spark count job
-      val n = parts.map(p => ParquetDirect.rowCount(
-        spark.sparkContext.hadoopConfiguration, p.getPath)).sum
-      if (n == 0) return (Seq.empty, 0L)
-      (parts.toSeq.map(p => deleteEntry(table, snapshotId,
-        s"$staged/${p.getPath.getName}", p.getLen, n, kind = 1)), n)
-    } else {
-      positions.repartition(col("_p"))
-        .sortWithinPartitions("_p", "file_path", "pos")
-        .write.mode("errorifexists").partitionBy("_p")
-        .parquet(s"$table/$staged")
-      val parts = fs.listStatus(new Path(table, staged))
-        .filter(_.getPath.getName.startsWith("_p="))
-        .sortBy(_.getPath.getName).toSeq.flatMap { d =>
-          val value = DeltaLite.unescapePathName(
-            d.getPath.getName.stripPrefix("_p="))
-          fs.listStatus(d.getPath)
-            .filter(_.getPath.getName.endsWith(".parquet"))
-            .sortBy(_.getPath.getName).map(p =>
-              (s"$staged/${d.getPath.getName}/${p.getPath.getName}", value, p))
-        }
-      if (parts.isEmpty) return (Seq.empty, 0L)
-      // per-file row counts from the staged footers, not a Spark job
-      val counts = parts.map { case (rel, _, p) =>
-        (FileKey(rel), ParquetDirect.rowCount(
-          spark.sparkContext.hadoopConfiguration, p.getPath))
-      }.toMap
-      val entries = parts.map { case (rel, value, p) =>
-        deleteEntry(table, snapshotId, rel, p.getLen,
-          counts.getOrElse(FileKey(rel), 0L), kind = 1,
-          pval = Some(value))
-      }
-      (entries, counts.values.sum)
-    }
+    import org.apache.spark.sql.functions.col
+    val files =
+      if (!partitioned) Staging.write(table, staged,
+        positions.coalesce(1).sortWithinPartitions("file_path", "pos"))
+      else Staging.write(table, staged, positions, Some(col("_p")),
+        sortWithin = Seq("file_path", "pos"))
+    // row counts from the staged footers, not a Spark count job
+    val counts = Staging.stats(spark, files)
+    val n = counts.values.map(_.rows).sum
+    if (n == 0) return (Seq.empty, 0L)
+    (files.map(f => deleteEntry(table, snapshotId, f.rel, f.status.getLen,
+      counts(f.key).rows, kind = 1, pval = Option.when(partitioned)(f.value))),
+      n)
   }
 
   /** Row-level DELETE as an EQUALITY-DELETE commit (spec §Row-level
@@ -3466,22 +3251,8 @@ object IcebergLite {
           case (d, (k, expr)) => d.withColumn(k, expr)
         }.select(schema.fieldNames.map(col).toIndexedSeq: _*)
         val stagedData = s"data/s$snapshotId-$token-upd"
-        val (dataManifestName, dataManifestLen) = spec match {
-          case None =>
-            updated.write.mode("errorifexists").parquet(s"$table/$stagedData")
-            stageDataManifest(spark, fs, table, stagedData, snapshotId, token)
-          case Some(pf) =>
-            // pinned width: one encoder task per partition value (AQE would
-            // fold the byte-light value shuffle to one serial task)
-            updated.withColumn("_p", pf.valueColumn(col(pf.source)))
-              .repartition(
-                spark.conf.get("spark.sql.shuffle.partitions").toInt,
-                col("_p"))
-              .write.mode("errorifexists").partitionBy("_p")
-              .parquet(s"$table/$stagedData")
-            stageDataManifestPartitioned(spark, fs, table, stagedData,
-              snapshotId, token)
-        }
+        val (dataManifestName, dataManifestLen) = stageData(spark, table,
+          stagedData, updated, spec, snapshotId, token)
         val delManifestName = s"$snapshotId-$token-del-m0.avro"
         val delManifestLen = writeAvroFile(
           new File(new File(table, "metadata"), delManifestName),
@@ -3521,87 +3292,104 @@ object IcebergLite {
       latestMetadataVersion(spark, table))(attempt)
   }
 
-  /** [[stageDataManifest]] for a PARTITIONED staging dir (`_p=value`
-    * layout): entries carry each file's transform value (p0) and exact
-    * per-file record counts. Returns (manifestName, length). */
-  private def stageDataManifestPartitioned(spark: SparkSession,
-      fs: FileSystem, table: String, stagedRel: String, snapshotId: Long,
-      token: String): (String, Long) = {
-    val schema = entrySchemaFor(partitioned = true)
-    val parts = fs.listStatus(new Path(table, stagedRel))
-      .filter(_.getPath.getName.startsWith("_p="))
-      .sortBy(_.getPath.getName).toSeq.flatMap { d =>
-        val value = DeltaLite.unescapePathName(
-          d.getPath.getName.stripPrefix("_p="))
-        fs.listStatus(d.getPath)
-          .filter(_.getPath.getName.endsWith(".parquet"))
-          .sortBy(_.getPath.getName).map(p =>
-            (s"$stagedRel/${d.getPath.getName}/${p.getPath.getName}", value, p))
-      }
-    // per-file record counts from the staged FOOTERS (guide §1.2/§6): the
-    // write just produced these files, their footers are authoritative —
-    // the distributed groupBy(input_file_name()) pass this replaces
-    // re-read every staged byte as a second whole Spark job per commit
-    val counts = parts.map { case (rel, _, p) =>
-      (FileKey(rel), ParquetDirect.rowCount(
-        spark.sparkContext.hadoopConfiguration, p.getPath))
-    }.toMap
-    val entries = parts.map { case (rel, pval, p) =>
-      val e = new GenericData.Record(schema)
-      e.put("status", 1)
-      e.put("snapshot_id", snapshotId)
-      val d = new GenericData.Record(schema.getField("data_file").schema())
-      d.put("file_path", s"$table/$rel")
-      d.put("file_format", "PARQUET")
-      val part = new GenericData.Record(schema
-        .getField("data_file").schema().getField("partition").schema())
-      if (pval != null) part.put("p0", pval)
-      d.put("partition", part)
-      d.put("record_count", counts.getOrElse(FileKey(rel), 0L))
-      d.put("file_size_in_bytes", p.getLen)
-      d.put("block_size_in_bytes", 64L * 1024 * 1024)
-      e.put("data_file", d)
-      e
-    }
-    val name = s"$snapshotId-$token-m0.avro"
-    val len = writeAvroFile(
-      new File(new File(table, "metadata"), name), schema, entries)
-    (name, len)
+  /** Stage `df` under `dir` — one file per transform value per task when
+    * `spec` is set — and write its data manifest ([[writeDataManifest]])
+    * with the stats of the staged files. Returns (manifestName,
+    * length). */
+  private def stageData(spark: SparkSession, table: String, dir: String,
+      df: DataFrame, spec: Option[PartField], snapshotId: Long,
+      token: String, boundsColumn: Option[String] = None,
+      colStats: Seq[(String, Int)] = Nil): (String, Long) = {
+    val files = Staging.write(table, dir, df, spec.map(pf =>
+      pf.valueColumn(org.apache.spark.sql.functions.col(pf.source))))
+    val cols = StructType(
+      (boundsColumn.toSeq ++ colStats.map(_._1)).map(df.schema(_)))
+    writeDataManifest(table, snapshotId, token, files,
+      Staging.stats(spark, files, cols), spec.isDefined, boundsColumn,
+      colStats)
   }
 
-  /** Build ONE data manifest over an already-staged directory of parquet
-    * files (unpartitioned, no bounds — the rewrite-op shape), record
-    * counts from one distributed pass. Returns (manifestName, length). */
-  private def stageDataManifest(spark: SparkSession, fs: FileSystem,
-      table: String, stagedRel: String, snapshotId: Long,
+  /** [[writeDataManifest]] over EXACTLY the files the SQL writers
+    * reported (table-relative, sorted) — never a directory listing, so
+    * stray files from failed attempts stay invisible to readers. With
+    * `values` the entries are PARTITIONED (each file's p0 = its declared
+    * value). */
+  private def writeReportedManifest(spark: SparkSession, fs: FileSystem,
+      table: String, addRel: Seq[String],
+      values: Option[Map[String, String]], snapshotId: Long,
       token: String): (String, Long) = {
-    val parts = fs.listStatus(new Path(table, stagedRel))
-      .filter(_.getPath.getName.endsWith(".parquet"))
-      .sortBy(_.getPath.getName)
-    // per-file record counts from the staged FOOTERS (guide §1.2/§6) —
-    // replaces a distributed groupBy(input_file_name()) job that re-read
-    // every staged byte; the footer row count is authoritative
-    val counts = parts.map(p => (p.getPath.getName, ParquetDirect.rowCount(
-      spark.sparkContext.hadoopConfiguration, p.getPath))).toMap
-    val entries = parts.toSeq.map { p =>
-      val e = new GenericData.Record(manifestEntrySchema)
-      e.put("status", 1)
+    val files = addRel.sorted.map(f => Staging.File(f,
+      values.flatMap(_.get(f)).orNull, fs.getFileStatus(new Path(table, f))))
+    writeDataManifest(table, snapshotId, token, files,
+      Staging.stats(spark, files), values.isDefined)
+  }
+
+  /** Write ONE data manifest of ADDED entries for snapshot `snapshotId`
+    * over staged `files`, in order: each file's record count from
+    * `stats` ([[Staging.stats]]), its raw value as `p0` when
+    * `partitioned`, and either the legacy long bounds of `boundsColumn`
+    * or the spec column-stats maps (null counts, single-value binary
+    * bounds) of `colStats` (column → field id). A zero-row file carries
+    * record_count 0 and no column stats. Returns (manifestName,
+    * length). */
+  private def writeDataManifest(table: String, snapshotId: Long,
+      token: String, files: Seq[Staging.File],
+      stats: Map[String, FooterStats.PerFile], partitioned: Boolean,
+      boundsColumn: Option[String] = None,
+      colStats: Seq[(String, Int)] = Nil): (String, Long) = {
+    val schema = entrySchemaFor(partitioned, boundsColumn.isDefined,
+      withColStats = colStats.nonEmpty)
+    val dfs = schema.getField("data_file").schema()
+    def kv(field: String, pairs: Seq[(Int, Any)]) = {
+      val item = dfs.getField(field).schema().getTypes.get(1).getElementType
+      val arr = new java.util.ArrayList[GenericData.Record]()
+      pairs.foreach { case (k, v) =>
+        val rec = new GenericData.Record(item)
+        rec.put("key", k)
+        rec.put("value", v)
+        arr.add(rec)
+      }
+      arr
+    }
+    val entries = files.map { f =>
+      val pf = stats(f.key)
+      val e = new GenericData.Record(schema)
+      e.put("status", 1) // ADDED
       e.put("snapshot_id", snapshotId)
-      val d = new GenericData.Record(
-        manifestEntrySchema.getField("data_file").schema())
-      d.put("file_path", s"$table/$stagedRel/${p.getPath.getName}")
+      val d = new GenericData.Record(dfs)
+      d.put("file_path", s"$table/${f.rel}")
       d.put("file_format", "PARQUET")
-      d.put("partition", new GenericData.Record(manifestEntrySchema
-        .getField("data_file").schema().getField("partition").schema()))
-      d.put("record_count", counts.getOrElse(p.getPath.getName, 0L))
-      d.put("file_size_in_bytes", p.getLen)
+      val part = new GenericData.Record(dfs.getField("partition").schema())
+      if (partitioned && f.value != null) part.put("p0", f.value)
+      d.put("partition", part)
+      d.put("record_count", pf.rows)
+      d.put("file_size_in_bytes", f.status.getLen)
       d.put("block_size_in_bytes", 64L * 1024 * 1024)
+      boundsColumn.foreach { c =>
+        (pf.cols(c).min, pf.cols(c).max) match {
+          case (lo: java.lang.Long, hi: java.lang.Long) =>
+            d.put("lower_bound", lo.longValue())
+            d.put("upper_bound", hi.longValue())
+          case _ => // all-NULL slice: no bounds
+        }
+      }
+      if (colStats.nonEmpty && pf.rows > 0L) {
+        val cs = colStats.map { case (c, fid) => (fid, pf.cols(c)) }
+        d.put("null_value_counts",
+          kv("null_value_counts", cs.map(t => (t._1, t._2.nulls: Any))))
+        d.put("lower_bounds", kv("lower_bounds", cs.flatMap(t =>
+          boundBytes(t._2.min, upper = false)
+            .map(b => (t._1, java.nio.ByteBuffer.wrap(b): Any)))))
+        d.put("upper_bounds", kv("upper_bounds", cs.flatMap(t =>
+          boundBytes(t._2.max, upper = true)
+            .map(b => (t._1, java.nio.ByteBuffer.wrap(b): Any)))))
+      }
       e.put("data_file", d)
       e
     }
     val name = s"$snapshotId-$token-m0.avro"
     val len = writeAvroFile(new File(new File(table, "metadata"), name),
-      manifestEntrySchema, entries)
+      schema, entries)
     (name, len)
   }
 
@@ -3680,10 +3468,8 @@ object IcebergLite {
           .drop("__fn", "__ri")
           .select(schema.fieldNames.map(col).toIndexedSeq: _*)
         val stagedData = s"data/s$snapshotId-$token-mrg"
-        survivors.unionByName(src)
-          .write.mode("errorifexists").parquet(s"$table/$stagedData")
-        val (dataManifestName, dataManifestLen) =
-          stageDataManifest(spark, fs, table, stagedData, snapshotId, token)
+        val (dataManifestName, dataManifestLen) = stageData(spark, table,
+          stagedData, survivors.unionByName(src), None, snapshotId, token)
         // survivor manifests: untouched → by reference; partially touched →
         // re-written with surviving entries under the ORIGINAL sequence;
         // fully touched → dropped. Delete manifests carry by reference
@@ -3927,14 +3713,10 @@ object IcebergLite {
     val snapshotId = prevV + 1L
     val token = java.util.UUID.randomUUID().toString.take(8)
     val removed = removePaths.map(FileKey(_)).toSet
-    // the staged data manifest lists EXACTLY the files the succeeded
-    // writers reported — never a directory listing, so stray files from
-    // failed attempts stay invisible to readers
     val dataManifest =
       if (addRel.isEmpty) None
-      else Some(stageDataManifestFiles(spark, fs, table, addRel,
-        snapshotId, token,
-        values = if (pfOpt.isEmpty) None else Some(partitionValues)))
+      else Some(writeReportedManifest(spark, fs, table, addRel,
+        pfOpt.map(_ => partitionValues), snapshotId, token))
     val curList = metaJsonSnapshots(prevMeta).find(_._1 == cur).get._2
     val written = mutable.ArrayBuffer.empty[String]
     var mIdx = 0
@@ -4124,9 +3906,8 @@ object IcebergLite {
       val formatVersion = prevMeta.path("format-version").asInt(1)
       val snapshotId = prevV + 1L
       val token = java.util.UUID.randomUUID().toString.take(8)
-      val (mName, mLen) = stageDataManifestFiles(spark, fs, table, addRel,
-        snapshotId, token,
-        values = if (pfS.isEmpty) None else Some(partitionValues))
+      val (mName, mLen) = writeReportedManifest(spark, fs, table, addRel,
+        pfS.map(_ => partitionValues), snapshotId, token)
       val curList = metaJsonSnapshots(prevMeta).find(_._1 == cur).get._2
       val carried = listEntries(fs, new Path(curList))
       val listName = s"snap-$snapshotId-$token.avro"
@@ -4181,15 +3962,8 @@ object IcebergLite {
     val snapshotId = prevV + 1L
     val token = java.util.UUID.randomUUID().toString.take(8)
     val stagedRel = s"data/s$snapshotId-$token-po"
-    // pinned width: one encoder task per partition value (AQE would fold
-    // the byte-light value shuffle to one serial task)
-    df.withColumn("_p", pf.valueColumn(col(pf.source)))
-      .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt,
-        col("_p"))
-      .write.mode("errorifexists").partitionBy("_p")
-      .parquet(s"$table/$stagedRel")
-    val (mName, mLen) = stageDataManifestPartitioned(spark, fs, table,
-      stagedRel, snapshotId, token)
+    val (mName, mLen) = stageData(spark, table, stagedRel, df, Some(pf),
+      snapshotId, token)
     val curList = metaJsonSnapshots(prevMeta).find(_._1 == cur).get._2
     val written = mutable.ArrayBuffer.empty[String]
     var mIdx = 0
@@ -4241,52 +4015,6 @@ object IcebergLite {
         s"partition overwrite lost the commit race on $table")
     }
     snapshotId
-  }
-
-  /** [[stageDataManifest]] over an EXPLICIT file list (table-relative)
-    * instead of a staged directory — the SQL row-level write's commit
-    * must trust only the writers' own reports. With `values` the
-    * entries are PARTITIONED (each file's p0 = its declared value —
-    * the identity-transform replacement shape). */
-  private def stageDataManifestFiles(spark: SparkSession, fs: FileSystem,
-      table: String, relFiles: Seq[String], snapshotId: Long,
-      token: String,
-      values: Option[Map[String, String]] = None): (String, Long) = {
-    import org.apache.spark.sql.functions.{count => cnt, input_file_name, lit => lt}
-    val schema =
-      if (values.isEmpty) manifestEntrySchema
-      else entrySchemaFor(partitioned = true)
-    // per-file row counts from the footers, not a distributed pass
-    val counts = relFiles.map { f =>
-      val p = new Path(table, f)
-      (p.getName, ParquetDirect.rowCount(
-        spark.sparkContext.hadoopConfiguration, p))
-    }.toMap
-    val entries = relFiles.sorted.map { f =>
-      val e = new GenericData.Record(schema)
-      e.put("status", 1)
-      e.put("snapshot_id", snapshotId)
-      val d = new GenericData.Record(
-        schema.getField("data_file").schema())
-      d.put("file_path", s"$table/$f")
-      d.put("file_format", "PARQUET")
-      val part = new GenericData.Record(schema
-        .getField("data_file").schema().getField("partition").schema())
-      values.foreach { m =>
-        val pv = m.getOrElse(f, null)
-        if (pv != null) part.put("p0", pv)
-      }
-      d.put("partition", part)
-      d.put("record_count", counts.getOrElse(new Path(f).getName, 0L))
-      d.put("file_size_in_bytes", fs.getFileStatus(new Path(table, f)).getLen)
-      d.put("block_size_in_bytes", 64L * 1024 * 1024)
-      e.put("data_file", d)
-      e
-    }
-    val name = s"$snapshotId-$token-m0.avro"
-    val len = writeAvroFile(new File(new File(table, "metadata"), name),
-      schema, entries)
-    (name, len)
   }
 
   /** Structural Avro copy into a structurally-equal target schema —

@@ -13,8 +13,10 @@ import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
 import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 
-/** DRIVER-side reads of control-plane-sized parquet files (equality-delete
-  * value lists, position-delete coordinates, staged-file row counts).
+/** DRIVER-side reads of control-plane-sized parquet files: equality-delete
+  * value lists, position-delete coordinates and footer schemas. (Staged
+  * data files' row counts and bounds come from [[FooterStats]] through
+  * [[Staging.stats]].)
   *
   * The substrate used to route every such read through
   * `spark.read.parquet(...).collect()` — correct, but each call costs one
@@ -25,9 +27,10 @@ import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
   * read is the right cost model at every scale — the same class of work
   * as reading a manifest.
   *
-  * Every entry point is conservative: if the file's schema is anything
-  * but the exact shape the caller expects, return None and let the caller
-  * fall back to the Spark path (identical behavior, including its error
+  * The two payload readers are conservative: if the file's schema is
+  * anything but the exact shape expected, they return None and their one
+  * caller each (`IcebergLite.loadPositions`, [[EqVals.load]]) reads
+  * through Spark instead (identical behavior, including its error
   * messages for unsupported types). */
 private[graft] object ParquetDirect {
 
@@ -38,13 +41,6 @@ private[graft] object ParquetDirect {
       HadoopInputFile.fromPath(new Path(path), conf))
     try r.getFooter.getFileMetaData.getSchema.getFields.asScala
       .map(_.getName).toSeq
-    finally r.close()
-  }
-
-  /** Total row count from the footer. */
-  def rowCount(conf: Configuration, path: Path): Long = {
-    val r = ParquetFileReader.open(HadoopInputFile.fromPath(path, conf))
-    try r.getFooter.getBlocks.asScala.map(_.getRowCount).sum
     finally r.close()
   }
 

@@ -1527,4 +1527,88 @@ class IcebergLiteSpec extends SparkSpec with Matchers {
     IcebergLite.read(spark, t).as[(Long, Long)].collect().sorted shouldBe
       Seq((1L, 1L), (2L, 2L))
   }
+
+  /** The current snapshot's live data-file entries (`data_file`
+    * records), read straight from its manifests. */
+  private def currentDataFiles(table: String): Seq[GenericRecord] = {
+    val meta = mapper.readTree(new java.io.File(table, s"metadata/v${
+      IcebergLite.latestMetadataVersion(spark, table)}.metadata.json"))
+    val cur = meta.get("current-snapshot-id").asLong()
+    val snaps = meta.get("snapshots").elements()
+    var list: String = null
+    while (snaps.hasNext) {
+      val sn = snaps.next()
+      if (sn.get("snapshot-id").asLong() == cur)
+        list = sn.get("manifest-list").asText()
+    }
+    avroRecords(new java.io.File(list))
+      .filter(m => m.getSchema.getField("content") == null ||
+        m.get("content").asInstanceOf[Int] == 0)
+      .flatMap(m => avroRecords(new java.io.File(m.get("manifest_path").toString)))
+      .filter(_.get("status").asInstanceOf[Int] != 2)
+      .map(_.get("data_file").asInstanceOf[GenericRecord])
+  }
+
+  test("string bounds: truncation keeps a surrogate pair whole, so the " +
+      "upper bound stays above the value") {
+    import spark.implicits._
+    // 15 ASCII chars + one supplementary char: a 16-UTF-16-unit cut
+    // splits the pair, and the incremented lone surrogate encodes as '?'
+    val v = "aaaaaaaaaaaaaaa\uD83D\uDE00bbb"
+    val t = Sinks.tempDir("ice_str_surrogate")
+    IcebergLite.write(spark, Seq(v).toDF("s").coalesce(1), t,
+      statsColumns = Seq("s"))
+    IcebergLite.read(spark, t).where($"s" === v).count() shouldBe 1L
+    IcebergLite.planStringRange(spark, t, "s", v, v)._2 shouldBe 1L
+  }
+
+  test("string bounds compare as UTF-8 bytes, the order they were " +
+      "computed in") {
+    import spark.implicits._
+    // U+FF01 < U+1F600 in UTF-8 byte (and code point) order, but its
+    // UTF-16 unit 0xFF01 sorts above the surrogate 0xD83D
+    val fullwidth = "\uFF01"
+    val emoji = "\uD83D\uDE00"
+    val t = Sinks.tempDir("ice_str_utf8_order")
+    IcebergLite.write(spark, Seq(fullwidth, emoji).toDF("s").coalesce(1), t,
+      statsColumns = Seq("s"))
+    IcebergLite.read(spark, t).where($"s" === emoji).count() shouldBe 1L
+    IcebergLite.planStringRange(spark, t, "s", emoji, emoji)._2 shouldBe 1L
+    IcebergLite.planStringRange(spark, t, "s", fullwidth, fullwidth)._2 shouldBe 1L
+    // a range wholly above the file's max still prunes it
+    IcebergLite.planStringRange(spark, t, "s", "\uD83D\uDE01", "\uD83D\uDE02")._2 shouldBe 0L
+  }
+
+  test("column stats a footer cannot serve come from the distributed " +
+      "pass: a string over 4 KiB") {
+    import spark.implicits._
+    // parquet writes no min/max for a value this long, so the staged
+    // footer cannot bound the column and the commit takes the scan
+    val big = "x" * 5000
+    val t = Sinks.tempDir("ice_big_string_stats")
+    IcebergLite.write(spark,
+      Seq[(Long, Option[String])]((1L, Some(big)), (2L, None), (3L, Some("a")))
+        .toDF("k", "s").coalesce(1), t, statsColumns = Seq("s"))
+    val entries = currentDataFiles(t)
+    val fs = new org.apache.hadoop.fs.Path(t)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val staged = entries.map { d =>
+      val p = d.get("file_path").toString
+      graft.sources.Staging.File(p.stripPrefix(s"$t/"), null,
+        fs.getFileStatus(new org.apache.hadoop.fs.Path(p)))
+    }
+    graft.sources.Staging.footerStats(spark, staged,
+      Seq(big).toDF("s").schema) shouldBe None
+    entries.map(_.get("record_count").asInstanceOf[Long]) shouldBe Seq(3L)
+    val sFid = 2
+    val nulls = entries.head.get("null_value_counts")
+      .asInstanceOf[java.util.List[GenericRecord]]
+    nulls.size shouldBe 1
+    nulls.get(0).get("key").asInstanceOf[Int] shouldBe sFid
+    nulls.get(0).get("value").asInstanceOf[Long] shouldBe 1L
+    IcebergLite.planNulls(spark, t, "s")._2 shouldBe 1L
+    IcebergLite.planStringRange(spark, t, "s", big, big)._2 shouldBe 1L
+    IcebergLite.planStringRange(spark, t, "s", "a", "a")._2 shouldBe 1L
+    IcebergLite.planStringRange(spark, t, "s", "z", "zz")._2 shouldBe 0L
+  }
 }
