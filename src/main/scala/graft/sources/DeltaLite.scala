@@ -19,22 +19,26 @@ import org.apache.spark.sql.types.{DataType, LongType, StructType}
   * `FileSystem`, Jackson).
   *
   * Conformance subset (documented, not hidden):
-  *   - actions emitted: `protocol` (minReaderVersion=1/minWriterVersion=2),
-  *     `metaData` (id, parquet format, schemaString in Spark's StructType
-  *     JSON — which IS Delta's schemaString encoding), `add`, `remove`;
+  *   - actions emitted: `protocol` (reader 1 / writer 2 at creation,
+  *     raised only through [[raise]]), `metaData` (id, parquet format,
+  *     schemaString in Spark's StructType JSON — which IS Delta's
+  *     schemaString encoding), `add`, `remove`;
   *   - versions are `_delta_log/%020d.json`, claimed by ATOMIC CREATE
   *     (the same optimistic arbiter as [[CommitLog.tryCommit]]; Delta on
-  *     HDFS-class stores uses exactly this primitive);
+  *     HDFS-class stores uses exactly this primitive). Every committing
+  *     op runs inside [[Occ.commit]] ([[commitOn]]): it checks and
+  *     stages against ONE pinned [[Snapshot]] and claims the version
+  *     after it, so a lost claim re-runs the op on the new head;
   *   - also emitted: `commitInfo` (provenance), `txn` (SetTransaction —
   *     the exactly-once streaming ledger, preserved across checkpoints),
   *     partitioned tables (partitionValues in adds, partitionColumns in
   *     metaData), single-file AND multi-part checkpoint parquet +
   *     `_last_checkpoint` (with `parts`);
   *   - deletion vectors are implemented ([[deleteWhereDV]] writes
-  *     roaring-bitmap DV files; [[readWithStats]] and every rewrite path
-  *     subtract them) with the reader-3/writer-7 table-features protocol
-  *     upgrade; column mapping is implemented in NAME mode
-  *     ([[writeColumnMapped]]/[[renameColumn]]/[[dropColumn]], protocol
+  *     roaring-bitmap DV files; every reader and rewrite masks them
+  *     through [[scanWithDvs]]) with the reader-3/writer-7
+  *     table-features protocol upgrade; column mapping is implemented in
+  *     NAME mode ([[writeColumnMapped]]/[[renameColumn]]/[[dropColumn]], protocol
   *     2/5); the row-level CHANGE DATA FEED is implemented
   *     ([[enableCdf]]/[[readCdf]], `cdc` actions + `_change_data/` files,
   *     writer 4 or the `changeDataFeed` writerFeature); GENERATED COLUMNS
@@ -92,6 +96,37 @@ object DeltaLite {
     AtomicCreate.create(fs, versionFile(table, v),
       (lines.mkString("\n") + "\n").getBytes(StandardCharsets.UTF_8))
   }
+
+  /** The table's head: one log listing, one replay. Version -1 with an
+    * empty state for a table that has no log yet. */
+  private def head(spark: SparkSession, table: String): Snapshot =
+    snapshot(spark, table, latestVersion(spark, table))
+
+  /** One Delta commit through [[Occ.commit]]: each try pins the head
+    * ([[head]]) and hands that snapshot to `attempt`, which runs its
+    * checks and its Spark work against it and claims the next version
+    * through [[claim]]. */
+  private def commitOn[A](spark: SparkSession, table: String, op: String)(
+      attempt: Snapshot => Option[A]): A =
+    Occ.commit(op, table)(head(spark, table))(attempt)
+
+  /** Claim version `base.version + 1` with `lines`; on a lost claim
+    * delete `staged` (this attempt's private files and directories,
+    * table-relative) and answer None. */
+  private def claim(spark: SparkSession, table: String, base: Snapshot,
+      lines: Seq[String], staged: String*): Option[Long] = {
+    val fs = hadoopFs(spark, table)
+    val v = base.version + 1
+    if (tryCommit(fs, table, v, lines)) Some(v)
+    else {
+      staged.foreach(p => fs.delete(new Path(table, p), true))
+      None
+    }
+  }
+
+  /** A fresh name component for commit-private staging paths. */
+  private def stagingToken(): String =
+    java.util.UUID.randomUUID().toString.take(8)
 
   /** The inCommitTimestamp of a commit file's leading commitInfo, None
     * when the commit predates enablement (or has no commitInfo first). */
@@ -158,26 +193,67 @@ object DeltaLite {
     mapper.writeValueAsString(root)
   }
 
-  private def protocolLine: String = jsonObj("protocol") { p =>
-    p.put("minReaderVersion", 1)
-    p.put("minWriterVersion", 2)
-  }
+  /** The protocol every table starts at (no protocol action replays as
+    * this too). */
+  private val legacyProtocol = Protocol(1, 2, Nil, Nil)
 
-  /** Table-features protocol (PROTOCOL.md §Table Features): deletion
-    * vectors require reader 3 / writer 7 with the feature named in BOTH
-    * lists — readers that don't know the feature must refuse the table
-    * (enforced in [[snapshot]]'s replay, spec-tested). */
-  private def dvProtocolLine: String = jsonObj("protocol") { p =>
-    p.put("minReaderVersion", 3)
-    p.put("minWriterVersion", 7)
-    p.putArray("readerFeatures").add("deletionVectors")
-    p.putArray("writerFeatures").add("deletionVectors")
-  }
+  private def protocolLine: String = protocolLineOf(legacyProtocol)
 
   /** Reader features this implementation understands; a protocol action
     * declaring any OTHER readerFeature makes every read refuse (the
     * spec's forward-compatibility rule — guessing would answer wrong). */
-  private val knownReaderFeatures = Set("deletionVectors", "v2Checkpoint")
+  private val knownReaderFeatures =
+    Set("deletionVectors", "v2Checkpoint", "columnMapping")
+
+  /** The features each legacy writer version implies (PROTOCOL.md
+    * §Table Features): a version supports its own and every lower
+    * version's. Reader 2 implies columnMapping. */
+  private val legacyWriterFeatures: Seq[(Int, String)] = Seq(
+    2 -> "appendOnly", 2 -> "invariants", 3 -> "checkConstraints",
+    4 -> "changeDataFeed", 4 -> "generatedColumns", 5 -> "columnMapping",
+    6 -> "identityColumns")
+
+  /** Table features readers must understand too: named in BOTH lists at
+    * reader 3, so readers that don't know them refuse the table
+    * (enforced in [[snapshot]]'s replay, spec-tested). */
+  private val readerWriterFeatures =
+    Set("deletionVectors", "v2Checkpoint", "columnMapping")
+
+  /** The one protocol-raise rule: `cur` raised to support `feature`. It
+    * never lowers a version and never drops a listed feature. A legacy
+    * feature on a legacy table raises the writer version alone; any other
+    * feature moves the table to writer 7 (reader 3 when readers must know
+    * it), and a legacy table that moves lists every feature its old
+    * versions implied. */
+  private[graft] def raise(cur: Protocol, feature: String): Protocol =
+    legacyWriterFeatures.collectFirst { case (w, `feature`) => w } match {
+      case Some(w) if cur.minWriter < 7 && !readerWriterFeatures(feature) =>
+        cur.copy(minWriter = math.max(cur.minWriter, w))
+      case _ =>
+        val reader =
+          if (readerWriterFeatures(feature)) math.max(cur.minReader, 3)
+          else cur.minReader
+        val implied =
+          Option.when(cur.minReader == 2)("columnMapping").toSeq ++
+            (if (cur.minWriter >= 7) Nil
+             else legacyWriterFeatures.collect {
+               case (w, f) if w <= cur.minWriter => f
+             })
+        val readerFeats =
+          if (reader < 3) Nil
+          else (cur.readerFeatures ++ implied.filter(readerWriterFeatures) ++
+            Option.when(readerWriterFeatures(feature))(feature)).distinct
+        Protocol(reader, 7, readerFeats,
+          (cur.writerFeatures ++ implied :+ feature).distinct)
+    }
+
+  /** The protocol action `snap` needs before it may use `feature`: none
+    * when it already supports it. */
+  private def raiseLine(snap: Snapshot, feature: String): Seq[String] = {
+    val cur = snap.protocol.getOrElse(legacyProtocol)
+    val next = raise(cur, feature)
+    if (next == cur) Nil else Seq(protocolLineOf(next))
+  }
 
   /** The protocol's provenance action — first line of every commit (as
     * Delta itself writes it); what DESCRIBE HISTORY surfaces. */
@@ -313,17 +389,15 @@ object DeltaLite {
     * write; no data plane. */
   def createTable(spark: SparkSession, table: String, schema: StructType,
       partitionColumns: Seq[String] = Seq.empty): Long = {
-    val fs = hadoopFs(spark, table)
-    require(latestVersion(spark, table) < 0,
-      s"$table already has a Delta log — CREATE TABLE refuses to clobber")
     partitionColumns.foreach(c => require(schema.fieldNames.contains(c),
       s"partition column $c absent from the declared schema"))
-    if (!tryCommit(fs, table, 0L, Seq(
-        commitInfoLine("CREATE TABLE"), protocolLine,
-        metaDataLine(schema, partitionColumns = partitionColumns))))
-      throw new IllegalStateException(
-        s"CREATE TABLE lost the commit race on $table")
-    0L
+    commitOn(spark, table, "CREATE TABLE") { base =>
+      // a writer that lost v0 to a concurrent CREATE refuses here on retry
+      require(base.version < 0,
+        s"$table already has a Delta log — CREATE TABLE refuses to clobber")
+      claim(spark, table, base, Seq(commitInfoLine("CREATE TABLE"),
+        protocolLine, metaDataLine(schema, partitionColumns = partitionColumns)))
+    }
   }
 
   private def readLogText(fs: FileSystem, p: Path): String = {
@@ -346,7 +420,7 @@ object DeltaLite {
   private[graft] final case class Protocol(minReader: Int, minWriter: Int,
       readerFeatures: Seq[String], writerFeatures: Seq[String])
 
-  private[graft] final case class Snapshot(files: Seq[String],
+  private[graft] final case class Snapshot(version: Long, files: Seq[String],
       meta: Option[(String, String)], checkpointVersion: Long,
       jsonReplayed: Long, stats: Map[String, String] = Map.empty,
       txns: Map[String, Long] = Map.empty,
@@ -645,13 +719,10 @@ object DeltaLite {
         }
       }
     }
-    Snapshot(live.toSeq, meta, if (fromCheckpoint) cpV else -1L,
+    Snapshot(asOf, live.toSeq, meta, if (fromCheckpoint) cpV else -1L,
       asOf - firstJson + 1, stats.toMap, txns.toMap, pvals.toMap, dvs.toMap,
       proto, config, partCols, domains.toMap)
   }
-
-  private def liveFiles(spark: SparkSession, table: String, asOf: Long): Seq[String] =
-    snapshot(spark, table, asOf).files
 
   /** Write a checkpoint at version `v` (default: latest) holding the full
     * replay state (protocol / metaData / txn ledger / one add row per
@@ -747,7 +818,7 @@ object DeltaLite {
             snap.stats.getOrElse(f, null), snap.pvals.getOrElse(f, null),
             dvRow), null, null)
       })
-    val staged = new Path(table, s"_checkpoint_staged_${java.util.UUID.randomUUID().toString.take(8)}")
+    val staged = new Path(table, s"_checkpoint_staged_${stagingToken()}")
     spark.createDataFrame(
         spark.sparkContext.parallelize(rows, math.max(parts, 1)), cpSchema)
       .write.parquet(staged.toString)
@@ -817,27 +888,20 @@ object DeltaLite {
     import org.apache.spark.sql.types._
     require(sidecars >= 1, "need at least one sidecar file")
     val fs = hadoopFs(spark, table)
-    val latest0 = latestVersion(spark, table)
-    require(latest0 >= 0, s"$table has no commits to checkpoint")
     // protocol gate: land the v2Checkpoint feature first, as its own
-    // commit, so the checkpoint never outruns the table's declaration
-    val snap0 = snapshot(spark, table, latest0)
-    val cur = snap0.protocol.getOrElse(Protocol(1, 2, Nil, Nil))
-    val v =
-      if (cur.minReader >= 3 && cur.readerFeatures.contains("v2Checkpoint"))
-        latest0
-      else {
-        val upgraded = Protocol(3, 7,
-          (cur.readerFeatures :+ "v2Checkpoint").distinct,
-          (cur.writerFeatures :+ "v2Checkpoint").distinct)
-        val uv = latest0 + 1
-        if (!tryCommit(fs, table, uv, Seq(
-            commitInfoLine("UPGRADE PROTOCOL"), protocolLineOf(upgraded))))
-          throw new IllegalStateException(
-            s"v2Checkpoint protocol upgrade lost the race on $table")
-        uv
-      }
-    val snap = snapshot(spark, table, v)
+    // commit, so the checkpoint never outruns the table's declaration;
+    // the checkpointed state is the pinned head plus that protocol
+    val snap = commitOn(spark, table, "v2Checkpoint protocol upgrade") {
+        base =>
+      require(base.version >= 0, s"$table has no commits to checkpoint")
+      val cur = base.protocol.getOrElse(legacyProtocol)
+      val upgraded = raise(cur, "v2Checkpoint")
+      if (upgraded == cur) Some(base)
+      else claim(spark, table, base, Seq(commitInfoLine("UPGRADE PROTOCOL"),
+          protocolLineOf(upgraded)))
+        .map(v => base.copy(version = v, protocol = Some(upgraded)))
+    }
+    val v = snap.version
     val (tableId, schemaJson) = snap.meta.getOrElse(
       throw new IllegalStateException(s"no metaData at version $v of $table"))
     val addType = StructType(Seq(
@@ -870,7 +934,7 @@ object DeltaLite {
     val sidecarInfos = groups.map { g =>
       val name = s"${java.util.UUID.randomUUID()}.parquet"
       val staged = new Path(table,
-        s"_sidecar_staged_${java.util.UUID.randomUUID().toString.take(8)}")
+        s"_sidecar_staged_${stagingToken()}")
       spark.createDataFrame(
           spark.sparkContext.parallelize(g, 1), sidecarFileSchema)
         .write.parquet(staged.toString)
@@ -936,7 +1000,7 @@ object DeltaLite {
       })
     val topName = f"$v%020d.checkpoint.${java.util.UUID.randomUUID()}.parquet"
     val staged = new Path(table,
-      s"_checkpoint_staged_${java.util.UUID.randomUUID().toString.take(8)}")
+      s"_checkpoint_staged_${stagingToken()}")
     spark.createDataFrame(
         spark.sparkContext.parallelize(topRows, 1), topSchema)
       .write.parquet(staged.toString)
@@ -991,7 +1055,7 @@ object DeltaLite {
     * Returns the number of files deleted. */
   def vacuum(spark: SparkSession, table: String, graceMs: Long = 0L): Long = {
     val fs = hadoopFs(spark, table)
-    val snap = snapshot(spark, table, latestVersion(spark, table))
+    val snap = head(spark, table)
     val live = snap.files.toSet
     val cutoff = System.currentTimeMillis() - graceMs
     // deletion-vector files superseded by a later merge (or whose data
@@ -1083,35 +1147,33 @@ object DeltaLite {
     * keeps working after compaction. Returns
     * (version, filesBefore, filesAfter). */
   def optimize(spark: SparkSession, table: String,
-      targetFiles: Int = 1): (Long, Long, Long) = {
-    val fs = hadoopFs(spark, table)
-    requireNotMapped(spark, table, "optimize()")
-    val latest = latestVersion(spark, table)
-    val before = snapshot(spark, table, latest)
-    // a PARTITIONED table must compact WITHIN partitions — a cross-
-    // partition coalesce would emit files without partitionValues and
-    // silently destroy the layout (Delta's own OPTIMIZE is per-partition)
-    if (before.pvals.nonEmpty)
-      return optimizePartitioned(spark, table, targetFiles, before, latest)
-    if (before.files.size <= targetFiles && before.dvs.isEmpty)
-      return (latest, before.files.size.toLong, before.files.size.toLong)
-    val schema = tableSchema(spark, table)
-    // DV-aware source: compaction of a merge-on-read table is ALSO the op
-    // that re-materializes vectors away (files shrink to their live rows,
-    // the remove+add swap drops the descriptors)
-    val src = scanWithDvs(spark, table, schema, before.files, before.dvs)
-    val v = latest + 1
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    val staged = s"data/v$v-opt-$token"
-    val adds = addsOf(spark,
-      Staging.write(table, staged, src.coalesce(targetFiles)),
-      Some(longCols(schema)), dataChange = false)
-    val removes = before.files.map(removeLine(_, dataChange = false))
-    if (!tryCommit(fs, table, v,
-        commitInfoLine("OPTIMIZE") +: (removes ++ adds)))
-      throw new IllegalStateException(s"optimize lost the commit race on $table")
-    (v, before.files.size.toLong, adds.length.toLong)
-  }
+      targetFiles: Int = 1): (Long, Long, Long) =
+    commitOn(spark, table, "optimize") { before =>
+      requireNotMapped(before, table, "optimize()")
+      val n = before.files.size.toLong
+      // a PARTITIONED table must compact WITHIN partitions — a cross-
+      // partition coalesce would emit files without partitionValues and
+      // silently destroy the layout (Delta's own OPTIMIZE is per-partition)
+      if (before.pvals.nonEmpty)
+        optimizePartitioned(spark, table, targetFiles, before)
+      else if (n <= targetFiles && before.dvs.isEmpty)
+        Some((before.version, n, n))
+      else {
+        val schema = schemaOf(before, table)
+        // DV-aware source: compaction of a merge-on-read table is ALSO the
+        // op that re-materializes vectors away (files shrink to their live
+        // rows, the remove+add swap drops the descriptors)
+        val src = scanWithDvs(spark, table, schema, before.files, before.dvs)
+        val staged = s"data/v${before.version + 1}-opt-${stagingToken()}"
+        val adds = addsOf(spark,
+          Staging.write(table, staged, src.coalesce(targetFiles)),
+          Some(longCols(schema)), dataChange = false)
+        val removes = before.files.map(removeLine(_, dataChange = false))
+        claim(spark, table, before,
+          commitInfoLine("OPTIMIZE") +: (removes ++ adds), staged)
+          .map(v => (v, n, adds.length.toLong))
+      }
+    }
 
   /** Per-partition bin-packing for a partitioned table: each partition's
     * files compact to `targetFiles` outputs CARRYING the partition's
@@ -1120,15 +1182,12 @@ object DeltaLite {
     * compacted partition, driver-looped — control-plane orchestration,
     * exactly like Delta's own per-partition OPTIMIZE binning. */
   private def optimizePartitioned(spark: SparkSession, table: String,
-      targetFiles: Int, before: Snapshot, latest: Long): (Long, Long, Long) = {
-    val fs = hadoopFs(spark, table)
-    val schema = tableSchema(spark, table)
+      targetFiles: Int, before: Snapshot): Option[(Long, Long, Long)] = {
+    val schema = schemaOf(before, table)
     val groups = before.files
       .groupBy(f => before.pvals.getOrElse(f, Map.empty[String, String]))
       .toSeq.sortBy(_._1.toSeq.sortBy(_._1).map(kv => s"${kv._1}=${kv._2}").mkString(","))
-    val v = latest + 1
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    val staged = s"data/v$v-opt-$token"
+    val staged = s"data/v${before.version + 1}-opt-${stagingToken()}"
     val adds = mutable.ArrayBuffer.empty[String]
     val removes = mutable.ArrayBuffer.empty[String]
     var filesAfter = 0L
@@ -1146,12 +1205,11 @@ object DeltaLite {
         filesAfter += compacted.length
       }
     }
-    if (removes.isEmpty)
-      return (latest, before.files.size.toLong, before.files.size.toLong)
-    if (!tryCommit(fs, table, v,
-        commitInfoLine("OPTIMIZE") +: (removes.toSeq ++ adds.toSeq)))
-      throw new IllegalStateException(s"optimize lost the commit race on $table")
-    (v, before.files.size.toLong, filesAfter)
+    val n = before.files.size.toLong
+    if (removes.isEmpty) Some((before.version, n, n))
+    else claim(spark, table, before,
+        commitInfoLine("OPTIMIZE") +: (removes.toSeq ++ adds.toSeq), staged)
+      .map(v => (v, n, filesAfter))
   }
 
   /** OPTIMIZE ZORDER BY — [[optimize]] with multi-dimensional
@@ -1190,34 +1248,30 @@ object DeltaLite {
     import org.apache.spark.sql.functions.{col, lit, pmod}
     require(cols.size == 1 || cols.size == 2,
       s"clustered optimize takes 1 or 2 columns — got ${cols.mkString(",")}")
-    val fs = hadoopFs(spark, table)
-    requireNotMapped(spark, table, "optimizeZorder()")
-    val latest = latestVersion(spark, table)
-    val before = snapshot(spark, table, latest)
-    require(before.pvals.isEmpty,
-      s"$table is partitioned: Z-ordering within partitions is not in " +
-        "this subset — compact with optimize() instead")
-    val schema = tableSchema(spark, table)
-    val src = scanWithDvs(spark, table, schema, before.files, before.dvs)
-    val v = latest + 1
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    val staged = s"data/v$v-zord-$token"
     val clusterKey = cols match {
       case Seq(x) => col(x)
       case Seq(x, y) => FormatQueries.zValue(
         pmod(col(x), lit(65536L)), pmod(col(y), lit(65536L)))
     }
-    val adds = addsOf(spark,
-      Staging.write(table, staged, src.withColumn("_z", clusterKey)
-        .repartitionByRange(targetFiles, col("_z"))
-        .sortWithinPartitions("_z")
-        .drop("_z")),
-      Some(longCols(schema)), dataChange = false)
-    val removes = before.files.map(removeLine(_, dataChange = false))
-    if (!tryCommit(fs, table, v,
-        commitInfoLine("OPTIMIZE") +: (removes ++ adds)))
-      throw new IllegalStateException(s"optimize lost the commit race on $table")
-    (v, before.files.size.toLong, adds.length.toLong)
+    commitOn(spark, table, "optimize") { before =>
+      requireNotMapped(before, table, "optimizeZorder()")
+      require(before.pvals.isEmpty,
+        s"$table is partitioned: Z-ordering within partitions is not in " +
+          "this subset — compact with optimize() instead")
+      val schema = schemaOf(before, table)
+      val src = scanWithDvs(spark, table, schema, before.files, before.dvs)
+      val staged = s"data/v${before.version + 1}-zord-${stagingToken()}"
+      val adds = addsOf(spark,
+        Staging.write(table, staged, src.withColumn("_z", clusterKey)
+          .repartitionByRange(targetFiles, col("_z"))
+          .sortWithinPartitions("_z")
+          .drop("_z")),
+        Some(longCols(schema)), dataChange = false)
+      val removes = before.files.map(removeLine(_, dataChange = false))
+      claim(spark, table, before,
+        commitInfoLine("OPTIMIZE") +: (removes ++ adds), staged)
+        .map(v => (v, before.files.size.toLong, adds.length.toLong))
+    }
   }
 
   /** Partitioned commit — the layout 100 TB tables actually use: data
@@ -1239,72 +1293,66 @@ object DeltaLite {
       replaceValue: Option[String] = None): Long = {
     import org.apache.spark.sql.functions.col
     val fs = hadoopFs(spark, table)
-    requireNotMapped(spark, table, "writePartitioned()")
     require(!(overwrite && replaceValue.isDefined),
       "overwrite (truncating) and replaceValue (one partition) are " +
         "mutually exclusive")
-    if (overwrite || replaceValue.isDefined)
-      requireAppendsOnly(spark, table, "partitioned overwrite write()")
-    val df = applyGenerated(spark, table, dfIn)
-    enforceConstraints(spark, table, df)
-    require(df.schema.fieldNames.contains(partCol),
-      s"partition column $partCol absent from schema")
-    Occ.commit("partitioned write", table)(
-        latestVersion(spark, table)) { base =>
-      val v = base + 1
-      if (v > 0) {
-        val prior = snapshot(spark, table, v - 1)
+    commitOn(spark, table, "partitioned write") { base =>
+      replayed(spark, table, base, txn).orElse {
+        requireNotMapped(base, table, "writePartitioned()")
+        if (overwrite || replaceValue.isDefined)
+          requireAppendsOnly(base, table, "partitioned overwrite write()")
+        val df = applyGenerated(base, table, dfIn)
+        enforceConstraints(base, df)
+        require(df.schema.fieldNames.contains(partCol),
+          s"partition column $partCol absent from schema")
+        val v = base.version + 1
         // EVERY live file must carry partitionValues for partCol — a
         // values.forall over pvals alone is vacuously true on a non-empty
         // UNPARTITIONED table (pvals only holds files that have values),
         // and a partitioned commit landing there would leave files
         // planPartitioned silently excludes from results
-        require(prior.files.isEmpty ||
-          (prior.pvals.keySet == prior.files.toSet &&
-            prior.pvals.values.forall(_.keySet == Set(partCol))),
+        require(base.files.isEmpty ||
+          (base.pvals.keySet == base.files.toSet &&
+            base.pvals.values.forall(_.keySet == Set(partCol))),
           s"$table is not partitioned by $partCol")
-      }
-      val token = java.util.UUID.randomUUID().toString.take(8)
-      val staged = s"data/v$v$tag$token"
-      // one file per partition value per task, each carrying its raw
-      // value; `parts` can be EMPTY (an empty frame clearing a partition
-      // via replaceValue)
-      val parts = Staging.write(table, staged, df,
-        Some(col(partCol).cast("string")))
-      val adds = addsOf(spark, parts,
-        Option.when(collectStats)(longCols(df.schema)),
-        pv = f => Map(partCol -> f.value))
-      val header =
-        if (v == 0)
-          Seq(protocolLine, metaDataLine(df.schema, partitionColumns = Seq(partCol)))
-        else Seq.empty
-      val txns = txn.map { case (app, ver) => txnLine(app, ver) }.toSeq
-      // a SINGLE-PARTITION overwrite must not leak rows into sibling
-      // partitions: the staged per-value layout is the free witness —
-      // any staged value other than the replaced one aborts
-      replaceValue.foreach { rv =>
-        val stray = parts.map(_.value).filter(_ != rv).distinct
-        if (stray.nonEmpty) {
-          fs.delete(new Path(table, staged), true)
-          throw new IllegalArgumentException(
-            s"partition overwrite of $partCol=$rv received rows for " +
-              s"${stray.mkString("[", ", ", "]")} — refuse, never leak")
+        val staged = s"data/v$v$tag${stagingToken()}"
+        // one file per partition value per task, each carrying its raw
+        // value; `parts` can be EMPTY (an empty frame clearing a partition
+        // via replaceValue)
+        val parts = Staging.write(table, staged, df,
+          Some(col(partCol).cast("string")))
+        val adds = addsOf(spark, parts,
+          Option.when(collectStats)(longCols(df.schema)),
+          pv = f => Map(partCol -> f.value))
+        val header =
+          if (v == 0)
+            Seq(protocolLine,
+              metaDataLine(df.schema, partitionColumns = Seq(partCol)))
+          else Seq.empty
+        val txns = txn.map { case (app, ver) => txnLine(app, ver) }.toSeq
+        // a SINGLE-PARTITION overwrite must not leak rows into sibling
+        // partitions: the staged per-value layout is the free witness —
+        // any staged value other than the replaced one aborts
+        replaceValue.foreach { rv =>
+          val stray = parts.map(_.value).filter(_ != rv).distinct
+          if (stray.nonEmpty) {
+            fs.delete(new Path(table, staged), true)
+            throw new IllegalArgumentException(
+              s"partition overwrite of $partCol=$rv received rows for " +
+                s"${stray.mkString("[", ", ", "]")} — refuse, never leak")
+          }
         }
+        val removes: Seq[String] =
+          if (overwrite) base.files.map(removeLine(_))
+          else replaceValue.toSeq.flatMap { rv =>
+            base.files.filter(f =>
+              base.pvals.get(f).exists(_.get(partCol).contains(rv)))
+              .map(removeLine(_))
+          }
+        val op = if (overwrite || replaceValue.isDefined) "OVERWRITE" else "WRITE"
+        claim(spark, table, base,
+          commitInfoLine(op) +: (header ++ txns ++ removes ++ adds), staged)
       }
-      val removes: Seq[String] =
-        if (v == 0) Seq.empty
-        else if (overwrite)
-          snapshot(spark, table, v - 1).files.map(removeLine(_))
-        else replaceValue.toSeq.flatMap { rv =>
-          val prior = snapshot(spark, table, v - 1)
-          prior.files.filter(f =>
-            prior.pvals.get(f).exists(_.get(partCol).contains(rv)))
-            .map(removeLine(_))
-        }
-      val op = if (overwrite || replaceValue.isDefined) "OVERWRITE" else "WRITE"
-      if (tryCommit(fs, table, v,
-          commitInfoLine(op) +: (header ++ txns ++ removes ++ adds))) Some(v)
-      else { fs.delete(new Path(table, staged), true); None }
     }
   }
 
@@ -1315,25 +1363,32 @@ object DeltaLite {
     * contract — survives checkpoint+expireLog), with the `-b<id>-` staged
     * path marker for exact-version answers while the JSON commit lives. */
   def commitIdempotentPartitioned(spark: SparkSession, df: DataFrame,
-      table: String, partCol: String, batchId: Long): Long = {
-    val fs = hadoopFs(spark, table)
-    val marker = s"-b$batchId-"
-    val latest = latestVersion(spark, table)
-    if (latest >= 0) {
-      val snap = snapshot(spark, table, latest)
-      if (snap.txns.get(TxnAppId).exists(_ >= batchId)) {
-        var v = 0L
-        while (v <= latest) {
-          val p = versionFile(table, v)
-          if (fs.exists(p) && readLogText(fs, p).contains(marker)) return v
-          v += 1
-        }
-        return math.max(lastCheckpointVersion(spark, table), 0L)
-      }
-    }
-    writePartitioned(spark, df, table, partCol, tag = marker,
+      table: String, partCol: String, batchId: Long): Long =
+    writePartitioned(spark, df, table, partCol, tag = batchMarker(batchId),
       txn = Some((TxnAppId, batchId)))
-  }
+
+  /** The staged-path marker that names streaming batch `batchId`. */
+  private def batchMarker(batchId: Long): String = s"-b$batchId-"
+
+  /** The version already carrying `txn`'s batch in `snap`, None when the
+    * batch is new. The authoritative ledger is the snapshot's
+    * SetTransaction state: it survives checkpoint+expireLog (checkpoints
+    * persist txn rows) and overwrites of the batch's files — unlike the
+    * path marker, which dies with its JSON commit. Micro-batch ids are
+    * monotone (the Structured Streaming contract), so max(version)
+    * decides. The answer is the exact original version while its JSON
+    * commit (which names the [[batchMarker]] path) survives, else the
+    * checkpoint that subsumed it. */
+  private def replayed(spark: SparkSession, table: String, snap: Snapshot,
+      txn: Option[(String, Long)]): Option[Long] =
+    txn.filter { case (app, id) => snap.txns.get(app).exists(_ >= id) }
+      .map { case (_, id) =>
+        val fs = hadoopFs(spark, table)
+        (0L to snap.version).find { v =>
+          val p = versionFile(table, v)
+          fs.exists(p) && readLogText(fs, p).contains(batchMarker(id))
+        }.getOrElse(math.max(lastCheckpointVersion(spark, table), 0L))
+      }
 
   /** Partition pruning off the log alone: the current snapshot's files
     * whose recorded partitionValues for `partCol` fall in `wanted` — no
@@ -1343,7 +1398,7 @@ object DeltaLite {
     * inside a partition. Returns (matched files, matched, total). */
   def planPartitioned(spark: SparkSession, table: String, partCol: String,
       wanted: Set[String]): (Seq[String], Long, Long) = {
-    val snap = snapshot(spark, table, latestVersion(spark, table))
+    val snap = head(spark, table)
     // refuse-rather-than-answer-wrong: a file with NO partitionValues
     // cannot be pruned on partCol — excluding it silently drops rows,
     // including it silently un-prunes. Such a file means the table is
@@ -1363,12 +1418,14 @@ object DeltaLite {
     * (the table schema is the newest metaData, never per-file
     * inference). */
   def tableSchema(spark: SparkSession, table: String,
-      asOf: Long = Long.MaxValue): StructType = {
-    val upTo = math.min(asOf, latestVersion(spark, table))
-    val (_, sj) = snapshot(spark, table, upTo).meta.getOrElse(
-      throw new IllegalArgumentException(s"no metaData in $table log"))
-    DataType.fromJson(sj).asInstanceOf[StructType]
-  }
+      asOf: Long = Long.MaxValue): StructType =
+    schemaOf(snapshot(spark, table,
+      math.min(asOf, latestVersion(spark, table))), table)
+
+  /** The schema `snap` declares (its newest metaData). */
+  private def schemaOf(snap: Snapshot, table: String): StructType =
+    DataType.fromJson(snap.meta.getOrElse(throw new IllegalArgumentException(
+      s"no metaData in $table log"))._2).asInstanceOf[StructType]
 
   /** Exactly-once micro-batch commit: the streaming `batchId` travels in
     * the staged-directory name (`…-b<id>-…`), so the committed log IS the
@@ -1381,32 +1438,9 @@ object DeltaLite {
   private[graft] val TxnAppId = "graft-stream"
 
   def commitIdempotent(spark: SparkSession, df: DataFrame, table: String,
-      batchId: Long): Long = {
-    val fs = hadoopFs(spark, table)
-    val marker = s"-b$batchId-"
-    val latest = latestVersion(spark, table)
-    if (latest >= 0) {
-      // authoritative ledger: the snapshot's SetTransaction state. It
-      // survives checkpoint+expireLog (checkpoints persist txn rows) and
-      // overwrites of the batch's files — unlike the path marker, which
-      // dies with its JSON commit. Micro-batch ids are monotone (the
-      // Structured Streaming contract), so max(version) decides.
-      val snap = snapshot(spark, table, latest)
-      if (snap.txns.get(TxnAppId).exists(_ >= batchId)) {
-        // exact original version when its JSON commit still exists …
-        var v = 0L
-        while (v <= latest) {
-          val p = versionFile(table, v)
-          if (fs.exists(p) && readLogText(fs, p).contains(marker)) return v
-          v += 1
-        }
-        // … otherwise it was subsumed by the checkpoint: report that
-        return math.max(lastCheckpointVersion(spark, table), 0L)
-      }
-    }
-    writeTagged(spark, df, table, overwrite = false, tag = marker,
-      txn = Some((TxnAppId, batchId)))
-  }
+      batchId: Long): Long =
+    writeTagged(spark, df, table, overwrite = false,
+      tag = batchMarker(batchId), txn = Some((TxnAppId, batchId)))
 
   // ----------------------------------------------------------------------
   // Column mapping, NAME mode (PROTOCOL.md §Column Mapping) — the layer
@@ -1466,17 +1500,13 @@ object DeltaLite {
     * compaction, plain writes, change feeds): on a column-mapped table
     * the parquet columns are physical, so a logical-name scan would
     * surface every column as NULL — silently. */
-  private def requireNotMapped(spark: SparkSession, table: String,
+  private def requireNotMapped(snap: Snapshot, table: String,
       op: String): Unit =
-    if (latestVersion(spark, table) >= 0) {
-      val s =
-        try tableSchema(spark, table)
-        catch { case _: IllegalArgumentException => return } // no metaData yet
-      require(!isColumnMapped(s),
+    if (snap.meta.isDefined) // no metaData yet: nothing is mapped
+      require(!isColumnMapped(schemaOf(snap, table)),
         s"$table uses column mapping: $op reads/writes physical-name data " +
           "files under logical names and is not wired for mapped tables " +
           "in this subset — use the columnMapped ops")
-    }
 
   /** `floor` is the table's PRIOR declared maxColumnId: the spec requires
     * maxColumnId to be MONOTONE (ids are never reused), so after a DROP
@@ -1541,19 +1571,16 @@ object DeltaLite {
     import org.apache.spark.sql.functions.col
     require(mode == "name" || mode == "id",
       s"unknown column-mapping mode '$mode' (name | id)")
-    val fs = hadoopFs(spark, table)
-    enforceConstraints(spark, table, df)
-    Occ.commit("column-mapped write", table)(
-        latestVersion(spark, table)) { base =>
-      val v = base + 1
+    commitOn(spark, table, "column-mapped write") { snapW =>
+      enforceConstraints(snapW, df)
+      val v = snapW.version + 1
       val (header, mapped) =
         if (v == 0) {
           val m = StructType(cmAssign(df.schema.fields.toSeq, 1L))
           (Seq(cmProtocolLine,
             metaDataLine(m, configuration = cmConfiguration(m, mode))), m)
         } else {
-          val snapW = snapshot(spark, table, v - 1)
-          val schema = tableSchema(spark, table)
+          val schema = schemaOf(snapW, table)
           require(isColumnMapped(schema),
             s"$table is not column-mapped: use write()")
           val existing = schema.fieldNames.toSet
@@ -1593,12 +1620,10 @@ object DeltaLite {
           .MetadataBuilder()
           .putLong("parquet.field.id", f.metadata.getLong(ColumnIdKey))
           .build())).toIndexedSeq: _*)
-      val token = java.util.UUID.randomUUID().toString.take(8)
-      val staged = s"data/v$v-cm-$token"
+      val staged = s"data/v$v-cm-${stagingToken()}"
       val adds = addsOf(spark, Staging.write(table, staged, physical), None)
-      if (tryCommit(fs, table, v,
-          commitInfoLine("WRITE") +: (header ++ adds))) Some(v)
-      else { fs.delete(new Path(table, staged), true); None }
+      claim(spark, table, snapW,
+        commitInfoLine("WRITE") +: (header ++ adds), staged)
     }
   }
 
@@ -1607,55 +1632,48 @@ object DeltaLite {
     * id and physicalName, so no data file moves and prior versions still
     * time-travel under their own names. Returns the commit version. */
   def renameColumn(spark: SparkSession, table: String, oldName: String,
-      newName: String): Long = {
-    val fs = hadoopFs(spark, table)
-    val v = latestVersion(spark, table) + 1
-    require(v > 0, s"$table has no Delta log")
-    val snapR = snapshot(spark, table, v - 1)
-    val (id, _) = snapR.meta.getOrElse(
-      throw new IllegalArgumentException(s"no metaData in $table log"))
-    val schema = tableSchema(spark, table)
-    require(isColumnMapped(schema),
-      s"renaming without a rewrite requires column mapping — $table is unmapped")
-    require(schema.fieldNames.contains(oldName), s"no column $oldName in $table")
-    require(!schema.fieldNames.contains(newName),
-      s"column $newName already exists in $table")
-    val renamed = StructType(schema.fields.map(f =>
-      if (f.name == oldName) f.copy(name = newName) else f))
-    if (!tryCommit(fs, table, v, Seq(commitInfoLine("RENAME COLUMN"),
+      newName: String): Long =
+    commitOn(spark, table, "rename column") { snapR =>
+      val (id, schema) = metaOf(snapR, table)
+      require(isColumnMapped(schema),
+        s"renaming without a rewrite requires column mapping — $table is unmapped")
+      require(schema.fieldNames.contains(oldName), s"no column $oldName in $table")
+      require(!schema.fieldNames.contains(newName),
+        s"column $newName already exists in $table")
+      val renamed = StructType(schema.fields.map(f =>
+        if (f.name == oldName) f.copy(name = newName) else f))
+      claim(spark, table, snapR, Seq(commitInfoLine("RENAME COLUMN"),
         metaDataLine(renamed, id,
           configuration = cmConfiguration(renamed, cmMode(snapR.config),
-            floor = cmMaxId(schema, snapR.config))))))
-      throw new IllegalStateException(s"rename lost the commit race on $table")
-    v
+            floor = cmMaxId(schema, snapR.config)))))
+    }
+
+  /** The table id and schema of `snap`, refusing a table with no log. */
+  private def metaOf(snap: Snapshot, table: String): (String, StructType) = {
+    require(snap.version >= 0, s"$table has no Delta log")
+    (snap.meta.getOrElse(throw new IllegalArgumentException(
+      s"no metaData in $table log"))._1, schemaOf(snap, table))
   }
 
   /** METADATA-ONLY column drop (column mapping's second superpower): the
     * field leaves the logical schema; its physical column stays in every
     * data file, invisible to readers (a later physical purge is a
     * rewrite — out of scope here, as in Delta's own DROP COLUMN). */
-  def dropColumn(spark: SparkSession, table: String, name: String): Long = {
-    val fs = hadoopFs(spark, table)
-    val v = latestVersion(spark, table) + 1
-    require(v > 0, s"$table has no Delta log")
-    val snapD = snapshot(spark, table, v - 1)
-    val (id, _) = snapD.meta.getOrElse(
-      throw new IllegalArgumentException(s"no metaData in $table log"))
-    val schema = tableSchema(spark, table)
-    require(isColumnMapped(schema),
-      s"dropping without a rewrite requires column mapping — $table is unmapped")
-    require(schema.fieldNames.contains(name), s"no column $name in $table")
-    require(schema.fields.length > 1, s"cannot drop the last column of $table")
-    val dropped = StructType(schema.fields.filterNot(_.name == name))
-    if (!tryCommit(fs, table, v, Seq(commitInfoLine("DROP COLUMNS"),
+  def dropColumn(spark: SparkSession, table: String, name: String): Long =
+    commitOn(spark, table, "drop column") { snapD =>
+      val (id, schema) = metaOf(snapD, table)
+      require(isColumnMapped(schema),
+        s"dropping without a rewrite requires column mapping — $table is unmapped")
+      require(schema.fieldNames.contains(name), s"no column $name in $table")
+      require(schema.fields.length > 1, s"cannot drop the last column of $table")
+      val dropped = StructType(schema.fields.filterNot(_.name == name))
+      claim(spark, table, snapD, Seq(commitInfoLine("DROP COLUMNS"),
         metaDataLine(dropped, id,
           // floor keeps maxColumnId at the PRE-drop high-water mark: the
           // dropped field's id must never be handed to a later ADD COLUMNS
           configuration = cmConfiguration(dropped, cmMode(snapD.config),
-            floor = cmMaxId(schema, snapD.config))))))
-      throw new IllegalStateException(s"drop lost the commit race on $table")
-    v
-  }
+            floor = cmMaxId(schema, snapD.config)))))
+    }
 
   /** METADATA-ONLY widening — SQL `ALTER TABLE ADD COLUMNS`'s landing
     * (X287): one metaData commit re-declares the schema with the new
@@ -1667,30 +1685,22 @@ object DeltaLite {
     * binding by id; the table's other configuration (constraints, CDF,
     * ICT flags) is RE-DECLARED, never reset. */
   def addColumn(spark: SparkSession, table: String, name: String,
-      dataType: org.apache.spark.sql.types.DataType): Long = {
-    val fs = hadoopFs(spark, table)
-    val v = latestVersion(spark, table) + 1
-    require(v > 0, s"$table has no Delta log")
-    val snapA = snapshot(spark, table, v - 1)
-    val (id, _) = snapA.meta.getOrElse(
-      throw new IllegalArgumentException(s"no metaData in $table log"))
-    val schema = tableSchema(spark, table)
-    require(!schema.fieldNames.contains(name),
-      s"column $name already exists in $table")
-    val nf = org.apache.spark.sql.types.StructField(name, dataType)
-    val (widened, conf) =
-      if (isColumnMapped(schema)) {
-        val maxId = cmMaxId(schema, snapA.config)
-        val w = StructType(schema.fields.toSeq ++ cmAssign(Seq(nf), maxId + 1))
-        (w, snapA.config ++ cmConfiguration(w, cmMode(snapA.config),
-          floor = maxId))
-      } else (StructType(schema.fields :+ nf), snapA.config)
-    if (!tryCommit(fs, table, v, Seq(commitInfoLine("ADD COLUMNS"),
-        metaDataLine(widened, id, snapA.partCols, conf))))
-      throw new IllegalStateException(
-        s"add column lost the commit race on $table")
-    v
-  }
+      dataType: org.apache.spark.sql.types.DataType): Long =
+    commitOn(spark, table, "add column") { snapA =>
+      val (id, schema) = metaOf(snapA, table)
+      require(!schema.fieldNames.contains(name),
+        s"column $name already exists in $table")
+      val nf = org.apache.spark.sql.types.StructField(name, dataType)
+      val (widened, conf) =
+        if (isColumnMapped(schema)) {
+          val maxId = cmMaxId(schema, snapA.config)
+          val w = StructType(schema.fields.toSeq ++ cmAssign(Seq(nf), maxId + 1))
+          (w, snapA.config ++ cmConfiguration(w, cmMode(snapA.config),
+            floor = maxId))
+        } else (StructType(schema.fields :+ nf), snapA.config)
+      claim(spark, table, snapA, Seq(commitInfoLine("ADD COLUMNS"),
+        metaDataLine(widened, id, snapA.partCols, conf)))
+    }
 
   /** Add a CHECK constraint (PROTOCOL.md §CHECK Constraints) as a
     * METADATA-ONLY commit: the predicate lands in metaData.configuration
@@ -1702,45 +1712,28 @@ object DeltaLite {
   def addConstraint(spark: SparkSession, table: String, name: String,
       expr: String): Long = {
     import org.apache.spark.sql.functions.{expr => e_, not}
-    val fs = hadoopFs(spark, table)
-    val v = latestVersion(spark, table) + 1
-    require(v > 0, s"$table has no Delta log")
-    val snapC = snapshot(spark, table, v - 1)
-    val (id, _) = snapC.meta.getOrElse(
-      throw new IllegalArgumentException(s"no metaData in $table log"))
-    val schema = tableSchema(spark, table)
-    val violating = read(spark, table).where(not(e_(expr))).count()
-    require(violating == 0L,
-      s"cannot add constraint $name: $violating existing row(s) violate ($expr)")
-    val conf = tableConstraints(spark, table) +
-      (s"delta.constraints.$name" -> expr)
-    val proto = jsonObj("protocol") { p =>
-      p.put("minReaderVersion", 1)
-      p.put("minWriterVersion", 3) // CHECK constraints' writer requirement
+    commitOn(spark, table, "addConstraint") { snapC =>
+      val (id, schema) = metaOf(snapC, table)
+      val violating = readOf(spark, table, snapC).where(not(e_(expr))).count()
+      require(violating == 0L,
+        s"cannot add constraint $name: $violating existing row(s) violate ($expr)")
+      claim(spark, table, snapC,
+        commitInfoLine("ADD CONSTRAINT") +:
+          raiseLine(snapC, "checkConstraints") :+
+          metaDataLine(schema, id, partitionColumns = snapC.partCols,
+            configuration = snapC.config + (s"delta.constraints.$name" -> expr)))
     }
-    if (!tryCommit(fs, table, v, Seq(commitInfoLine("ADD CONSTRAINT"), proto,
-        metaDataLine(schema, id, partitionColumns = snapC.partCols,
-          configuration = conf))))
-      throw new IllegalStateException(s"addConstraint lost the race on $table")
-    v
   }
 
-  /** The table's CHECK constraints, `delta.constraints.<name>` → expr —
-    * off the snapshot's replayed metaData.configuration (checkpoint-aware:
-    * the checkpoint's metaData row carries configuration, so constraints
-    * survive expireLog). */
-  private def tableConstraints(spark: SparkSession,
-      table: String): Map[String, String] =
-    snapshot(spark, table, latestVersion(spark, table)).config
-
-  /** Validate `df` against the table's CHECK constraints; throws with the
-    * violating constraint name and count when any row fails — called by
-    * writers BEFORE staging (the protocol's write-time enforcement). */
-  private def enforceConstraints(spark: SparkSession, table: String,
-      df: DataFrame): Unit = {
+  /** Validate `df` against the CHECK constraints `snap` declares
+    * (`delta.constraints.<name>` → expr in its replayed
+    * metaData.configuration — checkpoint-aware, so constraints survive
+    * expireLog); throws with the violating constraint name and count when
+    * any row fails — called by writers BEFORE staging (the protocol's
+    * write-time enforcement). */
+  private def enforceConstraints(snap: Snapshot, df: DataFrame): Unit = {
     import org.apache.spark.sql.functions.{expr => e_, not}
-    if (latestVersion(spark, table) < 0) return
-    tableConstraints(spark, table).foreach { case (k, expr) =>
+    snap.config.foreach { case (k, expr) =>
       if (k.startsWith("delta.constraints.")) {
         val n = df.where(not(e_(expr))).count()
         if (n > 0) throw new IllegalArgumentException(
@@ -1758,33 +1751,21 @@ object DeltaLite {
     * legal. The property rides metaData.configuration, so it replays
     * through snapshots and checkpoints like constraints do. Metadata-only
     * commit. */
-  def setAppendOnly(spark: SparkSession, table: String): Long = {
-    val fs = hadoopFs(spark, table)
-    val latest = latestVersion(spark, table)
-    require(latest >= 0, s"$table has no Delta log")
-    val snap = snapshot(spark, table, latest)
-    val (id, _) = snap.meta.getOrElse(
-      throw new IllegalArgumentException(s"no metaData in $table log"))
-    val v = latest + 1
-    if (!tryCommit(fs, table, v, Seq(commitInfoLine("SET TBLPROPERTIES"),
-        metaDataLine(tableSchema(spark, table), id,
-          partitionColumns = snap.partCols,
-          configuration = snap.config + ("delta.appendOnly" -> "true")))))
-      throw new IllegalStateException(
-        s"setAppendOnly lost the commit race on $table")
-    v
-  }
+  def setAppendOnly(spark: SparkSession, table: String): Long =
+    commitOn(spark, table, "setAppendOnly") { snap =>
+      val (id, schema) = metaOf(snap, table)
+      claim(spark, table, snap, Seq(commitInfoLine("SET TBLPROPERTIES"),
+        metaDataLine(schema, id, partitionColumns = snap.partCols,
+          configuration = snap.config + ("delta.appendOnly" -> "true"))))
+    }
 
   /** Write-time enforcement of `delta.appendOnly`: called by every op
     * that would commit a dataChange remove. */
-  private def requireAppendsOnly(spark: SparkSession, table: String,
-      op: String): Unit = {
-    if (latestVersion(spark, table) < 0) return
-    if (snapshot(spark, table, latestVersion(spark, table)).config
-        .get("delta.appendOnly").contains("true"))
+  private def requireAppendsOnly(snap: Snapshot, table: String,
+      op: String): Unit =
+    if (snap.config.get("delta.appendOnly").contains("true"))
       throw new UnsupportedOperationException(
         s"$table is append-only (delta.appendOnly=true): $op removes rows")
-  }
 
   /** The table's GENERATED columns, name → generation expression — off
     * each schema field's metadata key `delta.generationExpression`
@@ -1805,11 +1786,11 @@ object DeltaLite {
     * (null-safe equality) and refuses on any mismatch — a reader is
     * entitled to trust generated values without re-deriving them. Returns
     * the (possibly augmented) frame in TABLE column order. */
-  private def applyGenerated(spark: SparkSession, table: String,
+  private def applyGenerated(snap: Snapshot, table: String,
       df: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr, not}
-    if (latestVersion(spark, table) < 0) return df
-    val schema = tableSchema(spark, table)
+    if (snap.meta.isEmpty) return df
+    val schema = schemaOf(snap, table)
     val gen = generatedColumns(schema)
     if (gen.isEmpty) return df
     val full = gen.foldLeft(df) { case (d, (name, sql)) =>
@@ -1838,44 +1819,28 @@ object DeltaLite {
   def addGeneratedColumn(spark: SparkSession, table: String, column: String,
       exprSql: String): Long = {
     import org.apache.spark.sql.functions.{col, expr, not}
-    val fs = hadoopFs(spark, table)
-    requireNotMapped(spark, table, "addGeneratedColumn()")
-    val latest = latestVersion(spark, table)
-    require(latest >= 0, s"$table has no Delta log")
-    val snap = snapshot(spark, table, latest)
-    val (id, _) = snap.meta.getOrElse(
-      throw new IllegalArgumentException(s"no metaData in $table log"))
-    val schema = tableSchema(spark, table)
-    require(schema.fieldNames.contains(column),
-      s"column $column not in $table schema — generated columns are " +
-        "declared over existing columns in this subset")
-    val bad = read(spark, table)
-      .where(not(col(column) <=> expr(exprSql))).count()
-    require(bad == 0L, s"cannot declare $column generated: $bad existing " +
-      s"row(s) contradict ($exprSql)")
-    val newSchema = StructType(schema.fields.map { f =>
-      if (f.name != column) f
-      else f.copy(metadata = new org.apache.spark.sql.types.MetadataBuilder()
-        .withMetadata(f.metadata)
-        .putString("delta.generationExpression", exprSql).build())
-    })
-    // generated columns' writer requirement is 4; never downgrade a table
-    // already past it (constraints=3 upgrades, DV/CDF feature tables stay)
-    val priorWriter = snap.protocol.map(_.minWriter).getOrElse(2)
-    val proto =
-      if (priorWriter >= 7) Seq.empty // feature protocol already gates
-      else Seq(jsonObj("protocol") { p =>
-        p.put("minReaderVersion", 1)
-        p.put("minWriterVersion", math.max(priorWriter, 4))
+    commitOn(spark, table, "addGeneratedColumn") { snap =>
+      requireNotMapped(snap, table, "addGeneratedColumn()")
+      val (id, schema) = metaOf(snap, table)
+      require(schema.fieldNames.contains(column),
+        s"column $column not in $table schema — generated columns are " +
+          "declared over existing columns in this subset")
+      val bad = readOf(spark, table, snap)
+        .where(not(col(column) <=> expr(exprSql))).count()
+      require(bad == 0L, s"cannot declare $column generated: $bad existing " +
+        s"row(s) contradict ($exprSql)")
+      val newSchema = StructType(schema.fields.map { f =>
+        if (f.name != column) f
+        else f.copy(metadata = new org.apache.spark.sql.types.MetadataBuilder()
+          .withMetadata(f.metadata)
+          .putString("delta.generationExpression", exprSql).build())
       })
-    val v = latest + 1
-    if (!tryCommit(fs, table, v,
-        Seq(commitInfoLine("ADD GENERATED COLUMN")) ++ proto ++
-          Seq(metaDataLine(newSchema, id,
-            partitionColumns = snap.partCols, configuration = snap.config))))
-      throw new IllegalStateException(
-        s"addGeneratedColumn lost the commit race on $table")
-    v
+      claim(spark, table, snap,
+        commitInfoLine("ADD GENERATED COLUMN") +:
+          raiseLine(snap, "generatedColumns") :+
+          metaDataLine(newSchema, id,
+            partitionColumns = snap.partCols, configuration = snap.config))
+    }
   }
 
   /** REORG (physical purge) of a column-mapped table — Delta's
@@ -1889,101 +1854,91 @@ object DeltaLite {
   def reorgPurge(spark: SparkSession, table: String,
       targetFiles: Int = 1): (Long, Long, Long) = {
     import org.apache.spark.sql.functions.col
-    val fs = hadoopFs(spark, table)
-    val latest = latestVersion(spark, table)
-    val before = snapshot(spark, table, latest)
-    val schema = tableSchema(spark, table)
-    require(isColumnMapped(schema), s"$table is not column-mapped: purge " +
-      "is the mapped-table rewrite — use optimize() on plain tables")
-    require(before.pvals.isEmpty && before.dvs.isEmpty,
-      s"purge of partitioned/DV-carrying mapped tables is out of this subset")
-    // read logically (physical → logical translation), restage under the
-    // CURRENT mapping: dropped physical columns simply aren't projected
-    val src = read(spark, table)
-    val v = latest + 1
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    val staged = s"data/v$v-purge-$token"
-    val adds = addsOf(spark, Staging.write(table, staged,
-      src.select(schema.fields.map(f =>
-          col(f.name).as(physicalName(f))).toIndexedSeq: _*)
-        .coalesce(targetFiles)), None, dataChange = false)
-    val removes = before.files.map(removeLine(_, dataChange = false))
-    if (!tryCommit(fs, table, v,
-        commitInfoLine("REORG") +: (removes ++ adds)))
-      throw new IllegalStateException(s"purge lost the commit race on $table")
-    (v, before.files.size.toLong, adds.length.toLong)
+    commitOn(spark, table, "purge") { before =>
+      val (_, schema) = metaOf(before, table)
+      require(isColumnMapped(schema), s"$table is not column-mapped: purge " +
+        "is the mapped-table rewrite — use optimize() on plain tables")
+      require(before.pvals.isEmpty && before.dvs.isEmpty,
+        s"purge of partitioned/DV-carrying mapped tables is out of this subset")
+      // read logically (physical → logical translation), restage under the
+      // CURRENT mapping: dropped physical columns simply aren't projected
+      val src = readOf(spark, table, before)
+      val staged = s"data/v${before.version + 1}-purge-${stagingToken()}"
+      val adds = addsOf(spark, Staging.write(table, staged,
+        src.select(schema.fields.map(f =>
+            col(f.name).as(physicalName(f))).toIndexedSeq: _*)
+          .coalesce(targetFiles)), None, dataChange = false)
+      val removes = before.files.map(removeLine(_, dataChange = false))
+      claim(spark, table, before,
+        commitInfoLine("REORG") +: (removes ++ adds), staged)
+        .map(v => (v, before.files.size.toLong, adds.length.toLong))
+    }
   }
 
   private def writeTagged(spark: SparkSession, dfIn: DataFrame, table: String,
       overwrite: Boolean, tag: String, collectStats: Boolean = false,
-      txn: Option[(String, Long)] = None): Long = {
-    val fs = hadoopFs(spark, table)
-    requireNotMapped(spark, table, "plain write()") // use writeColumnMapped
-    if (overwrite) requireAppendsOnly(spark, table, "overwrite write()")
-    val df = applyGenerated(spark, table, dfIn) // compute/validate generated
-    enforceConstraints(spark, table, df) // CHECK constraints gate the write
-    Occ.commit("write", table)(latestVersion(spark, table)) { base =>
-      val v = base + 1
-      val token = java.util.UUID.randomUUID().toString.take(8)
-      val staged = s"data/v$v$tag$token"
-      // protocol `stats`: per-file numRecords + min/max of every LONG
-      // column (the IcebergLite-subset numeric key types) — the
-      // statistics layer [[planSkipping]] prunes scans off
-      val adds = addsOf(spark, Staging.write(table, staged, df),
-        Option.when(collectStats)(longCols(df.schema)))
-      val removes =
-        if (overwrite && v > 0) liveFiles(spark, table, v - 1).map(removeLine(_))
-        else Seq.empty
-      val header =
-        if (v == 0) Seq(protocolLine, metaDataLine(df.schema))
-        else {
-          val prior = snapshot(spark, table, v - 1)
-          prior.meta match {
-            // schema EVOLUTION: a widened batch re-declares the table
-            // schema in this commit's metaData (same table id, PRESERVED
-            // configuration — constraints survive an evolution commit).
-            // Compared STRUCTURALLY (names/types): an incoming frame
-            // never carries field metadata, so a json-text compare
-            // would emit an evolution commit that silently ERASES
-            // generation expressions; structural equality keeps the table
-            // schema authoritative, and a real evolution re-grafts the
-            // unchanged fields' metadata. NULLABILITY is the table's,
-            // never the batch's — a non-null batch (VALUES literals,
-            // post-filter frames) must not NARROW a nullable column,
-            // which would break reads of older files missing it — and
-            // evolution-added columns are always nullable (pre-widening
-            // files surface them as NULL).
-            case Some((id, sj)) =>
-              val tbl = org.apache.spark.sql.types.DataType.fromJson(sj)
-                .asInstanceOf[StructType]
-              def strip(s: StructType) = StructType(s.fields.map(_.copy(
-                nullable = true,
-                metadata = org.apache.spark.sql.types.Metadata.empty)))
-              if (strip(tbl) == strip(df.schema)) Seq.empty
-              else {
-                val merged = StructType(df.schema.fields.map { f =>
-                  tbl.fields.find(_.name == f.name) match {
-                    case Some(of)
-                      if f.metadata == org.apache.spark.sql.types.Metadata.empty =>
+      txn: Option[(String, Long)] = None): Long =
+    commitOn(spark, table, "write") { base =>
+      replayed(spark, table, base, txn).orElse {
+        requireNotMapped(base, table, "plain write()") // use writeColumnMapped
+        if (overwrite) requireAppendsOnly(base, table, "overwrite write()")
+        val df = applyGenerated(base, table, dfIn) // compute/validate generated
+        enforceConstraints(base, df) // CHECK constraints gate the write
+        val v = base.version + 1
+        val staged = s"data/v$v$tag${stagingToken()}"
+        // protocol `stats`: per-file numRecords + min/max of every LONG
+        // column (the IcebergLite-subset numeric key types) — the
+        // statistics layer [[planSkipping]] prunes scans off
+        val adds = addsOf(spark, Staging.write(table, staged, df),
+          Option.when(collectStats)(longCols(df.schema)))
+        val removes =
+          if (overwrite) base.files.map(removeLine(_)) else Seq.empty
+        val header =
+          if (v == 0) Seq(protocolLine, metaDataLine(df.schema))
+          else {
+            base.meta match {
+              // schema EVOLUTION: a widened batch re-declares the table
+              // schema in this commit's metaData (same table id, PRESERVED
+              // configuration — constraints survive an evolution commit).
+              // Compared STRUCTURALLY (names/types): an incoming frame
+              // never carries field metadata, so a json-text compare
+              // would emit an evolution commit that silently ERASES
+              // generation expressions; structural equality keeps the table
+              // schema authoritative, and a real evolution re-grafts the
+              // unchanged fields' metadata. NULLABILITY is the table's,
+              // never the batch's — a non-null batch (VALUES literals,
+              // post-filter frames) must not NARROW a nullable column,
+              // which would break reads of older files missing it — and
+              // evolution-added columns are always nullable (pre-widening
+              // files surface them as NULL).
+              case Some((id, sj)) =>
+                val tbl = DataType.fromJson(sj).asInstanceOf[StructType]
+                val noMeta = org.apache.spark.sql.types.Metadata.empty
+                def strip(s: StructType) = StructType(s.fields.map(_.copy(
+                  nullable = true, metadata = noMeta)))
+                if (strip(tbl) == strip(df.schema)) Seq.empty
+                else {
+                  val merged = StructType(df.schema.fields.map { f =>
+                    tbl.fields.find(_.name == f.name) match {
+                      case Some(of) if f.metadata == noMeta =>
                         f.copy(nullable = of.nullable, metadata = of.metadata)
-                    case Some(of) => f.copy(nullable = of.nullable)
-                    case None => f.copy(nullable = true)
-                  }
-                })
-                Seq(metaDataLine(merged, id,
-                  partitionColumns = prior.partCols,
-                  configuration = prior.config))
-              }
-            case _ => Seq.empty
+                      case Some(of) => f.copy(nullable = of.nullable)
+                      case None => f.copy(nullable = true)
+                    }
+                  })
+                  Seq(metaDataLine(merged, id,
+                    partitionColumns = base.partCols,
+                    configuration = base.config))
+                }
+              case _ => Seq.empty
+            }
           }
-        }
-      val info = commitInfoLine(if (overwrite) "OVERWRITE" else "WRITE")
-      val txns = txn.map { case (app, ver) => txnLine(app, ver) }.toSeq
-      if (tryCommit(fs, table, v,
-          info +: (header ++ txns ++ removes ++ adds))) Some(v)
-      else { fs.delete(new Path(table, staged), true); None }
+        val info = commitInfoLine(if (overwrite) "OVERWRITE" else "WRITE")
+        val txns = txn.map { case (app, ver) => txnLine(app, ver) }.toSeq
+        claim(spark, table, base,
+          info +: (header ++ txns ++ removes ++ adds), staged)
+      }
     }
-  }
 
   /** Incremental read: the rows ADDED in versions (fromV, toV] — the
     * append-only change feed (the Delta CDF pattern for blind appends; a
@@ -1995,7 +1950,7 @@ object DeltaLite {
   def readChanges(spark: SparkSession, table: String, fromV: Long,
       toV: Long): DataFrame = {
     val fs = hadoopFs(spark, table)
-    requireNotMapped(spark, table, "readChanges()") // physical-name scan
+    requireNotMapped(head(spark, table), table, "readChanges()") // physical-name scan
     val added = mutable.LinkedHashSet.empty[String]
     ((fromV + 1) to toV).foreach { v =>
       val p = versionFile(table, v)
@@ -2062,9 +2017,13 @@ object DeltaLite {
     * column are conservatively kept — skipping is an optimization, never
     * a filter. Returns (matched files, matched count, total count). */
   def planSkipping(spark: SparkSession, table: String, column: String,
+      lo: Long, hi: Long): (Seq[String], Long, Long) =
+    planSkipping(head(spark, table), table, column, lo, hi)
+
+  /** [[planSkipping]] over a pinned snapshot. */
+  private def planSkipping(snap: Snapshot, table: String, column: String,
       lo: Long, hi: Long): (Seq[String], Long, Long) = {
-    requireNotMapped(spark, table, "planSkipping()")
-    val snap = snapshot(spark, table, latestVersion(spark, table))
+    requireNotMapped(snap, table, "planSkipping()")
     val matched = snap.files.filter { f =>
       snap.stats.get(f) match {
         case Some(js) =>
@@ -2088,40 +2047,41 @@ object DeltaLite {
     * (version, filesRewritten, rowsDeleted). */
   def deleteWhere(spark: SparkSession, table: String, column: String,
       lo: Long, hi: Long): (Long, Long, Long) = {
-    import org.apache.spark.sql.functions.{col => c_, not}
-    val fs = hadoopFs(spark, table)
-    requireAppendsOnly(spark, table, "deleteWhere()")
-    val (affected, _, _) = planSkipping(spark, table, column, lo, hi)
-    if (affected.isEmpty) return (latestVersion(spark, table), 0L, 0L)
-    // DV-aware source: a copy-on-write rewrite of a file that carries a
-    // deletion vector must start from its LIVE rows, or the remove+add
-    // swap resurrects the vector's deleted rows
-    val delSnap = snapshot(spark, table, latestVersion(spark, table))
-    val affectedDf =
-      scanWithDvs(spark, table, tableSchema(spark, table), affected,
-        delSnap.dvs)
-    val rowsBefore = affectedDf.count()
-    val kept = affectedDf.where(not(c_(column).between(lo, hi)))
-    val rowsAfter = kept.count()
-    // stage replacements (commit-private dir, the writeTagged discipline)
-    val v = latestVersion(spark, table) + 1
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    val staged = s"data/v$v-del-$token"
-    val adds = stageReplacementAdds(spark, table, kept, staged, column,
-      delSnap.partCols)
-    val removes = affected.map(removeLine(_))
-    // CDF: the deleted rows themselves ride in the commit as change data
-    // (the rewrite's add/remove mix is underivable — survivors move files)
-    val cdc =
-      if (!cdfEnabled(delSnap.config)) Seq.empty
-      else stageCdc(spark, table,
-        affectedDf.where(c_(column).between(lo, hi))
-          .withColumn("_change_type",
-            org.apache.spark.sql.functions.lit("delete")), v, token)
-    if (!tryCommit(fs, table, v,
-        commitInfoLine("DELETE") +: (removes ++ adds ++ cdc)))
-      throw new IllegalStateException(s"delete lost the commit race on $table")
-    (v, affected.size.toLong, rowsBefore - rowsAfter)
+    import org.apache.spark.sql.functions.{col => c_, lit, not}
+    commitOn(spark, table, "delete") { base =>
+      requireAppendsOnly(base, table, "deleteWhere()")
+      val (affected, _, _) = planSkipping(base, table, column, lo, hi)
+      if (affected.isEmpty) Some((base.version, 0L, 0L))
+      else {
+        // DV-aware source: a copy-on-write rewrite of a file that carries a
+        // deletion vector must start from its LIVE rows, or the remove+add
+        // swap resurrects the vector's deleted rows
+        val affectedDf = scanWithDvs(spark, table, schemaOf(base, table),
+          affected, base.dvs)
+        val rowsBefore = affectedDf.count()
+        val kept = affectedDf.where(not(c_(column).between(lo, hi)))
+        val rowsAfter = kept.count()
+        // stage replacements (commit-private dir, the writeTagged discipline)
+        val v = base.version + 1
+        val token = stagingToken()
+        val staged = s"data/v$v-del-$token"
+        val adds = stageReplacementAdds(spark, table, kept, staged, column,
+          base.partCols)
+        val removes = affected.map(removeLine(_))
+        // CDF: the deleted rows themselves ride in the commit as change
+        // data (the rewrite's add/remove mix is underivable — survivors
+        // move files)
+        val cdc =
+          if (!cdfEnabled(base.config)) Seq.empty
+          else stageCdc(spark, table,
+            affectedDf.where(c_(column).between(lo, hi))
+              .withColumn("_change_type", lit("delete")), v, token)
+        claim(spark, table, base,
+          commitInfoLine("DELETE") +: (removes ++ adds ++ cdc),
+          staged, cdcDir(v, token))
+          .map(v => (v, affected.size.toLong, rowsBefore - rowsAfter))
+      }
+    }
   }
 
   /** Partition-grain DELETE — the canonical 100 TB retention op (drop a
@@ -2140,38 +2100,37 @@ object DeltaLite {
   def deletePartition(spark: SparkSession, table: String, partCol: String,
       value: String): (Long, Long, Long) = {
     import org.apache.spark.sql.functions.lit
-    val fs = hadoopFs(spark, table)
-    requireNotMapped(spark, table, "deletePartition()")
-    requireAppendsOnly(spark, table, "deletePartition()")
-    val latest = latestVersion(spark, table)
-    require(latest >= 0, s"$table has no Delta log")
-    val snap = snapshot(spark, table, latest)
-    require(snap.partCols == Seq(partCol),
-      s"$table is partitioned by [${snap.partCols.mkString(", ")}], " +
-        s"not by $partCol")
-    val affected = snap.files.filter(f =>
-      snap.pvals.get(f).exists(pv =>
-        pv.contains(partCol) && pv(partCol) == value))
-    if (affected.isEmpty) return (latest, 0L, 0L)
-    val v = latest + 1
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    var rowsDeleted = -1L
-    val cdc =
-      if (!cdfEnabled(snap.config)) Seq.empty
+    commitOn(spark, table, "deletePartition") { snap =>
+      requireNotMapped(snap, table, "deletePartition()")
+      requireAppendsOnly(snap, table, "deletePartition()")
+      require(snap.version >= 0, s"$table has no Delta log")
+      require(snap.partCols == Seq(partCol),
+        s"$table is partitioned by [${snap.partCols.mkString(", ")}], " +
+          s"not by $partCol")
+      val affected = snap.files.filter(f =>
+        snap.pvals.get(f).exists(pv =>
+          pv.contains(partCol) && pv(partCol) == value))
+      if (affected.isEmpty) Some((snap.version, 0L, 0L))
       else {
-        val doomed = scanWithDvs(spark, table, tableSchema(spark, table),
-          affected, snap.dvs)
-          .withColumn("_change_type", lit("delete"))
-        rowsDeleted = doomed.count()
-        stageCdc(spark, table, doomed, v, token,
-          partitionValues = Map(partCol -> value))
+        val v = snap.version + 1
+        val token = stagingToken()
+        var rowsDeleted = -1L
+        val cdc =
+          if (!cdfEnabled(snap.config)) Seq.empty
+          else {
+            val doomed = scanWithDvs(spark, table, schemaOf(snap, table),
+              affected, snap.dvs)
+              .withColumn("_change_type", lit("delete"))
+            rowsDeleted = doomed.count()
+            stageCdc(spark, table, doomed, v, token,
+              partitionValues = Map(partCol -> value))
+          }
+        claim(spark, table, snap,
+          commitInfoLine("DELETE") +: (affected.map(removeLine(_)) ++ cdc),
+          cdcDir(v, token))
+          .map(v => (v, affected.size.toLong, rowsDeleted))
       }
-    val removes = affected.map(removeLine(_))
-    if (!tryCommit(fs, table, v,
-        commitInfoLine("DELETE") +: (removes ++ cdc)))
-      throw new IllegalStateException(
-        s"deletePartition lost the commit race on $table")
-    (v, affected.size.toLong, rowsDeleted)
+    }
   }
 
   /** TRUNCATE — remove every live file in ONE commit, zero data I/O
@@ -2182,28 +2141,27 @@ object DeltaLite {
     * data-sized, as it must be). Returns (version, filesRemoved). */
   def truncate(spark: SparkSession, table: String): (Long, Long) = {
     import org.apache.spark.sql.functions.lit
-    val fs = hadoopFs(spark, table)
-    requireAppendsOnly(spark, table, "truncate()")
-    val latest = latestVersion(spark, table)
-    require(latest >= 0, s"$table has no Delta log")
-    val snap = snapshot(spark, table, latest)
-    if (snap.files.isEmpty) return (latest, 0L)
-    val v = latest + 1
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    val cdc =
-      if (!cdfEnabled(snap.config)) Seq.empty
+    commitOn(spark, table, "truncate") { snap =>
+      requireAppendsOnly(snap, table, "truncate()")
+      require(snap.version >= 0, s"$table has no Delta log")
+      if (snap.files.isEmpty) Some((snap.version, 0L))
       else {
-        requireNotMapped(spark, table, "truncate() with CDF")
-        stageCdc(spark, table,
-          scanWithDvs(spark, table, tableSchema(spark, table),
-            snap.files, snap.dvs)
-            .withColumn("_change_type", lit("delete")), v, token)
+        val v = snap.version + 1
+        val token = stagingToken()
+        val cdc =
+          if (!cdfEnabled(snap.config)) Seq.empty
+          else {
+            requireNotMapped(snap, table, "truncate() with CDF")
+            stageCdc(spark, table,
+              scanWithDvs(spark, table, schemaOf(snap, table),
+                snap.files, snap.dvs)
+                .withColumn("_change_type", lit("delete")), v, token)
+          }
+        claim(spark, table, snap, commitInfoLine("TRUNCATE") +:
+            (snap.files.map(removeLine(_)) ++ cdc), cdcDir(v, token))
+          .map(v => (v, snap.files.size.toLong))
       }
-    if (!tryCommit(fs, table, v,
-        commitInfoLine("TRUNCATE") +: (snap.files.map(removeLine(_)) ++ cdc)))
-      throw new IllegalStateException(
-        s"truncate lost the commit race on $table")
-    (v, snap.files.size.toLong)
+    }
   }
 
   /** Row-level DELETE as a DELETION-VECTOR commit (merge-on-read) — the
@@ -2256,78 +2214,76 @@ object DeltaLite {
     def matched(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
       valueList.fold(c.between(lo, hi))(vs => c.isin(vs: _*))
     val fs = hadoopFs(spark, table)
-    requireAppendsOnly(spark, table, "deleteWhereDV()")
-    val latest = latestVersion(spark, table)
-    val snap = snapshot(spark, table, latest)
-    val (affected, _, _) = planSkipping(spark, table, column, lo, hi)
-    if (affected.isEmpty) return (latest, 0L, 0L)
-    val schema = tableSchema(spark, table)
-    val byFile = spark.read.schema(schema)
-      .parquet(affected.map(f => dataPath(table, f)): _*)
-      .select(c_("_metadata.file_path").as("__fp"),
-        c_("_metadata.row_index").as("__ri"), c_(column).as("__v"))
-      .where(matched(c_("__v")))
-      .groupBy("__fp")
-      .agg(sort_array(collect_list("__ri")).as("pos"))
-      .collect()
-    // scan paths are absolute and URI-encoded: their FileKey maps back to
-    // the log-relative path (a basename would not — one partitioned
-    // write reuses it in every `_p=` directory)
-    val byKey = affected.map(f => FileKey(dataPath(table, f)) -> f).toMap
-    val hits = byFile.toSeq.map(r =>
-      byKey(FileKey.ofUri(r.getString(0))) -> r.getSeq[Long](1).toArray)
-    val hitFiles = hits.map(_._1).toSet
-    val oldPos = dvPositions(spark, table, snap.dvs.filter(d => hitFiles(d._1)))
-    def numRecords(f: String): Option[Long] = snap.stats.get(f).flatMap { s =>
-      val n = mapper.readTree(s).path("numRecords")
-      if (n.isNumber) Some(n.asLong()) else None
+    // one attempt against the pinned head `snap`
+    def attempt(snap: Snapshot): Option[(Long, Long, Long)] = {
+      requireAppendsOnly(snap, table, "deleteWhereDV()")
+      val (affected, _, _) = planSkipping(snap, table, column, lo, hi)
+      if (affected.isEmpty) return Some((snap.version, 0L, 0L))
+      val schema = schemaOf(snap, table)
+      val byFile = spark.read.schema(schema)
+        .parquet(affected.map(f => dataPath(table, f)): _*)
+        .select(c_("_metadata.file_path").as("__fp"),
+          c_("_metadata.row_index").as("__ri"), c_(column).as("__v"))
+        .where(matched(c_("__v")))
+        .groupBy("__fp")
+        .agg(sort_array(collect_list("__ri")).as("pos"))
+        .collect()
+      // scan paths are absolute and URI-encoded: their FileKey maps back to
+      // the log-relative path (a basename would not — one partitioned
+      // write reuses it in every `_p=` directory)
+      val byKey = affected.map(f => FileKey(dataPath(table, f)) -> f).toMap
+      val hits = byFile.toSeq.map(r =>
+        byKey(FileKey.ofUri(r.getString(0))) -> r.getSeq[Long](1).toArray)
+      val hitFiles = hits.map(_._1).toSet
+      val oldPos = dvPositions(spark, table, snap.dvs.filter(d => hitFiles(d._1)))
+      def numRecords(f: String): Option[Long] = snap.stats.get(f).flatMap { s =>
+        val n = mapper.readTree(s).path("numRecords")
+        if (n.isNumber) Some(n.asLong()) else None
+      }
+      // union new positions into any existing vector; keep only files with
+      // NEWLY deleted rows
+      val perFile: Seq[(String, Long, Array[Long])] = hits.map { case (f, newPos) =>
+        val old = oldPos.getOrElse(FileKey(dataPath(table, f)), Array.empty[Long])
+        val union = (old ++ newPos).distinct.sorted
+        (f, old.length.toLong, union)
+      }.filter { case (_, oldN, union) => union.length > oldN }
+      if (perFile.isEmpty) return Some((snap.version, 0L, 0L))
+      val (fullyDeleted, partial) = perFile.partition { case (f, _, union) =>
+        numRecords(f).contains(union.length.toLong)
+      }
+      val descs =
+        if (partial.isEmpty) Seq.empty
+        else DeletionVectors.writeDvFile(fs, table, partial.map(_._3))
+      val actions =
+        fullyDeleted.map { case (f, _, _) => removeLine(f) } ++
+          partial.zip(descs).flatMap { case ((f, _, _), d) =>
+            val st = fs.getFileStatus(new Path(table, f))
+            Seq(removeLine(f),
+              addLine(f, st.getLen, st.getModificationTime, snap.stats.get(f),
+                dataChange = true, snap.pvals.getOrElse(f, Map.empty), Some(d)))
+          }
+      val v = snap.version + 1
+      val token = stagingToken()
+      // CDF: the NEWLY-masked rows are exactly the live rows of the touched
+      // files that match the predicate (the live scan already excludes
+      // positions an earlier vector masked — a re-delete feeds only its
+      // marginal rows, the same contract the return count keeps)
+      val cdc =
+        if (!cdfEnabled(snap.config)) Seq.empty
+        else stageCdc(spark, table,
+          scanWithDvs(spark, table, schema, perFile.map(_._1), snap.dvs)
+            .where(matched(c_(column)))
+            .withColumn("_change_type",
+              org.apache.spark.sql.functions.lit("delete")),
+          v, token)
+      val deleted = perFile.map { case (_, oldN, union) => union.length - oldN }.sum
+      claim(spark, table, snap,
+        (commitInfoLine("DELETE") +: raiseLine(snap, "deletionVectors")) ++
+          actions ++ cdc,
+        descs.headOption.map(_.relativePath).toSeq :+ cdcDir(v, token): _*)
+        .map(v => (v, perFile.size.toLong, deleted.toLong))
     }
-    // union new positions into any existing vector; keep only files with
-    // NEWLY deleted rows
-    val perFile: Seq[(String, Long, Array[Long])] = hits.map { case (f, newPos) =>
-      val old = oldPos.getOrElse(FileKey(dataPath(table, f)), Array.empty[Long])
-      val union = (old ++ newPos).distinct.sorted
-      (f, old.length.toLong, union)
-    }.filter { case (_, oldN, union) => union.length > oldN }
-    if (perFile.isEmpty) return (latest, 0L, 0L)
-    val (fullyDeleted, partial) = perFile.partition { case (f, _, union) =>
-      numRecords(f).contains(union.length.toLong)
-    }
-    val descs =
-      if (partial.isEmpty) Seq.empty
-      else DeletionVectors.writeDvFile(fs, table, partial.map(_._3))
-    val actions =
-      fullyDeleted.map { case (f, _, _) => removeLine(f) } ++
-        partial.zip(descs).flatMap { case ((f, _, _), d) =>
-          val st = fs.getFileStatus(new Path(table, f))
-          Seq(removeLine(f),
-            addLine(f, st.getLen, st.getModificationTime, snap.stats.get(f),
-              dataChange = true, snap.pvals.getOrElse(f, Map.empty), Some(d)))
-        }
-    val v = latest + 1
-    // CDF: the NEWLY-masked rows are exactly the live rows of the touched
-    // files that match the predicate (the live scan already excludes
-    // positions an earlier vector masked — a re-delete feeds only its
-    // marginal rows, the same contract the return count keeps)
-    val cdc =
-      if (!cdfEnabled(snap.config)) Seq.empty
-      else stageCdc(spark, table,
-        scanWithDvs(spark, table, schema, perFile.map(_._1), snap.dvs)
-          .where(matched(c_(column)))
-          .withColumn("_change_type",
-            org.apache.spark.sql.functions.lit("delete")),
-        v, java.util.UUID.randomUUID().toString.take(8))
-    // the features upgrade must CARRY any feature already on the table
-    // (a bare dv protocol would silently shed changeDataFeed)
-    val protoLine =
-      if (!cdfEnabled(snap.config)) dvProtocolLine
-      else protocolLineOf(Protocol(3, 7, Seq("deletionVectors"),
-        Seq("deletionVectors", "changeDataFeed")))
-    if (!tryCommit(fs, table, v,
-        Seq(commitInfoLine("DELETE"), protoLine) ++ actions ++ cdc))
-      throw new IllegalStateException(s"DV delete lost the commit race on $table")
-    val deleted = perFile.map { case (_, oldN, union) => union.length - oldN }.sum
-    (v, perFile.size.toLong, deleted.toLong)
+    commitOn(spark, table, "DV delete")(attempt)
   }
 
   /** SHALLOW CLONE (Delta's zero-copy CLONE): `dst` is created by ONE
@@ -2347,48 +2303,45 @@ object DeltaLite {
     * source has in-commit timestamps enabled, the clone commit stamps
     * itself so the chain continues ([[stampInCommitTimestamp]]). */
   def shallowClone(spark: SparkSession, src: String, dst: String,
-      now: Long = System.currentTimeMillis()): Long = {
-    val fs = hadoopFs(spark, dst)
-    require(latestVersion(spark, dst) < 0, s"$dst already has a Delta log")
-    val srcLatest = latestVersion(spark, src)
-    require(srcLatest >= 0, s"$src has no Delta log to clone")
-    val snap = snapshot(spark, src, srcLatest)
-    require(snap.dvs.isEmpty,
-      s"shallow clone of $src: live deletion vectors would be dropped by " +
-        "an absolute-path scan — optimize (compact) the source first")
-    val (_, sj) = snap.meta.getOrElse(
-      throw new IllegalArgumentException(s"no metaData in $src log"))
-    val schema = DataType.fromJson(sj).asInstanceOf[StructType]
-    require(!isColumnMapped(schema),
-      s"shallow clone of $src: column-mapped sources are outside this " +
-        "subset — read via the columnMapped ops")
-    val srcRoot = new Path(src)
-    val srcFs = hadoopFs(spark, src)
-    val ict = snap.config.get("delta.enableInCommitTimestamps").contains("true")
-    // ICT enablement provenance refers to SOURCE version numbering — the
-    // clone's log restarts at v0, so carrying the source's boundary would
-    // lie to any reader that trusts it; rewrite the pair for the clone
-    val cloneConfig =
-      if (!ict) snap.config
-      else snap.config ++ Map(
-        "delta.inCommitTimestampEnablementVersion" -> "0",
-        "delta.inCommitTimestampEnablementTimestamp" -> now.toString)
-    val lines =
-      (if (ict) ictCommitInfoLine("CLONE", now) else commitInfoLine("CLONE")) +:
-      snap.protocol.map(protocolLineOf).getOrElse(protocolLine) +:
-      metaDataLine(schema, partitionColumns = snap.partCols,
-        configuration = cloneConfig) +:
-      snap.files.map { f =>
-        val abs = new Path(srcRoot, f)
-        val st = srcFs.getFileStatus(abs)
-        addLine(abs.toString, st.getLen, st.getModificationTime,
-          stats = snap.stats.get(f),
-          partitionValues = snap.pvals.getOrElse(f, Map.empty))
-      }
-    if (!tryCommit(fs, dst, 0L, lines))
-      throw new IllegalStateException(s"clone lost the race creating $dst")
-    0L
-  }
+      now: Long = System.currentTimeMillis()): Long =
+    commitOn(spark, dst, "clone") { base =>
+      require(base.version < 0, s"$dst already has a Delta log")
+      val snap = head(spark, src)
+      require(snap.version >= 0, s"$src has no Delta log to clone")
+      require(snap.dvs.isEmpty,
+        s"shallow clone of $src: live deletion vectors would be dropped by " +
+          "an absolute-path scan — optimize (compact) the source first")
+      val (_, sj) = snap.meta.getOrElse(
+        throw new IllegalArgumentException(s"no metaData in $src log"))
+      val schema = DataType.fromJson(sj).asInstanceOf[StructType]
+      require(!isColumnMapped(schema),
+        s"shallow clone of $src: column-mapped sources are outside this " +
+          "subset — read via the columnMapped ops")
+      val srcRoot = new Path(src)
+      val srcFs = hadoopFs(spark, src)
+      val ict = snap.config.get("delta.enableInCommitTimestamps").contains("true")
+      // ICT enablement provenance refers to SOURCE version numbering — the
+      // clone's log restarts at v0, so carrying the source's boundary would
+      // lie to any reader that trusts it; rewrite the pair for the clone
+      val cloneConfig =
+        if (!ict) snap.config
+        else snap.config ++ Map(
+          "delta.inCommitTimestampEnablementVersion" -> "0",
+          "delta.inCommitTimestampEnablementTimestamp" -> now.toString)
+      val lines =
+        (if (ict) ictCommitInfoLine("CLONE", now) else commitInfoLine("CLONE")) +:
+        snap.protocol.map(protocolLineOf).getOrElse(protocolLine) +:
+        metaDataLine(schema, partitionColumns = snap.partCols,
+          configuration = cloneConfig) +:
+        snap.files.map { f =>
+          val abs = new Path(srcRoot, f)
+          val st = srcFs.getFileStatus(abs)
+          addLine(abs.toString, st.getLen, st.getModificationTime,
+            stats = snap.stats.get(f),
+            partitionValues = snap.pvals.getOrElse(f, Map.empty))
+        }
+      claim(spark, dst, base, lines)
+    }
 
   /** RESTORE to an earlier version as a NEW commit (Delta's own rollback
     * model — history is preserved, nothing rewinds): the restore version
@@ -2397,29 +2350,26 @@ object DeltaLite {
     * version. */
   def restore(spark: SparkSession, table: String, toVersion: Long): Long = {
     val fs = hadoopFs(spark, table)
-    requireAppendsOnly(spark, table, "restore()")
-    val latest = latestVersion(spark, table)
-    val target = snapshot(spark, table, toVersion)
-    val current = snapshot(spark, table, latest)
-    // a path live in BOTH snapshots still needs a remove+add when its
-    // deletion-vector state differs — restoring past a DV delete must
-    // resurrect the rows (and vice versa), not just the file set
-    val dvChanged = target.files.filter(current.files.contains)
-      .filter(f => target.dvs.get(f) != current.dvs.get(f))
-    val removes = (current.files.filterNot(target.files.contains) ++ dvChanged)
-      .map(removeLine(_))
-    val adds = (target.files.filterNot(current.files.contains) ++ dvChanged)
-      .map { f =>
-        val st = fs.getFileStatus(new Path(table, f))
-        addLine(f, st.getLen, st.getModificationTime, target.stats.get(f),
-          dataChange = true, target.pvals.getOrElse(f, Map.empty),
-          target.dvs.get(f))
-      }
-    val v = latest + 1
-    if (!tryCommit(fs, table, v,
-        commitInfoLine("RESTORE") +: (removes ++ adds)))
-      throw new IllegalStateException(s"restore lost the commit race on $table")
-    v
+    commitOn(spark, table, "restore") { current =>
+      requireAppendsOnly(current, table, "restore()")
+      val target = snapshot(spark, table, toVersion)
+      // a path live in BOTH snapshots still needs a remove+add when its
+      // deletion-vector state differs — restoring past a DV delete must
+      // resurrect the rows (and vice versa), not just the file set
+      val dvChanged = target.files.filter(current.files.contains)
+        .filter(f => target.dvs.get(f) != current.dvs.get(f))
+      val removes = (current.files.filterNot(target.files.contains) ++ dvChanged)
+        .map(removeLine(_))
+      val adds = (target.files.filterNot(current.files.contains) ++ dvChanged)
+        .map { f =>
+          val st = fs.getFileStatus(new Path(table, f))
+          addLine(f, st.getLen, st.getModificationTime, target.stats.get(f),
+            dataChange = true, target.pvals.getOrElse(f, Map.empty),
+            target.dvs.get(f))
+        }
+      claim(spark, table, current,
+        commitInfoLine("RESTORE") +: (removes ++ adds))
+    }
   }
 
   /** DESCRIBE HISTORY — one row per retained commit straight off the log
@@ -2472,12 +2422,17 @@ object DeltaLite {
   def readWithStats(spark: SparkSession, table: String,
       versionAsOf: Long = -1L): (DataFrame, Snapshot) = {
     val snap = snapshotAt(spark, table, versionAsOf)
+    (readOf(spark, table, snap), snap)
+  }
+
+  /** The logical rows of `snap` — [[read]] over an already-assembled
+    * snapshot (how an op reads its pinned head). */
+  private def readOf(spark: SparkSession, table: String,
+      snap: Snapshot): DataFrame = {
     // Delta readers always apply the TABLE schema (newest metaData at or
     // below the read version) — files predating an evolution surface the
     // added columns as NULL, never via per-file inference
-    val schema = DataType.fromJson(snap.meta.getOrElse(
-      throw new IllegalArgumentException(s"no metaData in $table log"))._2)
-      .asInstanceOf[StructType]
+    val schema = schemaOf(snap, table)
     // column mapping: data files store PHYSICAL names — scan under the
     // physical schema, then alias every column back to its logical name
     // (per-version: a read below a rename surfaces that version's names)
@@ -2492,13 +2447,11 @@ object DeltaLite {
       else d.select(schema.fields.map(f =>
         org.apache.spark.sql.functions.col(physicalName(f)).as(f.name))
         .toIndexedSeq: _*)
-    val df =
-      if (snap.files.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          schema)
-      else toLogical(scanWithDvs(spark, table, scanSchema, snap.files,
-        snap.dvs))
-    (df, snap)
+    if (snap.files.isEmpty)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        schema)
+    else toLogical(scanWithDvs(spark, table, scanSchema, snap.files,
+      snap.dvs))
   }
 
   // ----------------------------------------------------------------------
@@ -2539,11 +2492,15 @@ object DeltaLite {
     c.put("dataChange", false)
   }
 
+  /** A protocol action; the feature lists exist only at reader 3 /
+    * writer 7, as the spec requires. */
   private def protocolLineOf(p: Protocol): String = jsonObj("protocol") { o =>
     o.put("minReaderVersion", p.minReader)
     o.put("minWriterVersion", p.minWriter)
-    if (p.readerFeatures.nonEmpty || p.writerFeatures.nonEmpty) {
+    if (p.minReader >= 3) {
       val rf = o.putArray("readerFeatures"); p.readerFeatures.foreach(rf.add)
+    }
+    if (p.minWriter >= 7) {
       val wf = o.putArray("writerFeatures"); p.writerFeatures.foreach(wf.add)
     }
   }
@@ -2572,43 +2529,27 @@ object DeltaLite {
   def setDomainMetadata(spark: SparkSession, table: String, domain: String,
       configuration: String): Long = {
     require(domain.nonEmpty, "domain name must be non-empty")
-    val fs = hadoopFs(spark, table)
-    val latest = latestVersion(spark, table)
-    require(latest >= 0, s"$table has no Delta log")
-    val snap = snapshot(spark, table, latest)
-    val cur = snap.protocol.getOrElse(Protocol(1, 2, Nil, Nil))
-    val protoLines =
-      if (cur.minWriter >= 7 && cur.writerFeatures.contains("domainMetadata"))
-        Seq.empty
-      else Seq(protocolLineOf(Protocol(cur.minReader, 7, cur.readerFeatures,
-        (cur.writerFeatures :+ "domainMetadata").distinct)))
-    val v = latest + 1
-    if (!tryCommit(fs, table, v,
-        commitInfoLine("SET DOMAIN METADATA") +: protoLines :+
-          domainMetadataLine(domain, configuration, removed = false)))
-      throw new IllegalStateException(
-        s"setDomainMetadata lost the commit race on $table")
-    v
+    commitOn(spark, table, "setDomainMetadata") { snap =>
+      require(snap.version >= 0, s"$table has no Delta log")
+      claim(spark, table, snap,
+        commitInfoLine("SET DOMAIN METADATA") +:
+          raiseLine(snap, "domainMetadata") :+
+          domainMetadataLine(domain, configuration, removed = false))
+    }
   }
 
   /** Remove a domain: a tombstone action — replay (and the next
     * checkpoint, which carries only LIVE domains) drops it. Refuses an
     * absent domain rather than committing a no-op tombstone. */
   def removeDomainMetadata(spark: SparkSession, table: String,
-      domain: String): Long = {
-    val fs = hadoopFs(spark, table)
-    val latest = latestVersion(spark, table)
-    require(latest >= 0, s"$table has no Delta log")
-    val snap = snapshot(spark, table, latest)
-    require(snap.domains.contains(domain),
-      s"domain '$domain' not present on $table — nothing to remove")
-    val v = latest + 1
-    if (!tryCommit(fs, table, v, Seq(commitInfoLine("REMOVE DOMAIN METADATA"),
-        domainMetadataLine(domain, "", removed = true))))
-      throw new IllegalStateException(
-        s"removeDomainMetadata lost the commit race on $table")
-    v
-  }
+      domain: String): Long =
+    commitOn(spark, table, "removeDomainMetadata") { snap =>
+      require(snap.version >= 0, s"$table has no Delta log")
+      require(snap.domains.contains(domain),
+        s"domain '$domain' not present on $table — nothing to remove")
+      claim(spark, table, snap, Seq(commitInfoLine("REMOVE DOMAIN METADATA"),
+        domainMetadataLine(domain, "", removed = true)))
+    }
 
   /** The live domain → configuration map at the latest (or given)
     * version. */
@@ -2643,32 +2584,21 @@ object DeltaLite {
     * and metadata cleanup — the timestamp must live IN the commit.
     * `now` is injectable for deterministic tests. Idempotent. */
   def enableInCommitTimestamps(spark: SparkSession, table: String,
-      now: Long = System.currentTimeMillis()): Long = {
-    val fs = hadoopFs(spark, table)
-    val latest = latestVersion(spark, table)
-    require(latest >= 0, s"$table has no Delta log")
-    val snap = snapshot(spark, table, latest)
-    if (snap.config.get("delta.enableInCommitTimestamps").contains("true"))
-      return latest
-    val (id, sj) = snap.meta.getOrElse(
-      throw new IllegalArgumentException(s"no metaData in $table log"))
-    val cur = snap.protocol.getOrElse(Protocol(1, 2, Nil, Nil))
-    val upgraded = Protocol(cur.minReader, 7, cur.readerFeatures,
-      (cur.writerFeatures :+ "inCommitTimestamp").distinct)
-    val schema = DataType.fromJson(sj).asInstanceOf[StructType]
-    val v = latest + 1
-    if (!tryCommit(fs, table, v, Seq(
-        ictCommitInfoLine("SET TBLPROPERTIES", now),
-        protocolLineOf(upgraded),
-        metaDataLine(schema, id, partitionColumns = snap.partCols,
-          configuration = snap.config ++ Map(
-            "delta.enableInCommitTimestamps" -> "true",
-            "delta.inCommitTimestampEnablementVersion" -> v.toString,
-            "delta.inCommitTimestampEnablementTimestamp" -> now.toString)))))
-      throw new IllegalStateException(
-        s"enableInCommitTimestamps lost the commit race on $table")
-    v
-  }
+      now: Long = System.currentTimeMillis()): Long =
+    commitOn(spark, table, "enableInCommitTimestamps") { snap =>
+      val (id, schema) = metaOf(snap, table)
+      if (snap.config.get("delta.enableInCommitTimestamps").contains("true"))
+        Some(snap.version)
+      else claim(spark, table, snap,
+        ictCommitInfoLine("SET TBLPROPERTIES", now) +:
+          raiseLine(snap, "inCommitTimestamp") :+
+          metaDataLine(schema, id, partitionColumns = snap.partCols,
+            configuration = snap.config ++ Map(
+              "delta.enableInCommitTimestamps" -> "true",
+              "delta.inCommitTimestampEnablementVersion" ->
+                (snap.version + 1).toString,
+              "delta.inCommitTimestampEnablementTimestamp" -> now.toString)))
+    }
 
   /** The (version, inCommitTimestamp) ledger of every retained commit
     * that carries a stamp, ascending — the table's time axis. */
@@ -2703,40 +2633,31 @@ object DeltaLite {
     read(spark, table, versionAsOf = v)
   }
 
-  def enableCdf(spark: SparkSession, table: String): Long = {
-    val fs = hadoopFs(spark, table)
-    requireNotMapped(spark, table, "enableCdf()")
-    val latest = latestVersion(spark, table)
-    require(latest >= 0, s"$table has no Delta log")
-    val snap = snapshot(spark, table, latest)
-    if (cdfEnabled(snap.config)) return latest
-    val (id, sj) = snap.meta.getOrElse(
-      throw new IllegalArgumentException(s"no metaData in $table log"))
-    val cur = snap.protocol.getOrElse(Protocol(1, 2, Nil, Nil))
-    val upgraded =
-      if (cur.minWriter >= 7)
-        cur.copy(writerFeatures = (cur.writerFeatures :+ "changeDataFeed").distinct)
-      else cur.copy(minWriter = math.max(cur.minWriter, 4))
-    val schema = DataType.fromJson(sj).asInstanceOf[StructType]
-    val v = latest + 1
-    if (!tryCommit(fs, table, v, Seq(
-        commitInfoLine("SET TBLPROPERTIES"),
-        protocolLineOf(upgraded),
-        metaDataLine(schema, id, partitionColumns = snap.partCols,
-          configuration = snap.config + (CdfKey -> "true")))))
-      throw new IllegalStateException(s"enableCdf lost the commit race on $table")
-    v
-  }
+  def enableCdf(spark: SparkSession, table: String): Long =
+    commitOn(spark, table, "enableCdf") { snap =>
+      requireNotMapped(snap, table, "enableCdf()")
+      val (id, schema) = metaOf(snap, table)
+      if (cdfEnabled(snap.config)) Some(snap.version)
+      else claim(spark, table, snap,
+        commitInfoLine("SET TBLPROPERTIES") +:
+          raiseLine(snap, "changeDataFeed") :+
+          metaDataLine(schema, id, partitionColumns = snap.partCols,
+            configuration = snap.config + (CdfKey -> "true")))
+    }
 
   /** Stage `df` (table columns + `_change_type`) as this commit's change
     * data and return the `cdc` action lines referencing it.
     * `partitionValues` is recorded on every action when the staged rows
     * all belong to one partition (the [[deletePartition]] shape) — the
     * log-level knowledge [[readCdf]] prunes on. */
+  /** The commit-private directory of version `v`'s change data. */
+  private def cdcDir(v: Long, token: String): String =
+    s"_change_data/v$v-$token"
+
   private def stageCdc(spark: SparkSession, table: String, df: DataFrame,
       v: Long, token: String,
       partitionValues: Map[String, String] = Map.empty): Seq[String] = {
-    val dir = s"_change_data/v$v-$token"
+    val dir = cdcDir(v, token)
     df.write.mode("errorifexists").parquet(s"$table/$dir")
     val fs = hadoopFs(spark, table)
     fs.listStatus(new Path(table, dir))
@@ -2786,52 +2707,53 @@ object DeltaLite {
       lo: Long, hi: Long,
       set: Map[String, org.apache.spark.sql.Column]): (Long, Long, Long) = {
     import org.apache.spark.sql.functions.{col => c_, lit, not}
-    val fs = hadoopFs(spark, table)
-    requireNotMapped(spark, table, "updateWhere()")
-    requireAppendsOnly(spark, table, "updateWhere()")
-    val latest = latestVersion(spark, table)
-    val snap = snapshot(spark, table, latest)
-    val (affected, _, _) = planSkipping(spark, table, column, lo, hi)
-    if (affected.isEmpty) return (latest, 0L, 0L)
-    val schema = tableSchema(spark, table)
-    require(set.keySet.subsetOf(schema.fieldNames.toSet),
-      s"unknown columns in SET: ${set.keySet -- schema.fieldNames}")
-    val gen = generatedColumns(schema)
-    require(set.keySet.intersect(gen.keySet).isEmpty,
-      s"cannot SET generated column(s) ${set.keySet.intersect(gen.keySet)}" +
-        " — their values are the generation expressions'")
-    val src = scanWithDvs(spark, table, schema, affected, snap.dvs)
-    val matched = src.where(c_(column).between(lo, hi))
-    val assigned = set.foldLeft(matched) { case (d, (k, expr)) =>
-      d.withColumn(k, expr)
+    // one attempt against the pinned head `snap`
+    def attempt(snap: Snapshot): Option[(Long, Long, Long)] = {
+      requireNotMapped(snap, table, "updateWhere()")
+      requireAppendsOnly(snap, table, "updateWhere()")
+      val (affected, _, _) = planSkipping(snap, table, column, lo, hi)
+      if (affected.isEmpty) return Some((snap.version, 0L, 0L))
+      val schema = schemaOf(snap, table)
+      require(set.keySet.subsetOf(schema.fieldNames.toSet),
+        s"unknown columns in SET: ${set.keySet -- schema.fieldNames}")
+      val gen = generatedColumns(schema)
+      require(set.keySet.intersect(gen.keySet).isEmpty,
+        s"cannot SET generated column(s) ${set.keySet.intersect(gen.keySet)}" +
+          " — their values are the generation expressions'")
+      val src = scanWithDvs(spark, table, schema, affected, snap.dvs)
+      val matched = src.where(c_(column).between(lo, hi))
+      val assigned = set.foldLeft(matched) { case (d, (k, expr)) =>
+        d.withColumn(k, expr)
+      }
+      // recompute generated columns over the post-assignment rows: an
+      // update that moved a generation source must regenerate, never stale
+      val updated = gen.foldLeft(assigned) { case (d, (k, sql)) =>
+        d.withColumn(k, org.apache.spark.sql.functions.expr(sql))
+      }.select(schema.fieldNames.map(c_).toIndexedSeq: _*)
+      enforceConstraints(snap, updated)
+      val rowsUpdated = matched.count()
+      val replacement = src.where(not(c_(column).between(lo, hi)))
+        .unionByName(updated)
+      val v = snap.version + 1
+      val token = stagingToken()
+      val staged = s"data/v$v-upd-$token"
+      // bounds for the planning column are recomputed over the staged
+      // files inside the restage (an assignment may have moved `column`)
+      val adds = stageReplacementAdds(spark, table, replacement, staged,
+        column, snap.partCols)
+      val removes = affected.map(removeLine(_))
+      val cdc =
+        if (!cdfEnabled(snap.config)) Seq.empty
+        else stageCdc(spark, table,
+          matched.withColumn("_change_type", lit("update_preimage"))
+            .unionByName(updated.withColumn("_change_type",
+              lit("update_postimage"))), v, token)
+      claim(spark, table, snap,
+        commitInfoLine("UPDATE") +: (removes ++ adds ++ cdc),
+        staged, cdcDir(v, token))
+        .map(v => (v, affected.size.toLong, rowsUpdated))
     }
-    // recompute generated columns over the post-assignment rows: an
-    // update that moved a generation source must regenerate, never stale
-    val updated = gen.foldLeft(assigned) { case (d, (k, sql)) =>
-      d.withColumn(k, org.apache.spark.sql.functions.expr(sql))
-    }.select(schema.fieldNames.map(c_).toIndexedSeq: _*)
-    enforceConstraints(spark, table, updated)
-    val rowsUpdated = matched.count()
-    val replacement = src.where(not(c_(column).between(lo, hi)))
-      .unionByName(updated)
-    val v = latest + 1
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    val staged = s"data/v$v-upd-$token"
-    // bounds for the planning column are recomputed over the staged
-    // files inside the restage (an assignment may have moved `column`)
-    val adds = stageReplacementAdds(spark, table, replacement, staged,
-      column, snap.partCols)
-    val removes = affected.map(removeLine(_))
-    val cdc =
-      if (!cdfEnabled(snap.config)) Seq.empty
-      else stageCdc(spark, table,
-        matched.withColumn("_change_type", lit("update_preimage"))
-          .unionByName(updated.withColumn("_change_type",
-            lit("update_postimage"))), v, token)
-    if (!tryCommit(fs, table, v,
-        commitInfoLine("UPDATE") +: (removes ++ adds ++ cdc)))
-      throw new IllegalStateException(s"update lost the commit race on $table")
-    (v, affected.size.toLong, rowsUpdated)
+    commitOn(spark, table, "update")(attempt)
   }
 
   /** The pieces the SQL row-level operation pins at creation: live
@@ -2846,13 +2768,12 @@ object DeltaLite {
   private[graft] def rowLevelSnapshot(spark: SparkSession, table: String)
       : (Seq[String], Map[String, DeletionVectors.Descriptor], StructType,
         Seq[String]) = {
-    val latest = latestVersion(spark, table)
-    require(latest >= 0, s"$table has no Delta log")
-    val snap = snapshot(spark, table, latest)
+    val snap = head(spark, table)
+    val (_, schema) = metaOf(snap, table)
     require(snap.partCols.size <= 1,
       "SQL row-level operations support at most one partition column " +
         "(the writePartitioned subset)")
-    (snap.files, snap.dvs, tableSchema(spark, table), snap.partCols)
+    (snap.files, snap.dvs, schema, snap.partCols)
   }
 
   /** Commit a COPY-ON-WRITE replacement written by the SQL row-level
@@ -2865,11 +2786,8 @@ object DeltaLite {
       operation: String,
       partitionValues: Map[String, Map[String, String]] = Map.empty,
       pinnedDvs: Option[Map[String, DeletionVectors.Descriptor]] = None)
-      : Long = {
-    val fs = hadoopFs(spark, table)
-    val adds = committedAdds(spark, table, addRel, partitionValues)
-    Occ.commit(operation, table)(latestVersion(spark, table)) { base =>
-      val v = base + 1
+      : Long =
+    commitOn(spark, table, operation) { prev =>
       // OPTIMISTIC CONFLICT RESOLUTION (Delta's own rule): the rewrite
       // may commit at the head ONLY if every file it removes is still
       // live there — a concurrent APPEND commutes with this rewrite; a
@@ -2880,34 +2798,30 @@ object DeltaLite {
       // scan's snapshot pin and this commit would otherwise be clobbered
       // on a FIRST-attempt CAS that sees the compacted head as prev
       // (removes match nothing, adds duplicate the rewritten rows).
-      locally {
-        val prev = snapshot(spark, table, v - 1)
-        val live = prev.files.toSet
-        require(removeRel.forall(live.contains),
-          s"$operation on $table conflicts with a concurrent commit " +
-            "that rewrote the same files — re-run the statement against " +
-            "the new snapshot")
-        // Liveness alone is BLIND to a concurrent deleteWhereDV: a DV
-        // commit removes+re-adds the same path (the path stays live),
-        // but this rewrite was staged from the OLDER mask, so committing
-        // would resurrect the concurrently DV-deleted rows. The pin is
-        // the Delta twin of Iceberg's pinnedDeleteFiles check (X300):
-        // refuse when any removed file's DV descriptor changed since the
-        // row-level snapshot was taken.
-        pinnedDvs.foreach { pin =>
-          require(removeRel.forall(f => prev.dvs.get(f) == pin.get(f)),
-            s"$operation on $table conflicts with a concurrent " +
-              "deletion-vector commit on the same files — re-run the " +
-              "statement against the new snapshot")
-        }
+      val live = prev.files.toSet
+      require(removeRel.forall(live.contains),
+        s"$operation on $table conflicts with a concurrent commit " +
+          "that rewrote the same files — re-run the statement against " +
+          "the new snapshot")
+      // Liveness alone is BLIND to a concurrent deleteWhereDV: a DV
+      // commit removes+re-adds the same path (the path stays live),
+      // but this rewrite was staged from the OLDER mask, so committing
+      // would resurrect the concurrently DV-deleted rows. The pin is
+      // the Delta twin of Iceberg's pinnedDeleteFiles check (X300):
+      // refuse when any removed file's DV descriptor changed since the
+      // row-level snapshot was taken.
+      pinnedDvs.foreach { pin =>
+        require(removeRel.forall(f => prev.dvs.get(f) == pin.get(f)),
+          s"$operation on $table conflicts with a concurrent " +
+            "deletion-vector commit on the same files — re-run the " +
+            "statement against the new snapshot")
       }
-      // the files are the SQL writers', not this attempt's: a lost race
+      // the files are the SQL writers', not this attempt's: a lost claim
       // leaves them for the next try
-      Option.when(tryCommit(fs, table, v,
-        commitInfoLine(operation) +:
-          (removeRel.map(removeLine(_)) ++ adds)))(v)
+      claim(spark, table, prev, commitInfoLine(operation) +:
+        (removeRel.map(removeLine(_)) ++
+          committedAdds(spark, table, prev, addRel, partitionValues)))
     }
-  }
 
   /** Exactly-once STREAMING epoch commit for the SQL
     * `writeStream.toTable` path (X286): the staged files the epoch's
@@ -2926,19 +2840,15 @@ object DeltaLite {
   private[graft] def commitStreamFiles(spark: SparkSession, table: String,
       addRel: Seq[String], epochId: Long,
       appId: String = TxnAppId,
-      partitionValues: Map[String, Map[String, String]] = Map.empty): Long = {
-    val fs = hadoopFs(spark, table)
-    lazy val adds = committedAdds(spark, table, addRel, partitionValues)
+      partitionValues: Map[String, Map[String, String]] = Map.empty): Long =
     // OPTIMISTIC RETRY: two streaming queries (or a query and a batch
     // writer) legitimately race one table; an epoch append conflicts
     // with nothing, so losing the arbiter race just means re-reading
     // the head — the per-appId ledger check re-runs each attempt so a
     // replay that lands concurrently still no-ops.
-    Occ.commit(s"streaming epoch $epochId", table)(
-        latestVersion(spark, table)) { latest =>
-      require(latest >= 0,
+    commitOn(spark, table, s"streaming epoch $epochId") { snapS =>
+      require(snapS.version >= 0,
         s"$table has no Delta log — CREATE TABLE through the catalog first")
-      val snapS = snapshot(spark, table, latest)
       // a PARTITIONED table's epochs must declare partitionValues on
       // every add (the rolling streaming writers do) — a value-less add
       // would be a file planPartitioned silently excludes
@@ -2948,13 +2858,11 @@ object DeltaLite {
           "partitionValues")
       // a replayed epoch, or an empty one: nothing to commit
       if (snapS.txns.get(appId).exists(_ >= epochId) || addRel.isEmpty)
-        Some(latest)
-      else
-        Option.when(tryCommit(fs, table, latest + 1,
-          Seq(commitInfoLine("STREAMING UPDATE"),
-            txnLine(appId, epochId)) ++ adds))(latest + 1)
+        Some(snapS.version)
+      else claim(spark, table, snapS,
+        Seq(commitInfoLine("STREAMING UPDATE"), txnLine(appId, epochId)) ++
+          committedAdds(spark, table, snapS, addRel, partitionValues))
     }
-  }
 
   /** The `add` lines of files the SQL writers staged (table-relative
     * `addRel`, each with its declared partition values), with
@@ -2962,11 +2870,11 @@ object DeltaLite {
     * commit path feeds so skipping keeps working on rewritten/streamed
     * files. */
   private def committedAdds(spark: SparkSession, table: String,
-      addRel: Seq[String],
+      snap: Snapshot, addRel: Seq[String],
       partitionValues: Map[String, Map[String, String]]): Seq[String] = {
     if (addRel.isEmpty) return Nil
     val fs = hadoopFs(spark, table)
-    val schema = tableSchema(spark, table)
+    val schema = schemaOf(snap, table)
     // column-mapped staged files carry PHYSICAL names — logical-name
     // stats would mis-scan, and the skipping layer refuses mapped
     // tables anyway (requireNotMapped): commit without stats
@@ -3009,123 +2917,126 @@ object DeltaLite {
       keyCol: String,
       deleteWhen: Option[org.apache.spark.sql.Column] = None)
       : (Long, Long, Long, Long) = {
-    import org.apache.spark.sql.functions.{coalesce, col => c_, collect_set, count => cnt_, countDistinct, lit, max => mx_, min => mn_, not, sum => sum_, when}
-    val fs = hadoopFs(spark, table)
-    requireNotMapped(spark, table, "mergeInto()")
-    requireAppendsOnly(spark, table, "mergeInto()")
-    val latest = latestVersion(spark, table)
-    require(latest >= 0, s"$table has no Delta log")
-    val snap = snapshot(spark, table, latest)
-    require(snap.partCols.isEmpty,
-      "mergeInto on partitioned tables is outside the subset — " +
-        "deletePartition + write for partition-grain maintenance")
-    val schema = tableSchema(spark, table)
-    require(schema.fieldNames.toSet.subsetOf(source.columns.toSet),
-      s"MERGE source is missing table column(s): " +
-        s"${schema.fieldNames.toSet -- source.columns}")
-    require(schema.fieldNames.contains(keyCol), s"key $keyCol not in $table")
-    require(schema(keyCol).dataType == LongType,
-      s"mergeInto keys on a LONG column (the stats layer's type); " +
-        s"$keyCol is ${schema(keyCol).dataType}")
-    val src = source.select(schema.fieldNames.map(c_).toIndexedSeq :+
-        coalesce(deleteWhen.getOrElse(lit(false)), lit(false)).as("__del"): _*)
-      .persist()
-    try {
-      val nSrc = src.count()
-      require(nSrc > 0, "empty MERGE source")
-      require(src.select(keyCol).distinct().count() == nSrc,
-        s"duplicate $keyCol values in MERGE source — ambiguous matches")
-      // (1) stats-planned candidates: committed [min,max] vs source range
-      val b = src.agg(mn_(c_(keyCol)), mx_(c_(keyCol))).collect()(0)
-      val (srcLo, srcHi) = (b.getLong(0), b.getLong(1))
-      def bounds(f: String): Option[(Long, Long)] = snap.stats.get(f)
-        .flatMap { s =>
-          val n = mapper.readTree(s)
-          val lo = n.path("minValues").path(keyCol)
-          val hi = n.path("maxValues").path(keyCol)
-          if (lo.isNumber && hi.isNumber) Some((lo.asLong(), hi.asLong()))
-          else None
+    import org.apache.spark.sql.functions.{coalesce, col => c_, collect_set, count => cnt_, countDistinct, lit, max => mx_, min => mn_, not, when}
+    // one attempt against the pinned head `snap`
+    def attempt(snap: Snapshot): Option[(Long, Long, Long, Long)] = {
+      requireNotMapped(snap, table, "mergeInto()")
+      requireAppendsOnly(snap, table, "mergeInto()")
+      val (_, schema) = metaOf(snap, table)
+      require(snap.partCols.isEmpty,
+        "mergeInto on partitioned tables is outside the subset — " +
+          "deletePartition + write for partition-grain maintenance")
+      require(schema.fieldNames.toSet.subsetOf(source.columns.toSet),
+        s"MERGE source is missing table column(s): " +
+          s"${schema.fieldNames.toSet -- source.columns}")
+      require(schema.fieldNames.contains(keyCol), s"key $keyCol not in $table")
+      require(schema(keyCol).dataType == LongType,
+        s"mergeInto keys on a LONG column (the stats layer's type); " +
+          s"$keyCol is ${schema(keyCol).dataType}")
+      val src = source.select(schema.fieldNames.map(c_).toIndexedSeq :+
+          coalesce(deleteWhen.getOrElse(lit(false)), lit(false)).as("__del"): _*)
+        .persist()
+      try {
+        val nSrc = src.count()
+        require(nSrc > 0, "empty MERGE source")
+        require(src.select(keyCol).distinct().count() == nSrc,
+          s"duplicate $keyCol values in MERGE source — ambiguous matches")
+        // (1) stats-planned candidates: committed [min,max] vs source range
+        val b = src.agg(mn_(c_(keyCol)), mx_(c_(keyCol))).collect()(0)
+        val (srcLo, srcHi) = (b.getLong(0), b.getLong(1))
+        def bounds(f: String): Option[(Long, Long)] = snap.stats.get(f)
+          .flatMap { s =>
+            val n = mapper.readTree(s)
+            val lo = n.path("minValues").path(keyCol)
+            val hi = n.path("maxValues").path(keyCol)
+            if (lo.isNumber && hi.isNumber) Some((lo.asLong(), hi.asLong()))
+            else None
+          }
+        val candidates = snap.files.filter(f => bounds(f) match {
+          case Some((fLo, fHi)) => fHi >= srcLo && fLo <= srcHi
+          case None => true // no stats: must be scanned
+        })
+        // live rows of `files` with their [[FileKey]] as `__fn`
+        def liveWithFile(files: Seq[String]): DataFrame =
+          scanWithDvs(spark, table, schema, files, snap.dvs)
+            .withColumn("__fn", FileKey.column(c_("_metadata.file_path")))
+        // (2) exact touched set + match counts, one key-column pass
+        val (rowsMatched, matchedKeys, deletedKeys, touched) =
+          if (candidates.isEmpty) (0L, 0L, 0L, Set.empty[String])
+          else {
+            val m = liveWithFile(candidates)
+              .select(c_(keyCol), c_("__fn"))
+              .join(src.select(c_(keyCol), c_("__del")), Seq(keyCol))
+              .agg(cnt_(lit(1)).as("n"), countDistinct(c_(keyCol)).as("nk"),
+                countDistinct(when(c_("__del"), c_(keyCol))).as("ndel"),
+                collect_set("__fn").as("fns"))
+              .collect()(0)
+            (m.getAs[Long]("n"), m.getAs[Long]("nk"), m.getAs[Long]("ndel"),
+              m.getAs[scala.collection.Seq[String]]("fns").toSet)
+          }
+        require(rowsMatched == matchedKeys,
+          s"duplicate $keyCol values among matched TARGET rows " +
+            s"($rowsMatched rows across $matchedKeys keys) — ambiguous MERGE")
+        val rowsUpdated = matchedKeys - deletedKeys
+        val rowsInserted = src.where(not(c_("__del"))).count() - rowsUpdated
+        val upserts0 = applyGenerated(snap, table,
+          src.where(not(c_("__del")))
+            .select(schema.fieldNames.map(c_).toIndexedSeq: _*))
+        enforceConstraints(snap, upserts0)
+        val v = snap.version + 1
+        val token = stagingToken()
+        if (touched.isEmpty) {
+          // nothing matched: pure append (inserts only; unmatched deletes
+          // are no-ops), the plain write's commit. CDF consumers derive
+          // inserts from the adds.
+          if (rowsInserted == 0) return Some((snap.version, 0L, 0L, 0L))
+          val staged = s"data/v$v-$token"
+          val adds = addsOf(spark, Staging.write(table, staged, upserts0),
+            Some(longCols(schema)))
+          return claim(spark, table, snap, commitInfoLine("WRITE") +: adds,
+            staged).map(v => (v, 0L, 0L, rowsInserted))
         }
-      val candidates = snap.files.filter(f => bounds(f) match {
-        case Some((fLo, fHi)) => fHi >= srcLo && fLo <= srcHi
-        case None => true // no stats: must be scanned
-      })
-      // live rows of `files` with their [[FileKey]] as `__fn`
-      def liveWithFile(files: Seq[String]): DataFrame =
-        scanWithDvs(spark, table, schema, files, snap.dvs)
-          .withColumn("__fn", FileKey.column(c_("_metadata.file_path")))
-      // (2) exact touched set + match counts, one key-column pass
-      val (rowsMatched, matchedKeys, deletedKeys, touched) =
-        if (candidates.isEmpty) (0L, 0L, 0L, Set.empty[String])
-        else {
-          val m = liveWithFile(candidates)
-            .select(c_(keyCol), c_("__fn"))
-            .join(src.select(c_(keyCol), c_("__del")), Seq(keyCol))
-            .agg(cnt_(lit(1)).as("n"), countDistinct(c_(keyCol)).as("nk"),
-              countDistinct(when(c_("__del"), c_(keyCol))).as("ndel"),
-              collect_set("__fn").as("fns"))
-            .collect()(0)
-          (m.getAs[Long]("n"), m.getAs[Long]("nk"), m.getAs[Long]("ndel"),
-            m.getAs[scala.collection.Seq[String]]("fns").toSet)
-        }
-      require(rowsMatched == matchedKeys,
-        s"duplicate $keyCol values among matched TARGET rows " +
-          s"($rowsMatched rows across $matchedKeys keys) — ambiguous MERGE")
-      val rowsUpdated = matchedKeys - deletedKeys
-      val rowsInserted = src.where(not(c_("__del"))).count() - rowsUpdated
-      val upserts0 = applyGenerated(spark, table,
-        src.where(not(c_("__del")))
-          .select(schema.fieldNames.map(c_).toIndexedSeq: _*))
-      enforceConstraints(spark, table, upserts0)
-      if (touched.isEmpty) {
-        // nothing matched: pure append (inserts only; unmatched deletes
-        // are no-ops). CDF consumers derive inserts from the adds.
-        if (rowsInserted == 0) return (latest, 0L, 0L, 0L)
-        val v = write(spark, upserts0, table, collectStats = true)
-        return (v, 0L, 0L, rowsInserted)
-      }
-      val byKey = candidates.map(f => FileKey(dataPath(table, f)) -> f).toMap
-      val touchedRel = touched.toSeq.sorted.map(byKey)
-      // (3) rewrite = touched files' surviving live rows + every upsert
-      val liveTouched = liveWithFile(touchedRel)
-      val survivors = liveTouched
-        .join(src.select(keyCol), Seq(keyCol), "left_anti")
-        .drop("__fn")
-        .select(schema.fieldNames.map(c_).toIndexedSeq: _*)
-      val v = latest + 1
-      val token = java.util.UUID.randomUUID().toString.take(8)
-      val staged = s"data/v$v-mrg-$token"
-      val adds = stageReplacementAdds(spark, table,
-        survivors.unionByName(upserts0), staged, keyCol, Seq.empty)
-      val removes = touchedRel.map(removeLine(_))
-      // row-level change data: the rewrite's add/remove mix is
-      // underivable (carried survivors moved files)
-      val cdc =
-        if (!cdfEnabled(snap.config)) Seq.empty
-        else {
-          val matchedTarget = liveTouched.drop("__fn")
-            .join(src.select(c_(keyCol), c_("__del")), Seq(keyCol))
-          val liveKeys = liveTouched.select(keyCol).distinct()
-          val pre = matchedTarget.where(not(c_("__del"))).drop("__del")
-            .withColumn("_change_type", lit("update_preimage"))
-          val post = src.join(liveKeys, Seq(keyCol), "left_semi")
-            .where(not(c_("__del"))).drop("__del")
-            .withColumn("_change_type", lit("update_postimage"))
-          val dels = matchedTarget.where(c_("__del")).drop("__del")
-            .withColumn("_change_type", lit("delete"))
-          val ins = src.join(liveKeys, Seq(keyCol), "left_anti")
-            .where(not(c_("__del"))).drop("__del")
-            .withColumn("_change_type", lit("insert"))
-          stageCdc(spark, table,
-            pre.unionByName(post).unionByName(dels).unionByName(ins),
-            v, token)
-        }
-      if (!tryCommit(fs, table, v,
-          commitInfoLine("MERGE") +: (removes ++ adds ++ cdc)))
-        throw new IllegalStateException(
-          s"merge lost the commit race on $table")
-      (v, rowsUpdated, deletedKeys, rowsInserted)
-    } finally src.unpersist()
+        val byKey = candidates.map(f => FileKey(dataPath(table, f)) -> f).toMap
+        val touchedRel = touched.toSeq.sorted.map(byKey)
+        // (3) rewrite = touched files' surviving live rows + every upsert
+        val liveTouched = liveWithFile(touchedRel)
+        val survivors = liveTouched
+          .join(src.select(keyCol), Seq(keyCol), "left_anti")
+          .drop("__fn")
+          .select(schema.fieldNames.map(c_).toIndexedSeq: _*)
+        val staged = s"data/v$v-mrg-$token"
+        val adds = stageReplacementAdds(spark, table,
+          survivors.unionByName(upserts0), staged, keyCol, Seq.empty)
+        val removes = touchedRel.map(removeLine(_))
+        // row-level change data: the rewrite's add/remove mix is
+        // underivable (carried survivors moved files)
+        val cdc =
+          if (!cdfEnabled(snap.config)) Seq.empty
+          else {
+            val matchedTarget = liveTouched.drop("__fn")
+              .join(src.select(c_(keyCol), c_("__del")), Seq(keyCol))
+            val liveKeys = liveTouched.select(keyCol).distinct()
+            val pre = matchedTarget.where(not(c_("__del"))).drop("__del")
+              .withColumn("_change_type", lit("update_preimage"))
+            val post = src.join(liveKeys, Seq(keyCol), "left_semi")
+              .where(not(c_("__del"))).drop("__del")
+              .withColumn("_change_type", lit("update_postimage"))
+            val dels = matchedTarget.where(c_("__del")).drop("__del")
+              .withColumn("_change_type", lit("delete"))
+            val ins = src.join(liveKeys, Seq(keyCol), "left_anti")
+              .where(not(c_("__del"))).drop("__del")
+              .withColumn("_change_type", lit("insert"))
+            stageCdc(spark, table,
+              pre.unionByName(post).unionByName(dels).unionByName(ins),
+              v, token)
+          }
+        claim(spark, table, snap,
+          commitInfoLine("MERGE") +: (removes ++ adds ++ cdc),
+          staged, cdcDir(v, token))
+          .map(v => (v, rowsUpdated, deletedKeys, rowsInserted))
+      } finally src.unpersist()
+    }
+    commitOn(spark, table, "merge")(attempt)
   }
 
   /** Read the row-level change feed for versions (fromV, toV]: table
@@ -3212,7 +3123,7 @@ object DeltaLite {
       : DataFrame = {
     import org.apache.spark.sql.functions.{col => c_, lit}
     val fs = hadoopFs(spark, table)
-    requireNotMapped(spark, table, "readCdf()")
+    requireNotMapped(head(spark, table), table, "readCdf()")
     require(cdfEnabled(snapshot(spark, table, fromV).config),
       s"change data feed not enabled on $table at version $fromV")
     val schema = tableSchema(spark, table, toV)

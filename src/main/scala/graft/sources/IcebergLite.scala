@@ -44,10 +44,14 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructType}
   * manifest kinds), [[mergeInto]] is a file-granular copy-on-write MERGE,
   * [[evolvePartitionSpec]] evolves hidden partitioning without rewrites,
   * and [[rewriteDataFiles]] materializes deletes away.
-  * Conformance subset (documented, not hidden): required fields only, no
-  * metrics maps / split offsets / puffin DVs; `version-hint.text` is
-  * maintained best-effort (the spec itself marks it advisory — the
-  * authoritative pointer is the highest committed metadata version).
+  * Conformance subset (documented, not hidden): the spec's column-stats
+  * maps (`statsColumns`), Puffin table statistics ([[writeStatistics]])
+  * and format-v3 Puffin deletion vectors ([[deleteWhereDV]]) are
+  * written; split offsets are not. `version-hint.text` is rewritten
+  * after every won metadata claim ([[claimMetadata]]) — advisory, as the
+  * spec marks it: the authoritative pointer is the highest committed
+  * metadata version. Every metadata version is claimed inside
+  * [[Occ.commit]], so a lost claim replans on the new head.
   *
   * Scale shape: all three metadata layers are control-plane (small files,
   * parsed driver-side — Iceberg's own planning path); the data plane is
@@ -487,19 +491,19 @@ object IcebergLite {
   def createTable(spark: SparkSession, table: String, schema: StructType,
       partitionField: Option[PartField] = None): Long = {
     val fs = hadoopFs(spark, table)
-    require(latestMetadataVersion(spark, table) == 0,
-      s"$table already has Iceberg metadata — CREATE TABLE refuses to clobber")
-    fs.mkdirs(metaDir(table))
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    val listName = s"snap-1-$token.avro"
-    writeManifestList(table, listName, Seq.empty, v2 = false)
-    if (!commitMetadataJson(fs, table, 0, None, 1, 1L, schema,
-        partitionField, listName, "append", Map.empty)) {
-      fs.delete(new Path(metaDir(table), listName), false)
-      throw new IllegalStateException(
-        s"CREATE TABLE lost the commit race on $table")
+    Occ.commit("CREATE TABLE", table)(latestMetadataVersion(spark, table)) {
+        prevV =>
+      // a writer that lost v1 to a concurrent CREATE refuses here on retry
+      require(prevV == 0,
+        s"$table already has Iceberg metadata — CREATE TABLE refuses to clobber")
+      fs.mkdirs(metaDir(table))
+      val token = java.util.UUID.randomUUID().toString.take(8)
+      val listName = s"snap-1-$token.avro"
+      writeManifestList(table, listName, Seq.empty, v2 = false)
+      if (commitMetadataJson(fs, table, 0, None, 1, 1L, schema,
+          partitionField, listName, "append", Map.empty)) Some(1L)
+      else { fs.delete(new Path(metaDir(table), listName), false); None }
     }
-    1L
   }
 
   def write(spark: SparkSession, df: DataFrame, table: String,
@@ -528,7 +532,7 @@ object IcebergLite {
         timestampMs, requireSourceSnapshot))
 
   /** One [[write]] attempt against metadata version `prevV` (0 before the
-    * first commit): None when the commit lost the race for `prevV + 1`. */
+    * first commit): None when another writer claimed `prevV + 1`. */
   private def writeAt(spark: SparkSession, df: DataFrame, table: String,
       prevV: Int,
       overwrite: Boolean,
@@ -618,7 +622,7 @@ object IcebergLite {
       operation.getOrElse(if (overwrite) "overwrite" else "append"),
       summaryProps, toBranch, timestampMs)
     if (!committed) {
-      // lost the race: remove THIS attempt's commit-private artifacts
+      // a lost claim: remove THIS attempt's commit-private artifacts
       // (nothing references them) and let the caller replan
       fs.delete(new Path(table, staged), true)
       fs.delete(new Path(metaDir(table), manifestName), false)
@@ -807,16 +811,44 @@ object IcebergLite {
     }
     root.putArray("snapshot-log")
     root.putArray("metadata-log")
-    val committed = AtomicCreate.create(fs, metaFile(table, prevV + 1),
+    claimMetadata(fs, table, prevV, root)
+  }
+
+  /** Claim metadata version `prevV + 1` with `meta` by atomic create — the
+    * one writer of `v<N>.metadata.json`, always inside an [[Occ.commit]]
+    * attempt — and on a won claim point `version-hint.text` at it
+    * (advisory, per the spec). False when a racing writer took the
+    * version: the attempt cleans up what it staged and answers None. */
+  private def claimMetadata(fs: FileSystem, table: String, prevV: Int,
+      meta: com.fasterxml.jackson.databind.JsonNode): Boolean = {
+    val won = AtomicCreate.create(fs, metaFile(table, prevV + 1),
       mapper.writerWithDefaultPrettyPrinter()
-        .writeValueAsString(root).getBytes(StandardCharsets.UTF_8))
-    if (committed) {
-      // advisory pointer (spec: best-effort)
+        .writeValueAsString(meta).getBytes(StandardCharsets.UTF_8))
+    if (won) {
       val hint = fs.create(new Path(metaDir(table), "version-hint.text"), true)
       try hint.write(s"${prevV + 1}".getBytes(StandardCharsets.UTF_8))
       finally hint.close()
     }
-    committed
+    won
+  }
+
+  /** A METADATA-ONLY commit (refs, schema, spec, sort order, format
+    * version): each [[Occ.commit]] attempt hands `edit` a private copy of
+    * the pinned head's metadata; `edit` checks against it, edits it in
+    * place and answers whether anything changed (false: the head stands
+    * and its version is returned). Returns the resulting metadata
+    * version. */
+  private def commitMetadataEdit(spark: SparkSession, table: String,
+      op: String)(
+      edit: com.fasterxml.jackson.databind.node.ObjectNode => Boolean): Int = {
+    val fs = hadoopFs(spark, table)
+    Occ.commit(op, table)(latestMetadataVersion(spark, table)) { v =>
+      require(v > 0, s"$table has no Iceberg metadata")
+      val meta = readMetadata(fs, table, v)
+        .deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]()
+      if (!edit(meta)) Some(v)
+      else Option.when(claimMetadata(fs, table, v, meta))(v + 1)
+    }
   }
 
   /** The ledger name for batch-side [[commitIdempotent]] sinks and the
@@ -884,23 +916,14 @@ object IcebergLite {
     require(refType == "tag" || refType == "branch",
       s"ref type must be tag|branch, got $refType")
     require(name != "main", "main is maintained by commits; pick another name")
-    val fs = hadoopFs(spark, table)
-    val v = latestMetadataVersion(spark, table)
-    require(v > 0, s"$table has no Iceberg metadata")
-    val meta = readMetadata(fs, table, v)
-      .deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]()
-    require(metaJsonSnapshots(meta).exists(_._1 == snapshotId),
-      s"snapshot $snapshotId not in $table metadata — cannot ref it")
-    val refs = meta.`with`("refs")
-    val r = refs.putObject(name)
-    r.put("snapshot-id", snapshotId)
-    r.put("type", refType)
-    if (!AtomicCreate.create(fs, metaFile(table, v + 1),
-        mapper.writerWithDefaultPrettyPrinter()
-          .writeValueAsString(meta).getBytes(StandardCharsets.UTF_8)))
-      throw new IllegalStateException(
-        s"setRef lost the commit race for metadata v${v + 1} on $table")
-    v + 1
+    commitMetadataEdit(spark, table, "setRef") { meta =>
+      require(metaJsonSnapshots(meta).exists(_._1 == snapshotId),
+        s"snapshot $snapshotId not in $table metadata — cannot ref it")
+      val r = meta.`with`("refs").putObject(name)
+      r.put("snapshot-id", snapshotId)
+      r.put("type", refType)
+      true
+    }
   }
 
   /** ROLLBACK to a retained snapshot (Iceberg's `rollback_to_snapshot`
@@ -916,45 +939,29 @@ object IcebergLite {
     * current metadata version); an unknown or expired snapshot
     * refuses. */
   def rollbackTo(spark: SparkSession, table: String,
-      snapshotId: Long): Int = {
-    val fs = hadoopFs(spark, table)
-    val v = latestMetadataVersion(spark, table)
-    require(v > 0, s"$table has no Iceberg metadata")
-    val meta = readMetadata(fs, table, v)
-    require(metaJsonSnapshots(meta).exists(_._1 == snapshotId),
-      s"snapshot $snapshotId not in $table metadata (expired or never " +
-        "committed) — cannot roll back to it")
-    if (meta.get("current-snapshot-id").asLong() == snapshotId) return v
-    val copy = meta.deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]()
-    copy.put("current-snapshot-id", snapshotId)
-    val main = copy.`with`("refs").putObject("main")
-    main.put("snapshot-id", snapshotId)
-    main.put("type", "branch")
-    if (!AtomicCreate.create(fs, metaFile(table, v + 1),
-        mapper.writerWithDefaultPrettyPrinter()
-          .writeValueAsString(copy).getBytes(StandardCharsets.UTF_8)))
-      throw new IllegalStateException(
-        s"rollbackTo lost the commit race for metadata v${v + 1} on $table")
-    v + 1
-  }
+      snapshotId: Long): Int =
+    commitMetadataEdit(spark, table, "rollbackTo") { meta =>
+      require(metaJsonSnapshots(meta).exists(_._1 == snapshotId),
+        s"snapshot $snapshotId not in $table metadata (expired or never " +
+          "committed) — cannot roll back to it")
+      meta.get("current-snapshot-id").asLong() != snapshotId && {
+        meta.put("current-snapshot-id", snapshotId)
+        val main = meta.`with`("refs").putObject("main")
+        main.put("snapshot-id", snapshotId)
+        main.put("type", "branch")
+        true
+      }
+    }
 
   /** Delete a named ref (metadata-only); its snapshot becomes an ordinary
     * expiration candidate again. */
   def dropRef(spark: SparkSession, table: String, name: String): Int = {
     require(name != "main", "cannot drop main")
-    val fs = hadoopFs(spark, table)
-    val v = latestMetadataVersion(spark, table)
-    require(v > 0, s"$table has no Iceberg metadata")
-    val meta = readMetadata(fs, table, v)
-      .deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]()
-    require(meta.path("refs").has(name), s"no ref $name on $table")
-    meta.`with`("refs").remove(name)
-    if (!AtomicCreate.create(fs, metaFile(table, v + 1),
-        mapper.writerWithDefaultPrettyPrinter()
-          .writeValueAsString(meta).getBytes(StandardCharsets.UTF_8)))
-      throw new IllegalStateException(
-        s"dropRef lost the commit race for metadata v${v + 1} on $table")
-    v + 1
+    commitMetadataEdit(spark, table, "dropRef") { meta =>
+      require(meta.path("refs").has(name), s"no ref $name on $table")
+      meta.`with`("refs").remove(name)
+      true
+    }
   }
 
   /** METADATA-ONLY schema evolution — SQL `ALTER TABLE ADD COLUMNS`'s
@@ -1021,48 +1028,39 @@ object IcebergLite {
   private def evolveSchema(spark: SparkSession, table: String, op: String)(
       f: Seq[(Int, String, org.apache.spark.sql.types.DataType)] =>
         (Seq[(Int, String, org.apache.spark.sql.types.DataType)],
-         Option[(String, org.apache.spark.sql.types.DataType)])): Int = {
-    val fs = hadoopFs(spark, table)
-    val v = latestMetadataVersion(spark, table)
-    require(v > 0, s"$table has no Iceberg metadata")
-    val meta = readMetadata(fs, table, v)
-    val cur = schemaFieldsById(meta, meta.get("current-schema-id").asInt())
-    val (kept, appended) = f(cur)
-    val lastCol = math.max(meta.path("last-column-id").asInt(0),
-      cur.map(_._1).max)
-    val evolved = kept ++ appended.map { case (n, t) => (lastCol + 1, n, t) }
-    // the partition/sort source columns must keep resolving by id
-    meta.get("partition-specs").forEach(s => s.get("fields").forEach { pf =>
-      val sid = pf.get("source-id").asInt()
-      require(evolved.exists(_._1 == sid),
-        s"$op on $table would orphan partition source-id $sid — " +
-          "evolve the partition spec first")
-    })
-    val copy = meta.deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]()
-    var maxSid = 0
-    copy.get("schemas").forEach(s =>
-      maxSid = math.max(maxSid, s.get("schema-id").asInt()))
-    val sid = maxSid + 1
-    val sn = copy.withArray("schemas").addObject()
-    sn.put("type", "struct")
-    sn.put("schema-id", sid)
-    val arr = sn.putArray("fields")
-    evolved.foreach { case (id, n, t) =>
-      val fn = arr.addObject()
-      fn.put("id", id)
-      fn.put("name", n)
-      fn.put("required", false)
-      fn.put("type", icebergType(t))
+         Option[(String, org.apache.spark.sql.types.DataType)])): Int =
+    commitMetadataEdit(spark, table, op) { meta =>
+      val cur = schemaFieldsById(meta, meta.get("current-schema-id").asInt())
+      val (kept, appended) = f(cur)
+      val lastCol = math.max(meta.path("last-column-id").asInt(0),
+        cur.map(_._1).max)
+      val evolved = kept ++ appended.map { case (n, t) => (lastCol + 1, n, t) }
+      // the partition/sort source columns must keep resolving by id
+      meta.get("partition-specs").forEach(s => s.get("fields").forEach { pf =>
+        val sid = pf.get("source-id").asInt()
+        require(evolved.exists(_._1 == sid),
+          s"$op on $table would orphan partition source-id $sid — " +
+            "evolve the partition spec first")
+      })
+      var maxSid = 0
+      meta.get("schemas").forEach(s =>
+        maxSid = math.max(maxSid, s.get("schema-id").asInt()))
+      val sid = maxSid + 1
+      val sn = meta.withArray("schemas").addObject()
+      sn.put("type", "struct")
+      sn.put("schema-id", sid)
+      val arr = sn.putArray("fields")
+      evolved.foreach { case (id, n, t) =>
+        val fn = arr.addObject()
+        fn.put("id", id)
+        fn.put("name", n)
+        fn.put("required", false)
+        fn.put("type", icebergType(t))
+      }
+      meta.put("current-schema-id", sid)
+      meta.put("last-column-id", math.max(lastCol, evolved.map(_._1).max))
+      true
     }
-    copy.put("current-schema-id", sid)
-    copy.put("last-column-id", math.max(lastCol, evolved.map(_._1).max))
-    if (!AtomicCreate.create(fs, metaFile(table, v + 1),
-        mapper.writerWithDefaultPrettyPrinter()
-          .writeValueAsString(copy).getBytes(StandardCharsets.UTF_8)))
-      throw new IllegalStateException(
-        s"$op lost the commit race for metadata v${v + 1} on $table")
-    v + 1
-  }
 
   /** PARTITION SPEC EVOLUTION (spec §Partition Evolution) — the hidden-
     * partitioning payoff: change how FUTURE data is laid out without
@@ -1075,43 +1073,37 @@ object IcebergLite {
     * new. `None` evolves to unpartitioned. Re-declaring the current
     * default is a no-op (returns the current metadata version). */
   def evolvePartitionSpec(spark: SparkSession, table: String,
-      newSpec: Option[PartField]): Int = {
-    val fs = hadoopFs(spark, table)
-    val v = latestMetadataVersion(spark, table)
-    require(v > 0, s"$table has no Iceberg metadata")
-    val meta = readMetadata(fs, table, v)
-    if (partitionSpec(meta) == newSpec) return v
-    val schema = schemaForSnapshot(meta, meta.get("current-snapshot-id").asLong())
-    newSpec.foreach { f =>
-      require(schema.fieldNames.contains(f.source),
-        s"partition source column ${f.source} not in $table schema")
+      newSpec: Option[PartField]): Int =
+    commitMetadataEdit(spark, table, "evolvePartitionSpec") { meta =>
+      partitionSpec(meta) != newSpec && {
+        val schema =
+          schemaForSnapshot(meta, meta.get("current-snapshot-id").asLong())
+        newSpec.foreach { f =>
+          require(schema.fieldNames.contains(f.source),
+            s"partition source column ${f.source} not in $table schema")
+        }
+        var maxId = -1
+        meta.get("partition-specs").forEach(s =>
+          maxId = math.max(maxId, s.get("spec-id").asInt()))
+        val newId = maxId + 1
+        val spec = meta.withArray("partition-specs").addObject()
+        spec.put("spec-id", newId)
+        val fields = spec.putArray("fields")
+        newSpec.foreach { f =>
+          val pf = fields.addObject()
+          pf.put("name", f.fieldName)
+          pf.put("transform", f.transform)
+          pf.put("source-id", fieldIdOf(meta, f.source))
+          // spec rule: partition field ids are unique ACROSS specs
+          pf.put("field-id", meta.path("last-partition-id").asInt(999) + 1)
+        }
+        meta.put("default-spec-id", newId)
+        if (newSpec.isDefined)
+          meta.put("last-partition-id",
+            meta.path("last-partition-id").asInt(999) + 1)
+        true
+      }
     }
-    val copy = meta.deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]()
-    var maxId = -1
-    copy.get("partition-specs").forEach(s =>
-      maxId = math.max(maxId, s.get("spec-id").asInt()))
-    val newId = maxId + 1
-    val spec = copy.withArray("partition-specs").addObject()
-    spec.put("spec-id", newId)
-    val fields = spec.putArray("fields")
-    newSpec.foreach { f =>
-      val pf = fields.addObject()
-      pf.put("name", f.fieldName)
-      pf.put("transform", f.transform)
-      pf.put("source-id", fieldIdOf(meta, f.source))
-      // spec rule: partition field ids are unique ACROSS specs
-      pf.put("field-id", copy.path("last-partition-id").asInt(999) + 1)
-    }
-    copy.put("default-spec-id", newId)
-    if (newSpec.isDefined)
-      copy.put("last-partition-id", copy.path("last-partition-id").asInt(999) + 1)
-    if (!AtomicCreate.create(fs, metaFile(table, v + 1),
-        mapper.writerWithDefaultPrettyPrinter()
-          .writeValueAsString(copy).getBytes(StandardCharsets.UTF_8)))
-      throw new IllegalStateException(
-        s"evolvePartitionSpec lost the commit race for v${v + 1} on $table")
-    v + 1
-  }
 
   /** Declare the table's SORT ORDER (spec §Sort Orders): a METADATA-ONLY
     * commit appending an identity-transform ascending order on `column`
@@ -1123,41 +1115,33 @@ object IcebergLite {
     * [[planBounds]] pruning turns from no-op (hash layout: every file
     * spans the full range) to surgical. */
   def setSortOrder(spark: SparkSession, table: String,
-      column: String): Int = {
-    val fs = hadoopFs(spark, table)
-    val v = latestMetadataVersion(spark, table)
-    require(v > 0, s"$table has no Iceberg metadata")
-    val meta = readMetadata(fs, table, v)
-    val schema = schemaForSnapshot(meta, meta.get("current-snapshot-id").asLong())
-    require(schema.fieldNames.contains(column),
-      s"sort column $column not in $table schema")
-    val copy = meta.deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]()
-    var maxId = 0
-    if (copy.has("sort-orders"))
-      copy.get("sort-orders").forEach(o =>
-        maxId = math.max(maxId, o.get("order-id").asInt()))
-    else {
-      // spec: order-id 0 is reserved for "unsorted"
-      val unsorted = copy.putArray("sort-orders").addObject()
-      unsorted.put("order-id", 0)
-      unsorted.putArray("fields")
+      column: String): Int =
+    commitMetadataEdit(spark, table, "setSortOrder") { meta =>
+      val schema =
+        schemaForSnapshot(meta, meta.get("current-snapshot-id").asLong())
+      require(schema.fieldNames.contains(column),
+        s"sort column $column not in $table schema")
+      var maxId = 0
+      if (meta.has("sort-orders"))
+        meta.get("sort-orders").forEach(o =>
+          maxId = math.max(maxId, o.get("order-id").asInt()))
+      else {
+        // spec: order-id 0 is reserved for "unsorted"
+        val unsorted = meta.putArray("sort-orders").addObject()
+        unsorted.put("order-id", 0)
+        unsorted.putArray("fields")
+      }
+      val newId = maxId + 1
+      val order = meta.withArray("sort-orders").addObject()
+      order.put("order-id", newId)
+      val f = order.putArray("fields").addObject()
+      f.put("transform", "identity")
+      f.put("source-id", fieldIdOf(meta, column))
+      f.put("direction", "asc")
+      f.put("null-order", "nulls-first")
+      meta.put("default-sort-order-id", newId)
+      true
     }
-    val newId = maxId + 1
-    val order = copy.withArray("sort-orders").addObject()
-    order.put("order-id", newId)
-    val f = order.putArray("fields").addObject()
-    f.put("transform", "identity")
-    f.put("source-id", fieldIdOf(meta, column))
-    f.put("direction", "asc")
-    f.put("null-order", "nulls-first")
-    copy.put("default-sort-order-id", newId)
-    if (!AtomicCreate.create(fs, metaFile(table, v + 1),
-        mapper.writerWithDefaultPrettyPrinter()
-          .writeValueAsString(copy).getBytes(StandardCharsets.UTF_8)))
-      throw new IllegalStateException(
-        s"setSortOrder lost the commit race for v${v + 1} on $table")
-    v + 1
-  }
 
   /** TABLE STATISTICS in a PUFFIN file (spec §Table Statistics +
     * puffin-spec): distinct-count sketches for `columns`, computed at
@@ -1182,82 +1166,80 @@ object IcebergLite {
       columns: Seq[String]): Int = {
     require(columns.nonEmpty, "need at least one column to sketch")
     val fs = hadoopFs(spark, table)
-    val v = latestMetadataVersion(spark, table)
-    require(v > 0, s"$table has no Iceberg metadata")
-    val meta = readMetadata(fs, table, v)
-    val sid = meta.get("current-snapshot-id").asLong()
-    val seqNum = meta.path("last-sequence-number").asLong(sid)
-    val schema = schemaForSnapshot(meta, sid)
-    columns.foreach(c => require(schema.fieldNames.contains(c),
-      s"statistics column $c not in $table schema"))
-    val df = read(spark, table)
-      .select(columns.map(org.apache.spark.sql.functions.col): _*)
-    val n = columns.length
-    val partSketches = df.rdd.mapPartitions { it =>
-      val sks = Array.fill(n)(
-        org.apache.datasketches.theta.UpdateSketch.builder().build())
-      it.foreach { row =>
-        var i = 0
-        while (i < n) {
-          if (!row.isNullAt(i)) row.get(i) match {
-            case s: String => sks(i).update(s)
-            case l: Long => sks(i).update(l)
-            case d: Double => sks(i).update(d)
-            case other => sks(i).update(other.toString)
+    Occ.commit("writeStatistics", table)(latestMetadataVersion(spark, table)) {
+        v =>
+      require(v > 0, s"$table has no Iceberg metadata")
+      val meta = readMetadata(fs, table, v)
+      val sid = meta.get("current-snapshot-id").asLong()
+      val seqNum = meta.path("last-sequence-number").asLong(sid)
+      val schema = schemaForSnapshot(meta, sid)
+      columns.foreach(c => require(schema.fieldNames.contains(c),
+        s"statistics column $c not in $table schema"))
+      val df = read(spark, table)
+        .select(columns.map(org.apache.spark.sql.functions.col): _*)
+      val n = columns.length
+      val partSketches = df.rdd.mapPartitions { it =>
+        val sks = Array.fill(n)(
+          org.apache.datasketches.theta.UpdateSketch.builder().build())
+        it.foreach { row =>
+          var i = 0
+          while (i < n) {
+            if (!row.isNullAt(i)) row.get(i) match {
+              case s: String => sks(i).update(s)
+              case l: Long => sks(i).update(l)
+              case d: Double => sks(i).update(d)
+              case other => sks(i).update(other.toString)
+            }
+            i += 1
           }
-          i += 1
+        }
+        Iterator.single(sks.map(_.compact(true, null).toByteArray))
+      }.collect()
+      val merged = (0 until n).map { i =>
+        val u = org.apache.datasketches.theta.SetOperation.builder().buildUnion()
+        partSketches.foreach(p => u.union(
+          org.apache.datasketches.theta.CompactSketch.heapify(
+            org.apache.datasketches.memory.Memory.wrap(p(i)))))
+        u.getResult(true, null)
+      }
+      val blobs = columns.zip(merged).map { case (c, sk) =>
+        ("apache-datasketches-theta-v1",
+          Seq(fieldIdOf(meta, c)), sid, seqNum,
+          Map("ndv" -> Math.round(sk.getEstimate).toString), sk.toByteArray)
+      }
+      val written = Puffin.write(blobs,
+        Map("created-by" -> "graft IcebergLite"))
+      val statsPath = new Path(metaDir(table),
+        s"$sid-${java.util.UUID.randomUUID()}.stats.puffin")
+      val out = fs.create(statsPath, false)
+      try out.write(written.bytes) finally out.close()
+      val copy = meta.deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]()
+      val stats = mapper.createArrayNode()
+      if (copy.has("statistics")) copy.get("statistics").forEach(s =>
+        if (s.get("snapshot-id").asLong() != sid)
+          stats.add(s.deepCopy[com.fasterxml.jackson.databind.JsonNode]()))
+      val e = stats.addObject()
+      e.put("snapshot-id", sid)
+      e.put("statistics-path", statsPath.toString)
+      e.put("file-size-in-bytes", written.bytes.length.toLong)
+      e.put("file-footer-size-in-bytes", written.footerSize)
+      val bmArr = e.putArray("blob-metadata")
+      written.blobs.foreach { m =>
+        val b = bmArr.addObject()
+        b.put("type", m.blobType)
+        b.put("snapshot-id", m.snapshotId)
+        b.put("sequence-number", m.sequenceNumber)
+        val f = b.putArray("fields")
+        m.fields.foreach(f.add)
+        if (m.properties.nonEmpty) {
+          val p = b.putObject("properties")
+          m.properties.toSeq.sortBy(_._1).foreach { case (k, pv) => p.put(k, pv) }
         }
       }
-      Iterator.single(sks.map(_.compact(true, null).toByteArray))
-    }.collect()
-    val merged = (0 until n).map { i =>
-      val u = org.apache.datasketches.theta.SetOperation.builder().buildUnion()
-      partSketches.foreach(p => u.union(
-        org.apache.datasketches.theta.CompactSketch.heapify(
-          org.apache.datasketches.memory.Memory.wrap(p(i)))))
-      u.getResult(true, null)
+      copy.set[com.fasterxml.jackson.databind.node.ObjectNode]("statistics", stats)
+      if (claimMetadata(fs, table, v, copy)) Some(v + 1)
+      else { fs.delete(statsPath, false); None }
     }
-    val blobs = columns.zip(merged).map { case (c, sk) =>
-      ("apache-datasketches-theta-v1",
-        Seq(fieldIdOf(meta, c)), sid, seqNum,
-        Map("ndv" -> Math.round(sk.getEstimate).toString), sk.toByteArray)
-    }
-    val written = Puffin.write(blobs,
-      Map("created-by" -> "graft IcebergLite"))
-    val statsPath = new Path(metaDir(table),
-      s"$sid-${java.util.UUID.randomUUID()}.stats.puffin")
-    val out = fs.create(statsPath, false)
-    try out.write(written.bytes) finally out.close()
-    val copy = meta.deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]()
-    val stats = mapper.createArrayNode()
-    if (copy.has("statistics")) copy.get("statistics").forEach(s =>
-      if (s.get("snapshot-id").asLong() != sid)
-        stats.add(s.deepCopy[com.fasterxml.jackson.databind.JsonNode]()))
-    val e = stats.addObject()
-    e.put("snapshot-id", sid)
-    e.put("statistics-path", statsPath.toString)
-    e.put("file-size-in-bytes", written.bytes.length.toLong)
-    e.put("file-footer-size-in-bytes", written.footerSize)
-    val bmArr = e.putArray("blob-metadata")
-    written.blobs.foreach { m =>
-      val b = bmArr.addObject()
-      b.put("type", m.blobType)
-      b.put("snapshot-id", m.snapshotId)
-      b.put("sequence-number", m.sequenceNumber)
-      val f = b.putArray("fields")
-      m.fields.foreach(f.add)
-      if (m.properties.nonEmpty) {
-        val p = b.putObject("properties")
-        m.properties.toSeq.sortBy(_._1).foreach { case (k, pv) => p.put(k, pv) }
-      }
-    }
-    copy.set[com.fasterxml.jackson.databind.node.ObjectNode]("statistics", stats)
-    if (!AtomicCreate.create(fs, metaFile(table, v + 1),
-        mapper.writerWithDefaultPrettyPrinter()
-          .writeValueAsString(copy).getBytes(StandardCharsets.UTF_8)))
-      throw new IllegalStateException(
-        s"writeStatistics lost the commit race for v${v + 1} on $table")
-    v + 1
   }
 
   /** Re-anchor the table's statistics at the CURRENT snapshot (X303):
@@ -1391,64 +1373,56 @@ object IcebergLite {
     * separately to release the snapshots to expiration). Returns the new
     * metadata version. */
   def fastForward(spark: SparkSession, table: String,
-      branch: String): Int = {
-    val fs = hadoopFs(spark, table)
-    val v = latestMetadataVersion(spark, table)
-    require(v > 0, s"$table has no Iceberg metadata")
-    val meta = readMetadata(fs, table, v)
-    val br = meta.path("refs").path(branch)
-    require(!br.isMissingNode, s"no ref $branch on $table")
-    require(br.get("type").asText() == "branch",
-      s"$branch is a tag — only branches fast-forward")
-    val head = br.get("snapshot-id").asLong()
-    val mainHead = meta.get("current-snapshot-id").asLong()
-    if (head == mainHead) return v // nothing to publish
-    // ancestry proof: walk parent-snapshot-id from the branch head; it
-    // must pass through main's head. The walk can terminate three ways
-    // and only one is divergence — distinguish them, because the other
-    // two (a link pointing at an EXPIRED snapshot, or a snapshot
-    // committed before parent pointers existed) are unprovable-not-
-    // diverged: still refused (fail-safe — snapshot-log is written empty
-    // so there is no secondary lineage to fall back on), but with an
-    // error naming the actual obstacle so the operator knows re-cutting
-    // the branch (not merging) is the remedy.
-    val parents = mutable.Map.empty[Long, Long]
-    val known = mutable.Set.empty[Long]
-    meta.get("snapshots").forEach { s =>
-      known += s.get("snapshot-id").asLong()
-      if (s.has("parent-snapshot-id"))
-        parents(s.get("snapshot-id").asLong()) =
-          s.get("parent-snapshot-id").asLong()
+      branch: String): Int =
+    commitMetadataEdit(spark, table, "fastForward") { meta =>
+      val br = meta.path("refs").path(branch)
+      require(!br.isMissingNode, s"no ref $branch on $table")
+      require(br.get("type").asText() == "branch",
+        s"$branch is a tag — only branches fast-forward")
+      val head = br.get("snapshot-id").asLong()
+      val mainHead = meta.get("current-snapshot-id").asLong()
+      head != mainHead && { // equal: nothing to publish
+        // ancestry proof: walk parent-snapshot-id from the branch head; it
+        // must pass through main's head. The walk can terminate three ways
+        // and only one is divergence — distinguish them, because the other
+        // two (a link pointing at an EXPIRED snapshot, or a snapshot
+        // committed before parent pointers existed) are unprovable-not-
+        // diverged: still refused (fail-safe — snapshot-log is written empty
+        // so there is no secondary lineage to fall back on), but with an
+        // error naming the actual obstacle so the operator knows re-cutting
+        // the branch (not merging) is the remedy.
+        val parents = mutable.Map.empty[Long, Long]
+        val known = mutable.Set.empty[Long]
+        meta.get("snapshots").forEach { s =>
+          known += s.get("snapshot-id").asLong()
+          if (s.has("parent-snapshot-id"))
+            parents(s.get("snapshot-id").asLong()) =
+              s.get("parent-snapshot-id").asLong()
+        }
+        var cursor = head
+        var reaches = false
+        while (!reaches && parents.contains(cursor)) {
+          cursor = parents(cursor)
+          if (cursor == mainHead) reaches = true
+        }
+        if (!reaches && !known.contains(cursor))
+          throw new IllegalArgumentException(
+            s"cannot prove branch $branch (head $head) descends from main " +
+              s"(head $mainHead): ancestry chain breaks at expired snapshot " +
+              s"$cursor — fast-forward needs unexpired history from the " +
+              "branch head back to main; re-cut the branch from current main")
+        require(reaches, s"branch $branch (head $head) did not reach main " +
+          s"(head $mainHead) walking parent pointers (stopped at $cursor, " +
+          "which has none — main's fork point, the table's first snapshot, " +
+          "or a commit predating parent tracking): diverged or unprovable, " +
+          "cannot fast-forward; re-cut the branch from current main")
+        meta.put("current-snapshot-id", head)
+        val mainRef = meta.`with`("refs").putObject("main")
+        mainRef.put("snapshot-id", head)
+        mainRef.put("type", "branch")
+        true
+      }
     }
-    var cursor = head
-    var reaches = false
-    while (!reaches && parents.contains(cursor)) {
-      cursor = parents(cursor)
-      if (cursor == mainHead) reaches = true
-    }
-    if (!reaches && !known.contains(cursor))
-      throw new IllegalArgumentException(
-        s"cannot prove branch $branch (head $head) descends from main " +
-          s"(head $mainHead): ancestry chain breaks at expired snapshot " +
-          s"$cursor — fast-forward needs unexpired history from the " +
-          "branch head back to main; re-cut the branch from current main")
-    require(reaches, s"branch $branch (head $head) did not reach main " +
-      s"(head $mainHead) walking parent pointers (stopped at $cursor, " +
-      "which has none — main's fork point, the table's first snapshot, " +
-      "or a commit predating parent tracking): diverged or unprovable, " +
-      "cannot fast-forward; re-cut the branch from current main")
-    val copy = meta.deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]()
-    copy.put("current-snapshot-id", head)
-    val mainRef = copy.`with`("refs").putObject("main")
-    mainRef.put("snapshot-id", head)
-    mainRef.put("type", "branch")
-    if (!AtomicCreate.create(fs, metaFile(table, v + 1),
-        mapper.writerWithDefaultPrettyPrinter()
-          .writeValueAsString(copy).getBytes(StandardCharsets.UTF_8)))
-      throw new IllegalStateException(
-        s"fastForward lost the commit race for v${v + 1} on $table")
-    v + 1
-  }
 
   /** Resolve a named ref (branch or tag) to its snapshot id — the SQL
     * `VERSION AS OF '<ref>'` coordinate (X302). Ref-pointed snapshots
@@ -1491,55 +1465,56 @@ object IcebergLite {
   def expireSnapshots(spark: SparkSession, table: String,
       keepLast: Int, graceMs: Long = 0L): (Long, Long) = {
     val fs = hadoopFs(spark, table)
-    val v = latestMetadataVersion(spark, table)
-    require(v > 0, s"$table has no Iceberg metadata")
-    val meta = readMetadata(fs, table, v).deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]()
-    val snaps = mutable.ArrayBuffer.empty[com.fasterxml.jackson.databind.JsonNode]
-    meta.get("snapshots").forEach(s => snaps += s)
-    // ref-pointed snapshots are retained REGARDLESS of keepLast (spec
-    // §Refs retention): a tag exists precisely to outlive routine
-    // expiration; drop the ref to release the snapshot
-    val reffed = mutable.Set.empty[Long]
-    meta.path("refs").fields().forEachRemaining(e =>
-      reffed += e.getValue.get("snapshot-id").asLong())
-    val byAge = snaps.sortBy(_.get("snapshot-id").asLong())
-    val retained = (byAge.takeRight(keepLast) ++
-      byAge.filter(s => reffed.contains(s.get("snapshot-id").asLong())))
-      .distinctBy(_.get("snapshot-id").asLong())
-      .sortBy(_.get("snapshot-id").asLong())
-    val expired = snaps.size - retained.size
-    if (expired == 0) return (0L, 0L)
-    // exactly-once ledger preservation (r09 advisor finding): dropping a
-    // snapshot whose summary carries a `graft-batch-id` marker would let a
-    // redelivered batch re-commit. Fold the expired markers' high-water
-    // mark into table properties, where [[commitIdempotent]] consults it —
-    // batch ids are monotone, so the max subsumes every dropped marker.
-    val retainedIds = retained.map(_.get("snapshot-id").asLong()).toSet
-    val dropped = byAge.filterNot(s =>
-      retainedIds.contains(s.get("snapshot-id").asLong()))
-    // fold PER LEDGER: markers are query-scoped (graft-query-id; absent =
-    // the default foreachBatch ledger), so each query's dropped markers
-    // fold into that query's own high-water property — folding them all
-    // into one key would cross-contaminate concurrent queries' dedup
-    dropped.groupBy(_.get("summary").path("graft-query-id")
-        .asText("graft-stream"))
-      .foreach { case (appId, snapsOfLedger) =>
-        val key = if (appId == "graft-stream") "graft-max-batch-id"
-          else s"graft-max-batch-id.$appId"
-        val expiredHwm = snapsOfLedger
-          .map(_.get("summary").path("graft-batch-id").asLong(-1L))
-          .foldLeft(meta.path("properties").path(key).asLong(-1L))(math.max)
-        if (expiredHwm >= 0)
-          meta.`with`("properties").put(key, expiredHwm)
+    val (expired, retained) = Occ.commit("expireSnapshots", table)(
+        latestMetadataVersion(spark, table)) { v =>
+      require(v > 0, s"$table has no Iceberg metadata")
+      val meta = readMetadata(fs, table, v)
+        .deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]()
+      val snaps = mutable.ArrayBuffer.empty[com.fasterxml.jackson.databind.JsonNode]
+      meta.get("snapshots").forEach(s => snaps += s)
+      // ref-pointed snapshots are retained REGARDLESS of keepLast (spec
+      // §Refs retention): a tag exists precisely to outlive routine
+      // expiration; drop the ref to release the snapshot
+      val reffed = mutable.Set.empty[Long]
+      meta.path("refs").fields().forEachRemaining(e =>
+        reffed += e.getValue.get("snapshot-id").asLong())
+      val byAge = snaps.sortBy(_.get("snapshot-id").asLong())
+      val retained = (byAge.takeRight(keepLast) ++
+        byAge.filter(s => reffed.contains(s.get("snapshot-id").asLong())))
+        .distinctBy(_.get("snapshot-id").asLong())
+        .sortBy(_.get("snapshot-id").asLong())
+      val expired = snaps.size - retained.size
+      if (expired == 0) Some((0, retained))
+      else {
+        // exactly-once ledger preservation (r09 advisor finding): dropping a
+        // snapshot whose summary carries a `graft-batch-id` marker would let a
+        // redelivered batch re-commit. Fold the expired markers' high-water
+        // mark into table properties, where [[commitIdempotent]] consults it —
+        // batch ids are monotone, so the max subsumes every dropped marker.
+        val retainedIds = retained.map(_.get("snapshot-id").asLong()).toSet
+        val dropped = byAge.filterNot(s =>
+          retainedIds.contains(s.get("snapshot-id").asLong()))
+        // fold PER LEDGER: markers are query-scoped (graft-query-id; absent =
+        // the default foreachBatch ledger), so each query's dropped markers
+        // fold into that query's own high-water property — folding them all
+        // into one key would cross-contaminate concurrent queries' dedup
+        dropped.groupBy(_.get("summary").path("graft-query-id")
+            .asText("graft-stream"))
+          .foreach { case (appId, snapsOfLedger) =>
+            val key = if (appId == "graft-stream") "graft-max-batch-id"
+              else s"graft-max-batch-id.$appId"
+            val expiredHwm = snapsOfLedger
+              .map(_.get("summary").path("graft-batch-id").asLong(-1L))
+              .foldLeft(meta.path("properties").path(key).asLong(-1L))(math.max)
+            if (expiredHwm >= 0)
+              meta.`with`("properties").put(key, expiredHwm)
+          }
+        val newSnaps = meta.putArray("snapshots")
+        retained.foreach(newSnaps.add)
+        Option.when(claimMetadata(fs, table, v, meta))((expired, retained))
       }
-    val newSnaps = meta.putArray("snapshots")
-    retained.foreach(newSnaps.add)
-    val committed = AtomicCreate.create(fs, metaFile(table, v + 1),
-      mapper.writerWithDefaultPrettyPrinter()
-        .writeValueAsString(meta).getBytes(StandardCharsets.UTF_8))
-    if (!committed)
-      throw new IllegalStateException(
-        s"lost the commit race for metadata v${v + 1} on $table")
+    }
+    if (expired == 0) return (0L, 0L)
     // referenced closure of the retained snapshots: lists → manifests → files
     val refLists = retained.map(s =>
       new Path(s.get("manifest-list").asText()).getName).toSet
@@ -2922,23 +2897,15 @@ object IcebergLite {
   def upgradeFormatVersion(spark: SparkSession, table: String,
       to: Int): Int = {
     require(to == 2 || to == 3, s"format-version $to outside the subset")
-    val fs = hadoopFs(spark, table)
-    val v = latestMetadataVersion(spark, table)
-    require(v > 0, s"$table has no Iceberg metadata")
-    val meta = readMetadata(fs, table, v)
-    val curFv = meta.path("format-version").asInt(1)
-    if (curFv >= to) return v
-    val copy = meta.deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]()
-    copy.put("format-version", to)
-    if (!copy.has("last-sequence-number"))
-      copy.put("last-sequence-number",
-        meta.get("current-snapshot-id").asLong().max(0L))
-    if (!AtomicCreate.create(fs, metaFile(table, v + 1),
-        mapper.writerWithDefaultPrettyPrinter()
-          .writeValueAsString(copy).getBytes(StandardCharsets.UTF_8)))
-      throw new IllegalStateException(
-        s"upgradeFormatVersion lost the commit race on $table")
-    v + 1
+    commitMetadataEdit(spark, table, "upgradeFormatVersion") { meta =>
+      meta.path("format-version").asInt(1) < to && {
+        meta.put("format-version", to)
+        if (!meta.has("last-sequence-number"))
+          meta.put("last-sequence-number",
+            meta.get("current-snapshot-id").asLong().max(0L))
+        true
+      }
+    }
   }
 
   /** The NEWEST deletion vector per data file among `entries` (kind 3),
@@ -3943,78 +3910,80 @@ object IcebergLite {
       value: String): Long = {
     import org.apache.spark.sql.functions.col
     val fs = hadoopFs(spark, table)
-    val prevV = latestMetadataVersion(spark, table)
-    require(prevV > 0, s"$table has no Iceberg metadata")
-    val prevMeta = readMetadata(fs, table, prevV)
-    val pf = partitionSpec(prevMeta).getOrElse(
-      throw new IllegalArgumentException(
-        s"$table is not partitioned — INSERT OVERWRITE the whole table"))
-    val defaultSpecId = prevMeta.get("default-spec-id").asInt()
-    val cur = prevMeta.get("current-snapshot-id").asLong()
-    val schema = currentSchema(prevMeta)
-    val formatVersion = prevMeta.path("format-version").asInt(1)
-    val stray = df.select(pf.valueColumn(col(pf.source)).as("__pv"))
-      .where(!(col("__pv") <=> value)).limit(1).collect()
-    require(stray.isEmpty,
-      s"INSERT OVERWRITE PARTITION ($value): incoming rows land in " +
-        s"partition ${stray.headOption.map(_.get(0)).orNull} — refuse " +
-        "rather than leak")
-    val snapshotId = prevV + 1L
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    val stagedRel = s"data/s$snapshotId-$token-po"
-    val (mName, mLen) = stageData(spark, table, stagedRel, df, Some(pf),
-      snapshotId, token)
-    val curList = metaJsonSnapshots(prevMeta).find(_._1 == cur).get._2
-    val written = mutable.ArrayBuffer.empty[String]
-    var mIdx = 0
-    val carried = listEntries(fs, new Path(curList)).flatMap { me =>
-      if (me.content != 0) Some(me)
-      else {
-        require(me.specId == defaultSpecId,
-          s"manifest ${me.path} was written under spec ${me.specId}, not " +
-            s"the default $defaultSpecId — partition-grain overwrite " +
-            "needs one spec; rewriteDataFiles first")
-        val records = readAvroFile(fs, new Path(me.path))
-        val (dropped, kept) = records.partition { r =>
-          if (r.get("status").asInstanceOf[Int] == 2) false
+    Occ.commit("partition overwrite", table)(
+        latestMetadataVersion(spark, table)) { prevV =>
+      require(prevV > 0, s"$table has no Iceberg metadata")
+      val prevMeta = readMetadata(fs, table, prevV)
+      val pf = partitionSpec(prevMeta).getOrElse(
+        throw new IllegalArgumentException(
+          s"$table is not partitioned — INSERT OVERWRITE the whole table"))
+      val defaultSpecId = prevMeta.get("default-spec-id").asInt()
+      val cur = prevMeta.get("current-snapshot-id").asLong()
+      val schema = currentSchema(prevMeta)
+      val formatVersion = prevMeta.path("format-version").asInt(1)
+      val stray = df.select(pf.valueColumn(col(pf.source)).as("__pv"))
+        .where(!(col("__pv") <=> value)).limit(1).collect()
+      require(stray.isEmpty,
+        s"INSERT OVERWRITE PARTITION ($value): incoming rows land in " +
+          s"partition ${stray.headOption.map(_.get(0)).orNull} — refuse " +
+          "rather than leak")
+      val snapshotId = prevV + 1L
+      val token = java.util.UUID.randomUUID().toString.take(8)
+      val stagedRel = s"data/s$snapshotId-$token-po"
+      val (mName, mLen) = stageData(spark, table, stagedRel, df, Some(pf),
+        snapshotId, token)
+      val curList = metaJsonSnapshots(prevMeta).find(_._1 == cur).get._2
+      val written = mutable.ArrayBuffer.empty[String]
+      var mIdx = 0
+      val carried = listEntries(fs, new Path(curList)).flatMap { me =>
+        if (me.content != 0) Some(me)
+        else {
+          require(me.specId == defaultSpecId,
+            s"manifest ${me.path} was written under spec ${me.specId}, not " +
+              s"the default $defaultSpecId — partition-grain overwrite " +
+              "needs one spec; rewriteDataFiles first")
+          val records = readAvroFile(fs, new Path(me.path))
+          val (dropped, kept) = records.partition { r =>
+            if (r.get("status").asInstanceOf[Int] == 2) false
+            else {
+              val part = r.get("data_file").asInstanceOf[GenericRecord]
+                .get("partition").asInstanceOf[GenericRecord]
+              val pv =
+                if (part.getSchema.getField("p0") == null) null
+                else Option(part.get("p0")).map(_.toString).orNull
+              pv == value
+            }
+          }
+          if (dropped.isEmpty) Some(me)
+          else if (kept.isEmpty) None
           else {
-            val part = r.get("data_file").asInstanceOf[GenericRecord]
-              .get("partition").asInstanceOf[GenericRecord]
-            val pv =
-              if (part.getSchema.getField("p0") == null) null
-              else Option(part.get("p0")).map(_.toString).orNull
-            pv == value
+            mIdx += 1
+            val name = s"$snapshotId-$token-surv$mIdx.avro"
+            val len = writeAvroFile(
+              new File(new File(table, "metadata"), name),
+              kept.head.getSchema, kept)
+            written += name
+            Some(MEntry(s"$table/metadata/$name", len, me.addedSid,
+              content = 0, seq = me.seq, specId = me.specId))
           }
         }
-        if (dropped.isEmpty) Some(me)
-        else if (kept.isEmpty) None
-        else {
-          mIdx += 1
-          val name = s"$snapshotId-$token-surv$mIdx.avro"
-          val len = writeAvroFile(
-            new File(new File(table, "metadata"), name),
-            kept.head.getSchema, kept)
-          written += name
-          Some(MEntry(s"$table/metadata/$name", len, me.addedSid,
-            content = 0, seq = me.seq, specId = me.specId))
-        }
+      }
+      val listName = s"snap-$snapshotId-$token.avro"
+      writeManifestList(table, listName,
+        carried :+ MEntry(s"$table/metadata/$mName", mLen, snapshotId,
+          content = 0, seq = snapshotId, specId = defaultSpecId),
+        v2 = formatVersion >= 2)
+      if (commitMetadataJson(fs, table, prevV, Some(prevMeta), formatVersion,
+          snapshotId, schema, Some(pf), listName, "overwrite", Map.empty))
+        Some(snapshotId)
+      else {
+        fs.delete(new Path(table, stagedRel), true)
+        written.foreach(n => fs.delete(new Path(metaDir(table), n), false))
+        fs.delete(new Path(metaDir(table), mName), false)
+        fs.delete(new Path(metaDir(table), listName), false)
+        None
       }
     }
-    val listName = s"snap-$snapshotId-$token.avro"
-    writeManifestList(table, listName,
-      carried :+ MEntry(s"$table/metadata/$mName", mLen, snapshotId,
-        content = 0, seq = snapshotId, specId = defaultSpecId),
-      v2 = formatVersion >= 2)
-    if (!commitMetadataJson(fs, table, prevV, Some(prevMeta), formatVersion,
-        snapshotId, schema, Some(pf), listName, "overwrite", Map.empty)) {
-      fs.delete(new Path(table, stagedRel), true)
-      written.foreach(n => fs.delete(new Path(metaDir(table), n), false))
-      fs.delete(new Path(metaDir(table), mName), false)
-      fs.delete(new Path(metaDir(table), listName), false)
-      throw new IllegalStateException(
-        s"partition overwrite lost the commit race on $table")
-    }
-    snapshotId
   }
 
   /** Structural Avro copy into a structurally-equal target schema —

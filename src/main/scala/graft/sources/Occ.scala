@@ -1,8 +1,11 @@
 package graft.sources
 
 /** The optimistic-concurrency commit every log-structured table here
-  * shares — the log protocol of Delta Lake (Armbrust et al., VLDB 2020,
-  * §3; PAPERS.md), which Iceberg's metadata-pointer swap repeats:
+  * shares, and the ONLY path to a new version: every committing op of
+  * [[DeltaLite]] (through `commitOn`), [[IcebergLite]] and [[CommitLog]]
+  * claims its version inside an attempt of this routine. It is the log
+  * protocol of Delta Lake (Armbrust et al., VLDB 2020, §3; PAPERS.md),
+  * which Iceberg's metadata-pointer swap repeats:
   *
   *   1. read the head once and PIN it as the base;
   *   2. the site's attempt checks for conflicts against that base,

@@ -41,6 +41,62 @@ class DeltaLiteSpec extends SparkSpec with Matchers {
       java.nio.file.Files.readAllLines(p)).asScala.toSeq.filter(_.nonEmpty)
   }
 
+  test("protocol raise rule: never lowers a version, never drops a listed feature") {
+    val features = Seq("checkConstraints", "changeDataFeed", "generatedColumns",
+      "deletionVectors", "domainMetadata", "inCommitTimestamp", "v2Checkpoint")
+    val starts = Seq(DeltaLite.Protocol(1, 2, Nil, Nil),
+      DeltaLite.Protocol(1, 4, Nil, Nil), DeltaLite.Protocol(2, 5, Nil, Nil))
+    for (start <- starts; a <- features; b <- features; c <- features) {
+      Seq(a, b, c).scanLeft(start)(DeltaLite.raise).sliding(2).foreach {
+        case Seq(p, q) =>
+          q.minReader should be >= p.minReader
+          q.minWriter should be >= p.minWriter
+          q.readerFeatures should contain allElementsOf p.readerFeatures
+          q.writerFeatures should contain allElementsOf p.writerFeatures
+          // every reader feature is a writer feature too (spec rule)
+          q.writerFeatures should contain allElementsOf q.readerFeatures
+          if (q.minWriter >= 7 && p.minWriter < 7)
+            q.writerFeatures should contain ("appendOnly") // legacy implied
+          if (q.minReader >= 3 && p.minReader == 2)
+            q.readerFeatures should contain ("columnMapping")
+      }
+    }
+  }
+
+  test("protocol raise: a DV delete keeps the domainMetadata feature") {
+    import spark.implicits._
+    val table = Sinks.tempDir("delta_raise_dm")
+    DeltaLite.write(spark, (1L to 10L).map(k => (k, k)).toDF("k", "v"),
+      table, collectStats = true)
+    DeltaLite.setDomainMetadata(spark, table, "graft.audit", "on")
+    DeltaLite.deleteWhereDV(spark, table, "k", 1L, 2L)
+    val p = DeltaLite.snapshotAt(spark, table).protocol.get
+    (p.minReader, p.minWriter) shouldBe ((3, 7))
+    p.readerFeatures shouldBe Seq("deletionVectors")
+    p.writerFeatures.toSet shouldBe
+      Set("appendOnly", "invariants", "domainMetadata", "deletionVectors")
+    DeltaLite.read(spark, table).count() shouldBe 8L
+    DeltaLite.domainMetadata(spark, table) shouldBe Map("graft.audit" -> "on")
+  }
+
+  test("protocol raise: a constraint on a DV table keeps reader 3 / writer 7") {
+    import spark.implicits._
+    val table = Sinks.tempDir("delta_raise_chk")
+    DeltaLite.write(spark, (1L to 10L).map(k => (k, k)).toDF("k", "v"),
+      table, collectStats = true)
+    DeltaLite.deleteWhereDV(spark, table, "k", 1L, 2L)
+    DeltaLite.addConstraint(spark, table, "pos_v", "v > 0")
+    val p = DeltaLite.snapshotAt(spark, table).protocol.get
+    (p.minReader, p.minWriter) shouldBe ((3, 7))
+    p.readerFeatures shouldBe Seq("deletionVectors")
+    p.writerFeatures.toSet shouldBe
+      Set("appendOnly", "invariants", "deletionVectors", "checkConstraints")
+    // the vector still masks, and the constraint still gates writes
+    DeltaLite.read(spark, table).count() shouldBe 8L
+    an[IllegalArgumentException] should be thrownBy
+      DeltaLite.write(spark, Seq((11L, -1L)).toDF("k", "v"), table)
+  }
+
   test("v0 log carries protocol + metaData + add actions, spec-shaped") {
     import spark.implicits._
     val table = Sinks.tempDir("delta_spec0")
@@ -959,7 +1015,10 @@ class DeltaLiteSpec extends SparkSpec with Matchers {
       .find(_.has("protocol")).get.get("protocol")
     val wf = scala.jdk.CollectionConverters.IteratorHasAsScala(
       proto.get("writerFeatures").elements()).asScala.map(_.asText()).toSet
-    wf shouldBe Set("deletionVectors", "changeDataFeed")
+    // the legacy writer-4 table moves to writer 7 listing every feature
+    // its old version implied, changeDataFeed among them
+    wf shouldBe Set("appendOnly", "invariants", "checkConstraints",
+      "changeDataFeed", "generatedColumns", "deletionVectors")
     // re-delete an overlapping range: only k=3 is NEWLY masked
     DeltaLite.deleteWhereDV(spark, table, "k", 1L, 3L)            // v3
     val feed = DeltaLite.readCdf(spark, table, 1L, 3L)

@@ -26,6 +26,32 @@ class IcebergLiteSpec extends SparkSpec with Matchers {
     out.toSeq
   }
 
+  test("version-hint.text names the newest metadata version after metadata-only commits") {
+    import spark.implicits._
+    val table = Sinks.tempDir("ice_hint")
+    val s1 = IcebergLite.write(spark, Seq((1L, 10L)).toDF("k", "v"), table)
+    IcebergLite.write(spark, Seq((2L, 20L)).toDF("k", "v"), table)
+    def hint: Int = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(table, "metadata", "version-hint.text")),
+      "UTF-8").trim.toInt
+    hint shouldBe IcebergLite.latestMetadataVersion(spark, table)
+    Seq[() => Any](
+      () => IcebergLite.setRef(spark, table, "audit", s1),
+      () => IcebergLite.addColumn(spark, table, "s",
+        org.apache.spark.sql.types.StringType),
+      () => IcebergLite.rollbackTo(spark, table, s1),
+      // a snapshot past the rollback, so expiration has one to drop
+      () => IcebergLite.write(spark,
+        Seq((3L, 30L, "c")).toDF("k", "v", "s"), table),
+      () => IcebergLite.expireSnapshots(spark, table, keepLast = 1)
+    ).foreach { commit =>
+      val before = IcebergLite.latestMetadataVersion(spark, table)
+      commit()
+      IcebergLite.latestMetadataVersion(spark, table) shouldBe before + 1
+      hint shouldBe before + 1
+    }
+  }
+
   test("metadata layout: spec-shaped JSON + field-id'd Avro layers") {
     import spark.implicits._
     val table = Sinks.tempDir("iceberg_spec0")
