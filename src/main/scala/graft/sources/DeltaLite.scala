@@ -3,11 +3,13 @@ package graft.sources
 import java.nio.charset.StandardCharsets
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.ObjectNode
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.{DataType, LongType, StructType}
 
 /** A minimal Delta Lake TABLE-FORMAT implementation against the PUBLIC
@@ -48,6 +50,14 @@ import org.apache.spark.sql.types.{DataType, LongType, StructType}
   *     remain out, and a DV-free unmapped table stays standard protocol
   *     v1.
   *
+  * The log codec: the actions above form one sealed [[Action]] family.
+  * One decoder ([[actionOf]]) reads them from JSON commit lines
+  * ([[actionsAt]]) and from checkpoint rows, top-level and sidecar alike
+  * ([[checkpointActions]]). One fold ([[Replay]]) turns them into a
+  * [[Snapshot]], one walk ([[changeSet]]) into a version's change set,
+  * and one encoder ([[CheckpointEncoding]], [[installParquet]],
+  * [[writeLastCheckpoint]]) writes both checkpoint shapes.
+  *
   * Scale shape: the log is control-plane (one small JSON file per commit;
   * reads list + parse the log driver-side exactly like Delta's own
   * snapshot construction), data files never move (adds reference the
@@ -77,15 +87,19 @@ object DeltaLite {
       scala.util.Try(name.stripSuffix(".json").toLong).toOption
     else None
 
+  /** The versions whose JSON commit is still in the log, ascending (one
+    * listing). */
+  private def retainedVersions(fs: FileSystem, table: String): Seq[Long] = {
+    val dir = logDir(table)
+    if (!fs.exists(dir)) Nil
+    else fs.listStatus(dir).toSeq.flatMap(s => versionOf(s.getPath.getName))
+      .sorted
+  }
+
   /** Highest committed version, -1 for a table with no log yet (Delta
     * numbers its first commit 0). */
-  def latestVersion(spark: SparkSession, table: String): Long = {
-    val fs = hadoopFs(spark, table)
-    val dir = logDir(table)
-    if (!fs.exists(dir)) -1L
-    else fs.listStatus(dir).flatMap(s => versionOf(s.getPath.getName))
-      .foldLeft(-1L)(math.max)
-  }
+  def latestVersion(spark: SparkSession, table: String): Long =
+    retainedVersions(hadoopFs(spark, table), table).lastOption.getOrElse(-1L)
 
   /** Atomic-create race arbiter: true iff THIS writer created version
     * file `v` with the given action lines. */
@@ -128,14 +142,11 @@ object DeltaLite {
   private def stagingToken(): String =
     java.util.UUID.randomUUID().toString.take(8)
 
-  /** The inCommitTimestamp of a commit file's leading commitInfo, None
+  /** The inCommitTimestamp of version `v`'s leading commitInfo, None
     * when the commit predates enablement (or has no commitInfo first). */
-  private def ictOfFirstLine(text: String): Option[Long] =
-    text.linesIterator.find(_.nonEmpty).flatMap { l =>
-      val n = mapper.readTree(l)
-      if (n.has("commitInfo") && n.get("commitInfo").has("inCommitTimestamp"))
-        Some(n.get("commitInfo").get("inCommitTimestamp").asLong())
-      else None
+  private def ictAt(fs: FileSystem, table: String, v: Long): Option[Long] =
+    actionsAt(fs, table, v).headOption.collect {
+      case CommitInfo(_, Some(ict)) => ict
     }
 
   private def ictCommitInfoLine(operation: String, ict: Long): String =
@@ -163,34 +174,32 @@ object DeltaLite {
       lines: Seq[String]): Seq[String] = {
     if (v == 0 || lines.headOption.exists(_.contains("\"inCommitTimestamp\"")))
       return lines
-    val prev = versionFile(table, v - 1)
     val prevIct: Option[Long] =
-      if (fs.exists(prev)) ictOfFirstLine(readLogText(fs, prev))
-      else {
-        val lc = lastCheckpointFile(table)
-        if (!fs.exists(lc)) None
-        else {
-          val n = mapper.readTree(readLogText(fs, lc))
-          if (n.has("ict")) Some(n.get("ict").asLong()) else None
-        }
-      }
+      if (fs.exists(versionFile(table, v - 1))) ictAt(fs, table, v - 1)
+      else lastCheckpoint(fs, table).flatMap(n =>
+        Option.when(n.has("ict"))(n.get("ict").asLong()))
     prevIct match {
       case None => lines
       case Some(p) =>
         val ict = math.max(p + 1, System.currentTimeMillis())
         if (lines.head.contains("\"commitInfo\"")) {
-          val n = mapper.readTree(lines.head)
-            .deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]()
+          val n = mapper.readTree(lines.head).deepCopy[ObjectNode]()
           n.`with`("commitInfo").put("inCommitTimestamp", ict)
           mapper.writeValueAsString(n) +: lines.tail
         } else ictCommitInfoLine("WRITE", ict) +: lines
     }
   }
 
-  private def jsonObj(field: String)(fill: com.fasterxml.jackson.databind.node.ObjectNode => Unit): String = {
+  private def jsonObj(field: String)(fill: ObjectNode => Unit): String = {
     val root = mapper.createObjectNode()
     fill(root.putObject(field))
     mapper.writeValueAsString(root)
+  }
+
+  /** `m` as `o`'s object field `name`; a null value stays JSON null. */
+  private def putMap(o: ObjectNode, name: String, m: Map[String, String]): Unit = {
+    val obj = o.putObject(name)
+    m.foreach { case (k, v) => if (v == null) obj.putNull(k) else obj.put(k, v) }
   }
 
   /** The protocol every table starts at (no protocol action replays as
@@ -275,8 +284,7 @@ object DeltaLite {
     m.put("schemaString", schema.json)
     val pc = m.putArray("partitionColumns")
     partitionColumns.foreach(pc.add)
-    val conf = m.putObject("configuration")
-    configuration.foreach { case (k, v) => conf.put(k, v) }
+    putMap(m, "configuration", configuration)
     m.put("createdTime", 0L)
   }
 
@@ -286,10 +294,7 @@ object DeltaLite {
       dv: Option[DeletionVectors.Descriptor] = None): String =
     jsonObj("add") { a =>
       a.put("path", path)
-      val pv = a.putObject("partitionValues")
-      partitionValues.foreach { case (k, v) =>
-        if (v == null) pv.putNull(k) else pv.put(k, v)
-      }
+      putMap(a, "partitionValues", partitionValues)
       a.put("size", size)
       a.put("modificationTime", modTime)
       a.put("dataChange", dataChange)
@@ -344,6 +349,26 @@ object DeltaLite {
       }
       mapper.writeValueAsString(o)
     }
+
+  /** A file's `stats` decoded ([[statsJson]]'s shape): numRecords, and
+    * the LONG [min, max] of each column that carries both bounds. */
+  private[graft] final case class FileStats(numRecords: Option[Long],
+      bounds: Map[String, (Long, Long)]) {
+    /** Whether the file may hold a `column` value in [lo, hi]: a column
+      * without bounds may (skipping is an optimization, never a filter). */
+    def mayOverlap(column: String, lo: Long, hi: Long): Boolean =
+      bounds.get(column).forall { case (mi, ma) => ma >= lo && mi <= hi }
+  }
+
+  /** THE reader of the `stats` JSON. */
+  private[graft] def fileStats(json: String): FileStats = {
+    val n = mapper.readTree(json)
+    val (mins, maxs) = (n.path("minValues"), n.path("maxValues"))
+    FileStats(Option(n.get("numRecords")).filter(_.isNumber).map(_.asLong()),
+      mins.fieldNames().asScala.filter(c =>
+        mins.get(c).isNumber && maxs.path(c).isNumber).map(c =>
+        c -> (mins.get(c).asLong(), maxs.get(c).asLong())).toMap)
+  }
 
   /** The LONG columns of `schema` — the ones the log's bounds cover. */
   private def longCols(schema: StructType): StructType =
@@ -409,17 +434,175 @@ object DeltaLite {
     } finally in.close()
   }
 
-  /** Snapshot state at one version: live file set, governing metaData,
-    * and how it was assembled (checkpoint used + JSON commits replayed) —
-    * the numbers the checkpoint key surfaces so a silently-ignored
-    * checkpoint turns the gate red. */
+  // ----------------------------------------------------------------------
+  // The log codec (PROTOCOL.md §Actions). A table is the replay of one
+  // action vocabulary, stored as JSON commit lines and as checkpoint
+  // rows. Both shapes decode through ONE decoder, [[actionOf]], over a
+  // [[Fields]] view of either; every reader of the log consumes the
+  // decoded [[Action]]s.
+  // ----------------------------------------------------------------------
+
+  private[graft] sealed trait Action
+
   /** The table's protocol action, replayed verbatim — checkpoints must
     * re-emit the LATEST protocol, never infer one from current state (a
     * DV-upgraded table whose vectors were later cleared must stay at
     * reader 3/writer 7, or expireLog silently downgrades it). */
   private[graft] final case class Protocol(minReader: Int, minWriter: Int,
-      readerFeatures: Seq[String], writerFeatures: Seq[String])
+      readerFeatures: Seq[String], writerFeatures: Seq[String]) extends Action
 
+  private final case class Metadata(id: String, schemaString: String,
+      partitionColumns: Seq[String], configuration: Map[String, String])
+      extends Action
+
+  private final case class AddFile(path: String,
+      partitionValues: Map[String, String], dataChange: Boolean,
+      stats: Option[String], deletionVector: Option[DeletionVectors.Descriptor])
+      extends Action
+
+  private final case class RemoveFile(path: String, dataChange: Boolean)
+      extends Action
+
+  private final case class AddCDCFile(path: String,
+      partitionValues: Map[String, String]) extends Action
+
+  private final case class SetTransaction(appId: String, version: Long)
+      extends Action
+
+  private final case class DomainMetadata(domain: String,
+      configuration: String, removed: Boolean) extends Action
+
+  private final case class CommitInfo(operation: Option[String],
+      inCommitTimestamp: Option[Long]) extends Action
+
+  /** A V2 checkpoint's pointer at one sidecar file of add rows. */
+  private final case class Sidecar(path: String) extends Action
+
+  /** The action columns a checkpoint row may carry. */
+  private val checkpointActionKinds =
+    Set("protocol", "metaData", "add", "txn", "domainMetadata", "sidecar")
+
+  /** One encoded action's fields, read by name: a JSON object of a commit
+    * line, or a struct of a checkpoint row. Absent and null read alike,
+    * so checkpoints written before a column existed decode too. */
+  private trait Fields {
+    def str(n: String): Option[String]
+    def long(n: String): Option[Long]
+    def bool(n: String): Option[Boolean]
+    def strs(n: String): Seq[String]
+    def strMap(n: String): Map[String, String]
+    def obj(n: String): Option[Fields]
+  }
+
+  private final class JsonFields(j: JsonNode) extends Fields {
+    private def at(n: String) = Option(j.get(n)).filterNot(_.isNull)
+    def str(n: String) = at(n).map(_.asText())
+    def long(n: String) = at(n).map(_.asLong())
+    def bool(n: String) = at(n).map(_.asBoolean())
+    def strs(n: String) = at(n).toSeq.flatMap(_.elements().asScala.map(_.asText()))
+    def strMap(n: String) = at(n).toSeq.flatMap(_.fields().asScala.map(e =>
+      e.getKey -> (if (e.getValue.isNull) null else e.getValue.asText()))).toMap
+    def obj(n: String) = at(n).filter(_.isObject).map(new JsonFields(_))
+  }
+
+  private final class RowFields(r: Row) extends Fields {
+    private def at[T](n: String): Option[T] = {
+      val i = r.schema.fields.indexWhere(_.name == n)
+      Option.when(i >= 0 && !r.isNullAt(i))(r.getAs[T](i))
+    }
+    def str(n: String) = at[String](n)
+    def long(n: String) = at[Number](n).map(_.longValue())
+    def bool(n: String) = at[Boolean](n)
+    def strs(n: String) = at[scala.collection.Seq[String]](n).toSeq.flatten
+    def strMap(n: String) =
+      at[scala.collection.Map[String, String]](n).map(_.toMap).getOrElse(Map.empty)
+    def obj(n: String) = at[Row](n).map(new RowFields(_))
+  }
+
+  /** THE action decoder: the `kind` action whose fields `f` holds; None
+    * for a kind this subset does not replay (e.g. checkpointMetadata). */
+  private def actionOf(kind: String, f: Fields): Option[Action] = {
+    def path = f.str("path").get
+    kind match {
+      case "add" => Some(AddFile(path, f.strMap("partitionValues"),
+        f.bool("dataChange").getOrElse(true), f.str("stats"),
+        f.obj("deletionVector").map(d => DeletionVectors.Descriptor(
+          d.str("storageType").get, d.str("pathOrInlineDv").get,
+          d.long("offset").get.toInt, d.long("sizeInBytes").get.toInt,
+          d.long("cardinality").get))))
+      case "remove" =>
+        Some(RemoveFile(path, f.bool("dataChange").getOrElse(true)))
+      case "cdc" => Some(AddCDCFile(path, f.strMap("partitionValues")))
+      case "metaData" => Some(Metadata(f.str("id").get,
+        f.str("schemaString").get, f.strs("partitionColumns"),
+        f.strMap("configuration")))
+      case "protocol" => Some(Protocol(f.long("minReaderVersion").get.toInt,
+        f.long("minWriterVersion").get.toInt, f.strs("readerFeatures"),
+        f.strs("writerFeatures")))
+      case "txn" =>
+        Some(SetTransaction(f.str("appId").get, f.long("version").get))
+      case "domainMetadata" => Some(DomainMetadata(f.str("domain").get,
+        f.str("configuration").getOrElse(""),
+        f.bool("removed").getOrElse(false)))
+      case "commitInfo" =>
+        Some(CommitInfo(f.str("operation"), f.long("inCommitTimestamp")))
+      case "sidecar" => Some(Sidecar(path))
+      case _ => None
+    }
+  }
+
+  /** The actions of JSON commit `v`, in log order. Throws when the
+    * version's file is absent (expired below a checkpoint, or never
+    * committed). */
+  private def actionsAt(fs: FileSystem, table: String, v: Long): Seq[Action] = {
+    val text =
+      try readLogText(fs, versionFile(table, v))
+      catch {
+        case _: java.io.FileNotFoundException =>
+          throw new IllegalArgumentException(
+            s"version $v absent from $table/_delta_log")
+      }
+    text.split('\n').toSeq.filter(_.nonEmpty).flatMap { line =>
+      val n = mapper.readTree(line)
+      val kind = n.fieldNames().next()
+      actionOf(kind, new JsonFields(n.get(kind)))
+    }
+  }
+
+  /** The actions of one checkpoint file set, in row order: one Spark read
+    * of the top-level rows, then — for a V2 checkpoint — one read of the
+    * sidecar files they name (under `_delta_log/_sidecars/`), whose add
+    * rows decode the same way. A sidecar that does not resolve FAILS the
+    * read rather than shrink the snapshot. */
+  private def checkpointActions(spark: SparkSession, table: String,
+      files: Seq[Path]): Seq[Action] = {
+    def rows(paths: Seq[String]): Seq[Action] = {
+      val df = spark.read.parquet(paths: _*)
+      df.select(df.columns.toSeq.filter(checkpointActionKinds).map(df.col): _*)
+        .collect().toSeq.flatMap { r =>
+          val f = new RowFields(r)
+          r.schema.fieldNames.toSeq.flatMap(k => f.obj(k).flatMap(actionOf(k, _)))
+        }
+    }
+    val top = rows(files.map(_.toString))
+    val sidecars = top.collect { case Sidecar(n) => n }
+    if (sidecars.isEmpty) top
+    else {
+      val fs = hadoopFs(spark, table)
+      val dir = sidecarDir(table)
+      top ++ rows(sidecars.map { n =>
+        val p = new Path(dir, n)
+        require(fs.exists(p), s"V2 checkpoint sidecar $n absent from $dir " +
+          "— refusing a partial snapshot")
+        p.toString
+      })
+    }
+  }
+
+  /** Snapshot state at one version: live file set, governing metaData,
+    * and how it was assembled (checkpoint used + JSON commits replayed) —
+    * the numbers the checkpoint key surfaces so a silently-ignored
+    * checkpoint turns the gate red. */
   private[graft] final case class Snapshot(version: Long, files: Seq[String],
       meta: Option[(String, String)], checkpointVersion: Long,
       jsonReplayed: Long, stats: Map[String, String] = Map.empty,
@@ -451,34 +634,31 @@ object DeltaLite {
   private[graft] def dataPath(table: String, f: String): String =
     new Path(table, f).toString
 
-  /** The `_last_checkpoint` pointer's version, -1 when absent. */
-  def lastCheckpointVersion(spark: SparkSession, table: String): Long = {
-    val fs = hadoopFs(spark, table)
+  /** The `_last_checkpoint` pointer, None when absent. */
+  private def lastCheckpoint(fs: FileSystem, table: String): Option[JsonNode] = {
     val p = lastCheckpointFile(table)
-    if (!fs.exists(p)) -1L
-    else mapper.readTree(readLogText(fs, p)).get("version").asLong()
+    Option.when(fs.exists(p))(mapper.readTree(readLogText(fs, p)))
   }
+
+  /** The `_last_checkpoint` pointer's version, -1 when absent. */
+  def lastCheckpointVersion(spark: SparkSession, table: String): Long =
+    lastCheckpoint(hadoopFs(spark, table), table)
+      .fold(-1L)(_.get("version").asLong())
 
   /** Declared part count of the last checkpoint (the `parts` field of
     * `_last_checkpoint`; absent = single-file = 1, per the protocol). */
-  def lastCheckpointParts(spark: SparkSession, table: String): Int = {
-    val fs = hadoopFs(spark, table)
-    val p = lastCheckpointFile(table)
-    if (!fs.exists(p)) 1
-    else mapper.readTree(readLogText(fs, p)).path("parts").asInt(1)
-  }
+  def lastCheckpointParts(spark: SparkSession, table: String): Int =
+    lastCheckpoint(hadoopFs(spark, table), table).fold(1)(_.path("parts").asInt(1))
 
-  /** The checkpoint's file set at version `v`: the single spec-named file
-    * or all `parts` part files; empty when incomplete/absent (the spec's
-    * rule — a reader must only use a checkpoint whose every part
-    * exists). */
-  private def checkpointFileSet(spark: SparkSession, table: String,
-      v: Long): Seq[Path] = {
-    val fs = hadoopFs(spark, table)
+  /** The checkpoint's file set at version `v` declaring `parts` parts:
+    * the single spec-named file or all `parts` part files; empty when
+    * incomplete/absent (the spec's rule — a reader must only use a
+    * checkpoint whose every part exists). */
+  private def checkpointFileSet(fs: FileSystem, table: String, v: Long,
+      parts: Int): Seq[Path] = {
     val single = checkpointFile(table, v)
     if (fs.exists(single)) Seq(single)
     else {
-      val parts = lastCheckpointParts(spark, table)
       val files = (1 to parts).map(i => checkpointPartFile(table, v, i, parts))
       if (parts > 1 && files.forall(fs.exists)) files
       else {
@@ -498,230 +678,226 @@ object DeltaLite {
     }
   }
 
+  private def sidecarDir(table: String) = new Path(logDir(table), "_sidecars")
+
+  /** THE replay fold (PROTOCOL.md §Action Reconciliation): the state a
+    * snapshot accumulates, and the one rule per action that updates it.
+    * Checkpoint actions and JSON actions go through the same [[apply]]. */
+  private final class Replay {
+    private val live = mutable.LinkedHashSet.empty[String]
+    private val stats = mutable.Map.empty[String, String]
+    private val pvals = mutable.Map.empty[String, Map[String, String]]
+    private val dvs = mutable.Map.empty[String, DeletionVectors.Descriptor]
+    private val txns = mutable.Map.empty[String, Long]
+    private val domains = mutable.Map.empty[String, String]
+    private var meta: Option[Metadata] = None
+    private var protocol: Option[Protocol] = None
+
+    def apply(a: Action): Unit = a match {
+      case p: Protocol =>
+        // forward-compat rule: a readerFeature we don't implement means
+        // we cannot interpret this table — refuse, never answer wrong
+        p.readerFeatures.find(!knownReaderFeatures(_)).foreach(f =>
+          throw new UnsupportedOperationException(
+            s"table requires unknown readerFeature '$f'"))
+        protocol = Some(p)
+      // partitionColumns and configuration ride with the newest metaData:
+      // a later re-declaration carries them forward ([[redeclare]])
+      case m: Metadata => meta = Some(m)
+      case f: AddFile =>
+        // an add REPLACES the path's entry: a dv-less re-add clears any
+        // earlier vector (this subset keys logical files by path; real
+        // Delta keys by (path, dvId) — single live DV per file here)
+        live += f.path
+        def put[V](m: mutable.Map[String, V], v: Option[V]): Unit =
+          v.fold[Unit](m -= f.path)(m(f.path) = _)
+        put(stats, f.stats)
+        put(pvals, Option.when(f.partitionValues.nonEmpty)(f.partitionValues))
+        put(dvs, f.deletionVector)
+      case r: RemoveFile =>
+        live -= r.path; stats -= r.path; pvals -= r.path; dvs -= r.path
+      case t: SetTransaction =>
+        txns(t.appId) = math.max(txns.getOrElse(t.appId, Long.MinValue), t.version)
+      // §Domain Metadata: newest action per domain wins; a removal
+      // tombstone deletes the domain from the snapshot
+      case d: DomainMetadata =>
+        if (d.removed) domains -= d.domain else domains(d.domain) = d.configuration
+      case _: AddCDCFile | _: CommitInfo | _: Sidecar => // no snapshot state
+    }
+
+    def snapshot(version: Long, checkpointVersion: Long,
+        jsonReplayed: Long): Snapshot =
+      Snapshot(version, live.toSeq, meta.map(m => (m.id, m.schemaString)),
+        checkpointVersion, jsonReplayed, stats.toMap, txns.toMap, pvals.toMap,
+        dvs.toMap, protocol, meta.fold(Map.empty[String, String])(_.configuration),
+        meta.fold(Seq.empty[String])(_.partitionColumns), domains.toMap)
+  }
+
   /** Snapshot construction — Delta's own read path: start from the newest
-    * checkpoint at or below `asOf` when one exists (its parquet rows ARE
-    * the replay state at that version: protocol + metaData + live adds),
-    * then replay only the JSON commits after it. Without a usable
-    * checkpoint, replay the full JSON prefix. At scale this is the
+    * checkpoint at or below `asOf` when one exists (its rows ARE the
+    * replay state at that version: protocol + metaData + txns + domains +
+    * live adds), then replay only the JSON commits after it. Without a
+    * usable checkpoint, replay the full JSON prefix. At scale this is the
     * difference between O(commits-since-checkpoint) and O(all commits)
     * per read — the reason Delta can carry million-commit logs. */
   private def snapshot(spark: SparkSession, table: String, asOf: Long): Snapshot = {
     val fs = hadoopFs(spark, table)
-    val cpV = lastCheckpointVersion(spark, table)
-    val live = mutable.LinkedHashSet.empty[String]
-    val stats = mutable.Map.empty[String, String]
-    val txns = mutable.Map.empty[String, Long]
-    val pvals = mutable.Map.empty[String, Map[String, String]]
-    val dvs = mutable.Map.empty[String, DeletionVectors.Descriptor]
-    var meta: Option[(String, String)] = None
-    var proto: Option[Protocol] = None
-    var config: Map[String, String] = Map.empty
-    var partCols: Seq[String] = Seq.empty
-    val domains = mutable.Map.empty[String, String]
+    val pointer = lastCheckpoint(fs, table)
+    val cpV = pointer.fold(-1L)(_.get("version").asLong())
     val cpFiles =
-      if (cpV >= 0 && cpV <= asOf) checkpointFileSet(spark, table, cpV)
+      if (cpV >= 0 && cpV <= asOf)
+        checkpointFileSet(fs, table, cpV, pointer.get.path("parts").asInt(1))
       else Seq.empty
     val fromCheckpoint = cpFiles.nonEmpty
-    if (fromCheckpoint) {
-      val cp = spark.read.parquet(cpFiles.map(_.toString): _*)
-      // checkpoints written before the txn/partition columns lack them
-      val hasTxn = cp.schema.fieldNames.contains("txn")
-      val addType = cp.schema("add").dataType
-        .asInstanceOf[StructType]
-      val hasPv = addType.fieldNames.contains("partitionValues")
-      val hasDv = addType.fieldNames.contains("deletionVector")
-      val protoHasRf = cp.schema("protocol").dataType.asInstanceOf[StructType]
-        .fieldNames.contains("readerFeatures")
-      val metaHasConf = cp.schema("metaData").dataType.asInstanceOf[StructType]
-        .fieldNames.contains("configuration")
-      val metaHasPc = cp.schema("metaData").dataType.asInstanceOf[StructType]
-        .fieldNames.contains("partitionColumns")
-      // V2 checkpoints carry `sidecar` rows whose files hold the add
-      // actions; selecting it (when present) after the fixed columns
-      // keeps every positional index below stable
-      val hasSidecar = cp.schema.fieldNames.contains("sidecar")
-      val hasDomain = cp.schema.fieldNames.contains("domainMetadata")
-      val baseCols =
-        if (hasTxn) Seq("protocol", "metaData", "add", "txn")
-        else Seq("protocol", "metaData", "add")
-      val optCols = (if (hasSidecar) Seq("sidecar") else Nil) ++
-        (if (hasDomain) Seq("domainMetadata") else Nil)
-      val rows = cp.select((baseCols ++ optCols).map(cp.col): _*).collect()
-      val domIdx = baseCols.length + (if (hasSidecar) 1 else 0)
-      rows.foreach { r =>
-        if (!r.isNullAt(0)) {
-          val p = r.getStruct(0)
-          if (protoHasRf && !p.isNullAt(2)) p.getSeq[String](2).foreach { f =>
-            if (!knownReaderFeatures.contains(f))
-              throw new UnsupportedOperationException(
-                s"table requires unknown readerFeature '$f'")
-          }
-          proto = Some(Protocol(p.getInt(0), p.getInt(1),
-            if (protoHasRf && !p.isNullAt(2)) p.getSeq[String](2) else Nil,
-            if (protoHasRf && !p.isNullAt(3)) p.getSeq[String](3) else Nil))
-        }
-        if (!r.isNullAt(1)) {
-          val m = r.getStruct(1)
-          meta = Some((m.getString(0), m.getString(1)))
-          if (metaHasConf && !m.isNullAt(2))
-            config = m.getMap[String, String](2).toMap
-          if (metaHasPc && !m.isNullAt(3))
-            partCols = m.getSeq[String](3)
-        }
-        if (!r.isNullAt(2)) {
-          val a = r.getStruct(2)
-          live += a.getString(0)
-          if (!a.isNullAt(4)) stats(a.getString(0)) = a.getString(4)
-          if (hasPv && !a.isNullAt(5)) {
-            val m = a.getMap[String, String](5)
-            if (m.nonEmpty) pvals(a.getString(0)) = m.toMap
-          }
-          if (hasDv && !a.isNullAt(6)) {
-            val d = a.getStruct(6)
-            dvs(a.getString(0)) = DeletionVectors.Descriptor(
-              d.getString(0), d.getString(1), d.getInt(2), d.getInt(3),
-              d.getLong(4))
-          }
-        }
-        if (hasTxn && !r.isNullAt(3)) {
-          val t = r.getStruct(3)
-          txns(t.getString(0)) =
-            math.max(txns.getOrElse(t.getString(0), Long.MinValue), t.getLong(1))
-        }
-        if (hasDomain && !r.isNullAt(domIdx)) {
-          val d = r.getStruct(domIdx)
-          domains(d.getString(0)) = d.getString(1)
-        }
-      }
-      if (hasSidecar) {
-        // load the referenced sidecar files (relative to
-        // _delta_log/_sidecars/) and fold their add rows into the same
-        // replay state — a sidecar name that does not resolve must FAIL
-        // the read, not shrink the snapshot
-        val scIdx = baseCols.length
-        val names = rows.filter(!_.isNullAt(scIdx))
-          .map(_.getStruct(scIdx).getString(0)).toSeq
-        if (names.nonEmpty) {
-          val dir = new Path(logDir(table), "_sidecars")
-          val scFiles = names.map { n =>
-            val p = new Path(dir, n)
-            require(fs.exists(p),
-              s"V2 checkpoint sidecar $n absent from ${dir} — refusing " +
-                "a partial snapshot")
-            p.toString
-          }
-          val sc = spark.read.parquet(scFiles: _*)
-          val sat = sc.schema("add").dataType.asInstanceOf[StructType]
-          val sHasPv = sat.fieldNames.contains("partitionValues")
-          val sHasDv = sat.fieldNames.contains("deletionVector")
-          sc.select("add").collect().foreach { r =>
-            if (!r.isNullAt(0)) {
-              val a = r.getStruct(0)
-              live += a.getString(0)
-              if (!a.isNullAt(4)) stats(a.getString(0)) = a.getString(4)
-              if (sHasPv && !a.isNullAt(5)) {
-                val m = a.getMap[String, String](5)
-                if (m.nonEmpty) pvals(a.getString(0)) = m.toMap
-              }
-              if (sHasDv && !a.isNullAt(6)) {
-                val d = a.getStruct(6)
-                dvs(a.getString(0)) = DeletionVectors.Descriptor(
-                  d.getString(0), d.getString(1), d.getInt(2), d.getInt(3),
-                  d.getLong(4))
-              }
-            }
-          }
-        }
-      }
-    }
+    val state = new Replay
+    if (fromCheckpoint) checkpointActions(spark, table, cpFiles).foreach(state(_))
     val firstJson = if (fromCheckpoint) cpV + 1 else 0L
-    (firstJson to asOf).foreach { v =>
-      val p = versionFile(table, v)
-      if (!fs.exists(p))
-        throw new IllegalArgumentException(
-          s"version $v absent from $table/_delta_log (asOf=$asOf)")
-      readLogText(fs, p).split('\n').filter(_.nonEmpty).foreach { line =>
-        val node = mapper.readTree(line)
-        if (node.has("protocol")) {
-          // forward-compat rule: a readerFeature we don't implement means
-          // we cannot interpret this table — refuse, never answer wrong
-          val pn = node.get("protocol")
-          val rf = pn.path("readerFeatures")
-          if (rf.isArray) rf.forEach { f =>
-            if (!knownReaderFeatures.contains(f.asText()))
-              throw new UnsupportedOperationException(
-                s"table requires unknown readerFeature '${f.asText()}'")
-          }
-          def feats(n: com.fasterxml.jackson.databind.JsonNode): Seq[String] =
-            if (!n.isArray) Nil
-            else { val b = Seq.newBuilder[String]; n.forEach(f => b += f.asText()); b.result() }
-          proto = Some(Protocol(pn.get("minReaderVersion").asInt(),
-            pn.get("minWriterVersion").asInt(),
-            feats(rf), feats(pn.path("writerFeatures"))))
-        } else if (node.has("add")) {
-          val a = node.get("add")
-          val path = a.get("path").asText()
-          live += path
-          if (a.has("stats")) stats(path) = a.get("stats").asText()
-          val pvNode = a.path("partitionValues")
-          if (pvNode.isObject && pvNode.size() > 0) {
-            val m = mutable.Map.empty[String, String]
-            pvNode.fields().forEachRemaining(e =>
-              m(e.getKey) = if (e.getValue.isNull) null else e.getValue.asText())
-            pvals(path) = m.toMap
-          }
-          // an add REPLACES the path's entry: a dv-less re-add clears any
-          // earlier vector (this subset keys logical files by path; real
-          // Delta keys by (path, dvId) — single live DV per file here)
-          val dvNode = a.path("deletionVector")
-          if (dvNode.isObject)
-            dvs(path) = DeletionVectors.Descriptor(
-              dvNode.get("storageType").asText(),
-              dvNode.get("pathOrInlineDv").asText(),
-              dvNode.get("offset").asInt(),
-              dvNode.get("sizeInBytes").asInt(),
-              dvNode.get("cardinality").asLong())
-          else dvs -= path
-        } else if (node.has("remove")) {
-          val p = node.get("remove").get("path").asText()
-          live -= p
-          stats -= p
-          pvals -= p
-          dvs -= p
-        } else if (node.has("metaData")) {
-          val m = node.get("metaData")
-          meta = Some((m.get("id").asText(), m.get("schemaString").asText()))
-          val cm = mutable.Map.empty[String, String]
-          m.path("configuration").fields()
-            .forEachRemaining(e => cm(e.getKey) = e.getValue.asText())
-          config = cm.toMap
-          // partitionColumns must survive replay: a later metaData
-          // re-declaration (enableCdf, constraints) re-emits them, and
-          // dropping them here would let that commit silently
-          // un-partition the table
-          val pcs = mutable.ArrayBuffer.empty[String]
-          m.path("partitionColumns").forEach(p => pcs += p.asText())
-          partCols = pcs.toSeq
-        } else if (node.has("txn")) {
-          val t = node.get("txn")
-          val app = t.get("appId").asText()
-          txns(app) = math.max(txns.getOrElse(app, Long.MinValue),
-            t.get("version").asLong())
-        } else if (node.has("domainMetadata")) {
-          // §Domain Metadata: newest action per domain wins; a removal
-          // tombstone deletes the domain from the snapshot
-          val d = node.get("domainMetadata")
-          if (d.path("removed").asBoolean(false))
-            domains -= d.get("domain").asText()
-          else
-            domains(d.get("domain").asText()) =
-              d.get("configuration").asText()
-        }
-      }
+    (firstJson to asOf).foreach(v => actionsAt(fs, table, v).foreach(state(_)))
+    state.snapshot(asOf, if (fromCheckpoint) cpV else -1L, asOf - firstJson + 1)
+  }
+
+  /** The checkpoint parquet encoding (PROTOCOL.md §Checkpoints): one
+    * struct per action and one row builder, shared by both shapes. A
+    * classic checkpoint (single file or multi-part) holds every action in
+    * [[classic]] rows; a V2 checkpoint holds the control plane in
+    * [[v2Top]] rows and the add rows in [[sidecarFile]]s. */
+  private object CheckpointEncoding {
+    import org.apache.spark.sql.types._
+    private val protocol = StructType(Seq(
+      StructField("minReaderVersion", IntegerType),
+      StructField("minWriterVersion", IntegerType),
+      StructField("readerFeatures", ArrayType(StringType)),
+      StructField("writerFeatures", ArrayType(StringType))))
+    private val metaData = StructType(Seq(
+      StructField("id", StringType),
+      StructField("schemaString", StringType),
+      // configuration must survive the checkpoint or expireLog would
+      // silently drop CHECK constraints / column-mapping mode
+      StructField("configuration", MapType(StringType, StringType)),
+      // …and partitionColumns, or a post-expireLog metaData
+      // re-declaration (enableCdf) would un-partition the table
+      StructField("partitionColumns", ArrayType(StringType))))
+    private val add = StructType(Seq(
+      StructField("path", StringType),
+      StructField("size", LongType),
+      StructField("modificationTime", LongType),
+      StructField("dataChange", BooleanType),
+      StructField("stats", StringType),
+      StructField("partitionValues", MapType(StringType, StringType)),
+      // the spec's own rationale for checkpointing DV descriptors: a
+      // checkpoint SUBSUMES the JSON commits — dropping the vector
+      // here would resurrect deleted rows after expireLog
+      StructField("deletionVector", StructType(Seq(
+        StructField("storageType", StringType),
+        StructField("pathOrInlineDv", StringType),
+        StructField("offset", IntegerType),
+        StructField("sizeInBytes", IntegerType),
+        StructField("cardinality", LongType))))))
+    // SetTransaction rows — the spec REQUIRES checkpoints to preserve
+    // txn actions precisely so streaming dedup survives log cleanup
+    private val txn = StructType(Seq(
+      StructField("appId", StringType),
+      StructField("version", LongType)))
+    // §Domain Metadata: live (non-removed) domains must survive the
+    // checkpoint — they ARE system state (clustering declarations etc.)
+    private val domainMetadata = StructType(Seq(
+      StructField("domain", StringType),
+      StructField("configuration", StringType)))
+    private val checkpointMetadata = StructType(Seq(
+      StructField("version", LongType)))
+    private val sidecar = StructType(Seq(
+      StructField("path", StringType),
+      StructField("sizeInBytes", LongType),
+      StructField("modificationTime", LongType)))
+
+    val classic = StructType(Seq(StructField("protocol", protocol),
+      StructField("metaData", metaData), StructField("add", add),
+      StructField("txn", txn), StructField("domainMetadata", domainMetadata)))
+    val v2Top = StructType(Seq(StructField("protocol", protocol),
+      StructField("metaData", metaData), StructField("add", add),
+      StructField("txn", txn),
+      StructField("checkpointMetadata", checkpointMetadata),
+      StructField("sidecar", sidecar),
+      StructField("domainMetadata", domainMetadata)))
+    val sidecarFile = StructType(Seq(StructField("add", add)))
+
+    /** A `schema` row carrying one action: `kind`'s column set to
+      * `value`, every other column null. */
+    def row(schema: StructType)(action: (String, Row)): Row =
+      Row.fromSeq(schema.fieldNames.toSeq.map(n =>
+        if (n == action._1) action._2 else null))
+  }
+
+  /** `snap`'s control-plane actions as (column, struct) pairs: the LATEST
+    * protocol action verbatim (inferring it from current DV presence
+    * would silently downgrade a reader-3/writer-7 table whose vectors
+    * were later cleared, and a (1,2) row would let a pre-DV reader replay
+    * without refusing), the metaData, the txn ledger and live domains. */
+  private def stateRows(snap: Snapshot, table: String): Seq[(String, Row)] = {
+    val (tableId, schemaJson) = snap.meta.getOrElse(throw new IllegalStateException(
+      s"no metaData at version ${snap.version} of $table"))
+    def orNull[C <: Iterable[_]](c: C): C = if (c.isEmpty) null.asInstanceOf[C] else c
+    val p = snap.protocol.getOrElse(legacyProtocol)
+    ("protocol" -> Row(p.minReader, p.minWriter, orNull(p.readerFeatures),
+      orNull(p.writerFeatures))) +:
+      ("metaData" -> Row(tableId, schemaJson, orNull(snap.config),
+        orNull(snap.partCols))) +:
+      (snap.txns.toSeq.sortBy(_._1).map { case (app, ver) =>
+        "txn" -> Row(app, ver)
+      } ++ snap.domains.toSeq.sortBy(_._1).map { case (d, c) =>
+        "domainMetadata" -> Row(d, c)
+      })
+  }
+
+  /** One add struct per live file of `snap`, in snapshot order. */
+  private def addRows(fs: FileSystem, table: String, snap: Snapshot): Seq[Row] =
+    snap.files.map { f =>
+      val st = fs.getFileStatus(new Path(table, f))
+      val dvRow = snap.dvs.get(f).map(d =>
+        Row(d.storageType, d.pathOrInlineDv, d.offset, d.sizeInBytes,
+          d.cardinality)).orNull
+      Row(f, st.getLen, st.getModificationTime, true,
+        snap.stats.getOrElse(f, null), snap.pvals.getOrElse(f, null), dvRow)
     }
-    Snapshot(asOf, live.toSeq, meta, if (fromCheckpoint) cpV else -1L,
-      asOf - firstJson + 1, stats.toMap, txns.toMap, pvals.toMap, dvs.toMap,
-      proto, config, partCols, domains.toMap)
+
+  /** The install every checkpoint file takes: `rows` are written as
+    * `slices` parquet files through a private staging directory (a Spark
+    * write, so a checkpoint never buffers through the driver), and the
+    * i-th of the n written files is renamed to `target(i, n)`. A failed
+    * rename aborts BEFORE `_last_checkpoint` moves — a pointer at a
+    * missing part or sidecar plus [[expireLog]] would leave the table with
+    * no readable log state. Returns the installed paths. */
+  private def installParquet(spark: SparkSession, table: String,
+      schema: StructType, rows: Seq[Row],
+      slices: Int)(target: (Int, Int) => Path): Seq[Path] = {
+    val fs = hadoopFs(spark, table)
+    val staged = new Path(table, s"_checkpoint_staged_${stagingToken()}")
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, slices), schema)
+      .write.parquet(staged.toString)
+    val written = fs.listStatus(staged).toSeq.map(_.getPath)
+      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
+    val targets = written.indices.map(target(_, written.length))
+    val renamed = written.zip(targets).forall { case (p, t) => fs.rename(p, t) }
+    fs.delete(staged, true)
+    if (!renamed) throw new IllegalStateException(
+      s"checkpoint install rename failed on $table — aborted before " +
+        "_last_checkpoint was updated")
+    targets
+  }
+
+  /** Flip `_last_checkpoint` to version `v` (`size` actions, `parts`
+    * files when > 1), with the checkpointed version's inCommitTimestamp —
+    * how monotonicity survives [[expireLog]] deleting the JSON prefix
+    * ([[stampInCommitTimestamp]] re-anchors on it). */
+  private def writeLastCheckpoint(fs: FileSystem, table: String, v: Long,
+      size: Long, parts: Int): Unit = {
+    val partsField = if (parts > 1) s""","parts":$parts""" else ""
+    val ictField = (if (fs.exists(versionFile(table, v))) ictAt(fs, table, v)
+      else None).fold("")(i => s""","ict":$i""")
+    val out = fs.create(lastCheckpointFile(table), /* overwrite = */ true)
+    try out.write(s"""{"version":$v,"size":$size$partsField$ictField}"""
+      .getBytes(StandardCharsets.UTF_8))
+    finally out.close()
   }
 
   /** Write a checkpoint at version `v` (default: latest) holding the full
@@ -732,134 +908,25 @@ object DeltaLite {
     * form (`%020d.checkpoint.%010d.%010d.parquet`, `_last_checkpoint`
     * carrying `parts`) — how Delta checkpoints million-file tables
     * without one giant parquet; readers must see every part or fall back
-    * to full JSON replay. The parquet is staged via a Spark write and
-    * renamed to the spec paths, so the checkpoint never buffers through
-    * the driver. */
+    * to full JSON replay. */
   def checkpoint(spark: SparkSession, table: String, version: Long = -1L,
       parts: Int = 1): Long = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
+    import CheckpointEncoding.{classic, row}
     val fs = hadoopFs(spark, table)
     val v = if (version < 0) latestVersion(spark, table) else version
     require(v >= 0, s"$table has no commits to checkpoint")
     val snap = snapshot(spark, table, v)
-    val (tableId, schemaJson) = snap.meta.getOrElse(
-      throw new IllegalStateException(s"no metaData at version $v of $table"))
-    val cpSchema = StructType(Seq(
-      StructField("protocol", StructType(Seq(
-        StructField("minReaderVersion", IntegerType),
-        StructField("minWriterVersion", IntegerType),
-        StructField("readerFeatures", ArrayType(StringType)),
-        StructField("writerFeatures", ArrayType(StringType))))),
-      StructField("metaData", StructType(Seq(
-        StructField("id", StringType),
-        StructField("schemaString", StringType),
-        // configuration must survive the checkpoint or expireLog would
-        // silently drop CHECK constraints / column-mapping mode
-        StructField("configuration", MapType(StringType, StringType)),
-        // …and partitionColumns, or a post-expireLog metaData
-        // re-declaration (enableCdf) would un-partition the table
-        StructField("partitionColumns", ArrayType(StringType))))),
-      StructField("add", StructType(Seq(
-        StructField("path", StringType),
-        StructField("size", LongType),
-        StructField("modificationTime", LongType),
-        StructField("dataChange", BooleanType),
-        StructField("stats", StringType),
-        StructField("partitionValues", MapType(StringType, StringType)),
-        // the spec's own rationale for checkpointing DV descriptors: a
-        // checkpoint SUBSUMES the JSON commits — dropping the vector
-        // here would resurrect deleted rows after expireLog
-        StructField("deletionVector", StructType(Seq(
-          StructField("storageType", StringType),
-          StructField("pathOrInlineDv", StringType),
-          StructField("offset", IntegerType),
-          StructField("sizeInBytes", IntegerType),
-          StructField("cardinality", LongType))))))),
-      // SetTransaction rows — the spec REQUIRES checkpoints to preserve
-      // txn actions precisely so streaming dedup survives log cleanup
-      StructField("txn", StructType(Seq(
-        StructField("appId", StringType),
-        StructField("version", LongType)))),
-      // §Domain Metadata: live (non-removed) domains must survive the
-      // checkpoint — they ARE system state (clustering declarations etc.)
-      StructField("domainMetadata", StructType(Seq(
-        StructField("domain", StringType),
-        StructField("configuration", StringType))))))
-    // the checkpoint subsumes the JSON prefix, so it must re-emit the
-    // table's LATEST protocol action VERBATIM — inferring it from current
-    // DV presence would silently downgrade a reader-3/writer-7 table
-    // whose vectors were later cleared (full-file deletes, restore),
-    // and a (1,2) row would let a pre-DV reader replay without refusing
-    val protocolRow = snap.protocol match {
-      case Some(p) => Row(p.minReader, p.minWriter,
-        if (p.readerFeatures.nonEmpty) p.readerFeatures else null,
-        if (p.writerFeatures.nonEmpty) p.writerFeatures else null)
-      case None => Row(1, 2, null, null)
-    }
-    val rows = Row(protocolRow, null, null, null, null) +:
-      Row(null, Row(tableId, schemaJson,
-        if (snap.config.isEmpty) null else snap.config,
-        if (snap.partCols.isEmpty) null else snap.partCols),
-        null, null, null) +:
-      (snap.txns.toSeq.sortBy(_._1).map { case (app, ver) =>
-        Row(null, null, null, Row(app, ver), null)
-      } ++
-      snap.domains.toSeq.sortBy(_._1).map { case (d, c) =>
-        Row(null, null, null, null, Row(d, c))
-      } ++
-      snap.files.map { f =>
-        val st = fs.getFileStatus(new Path(table, f))
-        val dvRow = snap.dvs.get(f).map(d =>
-          Row(d.storageType, d.pathOrInlineDv, d.offset, d.sizeInBytes,
-            d.cardinality)).orNull
-        Row(null, null,
-          Row(f, st.getLen, st.getModificationTime, true,
-            snap.stats.getOrElse(f, null), snap.pvals.getOrElse(f, null),
-            dvRow), null, null)
-      })
-    val staged = new Path(table, s"_checkpoint_staged_${stagingToken()}")
-    spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, math.max(parts, 1)), cpSchema)
-      .write.parquet(staged.toString)
-    val stagedParts = fs.listStatus(staged)
-      .filter(_.getPath.getName.endsWith(".parquet"))
-      .sortBy(_.getPath.getName).map(_.getPath)
+    val rows = (stateRows(snap, table) ++
+      addRows(fs, table, snap).map("add" -> _)).map(row(classic))
     // actual non-empty output may be fewer than requested (tiny state):
     // the COMMITTED part count is what the files say
-    val nParts = stagedParts.length
-    // abort on a failed rename BEFORE _last_checkpoint is updated — a
-    // pointer at a missing checkpoint part + expireLog loses the log
-    val renamed =
-      if (nParts == 1) fs.rename(stagedParts.head, checkpointFile(table, v))
-      else stagedParts.zipWithIndex.forall { case (p, i) =>
-        fs.rename(p, checkpointPartFile(table, v, i + 1, nParts))
-      }
-    if (!renamed) {
-      fs.delete(staged, true)
-      throw new IllegalStateException(
-        s"checkpoint install rename failed on $table — aborted before " +
-          "_last_checkpoint was updated")
+    val installed = installParquet(spark, table, classic, rows,
+        math.max(parts, 1)) { (i, n) =>
+      if (n == 1) checkpointFile(table, v)
+      else checkpointPartFile(table, v, i + 1, n)
     }
-    fs.delete(staged, true)
-    val partsField = if (nParts > 1) s""","parts":$nParts""" else ""
-    val out = fs.create(lastCheckpointFile(table), /* overwrite = */ true)
-    try out.write(
-      s"""{"version":$v,"size":${rows.size}$partsField${ictField(fs, table, v)}}"""
-        .getBytes(StandardCharsets.UTF_8))
-    finally out.close()
+    writeLastCheckpoint(fs, table, v, rows.size, installed.size)
     v
-  }
-
-  /** The checkpointed version's inCommitTimestamp, as a `_last_checkpoint`
-    * JSON fragment — how monotonicity survives [[expireLog]] deleting the
-    * JSON prefix ([[stampInCommitTimestamp]] re-anchors on it); empty
-    * before enablement. */
-  private def ictField(fs: FileSystem, table: String, v: Long): String = {
-    val p = versionFile(table, v)
-    if (!fs.exists(p)) ""
-    else ictOfFirstLine(readLogText(fs, p))
-      .map(i => s""","ict":$i""").getOrElse("")
   }
 
   /** V2 CHECKPOINT (PROTOCOL.md §V2 Checkpoints — the current spec
@@ -884,8 +951,7 @@ object DeltaLite {
     * checkpointed version. */
   def checkpointV2(spark: SparkSession, table: String,
       sidecars: Int = 2): Long = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
+    import CheckpointEncoding.{row, sidecarFile, v2Top}
     require(sidecars >= 1, "need at least one sidecar file")
     val fs = hadoopFs(spark, table)
     // protocol gate: land the v2Checkpoint feature first, as its own
@@ -902,122 +968,27 @@ object DeltaLite {
         .map(v => base.copy(version = v, protocol = Some(upgraded)))
     }
     val v = snap.version
-    val (tableId, schemaJson) = snap.meta.getOrElse(
-      throw new IllegalStateException(s"no metaData at version $v of $table"))
-    val addType = StructType(Seq(
-      StructField("path", StringType),
-      StructField("size", LongType),
-      StructField("modificationTime", LongType),
-      StructField("dataChange", BooleanType),
-      StructField("stats", StringType),
-      StructField("partitionValues", MapType(StringType, StringType)),
-      StructField("deletionVector", StructType(Seq(
-        StructField("storageType", StringType),
-        StructField("pathOrInlineDv", StringType),
-        StructField("offset", IntegerType),
-        StructField("sizeInBytes", IntegerType),
-        StructField("cardinality", LongType))))))
-    val sidecarFileSchema = StructType(Seq(StructField("add", addType)))
+    val state = stateRows(snap, table)
     // file actions → round-robined across `sidecars` sidecar files
-    val addRows = snap.files.map { f =>
-      val st = fs.getFileStatus(new Path(table, f))
-      val dvRow = snap.dvs.get(f).map(d =>
-        Row(d.storageType, d.pathOrInlineDv, d.offset, d.sizeInBytes,
-          d.cardinality)).orNull
-      Row(Row(f, st.getLen, st.getModificationTime, true,
-        snap.stats.getOrElse(f, null), snap.pvals.getOrElse(f, null), dvRow))
-    }
-    val scDir = new Path(logDir(table), "_sidecars")
+    val adds = addRows(fs, table, snap)
+    val scDir = sidecarDir(table)
     fs.mkdirs(scDir)
-    val groups = addRows.zipWithIndex.groupBy(_._2 % sidecars)
-      .toSeq.sortBy(_._1).map(_._2.map(_._1))
-    val sidecarInfos = groups.map { g =>
-      val name = s"${java.util.UUID.randomUUID()}.parquet"
-      val staged = new Path(table,
-        s"_sidecar_staged_${stagingToken()}")
-      spark.createDataFrame(
-          spark.sparkContext.parallelize(g, 1), sidecarFileSchema)
-        .write.parquet(staged.toString)
-      val part = fs.listStatus(staged)
-        .filter(_.getPath.getName.endsWith(".parquet")).head.getPath
-      // a failed rename must abort BEFORE _last_checkpoint is touched:
-      // a pointer at a checkpoint with a missing sidecar + a subsequent
-      // expireLog would leave the table with no readable log state
-      if (!fs.rename(part, new Path(scDir, name))) {
-        fs.delete(staged, true)
-        throw new IllegalStateException(
-          s"sidecar install rename failed on $table — checkpoint aborted " +
-            "before _last_checkpoint was updated")
+    val sidecarRows = adds.zipWithIndex.groupBy(_._2 % sidecars).toSeq
+      .sortBy(_._1).map { case (_, g) =>
+        val p = installParquet(spark, table, sidecarFile,
+            g.map(a => row(sidecarFile)("add" -> a._1)), 1) { (_, _) =>
+          new Path(scDir, s"${java.util.UUID.randomUUID()}.parquet")
+        }.head
+        val st = fs.getFileStatus(p)
+        "sidecar" -> Row(p.getName, st.getLen, st.getModificationTime)
       }
-      fs.delete(staged, true)
-      val st = fs.getFileStatus(new Path(scDir, name))
-      (name, st.getLen, st.getModificationTime)
-    }
     // top-level file: control plane + checkpointMetadata + sidecar rows
-    val topSchema = StructType(Seq(
-      StructField("protocol", StructType(Seq(
-        StructField("minReaderVersion", IntegerType),
-        StructField("minWriterVersion", IntegerType),
-        StructField("readerFeatures", ArrayType(StringType)),
-        StructField("writerFeatures", ArrayType(StringType))))),
-      StructField("metaData", StructType(Seq(
-        StructField("id", StringType),
-        StructField("schemaString", StringType),
-        StructField("configuration", MapType(StringType, StringType)),
-        StructField("partitionColumns", ArrayType(StringType))))),
-      StructField("add", addType),
-      StructField("txn", StructType(Seq(
-        StructField("appId", StringType),
-        StructField("version", LongType)))),
-      StructField("checkpointMetadata", StructType(Seq(
-        StructField("version", LongType)))),
-      StructField("sidecar", StructType(Seq(
-        StructField("path", StringType),
-        StructField("sizeInBytes", LongType),
-        StructField("modificationTime", LongType)))),
-      StructField("domainMetadata", StructType(Seq(
-        StructField("domain", StringType),
-        StructField("configuration", StringType))))))
-    val protoRow = snap.protocol match {
-      case Some(p) => Row(p.minReader, p.minWriter,
-        if (p.readerFeatures.nonEmpty) p.readerFeatures else null,
-        if (p.writerFeatures.nonEmpty) p.writerFeatures else null)
-      case None => Row(1, 2, null, null)
+    val top = (state :+ ("checkpointMetadata" -> Row(v))) ++ sidecarRows
+    installParquet(spark, table, v2Top, top.map(row(v2Top)), 1) { (_, _) =>
+      new Path(logDir(table),
+        f"$v%020d.checkpoint.${java.util.UUID.randomUUID()}.parquet")
     }
-    val topRows =
-      Row(protoRow, null, null, null, null, null, null) +:
-      Row(null, Row(tableId, schemaJson,
-        if (snap.config.isEmpty) null else snap.config,
-        if (snap.partCols.isEmpty) null else snap.partCols),
-        null, null, null, null, null) +:
-      Row(null, null, null, null, Row(v), null, null) +:
-      (snap.txns.toSeq.sortBy(_._1).map { case (app, ver) =>
-        Row(null, null, null, Row(app, ver), null, null, null)
-      } ++ snap.domains.toSeq.sortBy(_._1).map { case (d, c) =>
-        Row(null, null, null, null, null, null, Row(d, c))
-      } ++ sidecarInfos.map { case (n, len, mt) =>
-        Row(null, null, null, null, null, Row(n, len, mt), null)
-      })
-    val topName = f"$v%020d.checkpoint.${java.util.UUID.randomUUID()}.parquet"
-    val staged = new Path(table,
-      s"_checkpoint_staged_${stagingToken()}")
-    spark.createDataFrame(
-        spark.sparkContext.parallelize(topRows, 1), topSchema)
-      .write.parquet(staged.toString)
-    val part = fs.listStatus(staged)
-      .filter(_.getPath.getName.endsWith(".parquet")).head.getPath
-    if (!fs.rename(part, new Path(logDir(table), topName))) {
-      fs.delete(staged, true)
-      throw new IllegalStateException(
-        s"checkpoint install rename failed on $table — aborted before " +
-          "_last_checkpoint was updated")
-    }
-    fs.delete(staged, true)
-    val out = fs.create(lastCheckpointFile(table), /* overwrite = */ true)
-    try out.write(
-      s"""{"version":$v,"size":${topRows.size + addRows.size}${ictField(fs, table, v)}}"""
-        .getBytes(StandardCharsets.UTF_8))
-    finally out.close()
+    writeLastCheckpoint(fs, table, v, top.size + adds.size, 1)
     v
   }
 
@@ -1384,9 +1355,11 @@ object DeltaLite {
     txn.filter { case (app, id) => snap.txns.get(app).exists(_ >= id) }
       .map { case (_, id) =>
         val fs = hadoopFs(spark, table)
-        (0L to snap.version).find { v =>
-          val p = versionFile(table, v)
-          fs.exists(p) && readLogText(fs, p).contains(batchMarker(id))
+        retainedVersions(fs, table).filter(_ <= snap.version).find { v =>
+          actionsAt(fs, table, v).exists {
+            case a: AddFile => a.path.contains(batchMarker(id))
+            case _ => false
+          }
         }.getOrElse(math.max(lastCheckpointVersion(spark, table), 0L))
       }
 
@@ -1534,11 +1507,6 @@ object DeltaLite {
   private def cmMode(config: Map[String, String]): String =
     config.getOrElse("delta.columnMapping.mode", "name")
 
-  private def cmProtocolLine: String = jsonObj("protocol") { p =>
-    p.put("minReaderVersion", 2)
-    p.put("minWriterVersion", 5)
-  }
-
   /** Assign fresh mapping metadata (id + physical name) to `fields`,
     * numbering from `firstId`. */
   private def cmAssign(fields: Seq[org.apache.spark.sql.types.StructField],
@@ -1577,7 +1545,7 @@ object DeltaLite {
       val (header, mapped) =
         if (v == 0) {
           val m = StructType(cmAssign(df.schema.fields.toSeq, 1L))
-          (Seq(cmProtocolLine,
+          (Seq(protocolLineOf(Protocol(2, 5, Nil, Nil)),
             metaDataLine(m, configuration = cmConfiguration(m, mode))), m)
         } else {
           val schema = schemaOf(snapW, table)
@@ -1604,12 +1572,8 @@ object DeltaLite {
             val maxId = cmMaxId(schema, snapW.config)
             val merged = StructType(
               schema.fields.toSeq ++ cmAssign(newCols.toSeq, maxId + 1))
-            val (id, _) = snapW.meta.getOrElse(
-              throw new IllegalArgumentException(s"no metaData in $table"))
-            (Seq(metaDataLine(merged, id,
-              configuration = cmConfiguration(merged, cmMode(snapW.config),
-                floor = maxId))),
-              merged)
+            (Seq(redeclare(snapW, table, merged, cmConfiguration(merged,
+              cmMode(snapW.config), floor = maxId))), merged)
           }
         }
       // physical frame: physical names + the column id as parquet field
@@ -1634,7 +1598,7 @@ object DeltaLite {
   def renameColumn(spark: SparkSession, table: String, oldName: String,
       newName: String): Long =
     commitOn(spark, table, "rename column") { snapR =>
-      val (id, schema) = metaOf(snapR, table)
+      val (_, schema) = metaOf(snapR, table)
       require(isColumnMapped(schema),
         s"renaming without a rewrite requires column mapping — $table is unmapped")
       require(schema.fieldNames.contains(oldName), s"no column $oldName in $table")
@@ -1643,9 +1607,8 @@ object DeltaLite {
       val renamed = StructType(schema.fields.map(f =>
         if (f.name == oldName) f.copy(name = newName) else f))
       claim(spark, table, snapR, Seq(commitInfoLine("RENAME COLUMN"),
-        metaDataLine(renamed, id,
-          configuration = cmConfiguration(renamed, cmMode(snapR.config),
-            floor = cmMaxId(schema, snapR.config)))))
+        redeclare(snapR, table, renamed, cmConfiguration(renamed,
+          cmMode(snapR.config), floor = cmMaxId(schema, snapR.config)))))
     }
 
   /** The table id and schema of `snap`, refusing a table with no log. */
@@ -1655,24 +1618,34 @@ object DeltaLite {
       s"no metaData in $table log"))._1, schemaOf(snap, table))
   }
 
+  /** THE metaData re-declaration: `snap`'s table id, partition columns
+    * and configuration carried forward, with only the op's `schema` and
+    * configuration `edits` applied. Every commit that re-declares
+    * metaData on an existing table goes through it, so no op erases what
+    * another declared (CHECK constraints, `delta.appendOnly`, the CDF and
+    * in-commit-timestamp flags, the column-mapping keys). */
+  private def redeclare(snap: Snapshot, table: String, schema: StructType,
+      edits: Map[String, String] = Map.empty): String =
+    metaDataLine(schema, metaOf(snap, table)._1, snap.partCols,
+      snap.config ++ edits)
+
   /** METADATA-ONLY column drop (column mapping's second superpower): the
     * field leaves the logical schema; its physical column stays in every
     * data file, invisible to readers (a later physical purge is a
     * rewrite — out of scope here, as in Delta's own DROP COLUMN). */
   def dropColumn(spark: SparkSession, table: String, name: String): Long =
     commitOn(spark, table, "drop column") { snapD =>
-      val (id, schema) = metaOf(snapD, table)
+      val (_, schema) = metaOf(snapD, table)
       require(isColumnMapped(schema),
         s"dropping without a rewrite requires column mapping — $table is unmapped")
       require(schema.fieldNames.contains(name), s"no column $name in $table")
       require(schema.fields.length > 1, s"cannot drop the last column of $table")
       val dropped = StructType(schema.fields.filterNot(_.name == name))
       claim(spark, table, snapD, Seq(commitInfoLine("DROP COLUMNS"),
-        metaDataLine(dropped, id,
-          // floor keeps maxColumnId at the PRE-drop high-water mark: the
-          // dropped field's id must never be handed to a later ADD COLUMNS
-          configuration = cmConfiguration(dropped, cmMode(snapD.config),
-            floor = cmMaxId(schema, snapD.config)))))
+        // floor keeps maxColumnId at the PRE-drop high-water mark: the
+        // dropped field's id must never be handed to a later ADD COLUMNS
+        redeclare(snapD, table, dropped, cmConfiguration(dropped,
+          cmMode(snapD.config), floor = cmMaxId(schema, snapD.config)))))
     }
 
   /** METADATA-ONLY widening — SQL `ALTER TABLE ADD COLUMNS`'s landing
@@ -1687,19 +1660,18 @@ object DeltaLite {
   def addColumn(spark: SparkSession, table: String, name: String,
       dataType: org.apache.spark.sql.types.DataType): Long =
     commitOn(spark, table, "add column") { snapA =>
-      val (id, schema) = metaOf(snapA, table)
+      val (_, schema) = metaOf(snapA, table)
       require(!schema.fieldNames.contains(name),
         s"column $name already exists in $table")
       val nf = org.apache.spark.sql.types.StructField(name, dataType)
-      val (widened, conf) =
+      val (widened, edits) =
         if (isColumnMapped(schema)) {
           val maxId = cmMaxId(schema, snapA.config)
           val w = StructType(schema.fields.toSeq ++ cmAssign(Seq(nf), maxId + 1))
-          (w, snapA.config ++ cmConfiguration(w, cmMode(snapA.config),
-            floor = maxId))
-        } else (StructType(schema.fields :+ nf), snapA.config)
+          (w, cmConfiguration(w, cmMode(snapA.config), floor = maxId))
+        } else (StructType(schema.fields :+ nf), Map.empty[String, String])
       claim(spark, table, snapA, Seq(commitInfoLine("ADD COLUMNS"),
-        metaDataLine(widened, id, snapA.partCols, conf)))
+        redeclare(snapA, table, widened, edits)))
     }
 
   /** Add a CHECK constraint (PROTOCOL.md §CHECK Constraints) as a
@@ -1713,15 +1685,14 @@ object DeltaLite {
       expr: String): Long = {
     import org.apache.spark.sql.functions.{expr => e_, not}
     commitOn(spark, table, "addConstraint") { snapC =>
-      val (id, schema) = metaOf(snapC, table)
+      val (_, schema) = metaOf(snapC, table)
       val violating = readOf(spark, table, snapC).where(not(e_(expr))).count()
       require(violating == 0L,
         s"cannot add constraint $name: $violating existing row(s) violate ($expr)")
       claim(spark, table, snapC,
         commitInfoLine("ADD CONSTRAINT") +:
           raiseLine(snapC, "checkConstraints") :+
-          metaDataLine(schema, id, partitionColumns = snapC.partCols,
-            configuration = snapC.config + (s"delta.constraints.$name" -> expr)))
+          redeclare(snapC, table, schema, Map(s"delta.constraints.$name" -> expr)))
     }
   }
 
@@ -1753,10 +1724,9 @@ object DeltaLite {
     * commit. */
   def setAppendOnly(spark: SparkSession, table: String): Long =
     commitOn(spark, table, "setAppendOnly") { snap =>
-      val (id, schema) = metaOf(snap, table)
       claim(spark, table, snap, Seq(commitInfoLine("SET TBLPROPERTIES"),
-        metaDataLine(schema, id, partitionColumns = snap.partCols,
-          configuration = snap.config + ("delta.appendOnly" -> "true"))))
+        redeclare(snap, table, metaOf(snap, table)._2,
+          Map("delta.appendOnly" -> "true"))))
     }
 
   /** Write-time enforcement of `delta.appendOnly`: called by every op
@@ -1821,7 +1791,7 @@ object DeltaLite {
     import org.apache.spark.sql.functions.{col, expr, not}
     commitOn(spark, table, "addGeneratedColumn") { snap =>
       requireNotMapped(snap, table, "addGeneratedColumn()")
-      val (id, schema) = metaOf(snap, table)
+      val (_, schema) = metaOf(snap, table)
       require(schema.fieldNames.contains(column),
         s"column $column not in $table schema — generated columns are " +
           "declared over existing columns in this subset")
@@ -1838,8 +1808,7 @@ object DeltaLite {
       claim(spark, table, snap,
         commitInfoLine("ADD GENERATED COLUMN") +:
           raiseLine(snap, "generatedColumns") :+
-          metaDataLine(newSchema, id,
-            partitionColumns = snap.partCols, configuration = snap.config))
+          redeclare(snap, table, newSchema))
     }
   }
 
@@ -1911,7 +1880,7 @@ object DeltaLite {
               // which would break reads of older files missing it — and
               // evolution-added columns are always nullable (pre-widening
               // files surface them as NULL).
-              case Some((id, sj)) =>
+              case Some((_, sj)) =>
                 val tbl = DataType.fromJson(sj).asInstanceOf[StructType]
                 val noMeta = org.apache.spark.sql.types.Metadata.empty
                 def strip(s: StructType) = StructType(s.fields.map(_.copy(
@@ -1926,9 +1895,7 @@ object DeltaLite {
                       case None => f.copy(nullable = true)
                     }
                   })
-                  Seq(metaDataLine(merged, id,
-                    partitionColumns = base.partCols,
-                    configuration = base.config))
+                  Seq(redeclare(base, table, merged))
                 }
               case _ => Seq.empty
             }
@@ -1949,64 +1916,32 @@ object DeltaLite {
     * files of the versions it has not seen. */
   def readChanges(spark: SparkSession, table: String, fromV: Long,
       toV: Long): DataFrame = {
-    val fs = hadoopFs(spark, table)
     requireNotMapped(head(spark, table), table, "readChanges()") // physical-name scan
-    val added = mutable.LinkedHashSet.empty[String]
-    ((fromV + 1) to toV).foreach { v =>
-      val p = versionFile(table, v)
-      require(fs.exists(p), s"version $v absent from $table/_delta_log")
-      val in = fs.open(p)
-      val text = try {
-        val buf = new java.io.ByteArrayOutputStream()
-        org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 65536, false)
-        buf.toString("UTF-8")
-      } finally in.close()
-      text.split('\n').filter(_.nonEmpty).foreach { line =>
-        val node = mapper.readTree(line)
-        // dataChange=false actions (OPTIMIZE rearrangements) move bytes,
-        // not rows — invisible to the change feed by protocol contract
-        if (node.has("remove") &&
-          node.get("remove").path("dataChange").asBoolean(true))
-          throw new UnsupportedOperationException(
-            s"version $v removes files: append-only change feed cannot " +
-              "represent it — use row-level CDC")
-        if (node.has("add") &&
-          node.get("add").path("dataChange").asBoolean(true))
-          added += node.get("add").get("path").asText()
-      }
-    }
+    val added = addedFilesBetween(spark, table, fromV, toV)
+    val schema = tableSchema(spark, table, toV)
     if (added.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        tableSchema(spark, table, toV))
-    else spark.read.schema(tableSchema(spark, table, toV))
-      .parquet(added.toSeq.map(f => dataPath(table, f)): _*)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    else spark.read.schema(schema).parquet(added.map(dataPath(table, _)): _*)
   }
 
-  /** [[readChanges]]' FILE-level twin for the streaming source (X291):
-    * the add paths committed in versions (fromV, toV], refusing any
-    * version that removes files (the append-only discipline — a stream
-    * of appends cannot represent a rewrite; row-level CDC can). */
+  /** [[readChanges]]' FILE-level half, which the streaming source (X291)
+    * serves directly: the add paths committed in versions (fromV, toV],
+    * refusing any version that removes files (the append-only discipline
+    * — a stream of appends cannot represent a rewrite; row-level CDC
+    * can). dataChange=false actions (OPTIMIZE rearrangements) move bytes,
+    * not rows — invisible to the feed by protocol contract. */
   private[graft] def addedFilesBetween(spark: SparkSession, table: String,
       fromV: Long, toV: Long): Seq[String] = {
     val fs = hadoopFs(spark, table)
-    val added = mutable.LinkedHashSet.empty[String]
-    ((fromV + 1) to toV).foreach { v =>
-      val p = versionFile(table, v)
-      require(fs.exists(p), s"version $v absent from $table/_delta_log — " +
-        "expired below the stream's offset; restart the stream")
-      readLogText(fs, p).split('\n').filter(_.nonEmpty).foreach { line =>
-        val node = mapper.readTree(line)
-        if (node.has("remove") &&
-          node.get("remove").path("dataChange").asBoolean(true))
+    ((fromV + 1) to toV).flatMap { v =>
+      actionsAt(fs, table, v).collect {
+        case r: RemoveFile if r.dataChange =>
           throw new UnsupportedOperationException(
-            s"version $v removes files: the table stream serves appends " +
+            s"version $v removes files: an append-only feed serves appends " +
               "only — consume rewrites through readCdf")
-        if (node.has("add") &&
-          node.get("add").path("dataChange").asBoolean(true))
-          added += node.get("add").get("path").asText()
+        case a: AddFile if a.dataChange => a.path
       }
-    }
-    added.toSeq
+    }.distinct
   }
 
   /** Data skipping off the log's `stats` layer: select the current
@@ -2024,17 +1959,8 @@ object DeltaLite {
   private def planSkipping(snap: Snapshot, table: String, column: String,
       lo: Long, hi: Long): (Seq[String], Long, Long) = {
     requireNotMapped(snap, table, "planSkipping()")
-    val matched = snap.files.filter { f =>
-      snap.stats.get(f) match {
-        case Some(js) =>
-          val n = mapper.readTree(js)
-          val mi = n.path("minValues").path(column)
-          val ma = n.path("maxValues").path(column)
-          mi.isMissingNode || ma.isMissingNode ||
-            (ma.asLong() >= lo && mi.asLong() <= hi)
-        case None => true
-      }
-    }
+    val matched = snap.files.filter(f =>
+      snap.stats.get(f).forall(fileStats(_).mayOverlap(column, lo, hi)))
     (matched, matched.size.toLong, snap.files.size.toLong)
   }
 
@@ -2236,10 +2162,6 @@ object DeltaLite {
         byKey(FileKey.ofUri(r.getString(0))) -> r.getSeq[Long](1).toArray)
       val hitFiles = hits.map(_._1).toSet
       val oldPos = dvPositions(spark, table, snap.dvs.filter(d => hitFiles(d._1)))
-      def numRecords(f: String): Option[Long] = snap.stats.get(f).flatMap { s =>
-        val n = mapper.readTree(s).path("numRecords")
-        if (n.isNumber) Some(n.asLong()) else None
-      }
       // union new positions into any existing vector; keep only files with
       // NEWLY deleted rows
       val perFile: Seq[(String, Long, Array[Long])] = hits.map { case (f, newPos) =>
@@ -2249,7 +2171,8 @@ object DeltaLite {
       }.filter { case (_, oldN, union) => union.length > oldN }
       if (perFile.isEmpty) return Some((snap.version, 0L, 0L))
       val (fullyDeleted, partial) = perFile.partition { case (f, _, union) =>
-        numRecords(f).contains(union.length.toLong)
+        snap.stats.get(f).flatMap(fileStats(_).numRecords)
+          .contains(union.length.toLong)
       }
       val descs =
         if (partial.isEmpty) Seq.empty
@@ -2379,19 +2302,13 @@ object DeltaLite {
   def history(spark: SparkSession, table: String): DataFrame = {
     import spark.implicits._
     val fs = hadoopFs(spark, table)
-    val latest = latestVersion(spark, table)
-    (0L to latest).flatMap { v =>
-      val p = versionFile(table, v)
-      if (!fs.exists(p)) None
-      else {
-        val nodes = readLogText(fs, p).split('\n').filter(_.nonEmpty)
-          .map(mapper.readTree)
-        Some((v,
-          nodes.find(_.has("commitInfo"))
-            .map(_.get("commitInfo").get("operation").asText()).getOrElse("-"),
-          nodes.count(_.has("add")).toLong,
-          nodes.count(_.has("remove")).toLong))
-      }
+    retainedVersions(fs, table).map { v =>
+      val actions = actionsAt(fs, table, v)
+      (v,
+        actions.collectFirst { case c: CommitInfo => c.operation.getOrElse("-") }
+          .getOrElse("-"),
+        actions.count(_.isInstanceOf[AddFile]).toLong,
+        actions.count(_.isInstanceOf[RemoveFile]).toLong)
     }.toDF("version", "operation", "n_adds", "n_removes")
   }
 
@@ -2448,7 +2365,7 @@ object DeltaLite {
         org.apache.spark.sql.functions.col(physicalName(f)).as(f.name))
         .toIndexedSeq: _*)
     if (snap.files.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
         schema)
     else toLogical(scanWithDvs(spark, table, scanSchema, snap.files,
       snap.dvs))
@@ -2484,10 +2401,7 @@ object DeltaLite {
       partitionValues: Map[String, String] = Map.empty): String =
     jsonObj("cdc") { c =>
     c.put("path", path)
-    val pv = c.putObject("partitionValues")
-    partitionValues.foreach { case (k, v) =>
-      if (v == null) pv.putNull(k) else pv.put(k, v)
-    }
+    putMap(c, "partitionValues", partitionValues)
     c.put("size", size)
     c.put("dataChange", false)
   }
@@ -2586,31 +2500,26 @@ object DeltaLite {
   def enableInCommitTimestamps(spark: SparkSession, table: String,
       now: Long = System.currentTimeMillis()): Long =
     commitOn(spark, table, "enableInCommitTimestamps") { snap =>
-      val (id, schema) = metaOf(snap, table)
+      val (_, schema) = metaOf(snap, table)
       if (snap.config.get("delta.enableInCommitTimestamps").contains("true"))
         Some(snap.version)
       else claim(spark, table, snap,
         ictCommitInfoLine("SET TBLPROPERTIES", now) +:
           raiseLine(snap, "inCommitTimestamp") :+
-          metaDataLine(schema, id, partitionColumns = snap.partCols,
-            configuration = snap.config ++ Map(
-              "delta.enableInCommitTimestamps" -> "true",
-              "delta.inCommitTimestampEnablementVersion" ->
-                (snap.version + 1).toString,
-              "delta.inCommitTimestampEnablementTimestamp" -> now.toString)))
+          redeclare(snap, table, schema, Map(
+            "delta.enableInCommitTimestamps" -> "true",
+            "delta.inCommitTimestampEnablementVersion" ->
+              (snap.version + 1).toString,
+            "delta.inCommitTimestampEnablementTimestamp" -> now.toString)))
     }
 
   /** The (version, inCommitTimestamp) ledger of every retained commit
     * that carries a stamp, ascending — the table's time axis. */
   def ictLedger(spark: SparkSession, table: String): Seq[(Long, Long)] = {
     val fs = hadoopFs(spark, table)
-    val latest = latestVersion(spark, table)
-    require(latest >= 0, s"$table has no Delta log")
-    (0L to latest).flatMap { v =>
-      val p = versionFile(table, v)
-      if (!fs.exists(p)) None
-      else ictOfFirstLine(readLogText(fs, p)).map(i => (v, i))
-    }
+    val retained = retainedVersions(fs, table)
+    require(retained.nonEmpty, s"$table has no Delta log")
+    retained.flatMap(v => ictAt(fs, table, v).map(v -> _))
   }
 
   /** `TIMESTAMP AS OF` resolved THROUGH in-commit timestamps: the newest
@@ -2636,13 +2545,12 @@ object DeltaLite {
   def enableCdf(spark: SparkSession, table: String): Long =
     commitOn(spark, table, "enableCdf") { snap =>
       requireNotMapped(snap, table, "enableCdf()")
-      val (id, schema) = metaOf(snap, table)
+      val (_, schema) = metaOf(snap, table)
       if (cdfEnabled(snap.config)) Some(snap.version)
       else claim(spark, table, snap,
         commitInfoLine("SET TBLPROPERTIES") +:
           raiseLine(snap, "changeDataFeed") :+
-          metaDataLine(schema, id, partitionColumns = snap.partCols,
-            configuration = snap.config + (CdfKey -> "true")))
+          redeclare(snap, table, schema, Map(CdfKey -> "true")))
     }
 
   /** Stage `df` (table columns + `_change_type`) as this commit's change
@@ -2944,18 +2852,9 @@ object DeltaLite {
         // (1) stats-planned candidates: committed [min,max] vs source range
         val b = src.agg(mn_(c_(keyCol)), mx_(c_(keyCol))).collect()(0)
         val (srcLo, srcHi) = (b.getLong(0), b.getLong(1))
-        def bounds(f: String): Option[(Long, Long)] = snap.stats.get(f)
-          .flatMap { s =>
-            val n = mapper.readTree(s)
-            val lo = n.path("minValues").path(keyCol)
-            val hi = n.path("maxValues").path(keyCol)
-            if (lo.isNumber && hi.isNumber) Some((lo.asLong(), hi.asLong()))
-            else None
-          }
-        val candidates = snap.files.filter(f => bounds(f) match {
-          case Some((fLo, fHi)) => fHi >= srcLo && fLo <= srcHi
-          case None => true // no stats: must be scanned
-        })
+        // no stats: must be scanned
+        val candidates = snap.files.filter(f =>
+          snap.stats.get(f).forall(fileStats(_).mayOverlap(keyCol, srcLo, srcHi)))
         // live rows of `files` with their [[FileKey]] as `__fn`
         def liveWithFile(files: Seq[String]): DataFrame =
           scanWithDvs(spark, table, schema, files, snap.dvs)
@@ -3039,23 +2938,6 @@ object DeltaLite {
     commitOn(spark, table, "merge")(attempt)
   }
 
-  /** Read the row-level change feed for versions (fromV, toV]: table
-    * columns plus `_change_type`
-    * (insert / delete / update_preimage / update_postimage) and
-    * `_commit_version`. Commits carrying `cdc` actions are read from
-    * their change files — authoritative and complete for that version, by
-    * protocol. Commits without them derive: dataChange adds are inserts,
-    * dataChange removes are whole-file deletes — read from the tombstoned
-    * file (which must still exist — the same pre-vacuum window Delta's
-    * own CDF has) with any prior deletion vector SUBTRACTED, so
-    * already-masked rows never resurrect in the feed. A derive that would
-    * be WRONG — an add introducing a deletion vector (only its
-    * newly-masked rows changed, not the whole file) — refuses instead.
-    * CDF must be enabled at `fromV`. `partitionFilter` restricts the
-    * feed to matching partitions: change/add files whose log action
-    * records deciding partitionValues are PRUNED on mismatch (never
-    * opened), undecided files are read and row-filtered — so the result
-    * is exact either way and pruning is purely a cost lever. */
   /** One file of a version's CHANGE SET, as the streaming change feed
     * plans it (X297): `cdc` files carry their own `_change_type` column;
     * `insert` units are the commit's dataChange adds; `delete` units are
@@ -3066,63 +2948,89 @@ object DeltaLite {
       dvPositions: Array[Long])
 
   /** First version whose snapshot declares change-data-feed — the
-    * earliest point the feed can serve from. */
+    * earliest point the feed can serve from. One forward walk of the
+    * metaData actions from the oldest replayable version: the JSON log
+    * from v0 while it is retained, else the checkpoint's state (its
+    * version is then the earliest answer) and the JSON after it. */
   private[graft] def firstCdfVersion(spark: SparkSession,
       table: String): Option[Long] = {
+    val fs = hadoopFs(spark, table)
     val latest = latestVersion(spark, table)
-    (0L to latest).find(v => cdfEnabled(snapshot(spark, table, v).config))
+    val cpV = lastCheckpointVersion(spark, table)
+    val (base, baseConfig) =
+      if (cpV < 0 || fs.exists(versionFile(table, 0L)))
+        (-1L, Map.empty[String, String])
+      else (cpV, snapshot(spark, table, cpV).config)
+    ((base + 1) to latest).iterator.scanLeft((base, baseConfig)) {
+      case ((_, config), v) =>
+        (v, actionsAt(fs, table, v).foldLeft(config) {
+          case (_, m: Metadata) => m.configuration
+          case (c, _) => c
+        })
+    }.collectFirst { case (v, config) if v >= 0 && cdfEnabled(config) => v }
   }
 
-  /** Version `v`'s change units for the STREAMING feed — the same
-    * per-version rules as [[readCdf]] (cdc wins; else adds as inserts +
-    * removes as DV-masked deletes; a DV add without cdc is underivable
-    * and refuses), but as FILE-GRANULAR plans an executor-side reader
-    * can serve without a driver-side DataFrame. */
+  /** Version `v`'s CHANGE SET (PROTOCOL.md §Change Data Feed), the one
+    * per-version rule both feeds share: its `cdc` files when it has any —
+    * authoritative and complete for that version, by protocol — else its
+    * dataChange adds (inserts) and removes (deletes). A derive that would
+    * be WRONG — an add introducing a deletion vector (only its
+    * newly-masked rows changed, not the whole file) — refuses instead. */
+  private final case class ChangeSet(cdc: Seq[AddCDCFile], adds: Seq[AddFile],
+      removes: Seq[String])
+
+  private def changeSet(fs: FileSystem, table: String, v: Long): ChangeSet = {
+    val actions = actionsAt(fs, table, v)
+    val cdc = actions.collect { case c: AddCDCFile => c }
+    if (cdc.nonEmpty) ChangeSet(cdc, Nil, Nil)
+    else {
+      val adds = actions.collect { case a: AddFile if a.dataChange => a }
+      if (adds.exists(_.deletionVector.isDefined))
+        throw new UnsupportedOperationException(
+          s"version $v adds a deletion vector without cdc actions — " +
+            "its row-level changes are underivable from the file actions")
+      ChangeSet(Nil, adds,
+        actions.collect { case r: RemoveFile if r.dataChange => r.path })
+    }
+  }
+
+  /** Version `v`'s change units for the STREAMING feed — [[changeSet]]
+    * as FILE-GRANULAR plans an executor-side reader can serve without a
+    * driver-side DataFrame; a removed file's deleted rows exclude any
+    * vector it carried at the prior version. */
   private[graft] def changeUnits(spark: SparkSession, table: String,
       v: Long): Seq[ChangeUnit] = {
-    val fs = hadoopFs(spark, table)
-    val p = versionFile(table, v)
-    require(fs.exists(p), s"version $v absent from $table/_delta_log")
-    var cdcPaths = Vector.empty[String]
-    var addPaths = Vector.empty[String]
-    var rmPaths = Vector.empty[String]
-    var dvAdd = false
-    readLogText(fs, p).split('\n').filter(_.nonEmpty).foreach { line =>
-      val node = mapper.readTree(line)
-      if (node.has("cdc"))
-        cdcPaths :+= node.get("cdc").get("path").asText()
-      else if (node.has("add") &&
-        node.get("add").path("dataChange").asBoolean(true)) {
-        addPaths :+= node.get("add").get("path").asText()
-        if (node.get("add").path("deletionVector").isObject) dvAdd = true
-      } else if (node.has("remove") &&
-        node.get("remove").path("dataChange").asBoolean(true))
-        rmPaths :+= node.get("remove").get("path").asText()
-    }
-    if (cdcPaths.nonEmpty)
-      cdcPaths.map(ChangeUnit(_, "cdc", Array.empty))
-    else {
-      if (dvAdd) throw new UnsupportedOperationException(
-        s"version $v adds a deletion vector without cdc actions — " +
-          "its row-level changes are underivable from the file actions")
-      val dels =
-        if (rmPaths.isEmpty) Seq.empty
-        else {
-          val rm = rmPaths.toSet
-          val prior = dvPositions(spark, table,
-            snapshot(spark, table, v - 1).dvs.filter(d => rm(d._1)))
-          rmPaths.map(f => ChangeUnit(f, "delete",
-            prior.getOrElse(FileKey(dataPath(table, f)), Array.empty[Long])))
-        }
-      addPaths.map(ChangeUnit(_, "insert", Array.empty)) ++ dels
-    }
+    val cs = changeSet(hadoopFs(spark, table), table, v)
+    val prior =
+      if (cs.removes.isEmpty) Map.empty[String, Array[Long]]
+      else {
+        val rm = cs.removes.toSet
+        dvPositions(spark, table,
+          snapshot(spark, table, v - 1).dvs.filter(d => rm(d._1)))
+      }
+    cs.cdc.map(c => ChangeUnit(c.path, "cdc", Array.empty)) ++
+      cs.adds.map(a => ChangeUnit(a.path, "insert", Array.empty)) ++
+      cs.removes.map(f => ChangeUnit(f, "delete",
+        prior.getOrElse(FileKey(dataPath(table, f)), Array.empty[Long])))
   }
 
+  /** Read the row-level change feed for versions (fromV, toV]: table
+    * columns plus `_change_type`
+    * (insert / delete / update_preimage / update_postimage) and
+    * `_commit_version`, from each version's [[changeSet]]: its change
+    * files, or its adds as inserts and its removes as whole-file deletes
+    * — read from the tombstoned file (which must still exist — the same
+    * pre-vacuum window Delta's own CDF has) with any prior deletion
+    * vector SUBTRACTED, so already-masked rows never resurrect in the
+    * feed. CDF must be enabled at `fromV`. `partitionFilter` restricts the
+    * feed to matching partitions: change/add files whose log action
+    * records deciding partitionValues are PRUNED on mismatch (never
+    * opened), undecided files are read and row-filtered — so the result
+    * is exact either way and pruning is purely a cost lever. */
   def readCdf(spark: SparkSession, table: String, fromV: Long,
       toV: Long, partitionFilter: Map[String, String] = Map.empty)
       : DataFrame = {
     import org.apache.spark.sql.functions.{col => c_, lit}
-    val fs = hadoopFs(spark, table)
     requireNotMapped(head(spark, table), table, "readCdf()")
     require(cdfEnabled(snapshot(spark, table, fromV).config),
       s"change data feed not enabled on $table at version $fromV")
@@ -3144,74 +3052,38 @@ object DeltaLite {
       partitionFilter.nonEmpty &&
         partitionFilter.keySet.subsetOf(pv.keySet) &&
         partitionFilter.exists { case (k, v) => pv(k) != v }
-    def nodePv(n: com.fasterxml.jackson.databind.JsonNode)
-        : Map[String, String] = {
-      val out = mutable.Map.empty[String, String]
-      n.path("partitionValues").fields().forEachRemaining(e =>
-        out(e.getKey) = if (e.getValue.isNull) null else e.getValue.asText())
-      out.toMap
-    }
     def rowFilter(df: DataFrame): DataFrame =
       partitionFilter.foldLeft(df) { case (d, (k, v)) =>
         d.where(if (v == null) c_(k).isNull else c_(k) === v)
       }
+    val fs = hadoopFs(spark, table)
     val frames = ((fromV + 1) to toV).flatMap { v =>
-      val p = versionFile(table, v)
-      require(fs.exists(p), s"version $v absent from $table/_delta_log")
-      var cdcPaths = Vector.empty[String]
-      var addPaths = Vector.empty[String]
-      var rmPaths = Vector.empty[String]
-      var dvAdd = false
-      readLogText(fs, p).split('\n').filter(_.nonEmpty).foreach { line =>
-        val node = mapper.readTree(line)
-        if (node.has("cdc")) {
-          if (!decidedMismatch(nodePv(node.get("cdc"))))
-            cdcPaths :+= node.get("cdc").get("path").asText()
-        } else if (node.has("add") &&
-          node.get("add").path("dataChange").asBoolean(true)) {
-          if (!decidedMismatch(nodePv(node.get("add"))))
-            addPaths :+= node.get("add").get("path").asText()
-          if (node.get("add").path("deletionVector").isObject) dvAdd = true
-        } else if (node.has("remove") &&
-          node.get("remove").path("dataChange").asBoolean(true))
-          rmPaths :+= node.get("remove").get("path").asText()
-      }
+      val cs = changeSet(fs, table, v)
+      val cdc = cs.cdc.filterNot(c => decidedMismatch(c.partitionValues))
+      val adds = cs.adds.filterNot(a => decidedMismatch(a.partitionValues))
+      // a tombstoned file's deleted rows are its LIVE rows at the prior
+      // version — any deletion vector it carried must be subtracted, or
+      // the feed resurrects already-deleted rows. removes carry no
+      // partitionValues of their own: the PRIOR snapshot's add-side
+      // values decide the pruning
+      lazy val prior = snapshot(spark, table, v - 1)
+      val removes = cs.removes.filterNot(f =>
+        prior.pvals.get(f).exists(decidedMismatch))
       val perVersion: Seq[DataFrame] =
-        if (cdcPaths.nonEmpty)
-          Seq(spark.read.schema(cdcSchema)
-            .parquet(cdcPaths.map(f => dataPath(table, f)): _*))
-        else {
-          if (dvAdd) throw new UnsupportedOperationException(
-            s"version $v adds a deletion vector without cdc actions — " +
-              "its row-level changes are underivable from the file actions")
-          val dels =
-            if (rmPaths.isEmpty) Seq.empty[DataFrame]
-            else {
-              // a tombstoned file's deleted rows are its LIVE rows at the
-              // prior version — any deletion vector it carried must be
-              // subtracted, or the feed resurrects already-deleted rows.
-              // removes carry no partitionValues of their own: the PRIOR
-              // snapshot's add-side values decide the pruning
-              val prior = snapshot(spark, table, v - 1)
-              val keptRm = rmPaths.filterNot(f =>
-                prior.pvals.get(f).exists(decidedMismatch))
-              if (keptRm.isEmpty) Seq.empty[DataFrame]
-              else Seq(scanWithDvs(spark, table, schema, keptRm, prior.dvs)
-                .withColumn("_change_type", lit("delete")))
-            }
-          val ins =
-            if (addPaths.isEmpty) Seq.empty[DataFrame]
-            else Seq(spark.read.schema(schema)
-              .parquet(addPaths.map(f => dataPath(table, f)): _*)
-              .withColumn("_change_type", lit("insert")))
-          ins ++ dels
-        }
+        Option.when(cdc.nonEmpty)(spark.read.schema(cdcSchema)
+          .parquet(cdc.map(c => dataPath(table, c.path)): _*)).toSeq ++
+        Option.when(adds.nonEmpty)(spark.read.schema(schema)
+          .parquet(adds.map(a => dataPath(table, a.path)): _*)
+          .withColumn("_change_type", lit("insert"))) ++
+        Option.when(removes.nonEmpty)(
+          scanWithDvs(spark, table, schema, removes, prior.dvs)
+            .withColumn("_change_type", lit("delete")))
       perVersion.map(df => rowFilter(df)
         .withColumn("_commit_version", lit(v)))
     }
     if (frames.isEmpty)
       spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        spark.sparkContext.emptyRDD[Row],
         cdcSchema.add("_commit_version", org.apache.spark.sql.types.LongType))
     else frames.reduce(_ unionByName _)
   }

@@ -266,12 +266,9 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
           val rows =
             if (snap.files.nonEmpty &&
                 snap.files.forall(snap.stats.contains)) {
-              val pat = java.util.regex.Pattern.compile(
-                "\"numRecords\"\\s*:\\s*(\\d+)")
-              snap.files.map { f =>
-                val m = pat.matcher(snap.stats(f))
-                if (m.find()) m.group(1).toLong else -1L
-              }.foldLeft(0L)((a, b) => if (a < 0 || b < 0) -1L else a + b)
+              snap.files.map(f => DeltaLite.fileStats(snap.stats(f))
+                .numRecords.getOrElse(-1L))
+                .foldLeft(0L)((a, b) => if (a < 0 || b < 0) -1L else a + b)
             } else -1L
           Seq(("delta", latest, bytes,
             snap.partCols.mkString(","),

@@ -1626,4 +1626,120 @@ class DeltaLiteSpec extends SparkSpec with Matchers {
       .as[(Long, Option[String])].collect().toSet shouldBe
       Set((1L, None), (2L, None))
   }
+
+  /** A column-mapped table (k, s, n) declared append-only and carrying a
+    * CHECK constraint: the configuration every metadata-only commit must
+    * carry forward. */
+  private def appendOnlyMapped(name: String): String = {
+    import spark.implicits._
+    val t = Sinks.tempDir(name)
+    DeltaLite.writeColumnMapped(spark,
+      Seq((1L, "x", 10L), (2L, "y", 20L)).toDF("k", "s", "n"), t)
+    DeltaLite.addConstraint(spark, t, "k_pos", "k > 0")
+    DeltaLite.setAppendOnly(spark, t)
+    t
+  }
+
+  /** `t` still declares what [[appendOnlyMapped]] declared: deletes
+    * refuse as append-only, and the constraint is still in force. */
+  private def stillAppendOnly(t: String): Unit = {
+    val e = intercept[UnsupportedOperationException] {
+      DeltaLite.deleteWhere(spark, t, "k", 1L, 1L)
+    }
+    e.getMessage should include ("append-only")
+    val config = DeltaLite.snapshotAt(spark, t).config
+    config.get("delta.appendOnly") shouldBe Some("true")
+    config.get("delta.constraints.k_pos") shouldBe Some("k > 0")
+    config.get("delta.columnMapping.mode") shouldBe Some("name")
+  }
+
+  test("setAppendOnly then renameColumn on a mapped table: deletes still refuse") {
+    val t = appendOnlyMapped("delta_ao_rename")
+    DeltaLite.renameColumn(spark, t, "s", "s2")
+    stillAppendOnly(t)
+  }
+
+  test("setAppendOnly then dropColumn on a mapped table: deletes still refuse") {
+    val t = appendOnlyMapped("delta_ao_drop")
+    DeltaLite.dropColumn(spark, t, "n")
+    stillAppendOnly(t)
+  }
+
+  test("setAppendOnly then a widening writeColumnMapped: deletes still refuse") {
+    import spark.implicits._
+    val t = appendOnlyMapped("delta_ao_widen")
+    DeltaLite.writeColumnMapped(spark,
+      Seq((3L, "z", 30L, 1L)).toDF("k", "s", "n", "w"), t)
+    DeltaLite.tableSchema(spark, t).fieldNames.toSeq shouldBe
+      Seq("k", "s", "n", "w")
+    stillAppendOnly(t)
+  }
+
+  test("checkpoint equivalence: JSON replay, classic, 2-part and V2 checkpoints give one snapshot") {
+    import spark.implicits._
+    val src = Sinks.tempDir("delta_cp_equiv")
+    // partition values null and non-null, stats, two txn apps
+    DeltaLite.writePartitioned(spark,
+      Seq[(Long, String)]((1L, "a"), (2L, "a"), (3L, null), (4L, "b"))
+        .toDF("k", "p"), src, "p", collectStats = true,
+      txn = Some(("app-a", 3L)))                                        // v0
+    DeltaLite.writePartitioned(spark,
+      Seq[(Long, String)]((6L, "b"), (7L, null), (8L, null)).toDF("k", "p"),
+      src, "p", collectStats = true, txn = Some(("app-b", 9L)))         // v1
+    DeltaLite.addConstraint(spark, src, "k_pos", "k > 0")               // v2
+    // a live domain and a tombstoned one (writer 7 from here)
+    DeltaLite.setDomainMetadata(spark, src, "graft.live", """{"x":1}""")
+    DeltaLite.setDomainMetadata(spark, src, "graft.gone", """{"y":2}""")
+    DeltaLite.removeDomainMetadata(spark, src, "graft.gone")
+    // deletion vectors on a non-null and on the null partition
+    DeltaLite.deleteWhereDV(spark, src, "k", 2L, 2L)
+    DeltaLite.deleteWhereDV(spark, src, "k", 7L, 7L)
+    val json = DeltaLite.snapshotAt(spark, src)
+    json.checkpointVersion shouldBe -1L
+    json.dvs.size shouldBe 2
+    json.pvals.values.exists(_.values.exists(_ == null)) shouldBe true
+    json.stats.keySet shouldBe json.files.toSet
+    json.txns shouldBe Map("app-a" -> 3L, "app-b" -> 9L)
+    json.domains shouldBe Map("graft.live" -> """{"x":1}""")
+    json.protocol.map(_.minWriter) shouldBe Some(7)
+    json.config.get("delta.constraints.k_pos") shouldBe Some("k > 0")
+
+    def copyOf(name: String): String = {
+      val dst = s"${Sinks.tempDir(name)}/t"
+      val conf = spark.sparkContext.hadoopConfiguration
+      val fs = new Path(src).getFileSystem(conf)
+      org.apache.hadoop.fs.FileUtil.copy(fs, new Path(src), fs, new Path(dst),
+        false, conf) shouldBe true
+      dst
+    }
+    // every field but how the snapshot was assembled; file ORDER is the
+    // checkpoint's row order, which parts and sidecars permute
+    def norm(s: DeltaLite.Snapshot): DeltaLite.Snapshot =
+      s.copy(files = s.files.sorted, checkpointVersion = 0L, jsonReplayed = 0L)
+    def throughCheckpoint(t: String, cpV: Long): DeltaLite.Snapshot = {
+      DeltaLite.expireLog(spark, t) should be > 0L
+      val s = DeltaLite.snapshotAt(spark, t)
+      s.checkpointVersion shouldBe cpV
+      s.jsonReplayed shouldBe 0L
+      s
+    }
+
+    val classic = copyOf("delta_cp_equiv_classic")
+    DeltaLite.checkpoint(spark, classic) shouldBe json.version
+    norm(throughCheckpoint(classic, json.version)) shouldBe norm(json)
+
+    val multi = copyOf("delta_cp_equiv_multi")
+    DeltaLite.checkpoint(spark, multi, parts = 2) shouldBe json.version
+    DeltaLite.lastCheckpointParts(spark, multi) shouldBe 2
+    norm(throughCheckpoint(multi, json.version)) shouldBe norm(json)
+
+    // V2 lands its v2Checkpoint protocol upgrade as one more commit
+    val v2 = copyOf("delta_cp_equiv_v2")
+    val v2V = DeltaLite.checkpointV2(spark, v2, sidecars = 2)
+    v2V shouldBe json.version + 1
+    new java.io.File(s"$v2/_delta_log/_sidecars").listFiles()
+      .count(_.getName.endsWith(".parquet")) shouldBe 2
+    norm(throughCheckpoint(v2, v2V)) shouldBe norm(json.copy(version = v2V,
+      protocol = json.protocol.map(DeltaLite.raise(_, "v2Checkpoint"))))
+  }
 }

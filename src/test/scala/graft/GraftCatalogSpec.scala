@@ -1305,6 +1305,26 @@ class GraftCatalogSpec extends SparkSpec with Matchers {
       .toSeq shouldBe Seq("col-1", "col-2")
   }
 
+  test("t.changes on a checkpointed, expired CDF table: the feed starts at the checkpoint") {
+    val wh = warehouse
+    spark.sql(s"DROP TABLE IF EXISTS $cat.db.chgx")
+    spark.sql(s"CREATE TABLE $cat.db.chgx (k BIGINT, v BIGINT) USING delta") // v0
+    val t = s"$wh/db/chgx"
+    DeltaLite.enableCdf(spark, t)                                            // v1
+    spark.sql(s"INSERT INTO $cat.db.chgx SELECT id, id FROM range(1, 21)")   // v2
+    spark.sql(s"DELETE FROM $cat.db.chgx WHERE k <= 5")                      // v3
+    val cpV = DeltaLite.checkpoint(spark, t)
+    DeltaLite.expireLog(spark, t) should be > 0L
+    spark.sql(s"INSERT INTO $cat.db.chgx SELECT id, id FROM range(21, 26)")  // v4
+    spark.sql(s"UPDATE $cat.db.chgx SET v = 0 WHERE k = 10")                 // v5
+    val latest = DeltaLite.latestVersion(spark, t)
+    val expected = DeltaLite.readCdf(spark, t, cpV, latest).collect()
+    expected.map(_.getAs[Long]("_commit_version")).toSet shouldBe
+      ((cpV + 1) to latest).toSet
+    spark.sql(s"SELECT * FROM $cat.db.chgx.changes").collect()
+      .toSet shouldBe expected.toSet
+  }
+
   test("t.changes admission control: maxFilesPerTrigger bounds each micro-batch") {
     import spark.implicits._
     val wh = warehouse

@@ -103,7 +103,7 @@ object SqlConcurrencyProperties extends Properties("SqlConcurrency") {
 
   for (fmt <- Seq("delta", "iceberg"))
     property(s"$fmt: racing SQL INSERTs all land exactly once") =
-      Prop.forAll(writersGen) { writers =>
+      Prop.forAllNoShrink(writersGen) { writers =>
         val (tbl, path) = freshTable(fmt)
         val failures = race((0 until writers).map(w => () => {
           spark.sql(s"INSERT INTO $tbl VALUES " +
@@ -125,7 +125,7 @@ object SqlConcurrencyProperties extends Properties("SqlConcurrency") {
 
   for (fmt <- Seq("delta", "iceberg"))
     property(s"$fmt: racing UPDATE vs INSERT (disjoint keys) serialize") =
-      Prop.forAll(Gen.choose(1, 3)) { inserts =>
+      Prop.forAllNoShrink(Gen.choose(1, 3)) { inserts =>
         val (tbl, path) = freshTable(fmt)
         spark.sql(s"INSERT INTO $tbl VALUES " +
           (1 to 10).map(i => s"($i, $i)").mkString(", "))
@@ -158,7 +158,7 @@ object SqlConcurrencyProperties extends Properties("SqlConcurrency") {
 
   for (fmt <- Seq("delta", "iceberg"))
     property(s"$fmt: UPDATE racing compaction serializes or refuses loudly") =
-      Prop.forAll(Gen.choose(2, 5)) { files =>
+      Prop.forAllNoShrink(Gen.choose(2, 5)) { files =>
         val (tbl, path) = freshTable(fmt)
         // one commit per row → a multi-file table, so the rewrite and
         // the row-level UPDATE race over REAL overlapping file sets
@@ -212,7 +212,7 @@ object SqlConcurrencyProperties extends Properties("SqlConcurrency") {
 
   for (fmt <- Seq("delta", "iceberg"))
     property(s"$fmt: two queries' racing epochs keep per-query ledgers") =
-      Prop.forAll(epochsGen, epochsGen) { (ea, eb) =>
+      Prop.forAllNoShrink(epochsGen, epochsGen) { (ea, eb) =>
         val (_, path) = freshTable(fmt)
         def committer(q: String, epochs: List[Int]): () => Unit = () =>
           epochs.zipWithIndex.foreach { case (e, i) =>
