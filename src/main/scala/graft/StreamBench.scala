@@ -38,7 +38,7 @@ object StreamBench {
     val ev = graft.model.Tables.events(spark, sfDir)
     val landing = java.nio.file.Files.createTempDirectory("graft_sbench").toString
     ev.repartition(8).write.mode("overwrite").parquet(landing)
-    val schema = spark.read.parquet(landing).schema
+    val schema = graft.sources.ParquetDirect.footerSchema(spark, landing)
     def stream: DataFrame = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(landing)
 

@@ -20,7 +20,7 @@ object Sinks {
     df.write.mode("append").parquet(path)
 
   def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    graft.sources.ParquetDirect.read(spark, path)
 
   /** Scratch dir for sink-demonstration queries (unique per call so Verify
     * and Bench runs never cross-contaminate). */

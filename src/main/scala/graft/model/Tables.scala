@@ -2,6 +2,8 @@ package graft.model
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.sources.ParquetDirect
+
 /** Loaders for the testdata star schema (TESTDATA.md / FIXTURES.md §A).
   *
   * Stand-in for the reference's JDBC table reads
@@ -18,9 +20,12 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   /** Read one table from an sf directory. Parquet → columnar scan with
-    * predicate pushdown + column pruning handled by Catalyst. */
+    * predicate pushdown + column pruning handled by Catalyst. The schema
+    * comes from the file's one footer, read on the driver
+    * ([[ParquetDirect.footerSchema]]) — table metadata, as the reference
+    * takes it from the source catalog — so an open starts no Spark job. */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    ParquetDirect.read(spark, s"$sfDir/$name.parquet")
 
   def region(spark: SparkSession, sfDir: String): DataFrame     = load(spark, sfDir, "region")
   def nation(spark: SparkSession, sfDir: String): DataFrame     = load(spark, sfDir, "nation")

@@ -115,7 +115,7 @@ object MaterializedViewRewrite extends Rule[LogicalPlan] {
     val cents = value.map(centsCanonical)
 
     // Resolve the registered summary lazily, only once a candidate matches.
-    val summaryPlan = SparkSession.active.read.parquet(summaryPath)
+    val summaryPlan = graft.sources.ParquetDirect.read(SparkSession.active, summaryPath)
       .queryExecution.analyzed
     def out(name: String): Option[Attribute] =
       summaryPlan.output.find(_.name == name)

@@ -443,7 +443,7 @@ object CoreQueries {
           graft.functions.BitmapDistinct.bitmapAgg(col("o_custkey")).as("bm"),
           graft.functions.BitmapDistinct.bitmapDistinct(col("o_custkey")).as("n_grp"))
         .write.mode("overwrite").parquet(path)
-      s.read.parquet(path).agg(
+      graft.sources.ParquetDirect.read(s, path).agg(
         count(lit(1)).as("n_groups"),
         sum("n_grp").as("sum_per_group"), // > global_distinct ⇔ cross-group overlap
         graft.functions.BitmapDistinct.bitmapUnionCount(col("bm")).as("global_distinct"))

@@ -129,7 +129,7 @@ object ReferenceSurface {
       Tables.events(s, dir)
         .withColumn("event_date", to_date(col("ts")))
         .write.mode("overwrite").partitionBy("event_date").parquet(path)
-      s.read.parquet(path)
+      graft.sources.ParquetDirect.read(s, path)
         .where(col("event_date") === lit("2024-01-15").cast("date"))
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("sum_value"))

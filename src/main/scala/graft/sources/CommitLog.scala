@@ -121,13 +121,13 @@ object CommitLog {
     val ckptPart = ckpt.toSeq.map { c =>
       val staged =
         new String(readFully(fs, new Path(dir, s"$c.ckpt")), StandardCharsets.UTF_8)
-      spark.read.parquet(s"$table/$staged")
+      ParquetDirect.read(spark, s"$table/$staged")
         .withColumn("version", col("__v")).drop("__v")
     }
     val parts = ckptPart ++ versions.map { v =>
       val manifest = new Path(dir, v.toString)
       val staged = new String(readFully(fs, manifest), StandardCharsets.UTF_8)
-      spark.read.parquet(s"$table/$staged").withColumn("version", lit(v))
+      ParquetDirect.read(spark, s"$table/$staged").withColumn("version", lit(v))
     }
     val log = parts.reduce(_.unionByName(_))
     val w = org.apache.spark.sql.expressions.Window

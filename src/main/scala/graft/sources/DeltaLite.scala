@@ -456,9 +456,9 @@ object DeltaLite {
       extends Action
 
   private final case class AddFile(path: String,
-      partitionValues: Map[String, String], dataChange: Boolean,
-      stats: Option[String], deletionVector: Option[DeletionVectors.Descriptor])
-      extends Action
+      partitionValues: Map[String, String], size: Long,
+      modificationTime: Long, dataChange: Boolean, stats: Option[String],
+      deletionVector: Option[DeletionVectors.Descriptor]) extends Action
 
   private final case class RemoveFile(path: String, dataChange: Boolean)
       extends Action
@@ -525,6 +525,7 @@ object DeltaLite {
     def path = f.str("path").get
     kind match {
       case "add" => Some(AddFile(path, f.strMap("partitionValues"),
+        f.long("size").get, f.long("modificationTime").get,
         f.bool("dataChange").getOrElse(true), f.str("stats"),
         f.obj("deletionVector").map(d => DeletionVectors.Descriptor(
           d.str("storageType").get, d.str("pathOrInlineDv").get,
@@ -577,7 +578,7 @@ object DeltaLite {
   private def checkpointActions(spark: SparkSession, table: String,
       files: Seq[Path]): Seq[Action] = {
     def rows(paths: Seq[String]): Seq[Action] = {
-      val df = spark.read.parquet(paths: _*)
+      val df = ParquetDirect.read(spark, paths: _*)
       df.select(df.columns.toSeq.filter(checkpointActionKinds).map(df.col): _*)
         .collect().toSeq.flatMap { r =>
           val f = new RowFields(r)
@@ -612,7 +613,8 @@ object DeltaLite {
       protocol: Option[Protocol] = None,
       config: Map[String, String] = Map.empty,
       partCols: Seq[String] = Seq.empty,
-      domains: Map[String, String] = Map.empty)
+      domains: Map[String, String] = Map.empty,
+      sizes: Map[String, (Long, Long)] = Map.empty)
 
   private def checkpointFile(table: String, v: Long) =
     new Path(logDir(table), f"$v%020d.checkpoint.parquet")
@@ -688,6 +690,7 @@ object DeltaLite {
     private val stats = mutable.Map.empty[String, String]
     private val pvals = mutable.Map.empty[String, Map[String, String]]
     private val dvs = mutable.Map.empty[String, DeletionVectors.Descriptor]
+    private val sizes = mutable.Map.empty[String, (Long, Long)]
     private val txns = mutable.Map.empty[String, Long]
     private val domains = mutable.Map.empty[String, String]
     private var meta: Option[Metadata] = None
@@ -714,8 +717,10 @@ object DeltaLite {
         put(stats, f.stats)
         put(pvals, Option.when(f.partitionValues.nonEmpty)(f.partitionValues))
         put(dvs, f.deletionVector)
+        sizes(f.path) = (f.size, f.modificationTime)
       case r: RemoveFile =>
         live -= r.path; stats -= r.path; pvals -= r.path; dvs -= r.path
+        sizes -= r.path
       case t: SetTransaction =>
         txns(t.appId) = math.max(txns.getOrElse(t.appId, Long.MinValue), t.version)
       // §Domain Metadata: newest action per domain wins; a removal
@@ -730,7 +735,8 @@ object DeltaLite {
       Snapshot(version, live.toSeq, meta.map(m => (m.id, m.schemaString)),
         checkpointVersion, jsonReplayed, stats.toMap, txns.toMap, pvals.toMap,
         dvs.toMap, protocol, meta.fold(Map.empty[String, String])(_.configuration),
-        meta.fold(Seq.empty[String])(_.partitionColumns), domains.toMap)
+        meta.fold(Seq.empty[String])(_.partitionColumns), domains.toMap,
+        sizes.toMap)
   }
 
   /** Snapshot construction — Delta's own read path: start from the newest
@@ -849,14 +855,15 @@ object DeltaLite {
       })
   }
 
-  /** One add struct per live file of `snap`, in snapshot order. */
-  private def addRows(fs: FileSystem, table: String, snap: Snapshot): Seq[Row] =
+  /** One add struct per live file of `snap`, in snapshot order, with the
+    * size and modificationTime its add action carried. */
+  private def addRows(snap: Snapshot): Seq[Row] =
     snap.files.map { f =>
-      val st = fs.getFileStatus(new Path(table, f))
+      val (size, modTime) = snap.sizes(f)
       val dvRow = snap.dvs.get(f).map(d =>
         Row(d.storageType, d.pathOrInlineDv, d.offset, d.sizeInBytes,
           d.cardinality)).orNull
-      Row(f, st.getLen, st.getModificationTime, true,
+      Row(f, size, modTime, true,
         snap.stats.getOrElse(f, null), snap.pvals.getOrElse(f, null), dvRow)
     }
 
@@ -917,7 +924,7 @@ object DeltaLite {
     require(v >= 0, s"$table has no commits to checkpoint")
     val snap = snapshot(spark, table, v)
     val rows = (stateRows(snap, table) ++
-      addRows(fs, table, snap).map("add" -> _)).map(row(classic))
+      addRows(snap).map("add" -> _)).map(row(classic))
     // actual non-empty output may be fewer than requested (tiny state):
     // the COMMITTED part count is what the files say
     val installed = installParquet(spark, table, classic, rows,
@@ -970,7 +977,7 @@ object DeltaLite {
     val v = snap.version
     val state = stateRows(snap, table)
     // file actions → round-robined across `sidecars` sidecar files
-    val adds = addRows(fs, table, snap)
+    val adds = addRows(snap)
     val scDir = sidecarDir(table)
     fs.mkdirs(scDir)
     val sidecarRows = adds.zipWithIndex.groupBy(_._2 % sidecars).toSeq
@@ -2825,7 +2832,7 @@ object DeltaLite {
       keyCol: String,
       deleteWhen: Option[org.apache.spark.sql.Column] = None)
       : (Long, Long, Long, Long) = {
-    import org.apache.spark.sql.functions.{coalesce, col => c_, collect_set, count => cnt_, countDistinct, lit, max => mx_, min => mn_, not, when}
+    import org.apache.spark.sql.functions.{coalesce, col => c_, collect_set, count => cnt_, countDistinct, lit, not, when}
     // one attempt against the pinned head `snap`
     def attempt(snap: Snapshot): Option[(Long, Long, Long, Long)] = {
       requireNotMapped(snap, table, "mergeInto()")
@@ -2845,13 +2852,9 @@ object DeltaLite {
           coalesce(deleteWhen.getOrElse(lit(false)), lit(false)).as("__del"): _*)
         .persist()
       try {
-        val nSrc = src.count()
-        require(nSrc > 0, "empty MERGE source")
-        require(src.select(keyCol).distinct().count() == nSrc,
-          s"duplicate $keyCol values in MERGE source — ambiguous matches")
+        val profile = MergeSource.profile(src, keyCol, not(c_("__del")))
         // (1) stats-planned candidates: committed [min,max] vs source range
-        val b = src.agg(mn_(c_(keyCol)), mx_(c_(keyCol))).collect()(0)
-        val (srcLo, srcHi) = (b.getLong(0), b.getLong(1))
+        val (srcLo, srcHi) = (profile.range.getLong(0), profile.range.getLong(1))
         // no stats: must be scanned
         val candidates = snap.files.filter(f =>
           snap.stats.get(f).forall(fileStats(_).mayOverlap(keyCol, srcLo, srcHi)))
@@ -2859,7 +2862,9 @@ object DeltaLite {
         def liveWithFile(files: Seq[String]): DataFrame =
           scanWithDvs(spark, table, schema, files, snap.dvs)
             .withColumn("__fn", FileKey.column(c_("_metadata.file_path")))
-        // (2) exact touched set + match counts, one key-column pass
+        // (2) exact touched set + match counts, one key-column pass; the
+        // source keys are unique, so once the matched TARGET keys are too
+        // (checked below) each deleted key is one matched row
         val (rowsMatched, matchedKeys, deletedKeys, touched) =
           if (candidates.isEmpty) (0L, 0L, 0L, Set.empty[String])
           else {
@@ -2867,7 +2872,7 @@ object DeltaLite {
               .select(c_(keyCol), c_("__fn"))
               .join(src.select(c_(keyCol), c_("__del")), Seq(keyCol))
               .agg(cnt_(lit(1)).as("n"), countDistinct(c_(keyCol)).as("nk"),
-                countDistinct(when(c_("__del"), c_(keyCol))).as("ndel"),
+                cnt_(when(c_("__del"), 1)).as("ndel"),
                 collect_set("__fn").as("fns"))
               .collect()(0)
             (m.getAs[Long]("n"), m.getAs[Long]("nk"), m.getAs[Long]("ndel"),
@@ -2877,7 +2882,7 @@ object DeltaLite {
           s"duplicate $keyCol values among matched TARGET rows " +
             s"($rowsMatched rows across $matchedKeys keys) — ambiguous MERGE")
         val rowsUpdated = matchedKeys - deletedKeys
-        val rowsInserted = src.where(not(c_("__del"))).count() - rowsUpdated
+        val rowsInserted = profile.liveRows - rowsUpdated
         val upserts0 = applyGenerated(snap, table,
           src.where(not(c_("__del")))
             .select(schema.fieldNames.map(c_).toIndexedSeq: _*))

@@ -82,7 +82,7 @@ private[graft] object EqVals {
       case Some((names, tuples)) => return EqVals(names, seq, tuples)
       case None => ()
     }
-    val df = spark.read.parquet(path)
+    val df = ParquetDirect.read(spark, path)
     df.schema.fields.foreach(f => require(supported(f.dataType),
       s"equality delete file $path column ${f.name} has type " +
         s"${f.dataType.simpleString} — equality deletes match integral/" +

@@ -78,7 +78,7 @@ object FormatQueries {
       .select(col("o_orderkey"), (col("o_totalprice") + 1000.0).as("o_totalprice"),
         lit(2).as("version"))
       .repartition(4).write.mode("append").parquet(path)
-    val log = spark.read.parquet(path).where(col("version") <= asOf)
+    val log = ParquetDirect.read(spark, path).where(col("version") <= asOf)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("o_orderkey").orderBy(col("version").desc)
     log.withColumn("rn", row_number().over(w))
@@ -99,10 +99,10 @@ object FormatQueries {
       .select(col("event_id"), col("event_type"), col("user_id"), col("value"))
       .repartition(64) // the small-file problem, induced
       .write.mode("overwrite").parquet(fragmented)
-    spark.read.parquet(fragmented)
+    ParquetDirect.read(spark, fragmented)
       .coalesce(4) // no shuffle: files merge within existing partitions
       .write.mode("overwrite").parquet(compacted)
-    (compacted, spark.read.parquet(compacted)
+    (compacted, ParquetDirect.read(spark, compacted)
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"), sum("user_id").as("user_sum"),
         round(sum("value"), 2).as("value_sum"))
@@ -188,8 +188,8 @@ object FormatQueries {
       .select(date_format(col("o_orderdate"), "yyyy-MM").as("o_month")).distinct()
       .withColumn("pick", when(col("o_month").isin("1996-03", "1997-07"), 1).otherwise(0))
       .write.mode("overwrite").parquet(dimPath)
-    val dim = spark.read.parquet(dimPath).where(col("pick") === 1).select("o_month")
-    spark.read.parquet(path)
+    val dim = ParquetDirect.read(spark, dimPath).where(col("pick") === 1).select("o_month")
+    ParquetDirect.read(spark, path)
       .join(broadcast(dim), "o_month")
       .groupBy("o_month")
       .agg(count(lit(1)).as("n"), round(sum("o_totalprice"), 2).as("total"))
@@ -285,7 +285,7 @@ object FormatQueries {
     * FILE: thousands of rows at 100 TB, not billions). */
   private[graft] def fileManifest(spark: SparkSession, path: String,
       statCol: String): DataFrame =
-    spark.read.parquet(path)
+    ParquetDirect.read(spark, path)
       .groupBy(input_file_name().as("f"))
       .agg(min(statCol).as("lo"), max(statCol).as("hi"))
 
@@ -308,7 +308,7 @@ object FormatQueries {
         col("lo") <= lit("1996-12-31 23:59:59").cast("timestamp"))
       .select("f").collect().map(_.getString(0))
     require(sel.nonEmpty, "manifest pruning selected no files")
-    spark.read.parquet(sel.toIndexedSeq: _*)
+    ParquetDirect.read(spark, sel.toIndexedSeq: _*)
       .where(year(col("o_orderdate")) === 1996)
       .groupBy(month(col("o_orderdate")).as("m"))
       .agg(count(lit(1)).as("n"), round(sum("o_totalprice"), 2).as("total"))
@@ -340,9 +340,9 @@ object FormatQueries {
     ev.where(col("day") >= lit(cut).cast("date"))
       .repartition(col("day"))
       .write.partitionBy("day").mode("overwrite").parquet(gen2)
-    val g1 = spark.read.parquet(gen1)
+    val g1 = ParquetDirect.read(spark, gen1)
       .select(col("event_id"), col("day").cast("date").as("day"), col("cents"))
-    val g2 = spark.read.parquet(gen2)
+    val g2 = ParquetDirect.read(spark, gen2)
       .select(col("event_id"), col("day").cast("date").as("day"), col("cents"))
     g1.unionByName(g2)
       .groupBy(col("day"))
@@ -729,8 +729,7 @@ object FormatQueries {
     DeltaLite.reorgPurge(spark, table, targetFiles = 2)
     // footer-only sniff: driver parquet metadata read, no Spark job
     val purged = DeltaLite.readWithStats(spark, table)._2.files.forall(f =>
-      ParquetDirect.schemaFieldNames(
-        spark.sparkContext.hadoopConfiguration, s"$table/$f").length == 2)
+      ParquetDirect.footerSchema(spark, s"$table/$f").length == 2)
     DeltaLite.read(spark, table)
       .agg(count(lit(1)).as("n"), round(sum("price"), 2).as("total_price"))
       .withColumn("files_moved", lit((filesAfter != filesBefore)))
@@ -927,7 +926,7 @@ object FormatQueries {
     }
     val (files, matched, total) = DeltaLite.planSkipping(
       spark, table, "o_orderkey", lo = 0L, hi = q)
-    spark.read.parquet(files.map(f => s"$table/$f"): _*)
+    ParquetDirect.read(spark, files.map(f => s"$table/$f"): _*)
       .agg(count(lit(1)).as("n"), round(sum("o_totalprice"), 2).as("total"))
       .withColumn("files_scanned", lit(matched))
       .withColumn("files_total", lit(total))
@@ -985,7 +984,7 @@ object FormatQueries {
     val wanted = Set("1-URGENT", "4-NOT SPECIFIED")
     val (files, matched, total) =
       DeltaLite.planPartitioned(spark, table, "o_orderpriority", wanted)
-    spark.read.parquet(files.map(f => s"$table/$f"): _*)
+    ParquetDirect.read(spark, files.map(f => s"$table/$f"): _*)
       .groupBy("o_orderpriority")
       .agg(count(lit(1)).as("n"), round(sum("o_totalprice"), 2).as("total"))
       .withColumn("files_scanned", lit(matched))
@@ -1020,7 +1019,7 @@ object FormatQueries {
     // optimization, never a filter)
     val files = if (sel.nonEmpty) sel else fx ++ fy
     require(files.nonEmpty, "z-order table has no files")
-    spark.read.parquet(files.map(f => s"$table/$f"): _*)
+    ParquetDirect.read(spark, files.map(f => s"$table/$f"): _*)
       .where(col("cx").between(10, 60) && col("dy").between(100, 400))
       .agg(count(lit(1)).as("n"), round(sum("o_totalprice"), 2).as("total"))
       .withColumn("pruned",
@@ -1045,7 +1044,7 @@ object FormatQueries {
     val wanted = Set("1-URGENT", "4-NOT SPECIFIED")
     val (files, matched, _) =
       DeltaLite.planPartitioned(spark, table, "o_orderpriority", wanted)
-    spark.read.parquet(files.map(f => s"$table/$f"): _*)
+    ParquetDirect.read(spark, files.map(f => s"$table/$f"): _*)
       .groupBy("o_orderpriority")
       .agg(count(lit(1)).as("n"), round(sum("o_totalprice"), 2).as("total"))
       .withColumn("files_scanned", lit(matched))
@@ -1236,7 +1235,7 @@ object FormatQueries {
       partitionField = Some(IcebergLite.PartField.truncate("o_orderpriority", 3)))
     val (files, nMatched, nTotal) =
       IcebergLite.planPartitioned(spark, table, Set("1-U", "4-N"))
-    spark.read.parquet(files: _*)
+    ParquetDirect.read(spark, files: _*)
       .groupBy("o_orderpriority")
       .agg(count(lit(1)).as("n"), round(sum("o_totalprice"), 2).as("total"))
       .withColumn("files_scanned", lit(nMatched))
@@ -1497,7 +1496,7 @@ object FormatQueries {
       partitionField = Some(IcebergLite.PartField.truncate("o_orderdate", 7)))
     val (files, matched, total) =
       IcebergLite.planPartitioned(spark, table, Set("1996-03", "1997-07"))
-    spark.read.parquet(files: _*)
+    ParquetDirect.read(spark, files: _*)
       .groupBy(substring(col("o_orderdate"), 1, 7).as("o_month"))
       .agg(count(lit(1)).as("n"), round(sum("o_totalprice"), 2).as("total"))
       .withColumn("files_scanned", lit(matched))
@@ -1522,7 +1521,7 @@ object FormatQueries {
         boundsColumn = Some("o_orderkey"))
     }
     val (files, matched, total) = IcebergLite.planBounds(spark, table, 0L, q)
-    spark.read.parquet(files: _*)
+    ParquetDirect.read(spark, files: _*)
       .agg(count(lit(1)).as("n"), round(sum("o_totalprice"), 2).as("total"))
       .withColumn("files_scanned", lit(matched))
       .withColumn("files_total", lit(total))
@@ -2035,8 +2034,7 @@ object FormatQueries {
     val delFiles = IcebergLite.snapshotDeleteFiles(spark, table, -1L)
     // footer-only sniff: driver parquet metadata read, no Spark job
     val eqKind = delFiles.nonEmpty && delFiles.forall(p =>
-      ParquetDirect.schemaFieldNames(
-        spark.sparkContext.hadoopConfiguration, p) == Seq("o_orderkey"))
+      ParquetDirect.footerSchema(spark, p).fieldNames.toSeq == Seq("o_orderkey"))
     // a key re-inserted AFTER the delete survives it (sequence gating)
     spark.sql("INSERT INTO graftdin.db.orders_din " +
       "VALUES (1, 9999.0, '1-URGENT')")
@@ -4007,7 +4005,7 @@ object FormatQueries {
     DeltaLite.expireLog(spark, table)
     val domainSurvives = DeltaLite.clusteringColumns(spark, table)
       .contains(Seq("cx", "dy"))
-    spark.read.parquet(files.map(f => s"$table/$f"): _*)
+    ParquetDirect.read(spark, files.map(f => s"$table/$f"): _*)
       .where(col("cx").between(10, 60) && col("dy").between(100, 400))
       .agg(count(lit(1)).as("n"), round(sum("o_totalprice"), 2).as("total"))
       .withColumn("pruned", lit(if (sel.size < nAfter) 1L else 0L))

@@ -2017,7 +2017,7 @@ object IcebergLite {
         .map(_.get("data_file").asInstanceOf[GenericRecord]
           .get("file_path").toString))
     require(files.nonEmpty, s"no files added in ($fromSnap, $toSnap] on $table")
-    spark.read.parquet(files: _*)
+    ParquetDirect.read(spark, files: _*)
   }
 
   /** The (snapshotId, timestamp-ms) ledger of every retained snapshot
@@ -2086,7 +2086,7 @@ object IcebergLite {
       s"snapshot $sid expired from $table: ancestry walk cannot attribute " +
         "its rows"))
     require(files.nonEmpty, s"no files added in ($fromSnap, $toSnap] on $table")
-    spark.read.parquet(files.toSeq: _*)
+    ParquetDirect.read(spark, files.toSeq: _*)
   }
 
   /** ROW-LEVEL CHANGELOG scan over (fromSnap, toSnap] — the
@@ -3391,11 +3391,9 @@ object IcebergLite {
       val src = source.select(schema.fieldNames.map(col).toIndexedSeq: _*)
         .persist()
       try {
-        val nSrc = src.count()
-        require(nSrc > 0, "empty MERGE source")
-        val srcKeys = src.select(keyCol).distinct()
-        require(srcKeys.count() == nSrc,
-          s"duplicate $keyCol values in MERGE source — ambiguous matches")
+        val nSrc = MergeSource.profile(src, keyCol, lt(true)).rows
+        // unique by the profile: the key column IS the source key set
+        val srcKeys = src.select(keyCol)
         val formatVersion = prevMeta.path("format-version").asInt(1)
         // match discovery: ONE pass over the live table — matched row count,
         // matched-key count, and the touched-file set (bounded by file count)
@@ -3500,7 +3498,7 @@ object IcebergLite {
     val conf = spark.sparkContext.hadoopConfiguration
     entries.filter(_.kind == 1).flatMap { e =>
       val rows = ParquetDirect.tryReadPositions(conf, e.path).getOrElse(
-        spark.read.parquet(e.path).select("file_path", "pos").collect()
+        ParquetDirect.read(spark, e.path).select("file_path", "pos").collect()
           .map(r => (r.getString(0), r.getLong(1))).toSeq)
       rows.map { case (fp, ri) => (FileKey(fp), ri, e.seq) }
     }

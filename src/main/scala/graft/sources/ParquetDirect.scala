@@ -5,20 +5,30 @@ import java.nio.charset.StandardCharsets
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.example.data.Group
+import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
 import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader, ParquetReader}
 import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.graftshim.Nullable
 
-/** DRIVER-side reads of control-plane-sized parquet files: equality-delete
-  * value lists, position-delete coordinates and footer schemas. (Staged
-  * data files' row counts and bounds come from [[FooterStats]] through
-  * [[Staging.stats]].)
+/** DRIVER-side reads of Parquet metadata and control-plane-sized files:
+  * the schema of every Parquet input, equality-delete value lists and
+  * position-delete coordinates. (Staged data files' row counts and bounds
+  * come from [[FooterStats]] through [[Staging.stats]].)
   *
-  * The substrate used to route every such read through
+  * Schemas come from ONE footer ([[footerSchema]]): a schema-less
+  * `spark.read.parquet(...)` infers its schema with a whole Spark job (plus
+  * a Hadoop-conf broadcast) per open, so every Parquet input of the engine
+  * opens through [[read]], which hands Spark the footer's schema instead.
+  *
+  * The substrate used to route every payload read through
   * `spark.read.parquet(...).collect()` — correct, but each call costs one
   * or two whole Spark jobs (a footer/schema job plus the collect) for a
   * file that holds a handful of KILOBYTES the driver immediately
@@ -34,15 +44,62 @@ import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
   * messages for unsupported types). */
 private[graft] object ParquetDirect {
 
-  /** Top-level field names straight from the footer (the Iceberg rule:
-    * an equality-delete file's schema IS its column set). */
-  def schemaFieldNames(conf: Configuration, path: String): Seq[String] = {
-    val r = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new Path(path), conf))
-    try r.getFooter.getFileMetaData.getSchema.getFields.asScala
-      .map(_.getName).toSeq
-    finally r.close()
+  /** The Spark schema of the Parquet input `paths`, from ONE footer read
+    * on the driver — the file Spark's own inference opens when
+    * `mergeSchema` is off: `_common_metadata`, else `_metadata`, else the
+    * first data file in path order, listing directories as Spark does
+    * (recursively, skipping `_`/`.` names). The footer converts through
+    * Spark's `readSchemaFromFooter` and a session-configured
+    * `ParquetToSparkSchemaConverter`, so the Spark-schema key and the
+    * session's `binaryAsString`, `int96AsTimestamp`, `inferTimestampNTZ`
+    * and `nanosAsLong` flags act exactly as in inference; every column
+    * reads nullable, as in the relation Spark builds. Under
+    * `spark.sql.parquet.mergeSchema=true` every file's schema counts, so
+    * the answer is Spark's own inference. */
+  def footerSchema(spark: SparkSession, paths: String*): StructType = {
+    val sql = spark.sessionState.conf
+    if (sql.isParquetSchemaMergingEnabled)
+      return spark.read.format("parquet").load(paths: _*).schema
+    val conf = spark.sessionState.newHadoopConf()
+    val leaves = paths.flatMap { p =>
+      val path = new Path(p)
+      val fs = path.getFileSystem(conf)
+      val roots = Option(fs.globStatus(path)).filter(_.nonEmpty).getOrElse(
+        throw new AnalysisException("PATH_NOT_FOUND",
+          Map("path" -> fs.makeQualified(path).toString)))
+      roots.toSeq.flatMap(leafFiles(fs, _))
+    }.sortBy(_.getPath.toString)
+    def named(n: String) = leaves.find(_.getPath.getName == n)
+    val file = named("_common_metadata").orElse(named("_metadata"))
+      .orElse(leaves.find(f => !summaryFiles(f.getPath.getName)))
+      .getOrElse(throw new AnalysisException("UNABLE_TO_INFER_SCHEMA",
+        Map("format" -> "Parquet")))
+    val footer = ParquetFileReader.readFooter(
+      HadoopInputFile.fromStatus(file, conf), SKIP_ROW_GROUPS)
+    Nullable(ParquetFileFormat.readSchemaFromFooter(
+      new Footer(file.getPath, footer), new ParquetToSparkSchemaConverter(sql)))
   }
+
+  /** `spark.read.parquet(paths)` with its schema from [[footerSchema]]:
+    * the same relation, partition discovery included, with no inference
+    * job. */
+  def read(spark: SparkSession, paths: String*): DataFrame =
+    spark.read.schema(footerSchema(spark, paths: _*)).parquet(paths: _*)
+
+  private val summaryFiles = Set("_common_metadata", "_metadata")
+
+  /** Spark's listing rule for file sources: a directory's files,
+    * recursively, minus `_`/`.`-prefixed names (partition directories
+    * `_k=v` and the summary files stay) and in-flight `._COPYING_`
+    * copies. */
+  private def leafFiles(fs: FileSystem, st: FileStatus): Seq[FileStatus] =
+    if (!st.isDirectory) Seq(st)
+    else fs.listStatus(st.getPath).toSeq.filter { c =>
+      val n = c.getPath.getName
+      val hidden = (n.startsWith("_") && !n.contains("=")) ||
+        n.startsWith(".") || n.endsWith("._COPYING_")
+      !hidden || n.startsWith("_common_metadata") || n.startsWith("_metadata")
+    }.flatMap(leafFiles(fs, _))
 
   private def groups(conf: Configuration, path: String): Iterator[Group] = {
     val reader = ParquetReader

@@ -36,8 +36,8 @@ object EventStream {
       landing.resolve("events.parquet"))
     // declare the ts type the file actually carries (a one-footer batch
     // read), then normalize exactly as the batch loader does
-    val fileTs = spark.read.parquet(s"$sfDir/events.parquet")
-      .schema("ts").dataType
+    val fileTs = graft.sources.ParquetDirect.footerSchema(spark,
+      s"$sfDir/events.parquet")("ts").dataType
     val schema = StructType(rawSchema.map(f =>
       if (f.name == "ts") f.copy(dataType = fileTs) else f))
     val raw = spark.readStream.schema(schema).parquet(landing.toString)

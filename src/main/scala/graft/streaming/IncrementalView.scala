@@ -26,7 +26,7 @@ object IncrementalView {
 
   /** The maintained view: re-aggregate the partials. */
   def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    graft.sources.ParquetDirect.read(spark, path)
       .groupBy("event_type")
       .agg(sum("n").as("n"), round(sum("v_sum"), 2).as("v_sum"))
 
@@ -43,7 +43,7 @@ object IncrementalView {
   /** Global median from the maintained sketch partials — reads batches ×
     * groups sketch rows, never the event history. */
   def readMedian(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    graft.sources.ParquetDirect.read(spark, path)
       .agg(graft.functions.SketchAggregates.kllUnionQuantile(col("sk"), 0.5)
         .as("est"))
 }

@@ -1742,4 +1742,24 @@ class DeltaLiteSpec extends SparkSpec with Matchers {
     norm(throughCheckpoint(v2, v2V)) shouldBe norm(json.copy(version = v2V,
       protocol = json.protocol.map(DeltaLite.raise(_, "v2Checkpoint"))))
   }
+
+  test("checkpoint add rows carry the add actions' size and modificationTime") {
+    import spark.implicits._
+    val table = Sinks.tempDir("delta_cp_sizes")
+    DeltaLite.write(spark, (1L to 4L).toDF("k").coalesce(1), table)      // v0
+    DeltaLite.write(spark, (5L to 9L).toDF("k").coalesce(1), table)      // v1
+    val logged = (0L to 1L).flatMap(logLines(table, _)).map(mapper.readTree)
+      .filter(_.has("add")).map(_.get("add")).map(a => a.get("path").asText() ->
+        (a.get("size").asLong(), a.get("modificationTime").asLong())).toMap
+    logged.size shouldBe 2
+    // the files' own mtimes move: the checkpoint must not consult them
+    logged.keys.foreach(f =>
+      new java.io.File(table, f).setLastModified(86400000L) shouldBe true)
+    DeltaLite.checkpoint(spark, table) shouldBe 1L
+    spark.read.parquet(s"$table/_delta_log/${"%020d".format(1L)}.checkpoint.parquet")
+      .where(col("add").isNotNull)
+      .select("add.path", "add.size", "add.modificationTime")
+      .as[(String, Long, Long)].collect()
+      .map { case (p, n, t) => p -> ((n, t)) }.toMap shouldBe logged
+  }
 }
