@@ -78,17 +78,4 @@ object TransactionalSink {
         batchId, toBranch = Some(branch))
       ()
     }
-
-  /** [[intoIceberg]] landing each micro-batch under the table's declared
-    * hidden-partitioning spec (`truncate[w]` on `src`) — the
-    * [[intoDeltaPartitioned]] composition on the second format: manifests
-    * carry the partition values, downstream scans prune off the manifest
-    * layer, snapshot summaries stay the exactly-once ledger. */
-  def intoIcebergPartitioned(table: String, src: String, width: Int)
-      : (DataFrame, Long) => Unit =
-    (df, batchId) => {
-      graft.sources.IcebergLite.commitIdempotent(df.sparkSession, df, table,
-        batchId, partitionField = Some(graft.sources.IcebergLite.PartField.truncate(src, width)))
-      ()
-    }
 }

@@ -7,7 +7,7 @@ import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
 import org.scalatest.matchers.should.Matchers
 
 import graft.ingest.Sinks
-import graft.sources.IcebergLite
+import graft.sources.{IcebergLite, ParquetDirect}
 
 /** X261/X261b: the minimal Iceberg v1 implementation — metadata layout
   * conformance (spec field-ids on the Avro layers, schema ids in the
@@ -1636,5 +1636,241 @@ class IcebergLiteSpec extends SparkSpec with Matchers {
     IcebergLite.planStringRange(spark, t, "s", big, big)._2 shouldBe 1L
     IcebergLite.planStringRange(spark, t, "s", "a", "a")._2 shouldBe 1L
     IcebergLite.planStringRange(spark, t, "s", "z", "zz")._2 shouldBe 0L
+  }
+
+  /** Table-relative paths of the Avro, Puffin and Parquet files under
+    * `table` that no retained snapshot references — the closure lists →
+    * manifests → files, decoded here straight from the metadata JSON and
+    * the Avro layers. Statistics files (`.stats.puffin`) are referenced by
+    * the metadata's `statistics` list, not by snapshots, and are left out. */
+  private def unreferenced(table: String): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val root = new java.io.File(table).getCanonicalFile
+    val meta = mapper.readTree(new java.io.File(table, s"metadata/v${
+      IcebergLite.latestMetadataVersion(spark, table)}.metadata.json"))
+    val lists = meta.get("snapshots").elements().asScala
+      .map(_.get("manifest-list").asText()).toSeq
+    val manifests = lists.flatMap(l => avroRecords(new java.io.File(l))
+      .map(_.get("manifest_path").toString))
+    val files = manifests.flatMap(m => avroRecords(new java.io.File(m))
+      .map(_.get("data_file").asInstanceOf[GenericRecord]
+        .get("file_path").toString))
+    val referenced = (lists ++ manifests ++ files)
+      .map(p => new java.io.File(p).getCanonicalPath).toSet
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+    walk(root).filter { f =>
+      val n = f.getName
+      n.endsWith(".avro") || n.endsWith(".parquet") ||
+        (n.endsWith(".puffin") && !n.endsWith(".stats.puffin"))
+    }.filterNot(f => referenced.contains(f.getCanonicalPath))
+      .map(f => root.toPath.relativize(f.toPath).toString).sorted
+  }
+
+  private def dataFileCount(table: String): Int = {
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+    walk(new java.io.File(table, "data")).count(f =>
+      f.getName.endsWith(".parquet") || f.getName.endsWith(".puffin"))
+  }
+
+  test("expireSnapshots sweeps the manifests rewriteManifests wrote") {
+    import spark.implicits._
+    val t = Sinks.tempDir("ice_exp_rm")
+    (1L to 3L).foreach(k =>
+      IcebergLite.write(spark, Seq((k, k)).toDF("k", "v"), t))
+    IcebergLite.rewriteManifests(spark, t)._3 shouldBe 1L
+    IcebergLite.write(spark, Seq((9L, 9L)).toDF("k", "v"), t,
+      overwrite = true)
+    val before = dataFileCount(t)
+    val (_, deleted) = IcebergLite.expireSnapshots(spark, t, keepLast = 1)
+    unreferenced(t) shouldBe empty
+    deleted shouldBe (before - dataFileCount(t)).toLong
+    IcebergLite.read(spark, t).as[(Long, Long)].collect() shouldBe
+      Array((9L, 9L))
+  }
+
+  test("expireSnapshots sweeps the survivor manifest of a partial MERGE rewrite") {
+    import spark.implicits._
+    val t = Sinks.tempDir("ice_exp_surv")
+    IcebergLite.write(spark,
+      (1L to 8L).map(k => (k, k)).toDF("k", "v").repartition(2), t)
+    IcebergLite.mergeInto(spark, t, Seq((1L, 100L)).toDF("k", "v"), "k")
+    new java.io.File(t, "metadata").list().exists(_.contains("-surv")) shouldBe
+      true
+    IcebergLite.rewriteDataFiles(spark, t)
+    val before = dataFileCount(t)
+    val (_, deleted) = IcebergLite.expireSnapshots(spark, t, keepLast = 1)
+    unreferenced(t) shouldBe empty
+    deleted shouldBe (before - dataFileCount(t)).toLong
+    IcebergLite.read(spark, t).count() shouldBe 8L
+  }
+
+  test("expireSnapshots sweeps the Puffin carrier of an expired deletion vector") {
+    import spark.implicits._
+    val t = Sinks.tempDir("ice_exp_dv")
+    IcebergLite.write(spark, (1L to 6L).map(k => (k, k)).toDF("k", "v"), t)
+    IcebergLite.upgradeFormatVersion(spark, t, 3)
+    IcebergLite.deleteWhereDV(spark, t, "k", 2L, 3L)._2 shouldBe 2L
+    IcebergLite.rewriteDataFiles(spark, t)
+    val before = dataFileCount(t)
+    val (_, deleted) = IcebergLite.expireSnapshots(spark, t, keepLast = 1)
+    unreferenced(t) shouldBe empty
+    // the vector's Puffin carrier counts among the data-directory files
+    deleted shouldBe (before - dataFileCount(t)).toLong
+    IcebergLite.read(spark, t).select("k").as[Long].collect().sorted shouldBe
+      Array(1L, 4L, 5L, 6L)
+  }
+
+  test("expireSnapshots spares young unreferenced metadata within graceMs") {
+    import spark.implicits._
+    val t = Sinks.tempDir("ice_exp_grace")
+    (1L to 3L).foreach(k =>
+      IcebergLite.write(spark, Seq((k, k)).toDF("k", "v"), t))
+    // a concurrent writer's list and manifest, staged but not yet claimed
+    val meta = new java.io.File(t, "metadata")
+    val list = meta.listFiles().find(_.getName.startsWith("snap-")).get
+    val manifest = meta.listFiles().find(_.getName.endsWith("-m0.avro")).get
+    val strayList = new java.io.File(meta, "snap-99-0badf00d.avro")
+    val strayManifest = new java.io.File(meta, "99-0badf00d-m0.avro")
+    java.nio.file.Files.copy(list.toPath, strayList.toPath)
+    java.nio.file.Files.copy(manifest.toPath, strayManifest.toPath)
+    IcebergLite.expireSnapshots(spark, t, keepLast = 2,
+      graceMs = 3600000L)._1 shouldBe 1L
+    strayList.exists() shouldBe true
+    strayManifest.exists() shouldBe true
+    IcebergLite.expireSnapshots(spark, t, keepLast = 1)._1 shouldBe 1L
+    strayList.exists() shouldBe false
+    strayManifest.exists() shouldBe false
+    unreferenced(t) shouldBe empty
+    IcebergLite.read(spark, t).count() shouldBe 3L
+  }
+
+  test("a manifest committed after a spec evolution records the default spec, so later plans keep its files") {
+    import spark.implicits._
+    val t = Sinks.tempDir("ice_spec_id")
+    val trunc = Some(IcebergLite.PartField.truncate("s", 1))
+    IcebergLite.write(spark,
+      Seq((1L, "a", 10L), (2L, "b", 20L)).toDF("k", "s", "v"), t,
+      partitionField = trunc)
+    IcebergLite.evolvePartitionSpec(spark, t, None)
+    // rewrites the `a` file into an unpartitioned manifest under spec 1
+    IcebergLite.mergeInto(spark, t, Seq((1L, "a", 11L)).toDF("k", "s", "v"),
+      "k")
+    IcebergLite.evolvePartitionSpec(spark, t, trunc)
+    // the merged file has no partition value; read under the spec it was
+    // written under (unpartitioned) it is kept, never pruned as NULL
+    val (files, matched, total) = IcebergLite.planPartitioned(spark, t, Set("a"))
+    // only the `b` file is pruned
+    matched shouldBe total - 1
+    ParquetDirect.read(spark, files: _*).as[(Long, String, Long)].collect() shouldBe
+      Array((1L, "a", 11L))
+  }
+
+  /** One table through the whole codec surface — a partitioned v1 write
+    * with column stats, the v2 upgrade and both delete kinds, v3 and a
+    * deletion vector, a MERGE that partially rewrites a manifest,
+    * rewriteManifests, a branch commit and a tag, compaction, partition
+    * spec evolution and a column rename — with every metadata table, the
+    * reads and the planners rendered after each step and compared with
+    * `iceberg_lifecycle.golden`. Names are masked (UUIDs, commit tokens,
+    * rewrite indices) and each rendered block is sorted, so the golden
+    * pins values, sizes and lengths, not names or row order (nor the
+    * size of a position-delete file, which holds random paths). The table
+    * path has a fixed length so manifest lengths are stable. On a
+    * mismatch the rendering is written to
+    * `target/iceberg_lifecycle.actual`. */
+  test("characterization: one lifecycle through every metadata table, read and planner") {
+    import spark.implicits._
+    import org.apache.spark.sql.DataFrame
+    val t = s"${System.getProperty("java.io.tmpdir")}/graft_icechar_" +
+      java.util.UUID.randomUUID()
+    val out = new StringBuilder
+    def mask(s: String): String = s
+      .replaceAll("[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}",
+        "UUID")
+      .replaceAll("(?<=-)[0-9a-f]{8}(?=[-./])", "TOKEN")
+      .replaceAll("-(rm|surv)[0-9]+\\.avro", "-$1N.avro")
+      // a position-delete file holds absolute data-file paths, whose
+      // compressed size varies with the random table and file names
+      .replaceAll("^(\\[1,[^,]*,PARQUET,[0-9]+),[0-9]+\\]$", "$1,SIZE]")
+    def pin(label: String)(lines: => Seq[String]): Unit = {
+      val rendered =
+        try lines.map(mask).sorted
+        catch { case e: IllegalArgumentException =>
+          Seq(s"refused: ${e.getClass.getSimpleName}") }
+      out ++= s"## $label\n"
+      rendered.foreach(l => out ++= s"$l\n")
+    }
+    def rows(df: => DataFrame): Seq[String] =
+      df.collect().map(_.toString).toSeq
+    def plan(r: (Seq[String], Long, Long)): Seq[String] =
+      s"matched ${r._2} of ${r._3}" +: r._1
+    def state(step: String): Unit = {
+      Seq("snapshots", "manifests", "files", "refs", "partitions",
+        "entries", "all_manifests", "all_files").foreach(k =>
+        pin(s"$step $k")(rows(IcebergLite.metadataTable(spark, t, k))))
+      pin(s"$step read")(rows(IcebergLite.read(spark, t)))
+      pin(s"$step snapshotFiles")(IcebergLite.snapshotFiles(spark, t, -1L))
+      pin(s"$step snapshotDeleteFiles")(
+        IcebergLite.snapshotDeleteFiles(spark, t, -1L))
+      pin(s"$step planPartitioned")(plan(
+        IcebergLite.planPartitioned(spark, t, Set("a", "aa", "ba"))))
+      pin(s"$step planBounds")(plan(IcebergLite.planBounds(spark, t, 0L, 3L)))
+      pin(s"$step planNulls")(plan(IcebergLite.planNulls(spark, t, "s")))
+      pin(s"$step tableSizeStats")(
+        Seq(IcebergLite.tableSizeStats(spark, t).toString))
+    }
+    val letters = Seq("aa", "ab", "ba", "bb", "ca", null)
+    val rows0 = (0L until 12L).map(k => (k, letters((k % 6).toInt), k * 10L))
+    val trunc1 = Some(IcebergLite.PartField.truncate("s", 1))
+    IcebergLite.write(spark, rows0.toDF("k", "s", "v"), t,
+      partitionField = trunc1, statsColumns = Seq("k", "s"))
+    state("1 write")
+    IcebergLite.write(spark,
+      Seq((20L, "ab", 200L), (21L, null, 210L)).toDF("k", "s", "v"), t,
+      partitionField = trunc1, boundsColumn = Some("k"))
+    state("1 bounded append")
+    IcebergLite.upgradeFormatVersion(spark, t, 2)
+    state("2 format 2")
+    IcebergLite.deleteWhere(spark, t, "k", 2L, 3L)
+    IcebergLite.deleteWhereEquality(spark, t, "k", Seq(5L))
+    state("3 deletes")
+    IcebergLite.upgradeFormatVersion(spark, t, 3)
+    IcebergLite.deleteWhereDV(spark, t, "k", 7L, 8L)
+    state("4 deletion vector")
+    IcebergLite.evolvePartitionSpec(spark, t, None)
+    IcebergLite.mergeInto(spark, t,
+      Seq((10L, "zz", 1000L), (100L, "qq", 1L)).toDF("k", "s", "v"), "k")
+    state("5 merge")
+    IcebergLite.rewriteManifests(spark, t)
+    state("6 rewriteManifests")
+    val beforeBranch = IcebergLite.currentSnapshotId(spark, t)
+    IcebergLite.write(spark, Seq((30L, "ax", 300L)).toDF("k", "s", "v"), t,
+      toBranch = Some("audit"))
+    IcebergLite.setRef(spark, t, "rel", beforeBranch)
+    state("7 branch and tag")
+    pin("8 rename with a live equality delete")(
+      Seq(IcebergLite.renameColumn(spark, t, "v", "w").toString))
+    IcebergLite.rewriteDataFiles(spark, t)
+    state("8 compaction")
+    val trunc2 = Some(IcebergLite.PartField.truncate("s", 2))
+    IcebergLite.evolvePartitionSpec(spark, t, trunc2)
+    IcebergLite.renameColumn(spark, t, "v", "w")
+    IcebergLite.write(spark, Seq((40L, "ab", 400L)).toDF("k", "s", "w"), t,
+      partitionField = trunc2)
+    state("8 evolve and rename")
+    IcebergLite.snapshotIdList(spark, t).foreach(sid =>
+      pin(s"read at $sid")(rows(IcebergLite.read(spark, t, sid))))
+    val actual = out.toString
+    val golden = scala.io.Source.fromInputStream(getClass
+      .getResourceAsStream("/graft/iceberg_lifecycle.golden"), "UTF-8").mkString
+    if (actual != golden) {
+      new java.io.File("target").mkdirs()
+      java.nio.file.Files.write(
+        java.nio.file.Paths.get("target", "iceberg_lifecycle.actual"),
+        actual.getBytes("UTF-8"))
+    }
+    actual shouldBe golden
   }
 }
