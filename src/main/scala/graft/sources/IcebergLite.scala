@@ -1012,10 +1012,11 @@ object IcebergLite {
     Occ.commit("write", table)(headOrEmpty(spark, table))(
       writeAt(spark, df, _, overwrite, partitionField, summaryProps,
         boundsColumn, operation, formatV2, toBranch, statsColumns,
-        timestampMs, requireSourceSnapshot))
+        timestampMs, requireSourceSnapshot))._1
 
   /** One [[write]] attempt on the pinned `head` (version 0 before the
-    * first commit): None when another writer claimed the next version. */
+    * first commit): the new snapshot id and the number of data files
+    * staged, or None when another writer claimed the next version. */
   private def writeAt(spark: SparkSession, df: DataFrame, head: Meta,
       overwrite: Boolean,
       partitionField: Option[PartField],
@@ -1026,7 +1027,7 @@ object IcebergLite {
       toBranch: Option[String] = None,
       statsColumns: Seq[String] = Nil,
       timestampMs: Long = 0L,
-      requireSourceSnapshot: Option[Long] = None): Option[Long] = {
+      requireSourceSnapshot: Option[Long] = None): Option[(Long, Int)] = {
     require(boundsColumn.isEmpty || statsColumns.isEmpty,
       "boundsColumn (legacy long bounds) and statsColumns (spec " +
         "column-stats maps) are mutually exclusive")
@@ -1059,8 +1060,8 @@ object IcebergLite {
     // positions once the table has dropped a column)
     val ids = base.assignFieldIds(df.schema)
     val fids = statsColumns.map(c => ids(df.schema.fieldNames.indexOf(c)))
-    val manifest = stageData(spark, base, staged, df, partitionField, token,
-      boundsColumn, statsColumns.zip(fids))
+    val (manifest, files) = stageData(spark, base, staged, df,
+      partitionField, token, boundsColumn, statsColumns.zip(fids))
     // manifest list = prior manifests (append, BY REFERENCE — including
     // any v2 DELETE manifests) + the new one; a branch commit stacks on
     // the BRANCH head (or cuts the branch from main when it does not
@@ -1072,7 +1073,7 @@ object IcebergLite {
     commitSnapshot(base, prior :+ manifest,
       operation.getOrElse(if (overwrite) "overwrite" else "append"),
       df.schema, summaryProps, toBranch, timestampMs, Seq(staged),
-      minFormat = if (formatV2) 2 else 1)
+      minFormat = if (formatV2) 2 else 1).map((_, files))
   }
 
   /** Claim metadata version `prevV + 1` with `meta` by atomic create — the
@@ -1153,7 +1154,7 @@ object IcebergLite {
       else markers.findLast(_._1 == batchId).map(m => Some(m._2))
         .getOrElse(writeAt(spark, df, h, overwrite = false, partitionField,
           Map("graft-batch-id" -> batchId.toString), None,
-          toBranch = toBranch))
+          toBranch = toBranch).map(_._1))
     }
 
   /** Create or move a named REF (spec §Refs) — `tag` pins an immutable
@@ -1618,8 +1619,10 @@ object IcebergLite {
     * NEW metadata version, committed by the same atomic-create arbiter),
     * then delete every manifest list, manifest, and data-directory file
     * (Parquet data and delete files, Puffin deletion-vector carriers) no
-    * retained snapshot references — matched by table-relative path
-    * against the retained closure, lists → manifests → files. Time
+    * retained snapshot references — matched by qualified path against
+    * the retained closure, lists → manifests → files; when a reference
+    * names the table by another spelling (a symlink, another mount) the
+    * sweep deletes nothing. Time
     * travel to an expired snapshot then refuses by its own absence from
     * the snapshot list — never a wrong answer. `graceMs` spares
     * unreferenced files younger than the window, metadata and data alike
@@ -1665,22 +1668,28 @@ object IcebergLite {
       }
     }
     if (expired == 0) return (0L, 0L)
-    // the referenced closure of the retained snapshots as table-relative
-    // paths — lists → manifests → files (data, deletes, vector carriers)
+    // the referenced closure of the retained snapshots — lists →
+    // manifests → files (data, deletes, vector carriers) — as qualified
+    // paths: the metadata stores them as the writer spelled the table
+    // (possibly cwd-relative), listings answer qualified ones
     val fs = m.fs
-    val root = fs.makeQualified(new Path(table)).toUri.getPath
-    def rel(p: Path): String =
-      p.toUri.getPath.stripPrefix(root).stripPrefix("/")
-    val referenced = lists.flatMap { list =>
+    def qualified(p: Path): String = fs.makeQualified(p).toUri.getPath
+    val root = qualified(new Path(table)).stripSuffix("/") + "/"
+    val referencedPaths = lists.flatMap { list =>
       val manifests = m.listAt(list)
       list +: (manifests.map(_.path) ++ manifests.flatMap(m.entries).map(_.path))
-    }.map(p => rel(new Path(p))).toSet
+    }.map(p => qualified(new Path(p)))
+    // a reference outside `root` names the table by another spelling (a
+    // symlink, another mount): nothing can then be proven unreferenced,
+    // so the sweep deletes nothing rather than the live table
+    if (!referencedPaths.forall(_.startsWith(root))) return (expired.toLong, 0L)
+    val referenced = referencedPaths.toSet
     // concurrent-writer safety (the DeltaLite.vacuum discipline): files
     // younger than `graceMs` are spared — they may belong to a writer
     // between staging and its metadata claim
     val cutoff = System.currentTimeMillis() - graceMs
     def sweep(st: org.apache.hadoop.fs.FileStatus): Boolean =
-      !referenced(rel(st.getPath)) && st.getModificationTime < cutoff &&
+      !referenced(qualified(st.getPath)) && st.getModificationTime < cutoff &&
         fs.delete(st.getPath, false)
     fs.listStatus(metaDir(table))
       .filter(st => st.isFile && st.getPath.getName.endsWith(".avro"))
@@ -1699,7 +1708,8 @@ object IcebergLite {
         val n = st.getPath.getName
         // the staging dir is the path component directly under data/
         // (partitioned staging nests _p= dirs below it)
-        val staging = rel(st.getPath).stripPrefix("data/").takeWhile(_ != '/')
+        val staging = qualified(st.getPath).stripPrefix(s"${root}data/")
+          .takeWhile(_ != '/')
         if ((n.endsWith(".parquet") || n.endsWith(".puffin")) &&
             !inFlight(staging) && sweep(st))
           deleted += 1
@@ -2685,8 +2695,8 @@ object IcebergLite {
             case (d, (k, expr)) => d.withColumn(k, expr)
           }.select(schema.fieldNames.map(col).toIndexedSeq: _*)
           val stagedData = s"data/s${m.nextSid}-$token-upd"
-          val dataManifest = stageData(spark, m, stagedData, updated, spec,
-            token)
+          val (dataManifest, _) = stageData(spark, m, stagedData, updated,
+            spec, token)
           val delManifest = writeManifest(m,
             s"${m.nextSid}-$token-del-m0.avro",
             optsOf(Opt.P0 -> spec.isDefined, Opt.Content -> true),
@@ -2703,17 +2713,18 @@ object IcebergLite {
 
   /** Stage `df` under `dir` — one file per transform value per task when
     * `spec` is set — and write its data manifest ([[writeDataManifest]])
-    * with the stats of the staged files. */
+    * with the stats of the staged files; answers the manifest and the
+    * number of files staged. */
   private def stageData(spark: SparkSession, head: Meta, dir: String,
       df: DataFrame, spec: Option[PartField], token: String,
       boundsColumn: Option[String] = None,
-      colStats: Seq[(String, Int)] = Nil): MEntry = {
+      colStats: Seq[(String, Int)] = Nil): (MEntry, Int) = {
     val files = Staging.write(head.table, dir, df, spec.map(pf =>
       pf.valueColumn(org.apache.spark.sql.functions.col(pf.source))))
     val cols = StructType(
       (boundsColumn.toSeq ++ colStats.map(_._1)).map(df.schema(_)))
-    writeDataManifest(head, token, files, Staging.stats(spark, files, cols),
-      spec.isDefined, boundsColumn, colStats)
+    (writeDataManifest(head, token, files, Staging.stats(spark, files, cols),
+      spec.isDefined, boundsColumn, colStats), files.size)
   }
 
   /** [[writeDataManifest]] over EXACTLY the files the SQL writers
@@ -2815,7 +2826,7 @@ object IcebergLite {
           // nothing matched: a plain append commit of the source
           writeAt(spark, src, m, overwrite = false, None, Map.empty, None,
             Some("append"), formatV2 = m.formatVersion >= 2)
-            .map(sid => (sid, 0L, rowsInserted))
+            .map { case (sid, _) => (sid, 0L, rowsInserted) }
         else {
           val token = newToken()
           // rewritten content for the touched files: their surviving live
@@ -2827,7 +2838,7 @@ object IcebergLite {
             .drop("__fn", "__ri")
             .select(schema.fieldNames.map(col).toIndexedSeq: _*)
           val stagedData = s"data/s${m.nextSid}-$token-mrg"
-          val manifest = stageData(spark, m, stagedData,
+          val (manifest, _) = stageData(spark, m, stagedData,
             survivors.unionByName(src), None, token)
           val carried =
             carryManifests(m, token)(e => touched.contains(FileKey(e.path)))
@@ -2958,21 +2969,19 @@ object IcebergLite {
       operation: String,
       partitionValues: Map[String, String] = Map.empty,
       pinnedDeleteFiles: Option[Set[String]] = None): Long =
-    Occ.commit(operation, table)(latestMetadataVersion(spark, table))(
-      commitReplaceFilesAt(spark, table, removePaths, addRel, operation,
+    Occ.commit(operation, table)(head(spark, table))(
+      commitReplaceFilesAt(spark, removePaths, addRel, operation,
         partitionValues, pinnedDeleteFiles, _))
 
-  /** One [[commitReplaceFiles]] attempt pinned to metadata version
-    * `prevV`: conflict checks against it, then the claim of `prevV + 1` —
-    * which loses whenever the head moved past `prevV`, whether before the
-    * checks or after them, and the next attempt re-checks against the new
-    * head. */
+  /** One [[commitReplaceFiles]] attempt on the pinned head `m`: conflict
+    * checks against it, then the claim of the next version — which loses
+    * whenever the head moved past `m`, whether before the checks or after
+    * them, and the next attempt re-checks against the new head. */
   private[graft] def commitReplaceFilesAt(spark: SparkSession,
-      table: String, removePaths: Seq[String], addRel: Seq[String],
+      removePaths: Seq[String], addRel: Seq[String],
       operation: String, partitionValues: Map[String, String],
-      pinnedDeleteFiles: Option[Set[String]], prevV: Int): Option[Long] = {
-    require(prevV > 0, s"$table has no Iceberg metadata")
-    val m = head(spark, table, prevV)
+      pinnedDeleteFiles: Option[Set[String]], m: Meta): Option[Long] = {
+    val table = m.table
     val removed = removePaths.map(FileKey(_)).toSet
     // OPTIMISTIC CONFLICT RESOLUTION: the rewrite may commit against the
     // base ONLY while every file it removes is still live there (a
@@ -3171,7 +3180,7 @@ object IcebergLite {
           "rather than leak")
       val token = newToken()
       val staged = s"data/s${m.nextSid}-$token-po"
-      val manifest = stageData(spark, m, staged, df, Some(pf), token)
+      val (manifest, _) = stageData(spark, m, staged, df, Some(pf), token)
       commitSnapshot(m, carryManifests(m, token)(_.partition == value) :+
         manifest, "overwrite", m.currentSchema, staged = Seq(staged))
     }
@@ -3268,7 +3277,10 @@ object IcebergLite {
       case None if spec.isDefined => src
       case None => src.coalesce(targetFiles)
     }
-    val sid = write(spark, clustered, table,
+    // the overwrite's list names only its own manifest: the files it
+    // staged are the snapshot's files
+    val (sid, after) = Occ.commit("rewriteDataFiles", table)(
+      head(spark, table))(writeAt(spark, clustered, _,
       overwrite = true, operation = Some("replace"),
       partitionField = spec,
       boundsColumn = sortCol.filter(c =>
@@ -3278,9 +3290,9 @@ object IcebergLite {
       // the rewrite replaces EXACTLY the planned snapshot's rows: refuse
       // loudly if anything committed since (X304) — a retried overwrite
       // staged from the old head would silently undo the race winner
-      requireSourceSnapshot = Some(m.currentSid))
+      requireSourceSnapshot = Some(m.currentSid)))
     if (refreshStats) refreshStatistics(spark, table)
-    (sid, before, head(spark, table, sid.toInt).live(sid, 0).size.toLong)
+    (sid, before, after.toLong)
   }
 
   /** Table history — one row per RETAINED snapshot off the metadata's

@@ -1533,8 +1533,8 @@ class IcebergLiteSpec extends SparkSpec with Matchers {
     import spark.implicits._
     val t = Sinks.tempDir("ice_pin_to_commit")
     IcebergLite.write(spark, Seq((1L, 1L)).toDF("k", "v"), t)
-    // the version the (simulated) liveness checks ran against
-    val pinned = IcebergLite.latestMetadataVersion(spark, t)
+    // the head the (simulated) liveness checks ran against
+    val pinned = IcebergLite.head(spark, t)
     // an interleaving commit lands between the checks and the commit
     IcebergLite.write(spark, Seq((2L, 2L)).toDF("k", "v"), t)
     val metaFiles = new java.io.File(t, "metadata").list().toSet
@@ -1542,14 +1542,14 @@ class IcebergLiteSpec extends SparkSpec with Matchers {
     // land a snapshot whose conflict checks never saw the interloper
     // (the SqlConcurrency UPDATE-vs-OPTIMIZE duplicate-rows
     // falsification), and must take back every manifest it staged
-    IcebergLite.commitReplaceFilesAt(spark, t, Nil, Nil, "TEST-REPLACE",
-      Map.empty, None, prevV = pinned) shouldBe None
-    IcebergLite.latestMetadataVersion(spark, t) shouldBe pinned + 1
+    IcebergLite.commitReplaceFilesAt(spark, Nil, Nil, "TEST-REPLACE",
+      Map.empty, None, pinned) shouldBe None
+    IcebergLite.latestMetadataVersion(spark, t) shouldBe pinned.version + 1
     new java.io.File(t, "metadata").list().toSet shouldBe metaFiles
     // and with the pin matching the actual head it commits fine
     val head = IcebergLite.latestMetadataVersion(spark, t)
-    IcebergLite.commitReplaceFilesAt(spark, t, Nil, Nil, "TEST-REPLACE",
-      Map.empty, None, prevV = head) shouldBe Some(head + 1L)
+    IcebergLite.commitReplaceFilesAt(spark, Nil, Nil, "TEST-REPLACE",
+      Map.empty, None, IcebergLite.head(spark, t)) shouldBe Some(head + 1L)
     IcebergLite.read(spark, t).as[(Long, Long)].collect().sorted shouldBe
       Seq((1L, 1L), (2L, 2L))
   }
@@ -1746,6 +1746,39 @@ class IcebergLiteSpec extends SparkSpec with Matchers {
     IcebergLite.read(spark, t).count() shouldBe 3L
   }
 
+  test("expireSnapshots keeps the live files of a table given by a cwd-relative path") {
+    import spark.implicits._
+    val t = s"target/graft_ice_exp_rel_${java.util.UUID.randomUUID()}"
+    IcebergLite.write(spark, Seq((1L, 1L)).toDF("k", "v"), t)
+    IcebergLite.write(spark, Seq((2L, 2L)).toDF("k", "v"), t, overwrite = true)
+    IcebergLite.write(spark, Seq((3L, 3L)).toDF("k", "v"), t)
+    val before = dataFileCount(t)
+    // only the overwritten first file is unreferenced
+    IcebergLite.expireSnapshots(spark, t, keepLast = 1) shouldBe ((2L, 1L))
+    dataFileCount(t) shouldBe before - 1
+    unreferenced(t) shouldBe empty
+    IcebergLite.read(spark, t).as[(Long, Long)].collect().sorted shouldBe
+      Array((2L, 2L), (3L, 3L))
+  }
+
+  test("expireSnapshots deletes nothing when the metadata names the table through a symlink") {
+    import spark.implicits._
+    val dir = Sinks.tempDir("ice_exp_link")
+    val real = new java.io.File(dir, "real")
+    real.mkdirs()
+    val link = java.nio.file.Files.createSymbolicLink(
+      java.nio.file.Paths.get(dir, "link"), real.toPath).toString
+    IcebergLite.write(spark, Seq((1L, 1L)).toDF("k", "v"), s"$link/t")
+    IcebergLite.write(spark, Seq((2L, 2L)).toDF("k", "v"), s"$link/t",
+      overwrite = true)
+    val t = s"${real.getPath}/t"
+    val before = dataFileCount(t)
+    IcebergLite.expireSnapshots(spark, t, keepLast = 1) shouldBe ((1L, 0L))
+    dataFileCount(t) shouldBe before
+    IcebergLite.read(spark, t).as[(Long, Long)].collect() shouldBe
+      Array((2L, 2L))
+  }
+
   test("a manifest committed after a spec evolution records the default spec, so later plans keep its files") {
     import spark.implicits._
     val t = Sinks.tempDir("ice_spec_id")
@@ -1777,16 +1810,16 @@ class IcebergLiteSpec extends SparkSpec with Matchers {
     * rewrite indices) and each rendered block is sorted, so the golden
     * pins values, sizes and lengths, not names or row order (nor the
     * size of a position-delete file, which holds random paths). The table
-    * path has a fixed length so manifest lengths are stable. On a
-    * mismatch the rendering is written to
-    * `target/iceberg_lifecycle.actual`. */
+    * lives at a cwd-relative path of fixed length, so the paths the
+    * manifests hold, and with them their lengths, do not depend on the
+    * machine; the rendering names it `TABLE`. On a mismatch the rendering
+    * is written to `target/iceberg_lifecycle.actual`. */
   test("characterization: one lifecycle through every metadata table, read and planner") {
     import spark.implicits._
     import org.apache.spark.sql.DataFrame
-    val t = s"${System.getProperty("java.io.tmpdir")}/graft_icechar_" +
-      java.util.UUID.randomUUID()
+    val t = s"target/graft_icechar_${java.util.UUID.randomUUID()}"
     val out = new StringBuilder
-    def mask(s: String): String = s
+    def mask(s: String): String = s.replace(t, "TABLE")
       .replaceAll("[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}",
         "UUID")
       .replaceAll("(?<=-)[0-9a-f]{8}(?=[-./])", "TOKEN")
